@@ -39,8 +39,9 @@ init_status() {
     echo "# anything else is the honest state of that step."
     echo "# E is a FRESH full sf10 verify dump at r12 HEAD; E2 compares it"
     echo "# against DuckDB — so CORRECTNESS_sf10.txt certifies the r12"
-    echo "# engine's sf10 results directly (the old subset step F is"
-    echo "# subsumed and retired)."
+    echo "# engine's sf10 results for the 154 oracle-completable queries"
+    echo "# only; rows marked TIMEOUT, RESOURCE or ORACLE-DIED have no"
+    echo "# oracle verdict (the old subset step F is subsumed and retired)."
     for s in "G1:data/sf1/_SCALEUP_DONE" "G10:data/sf10/_SCALEUP_DONE" \
       "E:/tmp/verify_sf10/oracle_sql.json" "E2:CORRECTNESS_sf10.txt" \
       "A:FALLBACK_sf1.txt" "B:BENCH_sf1.json" \
@@ -72,10 +73,13 @@ mark G10 data/sf10/_SCALEUP_DONE
 fi
 
 if runs E; then
-# ---- E: fresh full sf10 verify dump at r12 HEAD
+# ---- E: fresh full sf10 verify dump at r12 HEAD, only over complete
+# sf10 data (G10 writes the marker last)
 rm -rf /tmp/verify_sf10
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify data/sf10 /tmp/verify_sf10" \
-  > /tmp/verify_sf10.log 2>&1
+if [ -e data/sf10/_SCALEUP_DONE ]; then
+  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify data/sf10 /tmp/verify_sf10" \
+    > /tmp/verify_sf10.log 2>&1
+fi
 mark E /tmp/verify_sf10/oracle_sql.json
 fi
 
@@ -99,8 +103,9 @@ if [ -s /tmp/verify_sf10/oracle_sql.json ]; then
     echo "# data — see CHAIN_STATUS.txt steps G10/E for provenance)."
     cat /tmp/correctness_sf10_s0.txt /tmp/correctness_sf10_s1.txt
   } > CORRECTNESS_sf10.txt
-  # serial retry of oracle-resource rows with the whole disk budget
-  RETRY=$(grep -E '^(RESOURCE|ORACLE-DIED)' CORRECTNESS_sf10.txt | awk '{print $2}')
+  # serial retry of oracle-resource and timed-out rows with the whole
+  # disk budget and the longer serial time budget
+  RETRY=$(grep -E '^(RESOURCE|ORACLE-DIED|TIMEOUT)' CORRECTNESS_sf10.txt | awk '{print $2}')
   if [ -n "$RETRY" ]; then
     rm -rf /tmp/verify_sf10_retry && mkdir -p /tmp/verify_sf10_retry
     RETRY_NAMES="$RETRY" python3 - <<'PY'

@@ -6,8 +6,9 @@ object Bench {
     * backslash, quote, and ALL control chars (<0x20) — an exception
     * message with an embedded newline or tab would otherwise corrupt
     * the one-line JSON the driver parses.
+    * `Verify` escapes its oracle_sql.json with it too.
     */
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -19,24 +20,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Shuffle files are reclaimed only when their ShuffleDependency is
-      // GC'd (ContextCleaner hooks weak references): a large heap means
-      // rare full GCs, so a 163-query suite in one JVM otherwise
-      // accumulates every query's dead shuffle blocks on disk until the
-      // disk fills — the r8 sf10 bench died exactly this way (67 GB of
-      // dead blocks, then a cascade of "No space left on device"). The
-      // periodic driver GC is the backstop; the per-query System.gc()
-      // below is the primary reclamation point.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
 
     // VACUITY TRAP: a bench row that measures a NO-OP must say so in
     // the SAME file. The fixed-shape embedding-LSH gate is the measured

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Print the formatted physical plan of one harness query — the plan
   * audit loop (are filters pushed, joins broadcast, codegen spans
@@ -21,14 +20,7 @@ object Explain {
     val sfDir =
       if (!batch && args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCores)
     names.foreach { name =>
       // queryExecution.explainString, not console print, so the batch
       // mode can write files; "formatted" matches explain("formatted").

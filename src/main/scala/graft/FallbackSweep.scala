@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev sweep: run every registry query at sf0.001 with
   * spark.sql.codegen.fallback=false and report which queries would
   * silently fall back to interpreted execution (janino 64KB-grows or
@@ -10,16 +8,8 @@ import org.apache.spark.sql.SparkSession
 object FallbackSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.fallback", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCores)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -2,7 +2,6 @@ package graft
 
 import graft.clean.Preprocessor
 import graft.collect.{Assembler, AssemblerConfig, Facts, Phenopacket}
-import graft.load.FileSystemLoader
 import graft.model.Cdf
 import graft.ontology.BiDictLibrary
 import graft.strategy.Strategy
@@ -31,7 +30,4 @@ final case class Pipeline(
     val facts = Facts.extractAll(transformed)
     Assembler.assemble(facts, library, assembler, hgvs, resolver)
   }
-
-  def run(tables: Seq[Cdf], outDir: String): Unit =
-    FileSystemLoader.load(transform(tables), outDir)
 }

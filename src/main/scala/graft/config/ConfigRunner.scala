@@ -154,8 +154,4 @@ object ConfigRunner {
       case "hpo_disease_splitter"    => HpoDiseaseSplitterStrategy(library)
       case other => throw new IllegalArgumentException(s"unknown strategy '$other'")
     }
-
-  /** Back-compat shim for name-only strategy lookup. */
-  def strategyByName(name: String, library: BiDictLibrary): Strategy =
-    strategyFor(ConfigLoader.StrategySpec(name, None), library)
 }

@@ -38,7 +38,7 @@ object ExcelSource {
       val grid = workbook.getOrElse(cfg.sheetName,
         throw new IllegalArgumentException(
           s"sheet '${cfg.sheetName}' not found; workbook has ${workbook.keys.mkString(", ")}"))
-      val df = toDataFrame(spark, grid, cfg.hasHeaders && cfg.patientsAreRows)
+      val df = toDataFrame(spark, grid, cfg.hasHeaders && cfg.patientsAreRows, cfg.sheetName)
       val oriented = Transpose.conditional(df, cfg.patientsAreRows, cfg.hasHeaders)
       Cdf.validated(cfg.tableContext, oriented)
     }
@@ -51,11 +51,10 @@ object ExcelSource {
     readWorkbookBytes(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       path)
 
-  /** The parse itself, from the workbook's raw bytes — so callers on a
-    * distributed filesystem (the DataSource V2 reader opening HDFS/S3
-    * paths through the Hadoop FileSystem API) can hand over the
-    * stream without this module ever touching local-file IO. Clinical
-    * workbooks are MB-sized; buffering one per task is the contract.
+  /** The parse itself, from the workbook's raw bytes (no file IO).
+    * Clinical workbooks are MB-sized and a sheet is capped at 1,048,576
+    * rows, so buffering one whole workbook on the driver is the
+    * contract.
     */
   def readWorkbookBytes(bytes: Array[Byte],
       path: String = "<bytes>"): Map[String, Vector[Vector[String]]] = {
@@ -197,7 +196,7 @@ object ExcelSource {
     * requested, otherwise default names "0","1",….
     */
   private def toDataFrame(spark: SparkSession, grid: Vector[Vector[String]],
-      useHeader: Boolean): org.apache.spark.sql.DataFrame = {
+      useHeader: Boolean, sheet: String): org.apache.spark.sql.DataFrame = {
     require(grid.nonEmpty, "empty sheet")
     val width = grid.map(_.length).max
     val padded = grid.map(r => r.padTo(width, null: String))
@@ -206,6 +205,15 @@ object ExcelSource {
         Option(h).getOrElse(i.toString)
       }, padded.tail)
       else (CsvSource.defaultColumnNames(width).toVector, padded)
+    // A repeated header name would leave two same-named columns in the
+    // frame (an unbound one slips past Cdf.validated; a bound one fails
+    // there as "multiple SeriesContexts bind …"). Fail here instead,
+    // naming the sheet and the offending names.
+    val dups = header.diff(header.distinct).distinct
+    require(dups.isEmpty,
+      s"sheet '$sheet': duplicate header name(s) ${dups.mkString(", ")} — " +
+        "Spark cannot represent duplicate column names; deduplicate the " +
+        "header row first")
     val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
     val rows = data.map(r => Row.fromSeq(r))
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)

@@ -122,13 +122,15 @@ class ExcelSourceSpec extends SparkSpec {
 
   test("cells and rows without the optional OOXML r reference position sequentially") {
     // several streaming writers omit r; previously "".toInt crashed
-    val sheet = scala.xml.XML.loadString(
-      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
-        |<sheetData>
-        |  <row><c t="inlineStr"><is><t>A</t></is></c><c t="inlineStr"><is><t>B</t></is></c></row>
-        |  <row><c t="inlineStr"><is><t>x</t></is></c><c t="inlineStr"><is><t>y</t></is></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    // go through the public byte API: wrap in a minimal workbook
+    val bytes = oneSheetWorkbook(
+      """<row><c t="inlineStr"><is><t>A</t></is></c><c t="inlineStr"><is><t>B</t></is></c></row>
+        |<row><c t="inlineStr"><is><t>x</t></is></c><c t="inlineStr"><is><t>y</t></is></c></row>""".stripMargin)
+    val grid = ExcelSource.readWorkbookBytes(bytes)("s")
+    assert(grid == Vector(Vector("A", "B"), Vector("x", "y")))
+  }
+
+  /** A minimal one-sheet workbook, sheet "s" holding the given rows. */
+  private def oneSheetWorkbook(rows: String): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val zos = new ZipOutputStream(bos)
     def put(name: String, content: String): Unit = {
@@ -141,9 +143,46 @@ class ExcelSourceSpec extends SparkSpec {
     put("xl/_rels/workbook.xml.rels",
       """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
         |<Relationship Id="rId1" Target="worksheets/sheet1.xml" Type="w"/></Relationships>""".stripMargin)
-    put("xl/worksheets/sheet1.xml", sheet.toString)
+    put("xl/worksheets/sheet1.xml",
+      s"""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+         |<sheetData>$rows</sheetData></worksheet>""".stripMargin)
     zos.close()
-    val grid = ExcelSource.readWorkbookBytes(bos.toByteArray)("s")
-    assert(grid == Vector(Vector("A", "B"), Vector("x", "y")))
+    bos.toByteArray
+  }
+
+  test("duplicate header names fail loudly") {
+    // header [id, v, v], row [1, a, b]: a frame with two columns named
+    // v must never reach the pipeline, whether or not v is bound
+    val file = java.io.File.createTempFile("graft", ".xlsx")
+    file.deleteOnExit()
+    java.nio.file.Files.write(file.toPath, oneSheetWorkbook(
+      """<row r="1"><c r="A1" t="inlineStr"><is><t>id</t></is></c>
+        |  <c r="B1" t="inlineStr"><is><t>v</t></is></c>
+        |  <c r="C1" t="inlineStr"><is><t>v</t></is></c></row>
+        |<row r="2"><c r="A2" t="inlineStr"><is><t>1</t></is></c>
+        |  <c r="B2" t="inlineStr"><is><t>a</t></is></c>
+        |  <c r="C2" t="inlineStr"><is><t>b</t></is></c></row>""".stripMargin))
+    val path = file.getAbsolutePath
+    val subject = SeriesContext(Identifier.Single("id"), dataContext = Context.SubjectId)
+    val unbound = TableContext("t", Seq(subject))
+    val bound = TableContext("t", Seq(subject,
+      SeriesContext(Identifier.Single("v"), dataContext = Context.Hpo)))
+    Seq(unbound, bound).foreach { ctx =>
+      val e = intercept[IllegalArgumentException] {
+        ExcelSource.extract(spark, path, Seq(ExcelSheetConfig("s", ctx)))
+      }
+      assert(e.getMessage.contains("duplicate header name(s) v"), e.getMessage)
+      assert(e.getMessage.contains("sheet 's'"), e.getMessage)
+    }
+  }
+
+  test("missing sheet errors with the sheet name") {
+    val fixture = "src/test/resources/refgolden/input_data/excel_data.xlsx"
+    val subject = SeriesContext(Identifier.Single("Patient ID"), dataContext = Context.SubjectId)
+    val e = intercept[IllegalArgumentException] {
+      ExcelSource.extract(spark, fixture,
+        Seq(ExcelSheetConfig("nope", TableContext("t", Seq(subject)))))
+    }
+    assert(e.getMessage.contains("'nope'"), e.getMessage)
   }
 }
