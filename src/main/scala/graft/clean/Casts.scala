@@ -24,9 +24,15 @@ object Casts {
     * (the reference's Rust `str::trim` strips whitespace generally).
     */
   def trimEmptyToNull(c: Column): Column = {
-    val t = regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+    val t = javaTrim(c)
     when(t === lit(""), lit(null).cast(StringType)).otherwise(t)
   }
+
+  /** Java `String.trim` as a column expression: strips all chars
+    * <= U+0020 at both ends (Spark's `trim` strips only the space). The
+    * one owner of this rule; `JavaTrimSpec` guards against copies.
+    */
+  def javaTrim(c: Column): Column = regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
 
   /** Date formats tried in order (reference `constants.rs:3-20`,
     * chrono `%Y-%m-%d` etc. → JDK patterns). Zero-padded variants first.

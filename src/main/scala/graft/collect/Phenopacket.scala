@@ -146,7 +146,7 @@ final case class Phenopacket(
   */
 object PhenopacketJson {
 
-  def render(p: Phenopacket, pretty: Boolean = true): String = {
+  def render(p: Phenopacket): String = {
     val v = obj(
       "id" -> str(p.id),
       "subject" -> individual(p.subject),
@@ -156,7 +156,7 @@ object PhenopacketJson {
       "interpretations" -> arr(p.interpretations.map(interpretation)),
       "medicalActions" -> arr(p.medicalActions.map(medicalAction)),
       "metaData" -> metaData(p.metaData))
-    if (pretty) Render.pretty(v, 0) else Render.compact(v)
+    Render.pretty(v, 0)
   }
 
   // --- JSON tree ----------------------------------------------------

@@ -1,8 +1,7 @@
 package graft.extract
 
 import graft.model.{Cdf, TableContext}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** CSV extraction (reference S1/S4/S5,
   * `phenoxtract/src/extract/data_source.rs:37-128`).
@@ -15,7 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * The header is only honored when `patientsAreRows && hasHeaders`
   * (reference `data_source.rs:88-101`); otherwise columns get default
-  * names "0","1",… (reference `extract/utils.rs:1-3`).
+  * names "0","1",… (reference `extract/utils.rs:1-3`). A
+  * patients-as-columns file is collected in file order and transposed
+  * on the driver by [[Grid.toDataFrame]], like an XLSX sheet.
   */
 final case class CsvSourceConfig(
     path: String,
@@ -33,93 +34,17 @@ object CsvSource {
       .option("sep", cfg.separator)
       .option("inferSchema", "false")
       .csv(cfg.path)
-    val named =
+    val df =
       if (useHeader) raw
-      else raw.toDF(defaultColumnNames(raw.columns.length): _*)
-    val oriented = Transpose.conditional(named, cfg.patientsAreRows, cfg.hasHeaders)
-    Cdf.validated(cfg.tableContext, oriented)
+      else if (cfg.patientsAreRows) raw.toDF(defaultColumnNames(raw.columns.length): _*)
+      else {
+        val grid = raw.collect().toVector.map(r => Vector.tabulate(r.length)(r.getString))
+        Grid.toDataFrame(spark, grid, cfg.hasHeaders, patientsAreRows = false,
+          s"csv '${cfg.path}'")
+      }
+    Cdf.validated(cfg.tableContext, df)
   }
 
   /** Headerless columns are named "0","1",… (reference `extract/utils.rs:1-3`). */
   def defaultColumnNames(n: Int): Seq[String] = (0 until n).map(_.toString)
-}
-
-object Transpose {
-
-  /** Conditional transpose (reference `data_source.rs:37-77`): tables
-    * with patients-as-columns are flipped so every downstream operator
-    * sees patients-as-rows. When `hasHeaders`, the FIRST COLUMN holds
-    * the output header names.
-    *
-    * Spark-native formulation: unpivot (narrow, no shuffle) then a
-    * single pivot aggregation. Dimensions, precisely: PATIENTS (the
-    * source columns) become the groupBy rows; FIELDS (the first
-    * column's values) become the pivot's output columns. Field names
-    * are collected driver-side and passed as EXPLICIT pivot values in
-    * their source-row order — they are the output schema, which is
-    * driver-sized by necessity, and the explicit list both skips
-    * pivot's distinct-values job and sidesteps
-    * `spark.sql.pivotMaxValues` (default 10000), which an implicit
-    * pivot would hit on field-rich (assay/variant-level) tables.
-    */
-  def conditional(df: DataFrame, patientsAreRows: Boolean, hasHeaders: Boolean): DataFrame = {
-    if (patientsAreRows) return df
-    val cols = df.columns
-    val (fieldCol, valueCols) =
-      if (hasHeaders) (cols.head, cols.tail)
-      else {
-        // No header column: synthesize field names from row position.
-        return transposeHeaderless(df)
-      }
-    // ONE driver-side pass over the field column (it IS the output
-    // schema, so driver-sized by necessity), in source-row order —
-    // serving both the duplicate check and the explicit pivot values.
-    val fieldNames = df.select(col(fieldCol))
-      .withColumn("__rid", monotonically_increasing_id())
-      .orderBy(col("__rid")).select(col(fieldCol))
-      .collect().map(_.get(0))
-    // Documented divergence #3, made LOUD: the reference emits
-    // duplicate columns when the field column repeats a name
-    // (`data_source.rs:37-77`); Spark's pivot would silently collapse
-    // them into one column under `first` — silent data loss.
-    val dupFields = fieldNames.groupBy(identity).collect {
-      case (v, occ) if occ.length > 1 => v
-    }.take(5).mkString(", ")
-    require(dupFields.isEmpty, {
-      s"transpose: duplicate field name(s) [$dupFields] in first column " +
-        s"'$fieldCol' — the reference emits duplicate output columns here " +
-        "(data_source.rs:37-77), which Spark cannot represent; a pivot " +
-        "would silently collapse them. Deduplicate the field column first."
-    })
-    val long = df.unpivot(
-      Array(col(fieldCol)), valueCols.map(col), "__src_col", "__value")
-    val wide = long.groupBy(col("__src_col"))
-      .pivot(fieldCol, fieldNames.toSeq)
-      .agg(first(col("__value")))
-    // Preserve the source column order (one output row per original
-    // patient column), then drop the bookkeeping key.
-    wide.orderBy(col("__src_col").cast("int")).drop("__src_col")
-  }
-
-  private def transposeHeaderless(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cols = df.columns
-    // Headerless transpose needs a contiguous 0-based row index to
-    // become the default output column names "0","1",…; the global
-    // row_number is acceptable because patients-as-columns tables are
-    // clinical-sized in this orientation (reference materializes them
-    // whole as well).
-    val withIdx = df
-      .withColumn("__rid", monotonically_increasing_id())
-      .withColumn("__row_idx",
-        row_number().over(Window.orderBy(col("__rid"))) - 1)
-      .drop("__rid")
-    val long = withIdx.unpivot(
-      Array(col("__row_idx")), cols.map(col), "__src_col", "__value")
-    long.groupBy(col("__src_col"))
-      .pivot("__row_idx")
-      .agg(first(col("__value")))
-      .orderBy(col("__src_col").cast("int"))
-      .drop("__src_col")
-  }
 }

@@ -1,8 +1,7 @@
 package graft.extract
 
 import graft.model.{Cdf, TableContext}
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
 
 import scala.xml.{Elem, XML}
 
@@ -19,8 +18,9 @@ import scala.xml.{Elem, XML}
   * exactly like the reference's mixed-type → stringify fallback
   * (`excel_range_reader.rs:144-154`).
   *
-  * Clinical spreadsheets are driver-sized; rows go through
-  * `spark.createDataFrame`. (A 100 TB engine would not ingest XLSX —
+  * Clinical spreadsheets are driver-sized; the grid becomes a frame
+  * through [[Grid.toDataFrame]], which also transposes
+  * patients-as-columns sheets. (A 100 TB engine would not ingest XLSX —
   * scale inputs arrive as parquet/CSV; this source exists for surface
   * parity.)
   */
@@ -38,9 +38,8 @@ object ExcelSource {
       val grid = workbook.getOrElse(cfg.sheetName,
         throw new IllegalArgumentException(
           s"sheet '${cfg.sheetName}' not found; workbook has ${workbook.keys.mkString(", ")}"))
-      val df = toDataFrame(spark, grid, cfg.hasHeaders && cfg.patientsAreRows, cfg.sheetName)
-      val oriented = Transpose.conditional(df, cfg.patientsAreRows, cfg.hasHeaders)
-      Cdf.validated(cfg.tableContext, oriented)
+      Cdf.validated(cfg.tableContext, Grid.toDataFrame(spark, grid, cfg.hasHeaders,
+        cfg.patientsAreRows, s"sheet '${cfg.sheetName}'"))
     }
   }
 
@@ -191,31 +190,4 @@ object ExcelSource {
   private def colOf(ref: String): Int =
     ref.takeWhile(_.isLetter).foldLeft(0)((acc, ch) => acc * 26 + (ch - 'A' + 1)) - 1
   private def rowOf(ref: String): Int = ref.dropWhile(_.isLetter).toInt - 1
-
-  /** Grid → DataFrame of strings; first row becomes the header when
-    * requested, otherwise default names "0","1",….
-    */
-  private def toDataFrame(spark: SparkSession, grid: Vector[Vector[String]],
-      useHeader: Boolean, sheet: String): org.apache.spark.sql.DataFrame = {
-    require(grid.nonEmpty, "empty sheet")
-    val width = grid.map(_.length).max
-    val padded = grid.map(r => r.padTo(width, null: String))
-    val (header, data) =
-      if (useHeader) (padded.head.zipWithIndex.map { case (h, i) =>
-        Option(h).getOrElse(i.toString)
-      }, padded.tail)
-      else (CsvSource.defaultColumnNames(width).toVector, padded)
-    // A repeated header name would leave two same-named columns in the
-    // frame (an unbound one slips past Cdf.validated; a bound one fails
-    // there as "multiple SeriesContexts bind …"). Fail here instead,
-    // naming the sheet and the offending names.
-    val dups = header.diff(header.distinct).distinct
-    require(dups.isEmpty,
-      s"sheet '$sheet': duplicate header name(s) ${dups.mkString(", ")} — " +
-        "Spark cannot represent duplicate column names; deduplicate the " +
-        "header row first")
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    val rows = data.map(r => Row.fromSeq(r))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-  }
 }

@@ -8,9 +8,7 @@ import org.apache.spark.sql.Dataset
   *
   * Spark shape: `foreachPartition` writer — each executor writes its own
   * partition's packets directly (one small file per document is the
-  * contract, same as the reference; at real scale you'd point this at
-  * an object store and/or switch to `write.json` row files — provided
-  * here as `writeJsonl`).
+  * contract, same as the reference).
   */
 object FileSystemLoader {
 
@@ -19,8 +17,7 @@ object FileSystemLoader {
     * writers run ON THE EXECUTORS. The directory is created inside
     * each partition task, not just on the driver: in cluster mode a
     * driver-only mkdir would leave executors throwing
-    * NoSuchFileException (writeString does not create parents). For a
-    * plain object store use [[writeJsonl]].
+    * NoSuchFileException (writeString does not create parents).
     */
   def load(packets: Dataset[Phenopacket], outDir: String, createDir: Boolean = true): Unit = {
     val dir = outDir
@@ -36,16 +33,6 @@ object FileSystemLoader {
         java.nio.file.Files.writeString(path, PhenopacketJson.render(p))
       }
     }
-  }
-
-  /** Scale-path alternative: one JSON document per line, written by
-    * Spark's distributed writer (no per-file overhead at 10^8 packets).
-    */
-  def writeJsonl(packets: Dataset[Phenopacket], outDir: String): Unit = {
-    val spark = packets.sparkSession
-    import spark.implicits._
-    packets.map(p => PhenopacketJson.render(p, pretty = false))
-      .write.mode("overwrite").text(outDir)
   }
 
   /** Filesystem-safe file name, COLLISION-PROOF: ids that are already

@@ -28,9 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: [[WarcReader]] is a pull parser over an `InputStream`
   * — one record in memory at a time, so a 1 GB shard streams through
-  * an executor task in constant memory (the file-level reader in
-  * `graft.extract.v2.WarcDataSourceV2` builds on it; here the
-  * column-level ops parse bounded in-row blobs). Failure stance
+  * an executor task in constant memory (the column-level ops here
+  * parse bounded in-row blobs). Failure stance
   * matches the module: lenient parsing keeps every well-formed record
   * and stops at the first malformed byte — [[audit]] is the triage
   * metric that says which blobs had leftovers and why; `strict=true`

@@ -1,5 +1,6 @@
 package graft.strategy
 
+import graft.clean.Casts
 import graft.functions.DateTimeFns
 import graft.model._
 import org.apache.spark.sql.functions._
@@ -63,33 +64,30 @@ final case class AgeToIso8601Strategy(minAge: Int = 0, maxAge: Int = 150) extend
     val isoRe = DateTimeFns.iso8601DurationRegex
 
     // Pass 1: accumulate values that are neither ISO-8601 nor in-range ages.
-    val bad = tables.flatMap { cdf =>
-      targets(cdf).flatMap { c =>
-        // Java-trim (all controls + space), not Spark's space-only
-        // trim: tab/CR padding is routine in TSV-derived data and a
-        // padded "P1Y\t" must not abort the run (the sibling
-        // strategies' idiom)
-        val s = regexp_replace(col(c).cast("string"),
-          "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
-        val yrs = s.try_cast("double")
-        cdf.df
-          .select(s.as("v"), yrs.as("y"))
-          .filter(col("v").isNotNull && col("v") =!= "" &&
-            !col("v").rlike(isoRe) &&
-            !(col("y").isNotNull && col("y") === floor(col("y")) &&
-              col("y").between(minAge, maxAge)))
-          .select(col("v")).distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad, "values were neither ISO8601 nor years")
+    MappingException.rejectAny(name,
+      tables.flatMap { cdf =>
+        targets(cdf).map { c =>
+          // Java-trim (all controls + space), not Spark's space-only
+          // trim: tab/CR padding is routine in TSV-derived data and a
+          // padded "P1Y\t" must not abort the run (the sibling
+          // strategies' idiom)
+          val s = Casts.javaTrim(col(c).cast("string"))
+          val yrs = s.try_cast("double")
+          cdf.df
+            .select(s.as("v"), yrs.as("y"))
+            .filter(col("v").isNotNull && col("v") =!= "" &&
+              !col("v").rlike(isoRe) &&
+              !(col("y").isNotNull && col("y") === floor(col("y")) &&
+                col("y").between(minAge, maxAge)))
+            .select(col("v"))
+        }
+      },
+      "values were neither ISO8601 nor years")
 
     // Pass 2: rewrite.
     tables.map { cdf =>
       val df = targets(cdf).foldLeft(cdf.df) { (acc, c) =>
-        val s = regexp_replace(col(c).cast("string"),
-          "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+        val s = Casts.javaTrim(col(c).cast("string"))
         val yrs = s.try_cast("double")
         acc.withColumn(c,
           when(col(c).isNull, lit(null).cast("string"))

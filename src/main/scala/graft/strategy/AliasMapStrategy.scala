@@ -44,7 +44,7 @@ object AliasMapStrategy extends Strategy {
     // Java-trim to match AliasMap.normalized's Java-trimmed keys:
     // Spark's trim strips only U+0020, so a tab/CR-padded cell would
     // silently bypass the map (the MappingStrategy idiom)
-    val trimmed = regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+    val trimmed = Casts.javaTrim(c)
     am.entries.foldLeft(Option.empty[Column]) {
       case (acc, (key, alias)) =>
         val v = alias.map(lit(_)).getOrElse(lit(null).cast("string"))

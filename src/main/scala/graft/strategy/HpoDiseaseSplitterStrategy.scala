@@ -1,5 +1,6 @@
 package graft.strategy
 
+import graft.clean.Casts
 import graft.model._
 import graft.ontology.BiDictLibrary
 import org.apache.spark.sql.Column
@@ -56,8 +57,7 @@ final case class HpoDiseaseSplitterStrategy(
     * aborting on values the dictionary knows.
     */
   private def lookupKey(c: Column): (Column, Column) = {
-    val v = regexp_replace(c.cast("string"),
-      "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+    val v = Casts.javaTrim(c.cast("string"))
     val isCurie = v.rlike("^[A-Za-z][A-Za-z0-9_.]*:\\S+$")
     (when(isCurie, v).otherwise(graft.functions.GraftExtensions.lower_root(v)),
       isCurie)
@@ -88,22 +88,21 @@ final case class HpoDiseaseSplitterStrategy(
     val terms = broadcast(termRows.toDF("t_key", "t_curie", "t_cls"))
 
     // Accumulate-then-fail over unknown values: anti-join shape (left
-    // join + null filter) per column, capped at 50 distinct offenders.
+    // join + null filter) per column; rejectAny caps the offenders at 50.
     // The select projects exactly (v, __gk, __gc) — user columns are
     // gone before the join, so no name in `terms` can collide here.
-    val bad = tables.flatMap { cdf =>
-      cdf.columnsOfKind(ContextKind.KHpoOrDisease).flatMap { c =>
-        val (k, cu) = lookupKey(col(c))
-        cdf.df.select(col(c).cast("string").as("v"), k.as("__gk"), cu.as("__gc"))
-          .filter($"v".isNotNull)
-          .join(terms, $"__gk" === $"t_key" && $"__gc" === $"t_curie", "left")
-          .filter($"t_cls".isNull)
-          .select("v").distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad, "values in neither the HPO nor the disease ontology")
+    MappingException.rejectAny(name,
+      tables.flatMap { cdf =>
+        cdf.columnsOfKind(ContextKind.KHpoOrDisease).map { c =>
+          val (k, cu) = lookupKey(col(c))
+          cdf.df.select(col(c).cast("string").as("v"), k.as("__gk"), cu.as("__gc"))
+            .filter($"v".isNotNull)
+            .join(terms, $"__gk" === $"t_key" && $"__gc" === $"t_curie", "left")
+            .filter($"t_cls".isNull)
+            .select("v")
+        }
+      },
+      "values in neither the HPO nor the disease ontology")
 
     tables.map { cdf =>
       val targets = cdf.bindings.filter(_._2.dataContext.kind == ContextKind.KHpoOrDisease)

@@ -1,5 +1,6 @@
 package graft.strategy
 
+import graft.clean.Casts
 import graft.model._
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,9 @@ import org.apache.spark.sql.functions._
   * default locale): on a cluster with heterogeneous or tr/az/lt
   * locales the two would otherwise disagree on keys containing 'I'.
   *
-  * The unmapped scan is a distinct-collect per matching column — a
-  * second cheap pass over one column, not a per-row throw.
+  * The unmapped scan is one distinct-collect over all matching columns
+  * ([[MappingException.rejectAny]]) — a second cheap pass, not a
+  * per-row throw.
   */
 final case class MappingStrategy(
     name: String,
@@ -36,22 +38,19 @@ final case class MappingStrategy(
     */
   private def probeKey(c: org.apache.spark.sql.Column) =
     graft.functions.GraftExtensions.lower_root(
-      regexp_replace(c.cast("string"), "^[\\x00-\\x20]+|[\\x00-\\x20]+$", ""))
+      Casts.javaTrim(c.cast("string")))
 
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
     // Pass 1: accumulate every unmapped distinct value across tables.
-    val bad = tables.flatMap { cdf =>
-      cdf.columnsOfKind(targetKind).flatMap { c =>
-        cdf.df
-          .select(probeKey(col(c)).as("v"))
-          .filter(col("v").isNotNull && !col("v").isin(norm.keys.toSeq: _*))
-          .distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad,
-        hint = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}")
+    MappingException.rejectAny(name,
+      tables.flatMap { cdf =>
+        cdf.columnsOfKind(targetKind).map { c =>
+          cdf.df
+            .select(probeKey(col(c)).as("v"))
+            .filter(col("v").isNotNull && !col("v").isin(norm.keys.toSeq: _*))
+        }
+      },
+      hint = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}")
 
     // Pass 2: apply the when-chain mapping.
     tables.map { cdf =>

@@ -34,16 +34,14 @@ final case class OntologyNormaliserStrategy(
     }
 
     // Pass 1: accumulate unresolvable values across all tables.
-    val bad = tables.flatMap { cdf =>
-      cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind)).flatMap { c =>
-        cdf.df.select(col(c).cast("string").as("v"))
-          .filter(col("v").isNotNull && resolveId(col("v")).isNull)
-          .distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad, "terms not found in the ontology library")
+    MappingException.rejectAny(name,
+      tables.flatMap { cdf =>
+        cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind)).map { c =>
+          cdf.df.select(col(c).cast("string").as("v"))
+            .filter(col("v").isNotNull && resolveId(col("v")).isNull)
+        }
+      },
+      "terms not found in the ontology library")
 
     // Pass 2: rewrite to CURIEs.
     tables.map { cdf =>

@@ -1,6 +1,7 @@
 package graft.strategy
 
 import graft.model.Cdf
+import org.apache.spark.sql.DataFrame
 
 /** Config-ordered whole-table transform (reference
   * `phenoxtract/src/transform/strategies/traits.rs:16-30`): guard, then
@@ -32,3 +33,18 @@ final case class MappingException(strategy: String, badValues: Seq[String], hint
     extends RuntimeException(
       s"strategy $strategy: unmappable value(s): ${badValues.mkString("'", "', '", "'")}" +
         (if (hint.nonEmpty) s" — $hint" else ""))
+
+object MappingException {
+
+  /** The one reject path of the mapping-shaped strategies. `probes`
+    * holds one frame per target column, each a single string column of
+    * that column's offending values. Their union's distinct values are
+    * collected in ONE job, capped at 50 in total, and the strategy
+    * fails once when any are found.
+    */
+  def rejectAny(strategy: String, probes: Seq[DataFrame], hint: String): Unit =
+    if (probes.nonEmpty) {
+      val bad = probes.reduce(_ union _).distinct().limit(50).collect().map(_.getString(0))
+      if (bad.nonEmpty) throw MappingException(strategy, bad.toSeq, hint)
+    }
+}

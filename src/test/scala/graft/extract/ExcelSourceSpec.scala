@@ -10,6 +10,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * date-styled serial) and both orientations.
   */
 class ExcelSourceSpec extends SparkSpec {
+  import ExcelSourceSpec._
 
   private def writeXlsx(path: String): Unit = {
     val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
@@ -129,8 +130,47 @@ class ExcelSourceSpec extends SparkSpec {
     assert(grid == Vector(Vector("A", "B"), Vector("x", "y")))
   }
 
+  test("duplicate header names fail loudly") {
+    // header [id, v, v], row [1, a, b]: a frame with two columns named
+    // v must never reach the pipeline, whether or not v is bound
+    val path = writeTemp(oneSheetWorkbook(inlineRows(Seq(Seq("id", "v", "v"), Seq("1", "a", "b")))))
+    val subject = SeriesContext(Identifier.Single("id"), dataContext = Context.SubjectId)
+    val unbound = TableContext("t", Seq(subject))
+    val bound = TableContext("t", Seq(subject,
+      SeriesContext(Identifier.Single("v"), dataContext = Context.Hpo)))
+    Seq(unbound, bound).foreach { ctx =>
+      val e = intercept[IllegalArgumentException] {
+        ExcelSource.extract(spark, path, Seq(ExcelSheetConfig("s", ctx)))
+      }
+      assert(e.getMessage.contains("duplicate header name(s) v"), e.getMessage)
+      assert(e.getMessage.contains("sheet 's'"), e.getMessage)
+    }
+  }
+
+  test("a transposed sheet with only its field column gives zero rows named by the fields") {
+    val path = writeTemp(oneSheetWorkbook(inlineRows(Seq(Seq("Patient ID"), Seq("Sex")))))
+    val subject = SeriesContext(Identifier.Single("Patient ID"), dataContext = Context.SubjectId)
+    val Seq(cdf) = ExcelSource.extract(spark, path,
+      Seq(ExcelSheetConfig("s", TableContext("t", Seq(subject)), patientsAreRows = false)))
+    assert(cdf.df.columns.toSeq == Seq("Patient ID", "Sex"))
+    assert(cdf.df.count() == 0)
+  }
+
+  test("missing sheet errors with the sheet name") {
+    val fixture = "src/test/resources/refgolden/input_data/excel_data.xlsx"
+    val subject = SeriesContext(Identifier.Single("Patient ID"), dataContext = Context.SubjectId)
+    val e = intercept[IllegalArgumentException] {
+      ExcelSource.extract(spark, fixture,
+        Seq(ExcelSheetConfig("nope", TableContext("t", Seq(subject)))))
+    }
+    assert(e.getMessage.contains("'nope'"), e.getMessage)
+  }
+}
+
+object ExcelSourceSpec {
+
   /** A minimal one-sheet workbook, sheet "s" holding the given rows. */
-  private def oneSheetWorkbook(rows: String): Array[Byte] = {
+  def oneSheetWorkbook(rows: String): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val zos = new ZipOutputStream(bos)
     def put(name: String, content: String): Unit = {
@@ -150,39 +190,21 @@ class ExcelSourceSpec extends SparkSpec {
     bos.toByteArray
   }
 
-  test("duplicate header names fail loudly") {
-    // header [id, v, v], row [1, a, b]: a frame with two columns named
-    // v must never reach the pipeline, whether or not v is bound
-    val file = java.io.File.createTempFile("graft", ".xlsx")
-    file.deleteOnExit()
-    java.nio.file.Files.write(file.toPath, oneSheetWorkbook(
-      """<row r="1"><c r="A1" t="inlineStr"><is><t>id</t></is></c>
-        |  <c r="B1" t="inlineStr"><is><t>v</t></is></c>
-        |  <c r="C1" t="inlineStr"><is><t>v</t></is></c></row>
-        |<row r="2"><c r="A2" t="inlineStr"><is><t>1</t></is></c>
-        |  <c r="B2" t="inlineStr"><is><t>a</t></is></c>
-        |  <c r="C2" t="inlineStr"><is><t>b</t></is></c></row>""".stripMargin))
-    val path = file.getAbsolutePath
-    val subject = SeriesContext(Identifier.Single("id"), dataContext = Context.SubjectId)
-    val unbound = TableContext("t", Seq(subject))
-    val bound = TableContext("t", Seq(subject,
-      SeriesContext(Identifier.Single("v"), dataContext = Context.Hpo)))
-    Seq(unbound, bound).foreach { ctx =>
-      val e = intercept[IllegalArgumentException] {
-        ExcelSource.extract(spark, path, Seq(ExcelSheetConfig("s", ctx)))
-      }
-      assert(e.getMessage.contains("duplicate header name(s) v"), e.getMessage)
-      assert(e.getMessage.contains("sheet 's'"), e.getMessage)
-    }
-  }
+  /** Sheet rows of inline-string cells with explicit `r` references; a
+    * null cell is left out (an empty cell), a short row stays short.
+    */
+  def inlineRows(grid: Seq[Seq[String]]): String =
+    grid.zipWithIndex.map { case (row, i) =>
+      row.zipWithIndex.collect { case (v, j) if v != null =>
+        s"""<c r="${('A' + j).toChar}${i + 1}" t="inlineStr"><is><t>$v</t></is></c>"""
+      }.mkString(s"""<row r="${i + 1}">""", "", "</row>")
+    }.mkString("\n")
 
-  test("missing sheet errors with the sheet name") {
-    val fixture = "src/test/resources/refgolden/input_data/excel_data.xlsx"
-    val subject = SeriesContext(Identifier.Single("Patient ID"), dataContext = Context.SubjectId)
-    val e = intercept[IllegalArgumentException] {
-      ExcelSource.extract(spark, fixture,
-        Seq(ExcelSheetConfig("nope", TableContext("t", Seq(subject)))))
-    }
-    assert(e.getMessage.contains("'nope'"), e.getMessage)
+  /** Writes bytes to a temp file deleted on exit; returns its path. */
+  def writeTemp(bytes: Array[Byte], suffix: String = ".xlsx"): String = {
+    val file = java.io.File.createTempFile("graft", suffix)
+    file.deleteOnExit()
+    java.nio.file.Files.write(file.toPath, bytes)
+    file.getAbsolutePath
   }
 }

@@ -1,42 +1,42 @@
 package graft.extract
 
 import graft.SparkSpec
+import graft.model._
 
-/** Conditional transpose (reference `data_source.rs:37-77`) — the
-  * duplicate-field divergence made loud. The reference emits duplicate
-  * output columns when the first column repeats a field name; Spark's
-  * pivot would silently collapse them under `first` (silent data
-  * loss), so the engine fails with the divergence message instead.
+/** Conditional transpose (reference `data_source.rs:37-77`) through the
+  * sources' shared grid → frame path, and the duplicate-field divergence
+  * made loud: the reference emits duplicate output columns when the
+  * first column repeats a field name, which Spark cannot represent, so
+  * the engine fails with the divergence message instead.
   */
 class TransposeSpec extends SparkSpec {
-  import org.apache.spark.sql.functions._
+  import ExcelSourceSpec.{inlineRows, oneSheetWorkbook, writeTemp}
 
-  private lazy val sql = spark
-  import sql.implicits._
+  private def toDf(grid: Seq[Seq[String]], patientsAreRows: Boolean) =
+    Grid.toDataFrame(spark, grid.map(_.toVector).toVector, hasHeaders = true,
+      patientsAreRows, "test")
+
+  private def subject(name: String) =
+    SeriesContext(Identifier.Single(name), dataContext = Context.SubjectId)
+
+  private def csv(text: String): String = writeTemp(text.getBytes("UTF-8"), ".csv")
 
   test("patients-in-columns transpose flips orientation") {
-    // columns carry the engine's default numeric names — CsvSource
-    // never honors a header in this orientation (useHeader requires
-    // patientsAreRows), so "0","1",… is the only name shape that
-    // reaches the transpose
-    val df = Seq(
-      ("Patient ID", "P001", "P002"),
-      ("Sex", "m", "f"),
-      ("HPO", "Fever", "Chills")).toDF("0", "1", "2")
-    val out = Transpose.conditional(df, patientsAreRows = false, hasHeaders = true)
-    assert(out.columns.sorted.toSeq == Seq("HPO", "Patient ID", "Sex"))
-    val rows = out.select("Patient ID", "Sex", "HPO").as[(String, String, String)]
-      .collect().toSet
-    assert(rows == Set(("P001", "m", "Fever"), ("P002", "f", "Chills")))
+    val out = toDf(Seq(
+      Seq("Patient ID", "P001", "P002"),
+      Seq("Sex", "m", "f"),
+      Seq("HPO", "Fever", "Chills")), patientsAreRows = false)
+    assert(out.columns.toSeq == Seq("Patient ID", "Sex", "HPO"))
+    assert(out.collect().map(_.toSeq).toSeq ==
+      Seq(Seq("P001", "m", "Fever"), Seq("P002", "f", "Chills")))
   }
 
   test("duplicate field names fail loudly instead of silently collapsing") {
-    val df = Seq(
-      ("Patient ID", "P001", "P002"),
-      ("HPO", "Fever", "Chills"),
-      ("HPO", "Cough", "Rash")).toDF("0", "1", "2")
     val e = intercept[IllegalArgumentException] {
-      Transpose.conditional(df, patientsAreRows = false, hasHeaders = true)
+      toDf(Seq(
+        Seq("Patient ID", "P001", "P002"),
+        Seq("HPO", "Fever", "Chills"),
+        Seq("HPO", "Cough", "Rash")), patientsAreRows = false)
     }
     assert(e.getMessage.contains("duplicate field name"), e.getMessage)
     assert(e.getMessage.contains("HPO"), e.getMessage)
@@ -44,10 +44,41 @@ class TransposeSpec extends SparkSpec {
   }
 
   test("patients-as-rows input passes through untouched, no dup scan") {
-    // patientsAreRows short-circuits BEFORE the duplicate check — a
-    // normal-orientation table may of course repeat VALUES anywhere
-    val df = Seq(("P001", "Fever"), ("P001", "Fever")).toDF("id", "hpo")
-    assert(Transpose.conditional(df, patientsAreRows = true, hasHeaders = true)
-      .collect().length == 2)
+    // a normal-orientation table may of course repeat VALUES anywhere;
+    // only its header row is checked for duplicates
+    val out = toDf(Seq(Seq("id", "hpo"), Seq("P001", "Fever"), Seq("P001", "Fever")),
+      patientsAreRows = true)
+    assert(out.columns.toSeq == Seq("id", "hpo"))
+    assert(out.collect().length == 2)
+  }
+
+  test("a transposed CSV with only its field column gives zero rows named by the fields") {
+    val ctx = TableContext("t", Seq(subject("Patient ID")))
+    val cdf = CsvSource.extract(spark,
+      CsvSourceConfig(csv("Patient ID\nSex\n"), ctx, patientsAreRows = false))
+    // the same table as a header-only patients-as-rows CSV
+    val rowsCdf = CsvSource.extract(spark, CsvSourceConfig(csv("Patient ID,Sex\n"), ctx))
+    assert(cdf.df.schema == rowsCdf.df.schema)
+    assert(cdf.df.columns.toSeq == Seq("Patient ID", "Sex"))
+    assert(cdf.df.count() == 0)
+  }
+
+  test("a patients-as-columns table gives the same Cdf read as CSV and as an XLSX sheet") {
+    // a blank cell and a short last row, which both sources read as null
+    val headered = Seq(
+      Seq("Patient ID", "P001", "P002", "P003"),
+      Seq("Sex", "m", null, "f"),
+      Seq("HPO", "Fever", "Chills"))
+    Seq(true -> headered, false -> headered.map(_.tail)).foreach { case (hasHeaders, grid) =>
+      val ctx = TableContext("t", Seq(subject(if (hasHeaders) "Patient ID" else "0")))
+      val viaCsv = CsvSource.extract(spark, CsvSourceConfig(
+        csv(grid.map(_.map(Option(_).getOrElse("")).mkString(",")).mkString("\n")), ctx,
+        hasHeaders = hasHeaders, patientsAreRows = false))
+      val Seq(viaXlsx) = ExcelSource.extract(spark, writeTemp(oneSheetWorkbook(inlineRows(grid))),
+        Seq(ExcelSheetConfig("s", ctx, hasHeaders = hasHeaders, patientsAreRows = false)))
+      assert(viaCsv.df.columns.toSeq == viaXlsx.df.columns.toSeq)
+      assert(viaCsv.df.collect().toSeq == viaXlsx.df.collect().toSeq)
+      assert(viaCsv.df.count() == 3)
+    }
   }
 }
