@@ -11,9 +11,13 @@ import org.apache.spark.sql.Dataset
   * pipeline (reference `phenoxtract/src/pipeline.rs:36-85`,
   * `transform/transform_module.rs:26-43`).
   *
-  * Strategies see ALL tables at once (cross-table DOB maps); the
-  * preprocess/strategy stages are lazy column rewrites — nothing
-  * materializes until the single groupByKey shuffle in `collect`.
+  * Strategies see ALL tables at once (cross-table DOB maps). The
+  * preprocess/strategy stages are column rewrites with eager checks
+  * (type election, reject scans, the DOB map), and each stage's output
+  * tables are materialized where the stage ends (`Preprocessor.process`
+  * and `Strategy.transform` cut their lineage, see `Cdf.materialized`).
+  * Facts and assembly stay lazy until the load runs the single
+  * groupByKey shuffle in `collect`.
   */
 final case class Pipeline(
     strategies: Seq[Strategy],

@@ -49,31 +49,34 @@ object Casts {
 
   /** P7: multi-format date parse incl. the bare-year rule
     * ("1989" → 1989-01-01). Null-safe: unparseable → null.
+    *
+    * One native expression ([[graft.functions.MultiFormatParse]]), not
+    * column algebra: 10 chained format attempts re-inlined into every
+    * plan that touches a date cost janino compile time on each plan,
+    * and a date elected here then re-parsed by `date_to_age` grew one
+    * generated method past 64 KB. The guards live inside it: a bare
+    * 4-digit year goes straight to Jan 1, and only strings with a
+    * -/./ separator try the formats (each failed attempt throws inside
+    * the JDK formatter, so a non-date column, e.g. a numeric one under
+    * ambivalent election, costs one regex per row and no parse).
     */
-  def toDateMulti(c: Column): Column = {
-    val viaFormats = coalesce(dateFormats.map(f => try_to_timestamp(c, lit(f)).cast(DateType)): _*)
-    // Every format carries a -/./ separator; strings without one can
-    // only fail, and each failed try_to_timestamp walks an
-    // exception-throwing DateTimeFormatter — 10× per row. The regex
-    // guard makes the non-date fast path (e.g. a numeric column under
-    // ambivalent election) pure codegen'd regex, no parse attempts.
-    when(c.rlike("^\\d{4}$"), to_date(concat(c, lit("-01-01"))))
-      .otherwise(when(c.rlike("[-./]"), viaFormats))
-  }
+  def toDateMulti(c: Column): Column = multiFormat(c, timestamp = false)
 
   /** P7: multi-format datetime parse; RFC-822/1123 (reference
-    * `constants.rs:18`, `%a, %d %b %Y %H:%M:%S GMT`) rides a native
-    * expression because Spark ≥3 rejects week-day letters in its own
-    * patterns; then falls back to date-only formats (midnight) like the
-    * reference cascade.
+    * `constants.rs:18`, `%a, %d %b %Y %H:%M:%S GMT`) rides
+    * `Rfc1123Timestamp` because Spark ≥3 rejects week-day letters in
+    * its own patterns; then falls back to date-only formats (midnight)
+    * like the reference cascade. Same native expression as
+    * [[toDateMulti]]: the datetime formats are tried only on strings
+    * with a ':', RFC-1123 only on strings with a letter.
     */
-  def toTimestampMulti(c: Column): Column =
-    coalesce(
-      // ISO-ish formats all contain ':'; RFC-1123 always contains the
-      // alphabetic month name. Same guard rationale as toDateMulti.
-      when(c.rlike(":"), coalesce(datetimeFormats.map(f => try_to_timestamp(c, lit(f))): _*)),
-      when(c.rlike("[A-Za-z]"), graft.functions.GraftExtensions.rfc1123_timestamp(c)),
-      toDateMulti(c).cast(TimestampType))
+  def toTimestampMulti(c: Column): Column = multiFormat(c, timestamp = true)
+
+  private def multiFormat(c: Column, timestamp: Boolean): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(
+      graft.functions.MultiFormatParse(GraftColumnBridge.expression(c), timestamp))
+  }
 
   /** P5: strict case-insensitive boolean parse — only "true"/"false"
     * (any case) are accepted; anything else non-null yields null here

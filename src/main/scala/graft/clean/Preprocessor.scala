@@ -29,7 +29,10 @@ object Preprocessor {
     df = ensureInts(df)
     df = reinferStrings(df, skip = Set(subjectCol))
     df = df.withColumn(subjectCol, col(subjectCol).cast(StringType))
-    cdf.copy(df = df)
+    // cut the lineage (Cdf.materialized): every strategy check and the
+    // load read the cleaned rows instead of re-running the scan, trim
+    // and cast cascade
+    cdf.copy(df = df).materialized
   }
 
   /** `fill_missing`: nulls of a series become its declared default.

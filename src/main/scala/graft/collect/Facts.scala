@@ -1,5 +1,6 @@
 package graft.collect
 
+import graft.clean.Casts
 import graft.model._
 import graft.strategy.MultiHpoColExpansionStrategy
 import org.apache.spark.sql.Dataset
@@ -87,8 +88,10 @@ object Facts {
       // A blank subject cell can slip past construction-time validation
       // (it checks nulls BEFORE the preprocessor trims whitespace to
       // null); rows with no subject must not become a "cohort-null"
-      // packet via the presence fact.
-      .filter(col(subject).isNotNull && trim(col(subject).cast("string")) =!= "")
+      // packet via the presence fact. Java trim, as the preprocessor's:
+      // a table that skipped it may carry a "\t" subject, which Spark's
+      // `trim` (spaces only) would keep.
+      .filter(col(subject).isNotNull && Casts.javaTrim(col(subject).cast("string")) =!= "")
       .withColumn("__seq", monotonically_increasing_id())
       .select(
         col(subject).cast("string").as("subject"),

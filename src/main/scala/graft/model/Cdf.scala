@@ -43,6 +43,21 @@ final case class Cdf(context: TableContext, df: DataFrame) {
   }
 
   def withColumnContext(sc: SeriesContext): Cdf = copy(context = context.withSeries(sc))
+
+  /** The same table with its lineage cut: the frame is computed once
+    * now and later plans read the stored rows instead of re-planning
+    * and re-compiling the whole lineage from the file scan. Called at
+    * stage boundaries only (end of `Preprocessor.process`, tables a
+    * `Strategy.transform` rewrote), where every eager check and the
+    * final load would otherwise re-run the same prefix.
+    *
+    * Trade-off: a local checkpoint (the `ops/Dedup.scala` idiom) keeps
+    * its blocks on the executors at MEMORY_AND_DISK and is NOT
+    * recomputed if an executor is lost — the job fails instead. Its
+    * blocks are freed by the ContextCleaner once the frame is
+    * unreachable, so there is no release call.
+    */
+  def materialized: Cdf = copy(df = df.localCheckpoint(eager = true))
 }
 
 object Cdf {

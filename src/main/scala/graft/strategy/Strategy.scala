@@ -16,9 +16,16 @@ trait Strategy {
 
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf]
 
+  /** Runs the strategy and cuts the lineage ([[Cdf.materialized]]) of
+    * every table it rewrote, so the next strategy's checks and the load
+    * start from its output. A table passed through keeps its frame
+    * (`eq`): no job, nothing stored twice.
+    */
   final def transform(tables: Seq[Cdf]): Seq[Cdf] = {
     require(isValid(tables), s"strategy $name: invalid input tables")
-    internalTransform(tables)
+    internalTransform(tables).map { t =>
+      if (tables.exists(_.df eq t.df)) t else t.materialized
+    }
   }
 }
 
