@@ -459,10 +459,8 @@ object TimeParse {
   import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
   import java.time.temporal.ChronoField
 
-  private val dateFormatters: Seq[DateTimeFormatter] = Seq(
-    "yyyy-MM-dd", "yyyy.MM.dd", "MM/dd/yyyy", "dd-MM-yyyy", "dd.MM.yyyy",
-    "yyyy-M-d", "yyyy.M.d", "M/d/yyyy", "d-M-yyyy", "d.M.yyyy")
-    .map(DateTimeFormatter.ofPattern)
+  private val dateFormatters: Seq[DateTimeFormatter] =
+    graft.clean.Casts.dateFormats.map(DateTimeFormatter.ofPattern)
   private val BareYear = "^\\d{4}$".r
   // "yyyy-MM-dd HH:mm:ss" with a space or 'T' separator and an
   // optional fractional part — chrono's "%.f" accepts up to nanos.
@@ -474,9 +472,7 @@ object TimeParse {
       .optionalEnd()
       .toFormatter()
   }
-  private val IsoDuration =
-    ("^P(?!$)(\\d+Y)?(\\d+M)?(\\d+W)?(\\d+D)?" +
-      "(T(?=\\d)(\\d+H)?(\\d+M)?(\\d+(\\.\\d+)?S)?)?$").r
+  private val IsoDuration = graft.functions.DateTimeFns.iso8601DurationRegex.r
 
   def parseDate(v: String): Option[LocalDate] = {
     val s = v.trim

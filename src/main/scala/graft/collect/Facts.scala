@@ -36,7 +36,7 @@ final case class Fact(
     idx: Int,
     block: String, // building block id, "" = none
     kind: String,  // FactKinds.*
-    field: String = null, value: String = null, tkind: String = null,
+    field: String = null, value: String = null,
     hpo: String = null, observed: String = null, onset: String = null,
     resolution: String = null, severity: String = null,
     term: String = null, primarySite: String = null,
@@ -60,7 +60,7 @@ object Facts {
 
   /** Attribute columns of the flat Fact schema, in declaration order. */
   private val attrNames = Seq(
-    "field", "value", "tkind",
+    "field", "value",
     "hpo", "observed", "onset", "resolution", "severity",
     "term", "primarySite",
     "assay", "unit", "time", "refLow", "refHigh",
@@ -131,19 +131,6 @@ object Facts {
     def blockOf(sc: SeriesContext): String = sc.buildingBlockId.getOrElse("")
     def linked(block: Option[String], kinds: ContextKind*): Option[String] =
       cdf.singleLinkedColumn(block, kinds.toSet)
-    def timeKindOf(c: Context): String = c match {
-      case Context.Onset(t)               => tk(t)
-      case Context.TimeOfDeath(t)         => tk(t)
-      case Context.TimeAtLastEncounter(t) => tk(t)
-      case Context.TimeOfResolution(t)    => tk(t)
-      case Context.TimeOfMeasurement(t)   => tk(t)
-      case Context.TimeOfProcedure(t)     => tk(t)
-      case _                              => "age"
-    }
-    def tk(t: TimeKind): String = t match {
-      case TimeKind.Age  => "age"
-      case TimeKind.Date => "date"
-    }
 
     def mk(kind: String, block: String, keep: org.apache.spark.sql.Column,
         attrs: (String, org.apache.spark.sql.Column)*) = {
@@ -164,19 +151,16 @@ object Facts {
 
     val individual = b.collect {
       case (c, sc) if sc.headerContext == Context.NoContext =>
-        def f(field: String, extra: (String, org.apache.spark.sql.Column)*) =
-          mk(Individual_, blockOf(sc), present(col(c)),
-            (Seq("field" -> lit(field), "value" -> s(c)) ++ extra): _*)
+        def f(field: String) =
+          mk(Individual_, blockOf(sc), present(col(c)), "field" -> lit(field), "value" -> s(c))
         sc.dataContext match {
           case Context.SubjectSex       => Some(f("sex"))
           case Context.DateOfBirth      => Some(f("dateOfBirth"))
           case Context.VitalStatus      => Some(f("vitalStatus"))
           case Context.CauseOfDeath     => Some(f("causeOfDeath"))
           case Context.SurvivalTimeDays => Some(f("survivalTimeInDays"))
-          case t @ Context.TimeAtLastEncounter(_) =>
-            Some(f("timeAtLastEncounter", "tkind" -> lit(timeKindOf(t))))
-          case t @ Context.TimeOfDeath(_) =>
-            Some(f("timeOfDeath", "tkind" -> lit(timeKindOf(t))))
+          case Context.TimeAtLastEncounter(_) => Some(f("timeAtLastEncounter"))
+          case Context.TimeOfDeath(_)         => Some(f("timeOfDeath"))
           case _ => None
         }
     }.flatten

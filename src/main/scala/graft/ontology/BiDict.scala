@@ -21,8 +21,6 @@ final case class BiDict(
     synonymToId: Map[String, String],
     idToLabel: Map[String, String]) {
 
-  def containsId(id: String): Boolean = idToLabel.contains(id.trim)
-
   def idForLabel(value: String): Option[String] = {
     val k = BiDict.norm(value)
     labelToId.get(k).orElse(synonymToId.get(k))
@@ -46,12 +44,9 @@ object BiDict {
 
   /** Label/synonym lookup normalization: Java trim + ROOT-locale
     * lowercase. Locale.ROOT (not the JVM default) so a host running
-    * under tr_TR cannot store "I" as dotless "\u0131". The probe side
-    * of this contract (the broadcast-join strategies) lowers with the
-    * engine's `lower_root` expression — NOT Spark's builtin `lower`,
-    * whose non-ASCII slow path delegates to `String.toLowerCase()`
-    * under the JVM DEFAULT locale — so both sides agree byte-for-byte
-    * on every key on any host.
+    * under tr_TR cannot store "I" as dotless "\u0131". Strategies that
+    * probe cells against keys built by this rule apply this same
+    * function to each cell in a UDF, never a Column re-spelling of it.
     */
   def norm(s: String): String = s.trim.toLowerCase(java.util.Locale.ROOT)
   def isCurie(s: String): Boolean = CurieRe.findFirstIn(s.trim).isDefined
@@ -105,19 +100,12 @@ final case class BiDictLibrary(
   def resolve(value: String): Option[(OntologyClass, Resource)] =
     resolveVia(dicts, value)
 
-  def resolveOrThrow(value: String): (OntologyClass, Resource) =
-    resolve(value).getOrElse(throw new NoSuchElementException(
-      s"term '$value' not found in any of ${dicts.map(_.resource.id).mkString(", ")}"))
-
   /** Dicts participating in a resolution class. */
   def scoped(scope: String): Seq[BiDict] =
     scopes.get(scope) match {
       case Some(ids) => dicts.filter(d => ids.contains(d.resource.id))
       case None      => dicts
     }
-
-  /** Scoped view as its own library (for strategies that take one). */
-  def scopedLibrary(scope: String): BiDictLibrary = BiDictLibrary(scoped(scope))
 
   def resolveIn(scope: String, value: String): Option[(OntologyClass, Resource)] =
     resolveVia(scoped(scope), value)
@@ -131,8 +119,6 @@ final case class BiDictLibrary(
     ds.iterator
       .map(d => d.resolve(value).map(_ -> d.resource))
       .collectFirst { case Some(hit) => hit }
-
-  def containsId(id: String): Boolean = dicts.exists(_.containsId(id))
 
   /** Is the value resolvable by the dict with the given resource id? */
   def memberOf(resourceId: String, value: String): Boolean =

@@ -51,7 +51,7 @@ object TimeContexts {
   * `phenoxtract/src/transform/strategies/age_to_iso8601.rs:44-158`).
   * Targets columns with NO header context and an age-typed data context.
   */
-final case class AgeToIso8601Strategy(minAge: Int = 0, maxAge: Int = 150) extends Strategy {
+final case class AgeToIso8601Strategy() extends Strategy {
   val name = "age_to_iso8601"
 
   private def targets(cdf: Cdf): Seq[String] =
@@ -78,7 +78,7 @@ final case class AgeToIso8601Strategy(minAge: Int = 0, maxAge: Int = 150) extend
             .filter(col("v").isNotNull && col("v") =!= "" &&
               !col("v").rlike(isoRe) &&
               !(col("y").isNotNull && col("y") === floor(col("y")) &&
-                col("y").between(minAge, maxAge)))
+                col("y").between(0, 150)))
             .select(col("v"))
         }
       },

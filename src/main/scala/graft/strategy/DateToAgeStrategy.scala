@@ -1,7 +1,6 @@
 package graft.strategy
 
 import graft.model._
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** T4 — convert every date-typed time column into an ISO-8601 age
@@ -11,11 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape: the patient→DOB map is assembled with one aggregation
   * over the union of all DateOfBirth columns (erroring when a patient
-  * carries conflicting DOBs — reference `date_to_age.rs:222-271`), then
-  * **broadcast-joined** onto every table that has date-typed columns
-  * (the reference builds the same map driver-side; broadcasting keeps
-  * the shape at 100 TB — the map is one row per patient, small relative
-  * to facts, and the join never shuffles the fact tables).
+  * carries conflicting DOBs — reference `date_to_age.rs:222-271`) and
+  * collected to the driver, where the reference builds the same map. It
+  * rides a Spark broadcast and every table reads a cell's DOB through a
+  * lookup UDF on its subject id, so the fact tables never shuffle.
   *
   * `strict`: a date cell whose patient has no DOB is an error; lenient
   * mode leaves null.
@@ -31,23 +29,14 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
       tables.exists(t => t.columnsOfKind(ContextKind.KDateOfBirth).nonEmpty)
 
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
-    val dobMap = buildDobMap(tables)
+    val bc = tables.head.df.sparkSession.sparkContext.broadcast(buildDobMap(tables))
+    val dobOf = udf((s: String) => if (s == null) null else bc.value.getOrElse(s, null))
 
     tables.map { cdf =>
       val targets = dateCols(cdf)
       if (targets.isEmpty) cdf
       else {
-        val subject = cdf.subjectIdColumn
-        // collision-proof temp name (the HpoDiseaseSplitter fresh()
-        // defense): a fact table legitimately named __dob must pass
-        // through unharmed, not die on AMBIGUOUS_REFERENCE
-        val dob = Iterator.from(0).map(i => if (i == 0) "__dob" else s"__dob$i")
-          .find(n => !cdf.df.columns.contains(n)).get
-        val joined = cdf.df.join(
-          broadcast(dobMap
-            .withColumnRenamed("__subject", subject)
-            .withColumnRenamed("__dob", dob)),
-          Seq(subject), "left")
+        val dob = dobOf(col(cdf.subjectIdColumn).cast("string")).cast("date")
 
         // ONE validation aggregate for all three error classes over all
         // date columns (was three full scans): negative ages, strict
@@ -57,12 +46,12 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
         // onset would erase it from the packet.
         val checks = targets.zipWithIndex.flatMap { case ((c, _), i) =>
           Seq(
-            count(when(toDate(col(c)) < col(dob), 1)).as(s"__neg_$i"),
-            count(when(toDate(col(c)).isNotNull && col(dob).isNull, 1)).as(s"__orph_$i"),
-            count(when(col(dob).isNotNull && col(c).isNotNull &&
+            count(when(toDate(col(c)) < dob, 1)).as(s"__neg_$i"),
+            count(when(toDate(col(c)).isNotNull && dob.isNull, 1)).as(s"__orph_$i"),
+            count(when(dob.isNotNull && col(c).isNotNull &&
               toDate(col(c)).isNull, 1)).as(s"__bad_$i"))
         }
-        val row = joined.agg(checks.head, checks.tail: _*).head()
+        val row = cdf.df.agg(checks.head, checks.tail: _*).head()
         def flagged(offset: Int): Seq[String] = targets.map(_._1).zipWithIndex.collect {
           case (c, i) if row.getLong(3 * i + offset) > 0 => c
         }
@@ -89,13 +78,12 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
         // reference returns AnyValue::String(date) there,
         // `date_to_age.rs:177-179`) — nulling it would silently erase
         // the observation's time information.
-        val converted = targets.foldLeft(joined) { case (acc, (c, _)) =>
-          val age = graft.functions.GraftExtensions.calendar_age_iso(
-            col(dob), toDate(col(c)))
+        val converted = targets.foldLeft(cdf.df) { case (acc, (c, _)) =>
+          val age = graft.functions.GraftExtensions.calendar_age_iso(dob, toDate(col(c)))
           acc.withColumn(c,
             if (strict) age
-            else when(col(dob).isNull, col(c).cast("string")).otherwise(age))
-        }.drop(dob)
+            else when(dob.isNull, col(c).cast("string")).otherwise(age))
+        }
 
         // Context rewrite *(Date) → *(Age), driver-side.
         val newSeries = cdf.context.seriesContexts.map { sc =>
@@ -114,18 +102,18 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
   private def toDate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     coalesce(c.try_cast("date"), graft.clean.Casts.toDateMulti(c.cast("string")))
 
-  /** One row per patient: `__subject`, `__dob` (DateType). Conflicting
-    * DOBs for one patient → error with the offending subject ids.
+  /** Patient id → DOB as its exact `yyyy-MM-dd` string cast (the JVM
+    * element type of a collected DateType varies with the java8API
+    * config, the string round-trip does not). Conflicting DOBs for one
+    * patient → error with the offending subject ids.
     *
-    * The map is COLLECTED to the driver and re-emitted as a local
-    * relation (the reference builds the same hash map driver-side,
-    * `date_to_age.rs:222-271`): it is per-patient small by the same
-    * assumption that lets it broadcast, and a lazily re-evaluated
-    * distributed map would re-scan every DOB column once per action on
-    * every table's plan (validation aggregate + final output each).
+    * The map is COLLECTED to the driver (the reference builds the same
+    * hash map driver-side, `date_to_age.rs:222-271`): it is one entry
+    * per patient, and a lazily re-evaluated distributed map would
+    * re-scan every DOB column once per action on every table's plan.
     * One union-aggregate pass total, conflict check included.
     */
-  private def buildDobMap(tables: Seq[Cdf]): DataFrame = {
+  private def buildDobMap(tables: Seq[Cdf]): Map[String, String] = {
     val pieces = for {
       cdf <- tables
       dobCol <- cdf.columnsOfKind(ContextKind.KDateOfBirth)
@@ -135,28 +123,15 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
       .filter(col("__dob").isNotNull)
     require(pieces.nonEmpty, s"strategy $name: no DateOfBirth column found")
 
-    val all = pieces.reduce(_ unionByName _)
-    // dates ride the driver hop as their exact yyyy-MM-dd string cast —
-    // the JVM element type of a collected DateType varies with the
-    // java8API config, the string round-trip does not
-    val agg = all.groupBy(col("__subject"))
+    val rows = pieces.reduce(_ unionByName _)
+      .groupBy(col("__subject"))
       .agg(collect_set(col("__dob").cast("string")).as("__dobs"))
-    val rows = agg.collect()
+      .collect()
     val conflicted = rows.filter(_.getSeq[String](1).size > 1)
       .map(_.getString(0)).take(20)
     if (conflicted.nonEmpty)
       throw MappingException(name, conflicted.toSeq,
         "patient(s) with more than one distinct date of birth")
-    val spark = tables.head.df.sparkSession
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.toSeq.map(r => org.apache.spark.sql.Row(
-        r.getString(0), r.getSeq[String](1).head)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__subject",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__dob_s",
-          org.apache.spark.sql.types.StringType))))
-      .select(col("__subject"), col("__dob_s").cast("date").as("__dob"))
+    rows.map(r => r.getString(0) -> r.getSeq[String](1).head).toMap
   }
 }

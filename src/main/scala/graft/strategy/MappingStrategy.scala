@@ -1,26 +1,23 @@
 package graft.strategy
 
-import graft.clean.Casts
 import graft.model._
+import graft.ontology.BiDict
 import org.apache.spark.sql.functions._
 
 /** T2 — context-targeted synonym normalization (reference
   * `phenoxtract/src/transform/strategies/mapping.rs:62-278`): cells of
   * every column whose data context matches `targetKind` are mapped via
-  * Java-trim + ROOT-lowercase of the value; **all unmapped non-null values across all
-  * tables are collected first and the strategy fails once** with the
-  * complete set (reference error-accumulation semantics
-  * `mapping.rs:202-277`).
+  * `BiDict.norm` (Java trim + ROOT-locale lowercase) of the value; **all
+  * unmapped non-null values across all tables are collected first and
+  * the strategy fails once** with the complete set (reference
+  * error-accumulation semantics `mapping.rs:202-277`).
   *
-  * Lowering is pinned to `Locale.ROOT` on BOTH sides of the contract —
-  * driver-built keys and the executor-side probe (`lower_root`, not
-  * Spark's `lower`, whose non-ASCII slow path uses each executor's JVM
-  * default locale): on a cluster with heterogeneous or tr/az/lt
-  * locales the two would otherwise disagree on keys containing 'I'.
-  *
-  * The unmapped scan is one distinct-collect over all matching columns
-  * ([[MappingException.rejectAny]]) — a second cheap pass, not a
-  * per-row throw.
+  * The map's keys and every cell are normalized by the same JVM rule:
+  * the map rides a Spark broadcast and each cell is keyed and looked up
+  * in a UDF, so a tab/CR-padded or upper-case cell maps on any host
+  * locale. The unmapped scan is one distinct-collect over all matching
+  * columns ([[MappingException.rejectAny]]) — a second cheap pass, not
+  * a per-row throw.
   */
 final case class MappingStrategy(
     name: String,
@@ -28,39 +25,29 @@ final case class MappingStrategy(
     targetKind: ContextKind) extends Strategy {
 
   private val norm: Map[String, String] =
-    synonymMap.map { case (k, v) =>
-      k.trim.toLowerCase(java.util.Locale.ROOT) -> v }
-
-  /** Executor-side twin of the driver key normalization above: JAVA
-    * trim (all chars ≤ U+0020 — what `String.trim` strips), not
-    * Spark's space-only `trim`, so a tab/CR-padded cell maps instead
-    * of aborting; ROOT lowercase via `lower_root`.
-    */
-  private def probeKey(c: org.apache.spark.sql.Column) =
-    graft.functions.GraftExtensions.lower_root(
-      Casts.javaTrim(c.cast("string")))
+    synonymMap.map { case (k, v) => BiDict.norm(k) -> v }
 
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
-    // Pass 1: accumulate every unmapped distinct value across tables.
+    val bc = tables.head.df.sparkSession.sparkContext.broadcast(norm)
+    val keyOf = udf((v: String) => if (v == null) null else BiDict.norm(v))
+    val mapped = udf((k: String) => if (k == null) null else bc.value.getOrElse(k, null))
+    def key(c: String) = keyOf(col(c).cast("string"))
+
+    // Pass 1: accumulate every unmapped distinct key across tables.
     MappingException.rejectAny(name,
       tables.flatMap { cdf =>
         cdf.columnsOfKind(targetKind).map { c =>
           cdf.df
-            .select(probeKey(col(c)).as("v"))
-            .filter(col("v").isNotNull && !col("v").isin(norm.keys.toSeq: _*))
+            .select(key(c).as("v"))
+            .filter(col("v").isNotNull && mapped(col("v")).isNull)
         }
       },
       hint = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}")
 
-    // Pass 2: apply the when-chain mapping.
+    // Pass 2: rewrite each cell to its mapped value.
     tables.map { cdf =>
       val df = cdf.columnsOfKind(targetKind).foldLeft(cdf.df) { (acc, c) =>
-        val key = probeKey(col(c))
-        val mapped = norm.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-          case (accExpr, (k, v)) =>
-            Some(accExpr.fold(when(key === k, lit(v)))(_.when(key === k, lit(v))))
-        }.map(_.otherwise(lit(null).cast("string"))).getOrElse(col(c))
-        acc.withColumn(c, mapped)
+        acc.withColumn(c, mapped(key(c)))
       }
       cdf.copy(df = df)
     }

@@ -177,15 +177,15 @@ class AssemblerSpec extends SparkSpec {
   }
 
   test("same time value under different kind annotations is ONE value, not a conflict") {
-    // timeOfDeath 'P50Y' annotated age in one table and date in
-    // another: the kind is not part of the cell's identity (TimeParse
-    // infers it from the string) — a (value, kind) distinct raised a
-    // spurious \"multiple values for timeOfDeath: P50Y, P50Y\" error.
+    // timeOfDeath 'P50Y' from two tables: the time kind is not part of
+    // the cell's identity (TimeParse infers it from the string) — a
+    // (value, kind) distinct once raised a spurious
+    // \"multiple values for timeOfDeath: P50Y, P50Y\" error.
     val facts = Seq(
       fact(0, "t1", 0, "", FactKinds.Individual_)
-        .copy(field = "timeOfDeath", value = "P50Y", tkind = "age"),
+        .copy(field = "timeOfDeath", value = "P50Y"),
       fact(1, "t2", 0, "", FactKinds.Individual_)
-        .copy(field = "timeOfDeath", value = "P50Y", tkind = "date"))
+        .copy(field = "timeOfDeath", value = "P50Y"))
     val p = Assembler.assembleOne("P1", facts, lib, cfg)
     assert(p.subject.vitalStatus.flatMap(_.timeOfDeath).flatMap(_.age).map(_.iso8601duration)
       .contains("P50Y"))

@@ -266,7 +266,7 @@ class StrategySpec extends SparkSpec {
     // builtin `lower` would take its non-ASCII slow path and lowercase
     // with the JVM default locale — under tr that maps 'I' to dotless
     // 'ı', missing the ROOT-keyed dictionary and aborting on a value
-    // the dictionary knows. lower_root pins ROOT on the probe side.
+    // the dictionary knows. BiDict.norm pins ROOT on the cell side.
     val hp = BiDict.fromEntries(
       Resource("hp", "HPO", "http://purl.obolibrary.org/obo/hp.owl", "v1", "HP", "http://purl.obolibrary.org/obo/HP_"),
       Seq(("HP:0000554", "Behçet IRITIS", Seq())))
