@@ -18,6 +18,14 @@ import org.apache.spark.sql.Dataset
   * and `Strategy.transform` cut their lineage, see `Cdf.materialized`).
   * Facts and assembly stay lazy until the load runs the single
   * groupByKey shuffle in `collect`.
+  *
+  * Per-table work that starts Spark jobs runs concurrently on the
+  * driver ([[Cdf.parMap]]): the tables' preprocessing here, and inside
+  * each strategy its per-table checks and lineage cuts
+  * ([[Strategy.transform]]). Strategies still run one after another,
+  * tables keep their input order, and when several tables fail the
+  * first table's error is thrown, as a serial loop would. Fact
+  * extraction stays serial: it starts no job.
   */
 final case class Pipeline(
     strategies: Seq[Strategy],
@@ -27,7 +35,7 @@ final case class Pipeline(
     resolver: Option[graft.ontology.TermResolver] = None) {
 
   def transform(tables: Seq[Cdf]): Dataset[Phenopacket] = {
-    val preprocessed = tables.map(Preprocessor.process)
+    val preprocessed = Cdf.parMap(tables)(Preprocessor.process)
     val transformed = strategies.foldLeft(preprocessed) { (ts, strategy) =>
       if (strategy.isValid(ts)) strategy.transform(ts) else ts
     }

@@ -46,21 +46,26 @@ object ConfigRunner {
     graft.load.FileSystemLoader.load(pipeline.transform(tables), out.outputDir, out.createDir)
   }
 
+  /** One extract per CSV source or workbook, in the config's single
+    * ordered `data_sources` list (fact provenance sorts by data-source
+    * registration order, `Facts.scala`, so a csvs-then-excels concat
+    * would reorder packet contents for mixed-type configs relative to
+    * the configured and reference order).
+    *
+    * The extracts run concurrently ([[Cdf.parMap]]); tables come back
+    * in configured order, and when several sources fail, the error of
+    * the first configured one is thrown.
+    */
   def extractAll(spark: SparkSession, cfg: ConfigLoader.GraftConfig): Seq[Cdf] = {
-    // Reassemble the config's single ordered data_sources list: fact
-    // provenance sorts by data-source registration order (Facts.scala),
-    // so a csvs-then-excels concat would silently reorder packet
-    // contents for mixed-type configs relative to the configured (and
-    // reference) order.
     val csvs = cfg.csvSources.map { s =>
-      s.ordinal -> Seq(CsvSource.extract(spark, CsvSourceConfig(
-        s.source, s.tableContext, s.separator, s.hasHeaders, s.patientsAreRows)))
+      s.ordinal -> (() => Seq(CsvSource.extract(spark, CsvSourceConfig(
+        s.source, s.tableContext, s.separator, s.hasHeaders, s.patientsAreRows))))
     }
     val excels = cfg.excelSources.map { e =>
-      e.ordinal -> ExcelSource.extract(spark, e.source, e.sheets.map(sh =>
-        ExcelSheetConfig(sh.sheetName, sh.tableContext, sh.hasHeaders, sh.patientsAreRows)))
+      e.ordinal -> (() => ExcelSource.extract(spark, e.source, e.sheets.map(sh =>
+        ExcelSheetConfig(sh.sheetName, sh.tableContext, sh.hasHeaders, sh.patientsAreRows))))
     }
-    (csvs ++ excels).sortBy(_._1).flatMap(_._2)
+    Cdf.parMap((csvs ++ excels).sortBy(_._1))(_._2()).flatten
   }
 
   def buildLibrary(cfg: ConfigLoader.GraftConfig): BiDictLibrary =

@@ -3,6 +3,9 @@ package graft.model
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.{Failure, Try}
+
 /** ContextualizedDataFrame: a Spark DataFrame plus its semantic table
   * context (reference
   * `phenoxtract/src/extract/contextualized_data_frame.rs:29-32`).
@@ -61,6 +64,36 @@ final case class Cdf(context: TableContext, df: DataFrame) {
 }
 
 object Cdf {
+
+  /** `xs.map(f)` with the calls run concurrently: the ETL's one
+    * concurrency primitive, used by the per-table loops that start
+    * Spark jobs (extract, preprocess, the strategies' per-table checks
+    * and lineage cuts). Each table's work is a few small jobs whose
+    * wall time is mostly planning, codegen and job latency, so running
+    * the tables side by side fills the other `local[N]` cores.
+    *
+    *   - Results come back in input order.
+    *   - Every call finishes before this returns or throws; if any
+    *     failed, the failure of the FIRST failing element in input
+    *     order is rethrown, so errors match a serial `map`.
+    *   - The pool (`min(xs.size, availableProcessors)` threads) is made
+    *     per call and its threads are created by the calling thread, so
+    *     they inherit its Spark local properties (job group, scheduler
+    *     pool, tracing tags) and its active session. Never call it
+    *     from inside `f`.
+    */
+  def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.size <= 1) xs.map(f) // nothing to overlap; a zero-thread pool is illegal
+    else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(xs.size, Runtime.getRuntime.availableProcessors))
+      try {
+        val calls = xs.map(x => pool.submit(new Callable[B] { def call(): B = f(x) }))
+        val outcomes = calls.map(c => Try(c.get())) // waits for every call
+        outcomes.collectFirst { case Failure(e: ExecutionException) => throw e.getCause }
+        outcomes.map(_.get)
+      } finally pool.shutdownNow()
+    }
 
   /** Construction-time validation (reference
     * `validation/contextualised_dataframe_validation.rs:9-90`,

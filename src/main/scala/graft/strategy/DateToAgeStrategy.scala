@@ -32,7 +32,7 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
     val bc = tables.head.df.sparkSession.sparkContext.broadcast(buildDobMap(tables))
     val dobOf = udf((s: String) => if (s == null) null else bc.value.getOrElse(s, null))
 
-    tables.map { cdf =>
+    Cdf.parMap(tables) { cdf =>
       val targets = dateCols(cdf)
       if (targets.isEmpty) cdf
       else {

@@ -31,7 +31,7 @@ object MultiHpoColExpansionStrategy extends Strategy {
     tables.exists(_.columnsOfKind(ContextKind.KMultiHpoId).nonEmpty)
 
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] =
-    tables.map { cdf =>
+    Cdf.parMap(tables) { cdf =>
       val targets = cdf.bindings.filter(_._2.dataContext.kind == ContextKind.KMultiHpoId)
       if (targets.isEmpty) cdf
       else {
@@ -55,10 +55,16 @@ object MultiHpoColExpansionStrategy extends Strategy {
           // (the column ordinal breaks (row, pos) ties between two text
           // columns of the same block — without it the pivot column
           // order, hence the emitted feature order, is nondeterministic).
+          // The (row, col, pos) keys are unique, so a driver-side sort
+          // of the collected ids gives that order with no Spark sort job.
           val ids = mentions.groupBy(col("__hpo"))
             .agg(min(struct(col("__row"), col("__col"), col("__pos"))).as("__first"))
-            .orderBy(col("__first"))
-            .collect().map(_.getString(0))
+            .collect()
+            .sortBy { r =>
+              val first = r.getStruct(1)
+              (first.getLong(0), first.getInt(1), first.getInt(2))
+            }
+            .map(_.getString(0))
           if (ids.nonEmpty) {
             val flags = mentions.select(col("__s"), col("__hpo")).groupBy(col("__s"))
               .pivot(col("__hpo"), ids.toIndexedSeq)

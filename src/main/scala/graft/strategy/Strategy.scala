@@ -20,10 +20,15 @@ trait Strategy {
     * every table it rewrote, so the next strategy's checks and the load
     * start from its output. A table passed through keeps its frame
     * (`eq`): no job, nothing stored twice.
+    *
+    * The cuts run concurrently ([[Cdf.parMap]]), as do the per-table
+    * checks of `DateToAgeStrategy` and `MultiHpoColExpansionStrategy`;
+    * tables keep their input order, and when several tables fail the
+    * first table's error is thrown.
     */
   final def transform(tables: Seq[Cdf]): Seq[Cdf] = {
     require(isValid(tables), s"strategy $name: invalid input tables")
-    internalTransform(tables).map { t =>
+    Cdf.parMap(internalTransform(tables)) { t =>
       if (tables.exists(_.df eq t.df)) t else t.materialized
     }
   }

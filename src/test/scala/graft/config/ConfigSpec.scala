@@ -332,4 +332,68 @@ class ConfigSpec extends SparkSpec {
     val cfg = ConfigLoader.load(cfgPath)
     assert(cfg.csvSources.head.hasHeaders === true)
   }
+
+  /** A config over the given `(file name, series_contexts YAML)` CSV
+    * sources, in that order, running `strategies`. */
+  private def multiSourceConfig(dir: java.nio.file.Path, strategies: String,
+      sources: (String, String)*): String = {
+    val blocks = sources.map { case (file, series) =>
+      s"""  - type: "csv"
+         |    source: "${dir.resolve(file)}"
+         |    series_contexts:
+         |$series""".stripMargin
+    }
+    write(dir, "config.yaml",
+      s"""data_sources:
+         |${blocks.mkString("\n")}
+         |pipeline:
+         |  strategies: $strategies
+         |  loader:
+         |    file_system:
+         |      output_dir: "${dir.resolve("out")}"
+         |      create_dir: true
+         |  meta_data:
+         |    created_by: "tester"
+         |    cohort_name: "c1"
+         |""".stripMargin)
+  }
+
+  private val subjectSeries =
+    """      - identifier: "Patient ID"
+      |        data_context: subject_id""".stripMargin
+
+  test("two sources with null subject ids: the first configured one is named") {
+    val dir = Files.createTempDirectory("graftcfg")
+    write(dir, "first.csv", "Patient ID,Sex\nP001,M\n,F\n")
+    write(dir, "second.csv", "Patient ID,Sex\n,M\nP002,F\n")
+    write(dir, "fine.csv", "Patient ID\nP003\n")
+    val cfgPath = multiSourceConfig(dir, "[]",
+      "fine.csv" -> subjectSeries, "first.csv" -> subjectSeries, "second.csv" -> subjectSeries)
+    val e = intercept[IllegalArgumentException](ConfigRunner.run(spark, cfgPath))
+    assert(e.getMessage.contains("first.csv"), e.getMessage)
+    assert(e.getMessage.contains("contains nulls"), e.getMessage)
+    assert(!e.getMessage.contains("second.csv"), e.getMessage)
+  }
+
+  test("two tables failing strict date_to_age: the first table's error is thrown") {
+    val dir = Files.createTempDirectory("graftcfg")
+    def dated(column: String) =
+      s"""$subjectSeries
+         |      - identifier: "$column"
+         |        data_context:
+         |          onset: date
+         |        building_block_id: "P"""".stripMargin
+    write(dir, "dob.csv", "Patient ID,DOB\nP001,2000-01-01\n")
+    write(dir, "first.csv", "Patient ID,First onset\nP001,2010-01-01\nP002,2011-01-01\n")
+    write(dir, "second.csv", "Patient ID,Second onset\nP003,2012-01-01\n")
+    val cfgPath = multiSourceConfig(dir, "[\"date_to_age\"]",
+      "dob.csv" -> s"""$subjectSeries
+                     |      - identifier: "DOB"
+                     |        data_context: date_of_birth""".stripMargin,
+      "first.csv" -> dated("First onset"),
+      "second.csv" -> dated("Second onset"))
+    val e = intercept[graft.strategy.MappingException](ConfigRunner.run(spark, cfgPath))
+    assert(e.badValues == Seq("First onset"), e.getMessage)
+    assert(e.getMessage.contains("no date of birth"), e.getMessage)
+  }
 }

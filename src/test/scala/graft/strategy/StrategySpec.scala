@@ -198,6 +198,27 @@ class StrategySpec extends SparkSpec {
         sc.dataContext == Context.ObservationStatus })
   }
 
+  test("T5: discovered ids keep first-seen order (row, then source column, then cell)") {
+    // P1's cell in `a` names HP:0000009 before HP:0000003 (not
+    // lexicographic); `b` is P1's second source column, so its
+    // HP:0000005 comes after both of `a`'s ids although it is at
+    // position 0 of its cell; P2 brings the smallest id last.
+    val df = Seq(
+      ("P1", "HP:0000009 then HP:0000003", "HP:0000005"),
+      ("P2", "HP:0000001", "HP:0000003")).toDF("subject_id", "a", "b")
+    val out = MultiHpoColExpansionStrategy.transform(Seq(cdf("t", df,
+      SeriesContext(Identifier.Single("a"), dataContext = Context.MultiHpoId,
+        buildingBlockId = Some("A")),
+      SeriesContext(Identifier.Single("b"), dataContext = Context.MultiHpoId,
+        buildingBlockId = Some("A"))))).head
+    val expected = Seq("HP:0000009#A", "HP:0000003#A", "HP:0000005#A", "HP:0000001#A")
+    assert(out.df.columns.toSeq.filter(_.startsWith("HP:")) == expected)
+    assert(out.context.seriesContexts.flatMap(_.identifier match {
+      case Identifier.Single(n) if n.startsWith("HP:") => Some(n)
+      case _ => None
+    }) == expected)
+  }
+
   // --- T7 splitter ----------------------------------------------------
   test("T7: HpoOrDisease splits by dictionary membership; unknown errors") {
     import graft.ontology._
