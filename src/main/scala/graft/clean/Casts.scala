@@ -41,11 +41,14 @@ object Casts {
     Seq("yyyy-MM-dd", "yyyy.MM.dd", "MM/dd/yyyy", "dd-MM-yyyy", "dd.MM.yyyy",
         "yyyy-M-d", "yyyy.M.d", "M/d/yyyy", "d-M-yyyy", "d.M.yyyy")
 
+  /** Datetime formats tried in order (reference `constants.rs:12-20`;
+    * RFC-822 rides [[graft.functions.Rfc1123Timestamp]]): 'T' or space
+    * separator, optional fraction of 1–9 digits (kept to microseconds,
+    * Spark's precision), and after a 'T' an optional offset (`Z` or
+    * `±HH:MM`). Naive datetimes are in the parse zone.
+    */
   val datetimeFormats: Seq[String] =
-    Seq("yyyy-MM-dd'T'HH:mm:ss.SSSSSS", "yyyy-MM-dd'T'HH:mm:ss.SSS",
-        "yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        "yyyy-MM-dd HH:mm:ss.SSS", "yyyy-MM-dd HH:mm:ss",
-        "yyyy-MM-dd'T'HH:mm:ssXXX")
+    Seq("yyyy-MM-dd'T'HH:mm:ss[.SSSSSSSSS][XXX]", "yyyy-MM-dd HH:mm:ss[.SSSSSSSSS]")
 
   /** P7: multi-format date parse incl. the bare-year rule
     * ("1989" → 1989-01-01). Null-safe: unparseable → null.
@@ -120,12 +123,17 @@ object Casts {
     row.getLong(0) == row.getLong(1) && (!requireValues || row.getLong(0) > 0)
   }
 
-  private def candidateCasts(c: Column): Seq[(DataType, Column)] = Seq(
-    BooleanType   -> toBoolStrict(c),
-    LongType      -> toLongViaDouble(c),
-    DoubleType    -> c.try_cast(DoubleType),
-    DateType      -> toDateMulti(c),
-    TimestampType -> toTimestampMulti(c))
+  /** The string casters, in the ambivalent cascade's order; a type
+    * not listed casts with `try_cast`. */
+  private val casters: Seq[(DataType, Column => Column)] = Seq(
+    BooleanType   -> toBoolStrict,
+    LongType      -> toLongViaDouble,
+    DoubleType    -> ((c: Column) => c.try_cast(DoubleType)),
+    DateType      -> toDateMulti,
+    TimestampType -> toTimestampMulti)
+
+  private def candidateCasts(c: Column): Seq[(DataType, Column)] =
+    casters.map { case (t, cast) => t -> cast(c) }
 
   /** P3: ambivalent cast — re-infer a string column through the cascade
     * bool → long → double → date → timestamp; first lossless cast wins,
@@ -162,13 +170,8 @@ object Casts {
     * that failed to cast (reference `casting.rs:48-89`).
     */
   def specific(df: DataFrame, name: String, target: DataType): DataFrame = {
-    val casted = target match {
-      case BooleanType   => toBoolStrict(col(name))
-      case LongType      => toLongViaDouble(col(name))
-      case DateType      => toDateMulti(col(name))
-      case TimestampType => toTimestampMulti(col(name))
-      case t             => col(name).try_cast(t)
-    }
+    val casted = casters.collectFirst { case (t, cast) if t == target => cast(col(name)) }
+      .getOrElse(col(name).try_cast(target))
     if (!lossless(df, name, casted, requireValues = false)) {
       val bad = df.filter(col(name).isNotNull && casted.isNull)
         .select(col(name)).distinct().limit(20)

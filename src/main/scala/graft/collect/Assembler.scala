@@ -442,83 +442,38 @@ object GenomicInterpretations {
   * returns None and every builder call site maps that to a
   * ParsingError — junk never rides silently into a packet).
   *
-  * DATETIMEs are first-class, mirroring the reference's
-  * `try_parse_string_datetime` format list (`constants.rs:12-20`):
-  * `yyyy-MM-dd HH:mm:ss` (space or 'T', optional fractional seconds),
-  * RFC-822 (`Tue, 01 Dec 2020 10:00:00 GMT`), and RFC-3339 with an
-  * offset — a date-only fallback that threw on '2020-03-01T10:00' was
-  * a whole-job crash on any timestamped clinical cell. Naive
-  * datetimes are taken as UTC (the reference's `Utc.from_utc_datetime`).
-  *
-  * All formatters are precompiled (they are immutable/thread-safe):
-  * this runs per time cell inside the assembly fold — rebuilding 10+
-  * DateTimeFormatters per cell is measurable waste at volume.
+  * Dates and datetimes go through the preprocessor's parser, the JVM
+  * side of [[graft.functions.MultiFormatParse]] (the formats of
+  * `Casts.datetimeFormats`, RFC-822, then `Casts.dateFormats` at
+  * midnight), as the reference's builder reuses its cast cascade
+  * (`data_processing/parsing.rs`). Impossible days (`2021-02-29`)
+  * are rejected, not clamped. Naive datetimes are taken as UTC (the
+  * reference's `Utc.from_utc_datetime`); the instant keeps
+  * microseconds, Spark's precision.
   */
 object TimeParse {
-  import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
-  import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
-  import java.time.temporal.ChronoField
+  import graft.functions.MultiFormatParse
+  import org.apache.spark.sql.catalyst.util.DateTimeUtils
+  import org.apache.spark.unsafe.types.UTF8String
+  import java.time.{Instant, ZoneOffset}
 
-  private val dateFormatters: Seq[DateTimeFormatter] =
-    graft.clean.Casts.dateFormats.map(DateTimeFormatter.ofPattern)
-  private val BareYear = "^\\d{4}$".r
-  // "yyyy-MM-dd HH:mm:ss" with a space or 'T' separator and an
-  // optional fractional part — chrono's "%.f" accepts up to nanos.
-  private val dateTimeFormatters: Seq[DateTimeFormatter] = Seq(" ", "'T'").map { sep =>
-    new DateTimeFormatterBuilder()
-      .appendPattern(s"yyyy-MM-dd$sep" + "HH:mm:ss")
-      .optionalStart()
-      .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
-      .optionalEnd()
-      .toFormatter()
-  }
   private val IsoDuration = graft.functions.DateTimeFns.iso8601DurationRegex.r
 
-  def parseDate(v: String): Option[LocalDate] = {
-    val s = v.trim
-    if (BareYear.findFirstIn(s).isDefined) Some(LocalDate.of(s.toInt, 1, 1))
-    else dateFormatters.iterator.flatMap { f =>
-      try Some(LocalDate.parse(s, f))
-      catch { case _: Exception => None }
-    }.nextOption()
-  }
-
-  /** The reference's datetime ladder: local patterns → RFC-822 →
-    * RFC-3339-with-offset. Returns the UTC instant.
-    */
-  def parseDateTime(v: String): Option[Instant] = {
-    val s = v.trim
-    val local = dateTimeFormatters.iterator.flatMap { f =>
-      try Some(LocalDateTime.parse(s, f).toInstant(ZoneOffset.UTC))
-      catch { case _: Exception => None }
-    }.nextOption()
-    local
-      .orElse(
-        try Some(java.time.ZonedDateTime
-          .parse(s, DateTimeFormatter.RFC_1123_DATE_TIME).toInstant)
-        catch { case _: Exception => None })
-      .orElse(
-        try Some(java.time.OffsetDateTime.parse(s).toInstant)
-        catch { case _: Exception => None })
-  }
-
-  private def render(i: Instant): String = i.toString
+  private def parseInstant(s: String): Option[Instant] =
+    Option(MultiFormatParse.timestampBoxed(UTF8String.fromString(s), ZoneOffset.UTC))
+      .map(micros => DateTimeUtils.microsToInstant(micros))
 
   /** RFC-3339 timestamp string for a date/datetime cell, or error
-    * (reference `try_parse_timestamp(...).ok_or(ParsingError)`;
-    * datetime formats tried FIRST, like `utils.rs:22-31`).
+    * (reference `try_parse_timestamp(...).ok_or(ParsingError)`).
     */
   def toTimestampString(v: String): String =
-    parseDateTime(v).map(render)
-      .orElse(parseDate(v).map(d => s"${d}T00:00:00Z"))
-      .getOrElse(
-        throw new IllegalStateException(s"could not parse timestamp: '$v'"))
+    parseInstant(v.trim).map(_.toString).getOrElse(
+      throw new IllegalStateException(s"could not parse timestamp: '$v'"))
 
   def parse(v: String): TimeElement = {
     val s = v.trim
     if (IsoDuration.findFirstIn(s).isDefined) TimeElement(age = Some(Age(s)))
-    else parseDateTime(s).map(i => TimeElement(timestamp = Some(render(i))))
-      .orElse(parseDate(s).map(d => TimeElement(timestamp = Some(s"${d}T00:00:00Z"))))
+    else parseInstant(s).map(i => TimeElement(timestamp = Some(i.toString)))
       .getOrElse(throw new IllegalStateException(
         s"could not parse time element: '$s' is neither a date/datetime nor an ISO-8601 duration"))
   }

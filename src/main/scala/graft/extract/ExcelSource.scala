@@ -168,7 +168,7 @@ object ExcelSource {
   }
 
   /** Excel serial date (1900 system, epoch 1899-12-30) → ISO string;
-    * fractional part becomes a time component.
+    * fractional part becomes a `THH:mm:ss` time component.
     */
   def serialToDateString(serial: Double): String = {
     val epoch = java.time.LocalDate.of(1899, 12, 30)
@@ -180,10 +180,12 @@ object ExcelSource {
       // "next day 00:00") rounds to 86400 seconds — that must ADVANCE
       // the date, not wrap to 00:00 of the same day via % 86400
       // (silent off-by-one-day on datetime cells).
+      // Seconds always printed: "T12:00" (`LocalTime.toString`) is a
+      // form no datetime format of the engine reads.
       val secs = math.round(frac * 86400)
       val date = epoch.plusDays(days + secs / 86400)
-      val time = java.time.LocalTime.ofSecondOfDay(secs % 86400)
-      if (secs % 86400 == 0) date.toString else s"${date}T$time"
+      val t = secs % 86400
+      if (t == 0) date.toString else f"${date}T${t / 3600}%02d:${t / 60 % 60}%02d:${t % 60}%02d"
     }
   }
 

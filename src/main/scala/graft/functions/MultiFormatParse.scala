@@ -13,7 +13,11 @@ import java.util.regex.Pattern
 
 /** The multi-format date (`timestamp = false`) or datetime
   * (`timestamp = true`) parse of [[graft.clean.Casts]] as ONE native
-  * expression, null when unparseable.
+  * expression, null when unparseable. The only parser of date and time
+  * cells in the ETL: the preprocessor's casts, `date_to_age` (through
+  * `Casts.toTimestampMulti`) and the assembler's `collect.TimeParse`
+  * (through [[MultiFormatParse.timestampBoxed]] in UTC) all use it;
+  * `DateParseGuardSpec` keeps other parsers out.
   *
   * Same cascade, same order and same results as the column algebra it
   * replaces (10 chained `try_to_timestamp` formats behind `rlike`
@@ -126,7 +130,8 @@ object MultiFormatParse {
     } else null
   }
 
-  /** Micros since epoch, or null. */
+  /** Micros since epoch, or null; naive datetimes and dates are in
+    * `zone`. The JVM entry point for callers outside a Spark plan. */
   def timestampBoxed(s: UTF8String, zone: ZoneId): java.lang.Long = {
     val str = s.toString
     if (TimeSeparator.matcher(str).find()) {

@@ -45,8 +45,6 @@ final case class Cdf(context: TableContext, df: DataFrame) {
     hits.headOption
   }
 
-  def withColumnContext(sc: SeriesContext): Cdf = copy(context = context.withSeries(sc))
-
   /** The same table with its lineage cut: the frame is computed once
     * now and later plans read the stored rows instead of re-planning
     * and re-compiling the whole lineage from the file scan. Called at

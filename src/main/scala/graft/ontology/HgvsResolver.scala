@@ -42,8 +42,6 @@ final case class HgvsResolver(entries: Map[String, ResolvedHgvs]) {
     val key = v.trim
     entries.getOrElse(key, ResolvedHgvs(Seq(syntaxOf(key) -> key), None, None))
   }
-
-  def isKnown(v: String): Boolean = entries.contains(v.trim)
 }
 
 object HgvsResolver {

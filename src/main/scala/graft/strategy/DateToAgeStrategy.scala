@@ -1,7 +1,9 @@
 package graft.strategy
 
 import graft.model._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
 
 /** T4 — convert every date-typed time column into an ISO-8601 age
   * relative to the patient's date of birth, then rewrite the data
@@ -17,6 +19,11 @@ import org.apache.spark.sql.functions._
   *
   * `strict`: a date cell whose patient has no DOB is an error; lenient
   * mode leaves null.
+  *
+  * Date and timestamp columns are cast to dates directly; any other
+  * column is parsed as a string by the preprocessor's parser
+  * (`Casts.toTimestampMulti`), so a cell the preprocessor would reject
+  * (`2020-7`, `2020-07-01 junk`) is an unparseable date here too.
   */
 final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
   val name = "date_to_age"
@@ -37,6 +44,7 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
       if (targets.isEmpty) cdf
       else {
         val dob = dobOf(col(cdf.subjectIdColumn).cast("string")).cast("date")
+        val dates = targets.map { case (c, _) => c -> toDate(cdf.df, c) }.toMap
 
         // ONE validation aggregate for all three error classes over all
         // date columns (was three full scans): negative ages, strict
@@ -46,10 +54,10 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
         // onset would erase it from the packet.
         val checks = targets.zipWithIndex.flatMap { case ((c, _), i) =>
           Seq(
-            count(when(toDate(col(c)) < dob, 1)).as(s"__neg_$i"),
-            count(when(toDate(col(c)).isNotNull && dob.isNull, 1)).as(s"__orph_$i"),
+            count(when(dates(c) < dob, 1)).as(s"__neg_$i"),
+            count(when(dates(c).isNotNull && dob.isNull, 1)).as(s"__orph_$i"),
             count(when(dob.isNotNull && col(c).isNotNull &&
-              toDate(col(c)).isNull, 1)).as(s"__bad_$i"))
+              dates(c).isNull, 1)).as(s"__bad_$i"))
         }
         val row = cdf.df.agg(checks.head, checks.tail: _*).head()
         def flagged(offset: Int): Seq[String] = targets.map(_._1).zipWithIndex.collect {
@@ -79,7 +87,7 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
         // `date_to_age.rs:177-179`) — nulling it would silently erase
         // the observation's time information.
         val converted = targets.foldLeft(cdf.df) { case (acc, (c, _)) =>
-          val age = graft.functions.GraftExtensions.calendar_age_iso(dob, toDate(col(c)))
+          val age = graft.functions.GraftExtensions.calendar_age_iso(dob, dates(c))
           acc.withColumn(c,
             if (strict) age
             else when(dob.isNull, col(c).cast("string")).otherwise(age))
@@ -96,11 +104,14 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
     }
   }
 
-  /** Dates may arrive as DateType/TimestampType (preprocessor-cast) or
-    * as strings in one of the supported formats.
+  /** Column `name` of `df` as a date: DateType/TimestampType columns
+    * (preprocessor-cast) directly, anything else through the
+    * preprocessor's multi-format datetime parse of its string form.
     */
-  private def toDate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    coalesce(c.try_cast("date"), graft.clean.Casts.toDateMulti(c.cast("string")))
+  private def toDate(df: DataFrame, name: String): Column = df.schema(name).dataType match {
+    case DateType | TimestampType => col(name).cast(DateType)
+    case _ => graft.clean.Casts.toTimestampMulti(col(name).cast(StringType)).cast(DateType)
+  }
 
   /** Patient id → DOB as its exact `yyyy-MM-dd` string cast (the JVM
     * element type of a collected DateType varies with the java8API
@@ -119,7 +130,7 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
       dobCol <- cdf.columnsOfKind(ContextKind.KDateOfBirth)
     } yield cdf.df
       .select(col(cdf.subjectIdColumn).cast("string").as("__subject"),
-        toDate(col(dobCol)).as("__dob"))
+        toDate(cdf.df, dobCol).as("__dob"))
       .filter(col("__dob").isNotNull)
     require(pieces.nonEmpty, s"strategy $name: no DateOfBirth column found")
 

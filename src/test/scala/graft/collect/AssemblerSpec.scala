@@ -146,12 +146,19 @@ class AssemblerSpec extends SparkSpec {
     val hp = BiDict.fromEntries(Resource("hp", "HPO", "u", "v", "HP", "i"),
       Seq(("HP:1", "f1", Seq.empty)))
     val l2 = BiDictLibrary(Seq(hp))
-    val facts = Seq(
-      fact(0, "t1", 0, "A", FactKinds.HpoCell).copy(hpo = "HP:1", onset = "not-a-time"))
-    val e = intercept[IllegalStateException] {
-      Assembler.assembleOne("P1", facts, l2, cfg)
+    // impossible days are rejected, never clamped to the month's end
+    for (bad <- Seq("not-a-time", "2021-02-29", "31.04.2020")) {
+      val onset = Seq(
+        fact(0, "t1", 0, "A", FactKinds.HpoCell).copy(hpo = "HP:1", onset = bad))
+      val dob = Seq(
+        fact(0, "t1", 0, "", FactKinds.Individual_).copy(field = "dateOfBirth", value = bad))
+      for (facts <- Seq(onset, dob)) {
+        val e = intercept[IllegalStateException] {
+          Assembler.assembleOne("P1", facts, l2, cfg)
+        }
+        assert(e.getMessage.contains(bad))
+      }
     }
-    assert(e.getMessage.contains("not-a-time"))
     // valid forms still parse: ISO duration → age, date → timestamp
     assert(TimeParse.parse("P3Y2M").age.isDefined)
     assert(TimeParse.parse("25.04.1998").timestamp.contains("1998-04-25T00:00:00Z"))
@@ -169,6 +176,13 @@ class AssemblerSpec extends SparkSpec {
     // RFC-3339 with an offset normalizes to UTC (Utc.from_utc_datetime)
     assert(TimeParse.toTimestampString("2020-03-01T10:00:00+02:00") ==
       "2020-03-01T08:00:00Z")
+    assert(TimeParse.toTimestampString("2020-03-01T10:00:00.5+02:00") ==
+      "2020-03-01T08:00:00.500Z")
+    assert(TimeParse.toTimestampString("2020-03-01T10:00:00.25Z") ==
+      "2020-03-01T10:00:00.250Z")
+    // a 9-digit fraction keeps microseconds, Spark's precision
+    assert(TimeParse.toTimestampString("2020-03-01T10:30:05.123456789") ==
+      "2020-03-01T10:30:05.123456Z")
     assert(TimeParse.parse("2020-03-01T10:30:05").timestamp
       .contains("2020-03-01T10:30:05Z"))
     // datetime formats are tried FIRST (utils.rs:22-31): a bare date

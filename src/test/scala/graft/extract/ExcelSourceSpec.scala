@@ -1,8 +1,12 @@
 package graft.extract
 
 import graft.SparkSpec
+import graft.functions.MultiFormatParse
 import graft.model._
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.unsafe.types.UTF8String
 
+import java.time.ZoneOffset
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** Exercises the OOXML reader against a hand-built xlsx covering the
@@ -113,12 +117,29 @@ class ExcelSourceSpec extends SparkSpec {
 
   test("serial date conversion incl. time fraction") {
     assert(ExcelSource.serialToDateString(32888) == "1990-01-15")
-    assert(ExcelSource.serialToDateString(32888.5) == "1990-01-15T12:00")
+    assert(ExcelSource.serialToDateString(32888.5) == "1990-01-15T12:00:00")
     // a fraction an epsilon below midnight (Excel float noise for
     // "next day 00:00") must ADVANCE the date, not wrap to 00:00 of
     // the same day (silent off-by-one-day)
     assert(ExcelSource.serialToDateString(32888.9999999999) == "1990-01-16")
     assert(ExcelSource.serialToDateString(32888.999) == "1990-01-15T23:58:34")
+  }
+
+  test("every rendered serial datetime parses under the shared parser to the serial's instant") {
+    // whole minutes (zero seconds), odd seconds, and fractions at and
+    // just below midnight
+    val epoch = java.time.LocalDate.of(1899, 12, 30).atStartOfDay(ZoneOffset.UTC).toInstant
+    val fractions = (0 until 1440 by 7).map(_ / 1440.0) ++
+      (0 until 86400 by 997).map(_ / 86400.0) ++
+      Seq(1 - 1.0 / 86400, 1 - 0.6 / 86400, 1 - 1e-7, 1 - 1e-12)
+    for (day <- Seq(0, 1, 32888, 44927); frac <- fractions) {
+      val serial = day + frac
+      val rendered = ExcelSource.serialToDateString(serial)
+      val micros = MultiFormatParse.timestampBoxed(UTF8String.fromString(rendered), ZoneOffset.UTC)
+      assert(micros != null, s"serial $serial rendered as unparseable '$rendered'")
+      assert(DateTimeUtils.microsToInstant(micros) == epoch.plusSeconds(math.round(serial * 86400)),
+        s"serial $serial rendered as '$rendered'")
+    }
   }
 
   test("cells and rows without the optional OOXML r reference position sequentially") {

@@ -44,6 +44,13 @@ class MultiFormatParseSpec extends SparkSpec {
       t <- instants
       f <- Casts.dateFormats ++ Casts.datetimeFormats
     } yield t.atOffset(ZoneOffset.ofHours(-3)).format(DateTimeFormatter.ofPattern(f))
+    // fraction lengths 1, 7 and 9 and the offsets ('Z', ±HH:MM) that
+    // the optional sections of the datetime formats accept
+    val fractions = for {
+      t <- instants
+      (f, offset) <- Seq("yyyy-MM-dd'T'HH:mm:ss.SXXX" -> 0, "yyyy-MM-dd HH:mm:ss.SSSSSSS" -> 0,
+        "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSSSXXX" -> 5)
+    } yield t.atOffset(ZoneOffset.ofHours(offset)).format(DateTimeFormatter.ofPattern(f))
     val fixed = Seq(
       // bare years, with a trailing line terminator (`$` matches before it)
       "1989", "0000", "9999", "1989\n", "1989\r\n", "\n1989", "1989 ", "19890", "198",
@@ -64,7 +71,7 @@ class MultiFormatParseSpec extends SparkSpec {
       parts <- Gen.listOfN(3, Gen.choose(0, 2100).map(_.toString))
       seps <- Gen.listOfN(2, Gen.oneOf("-", ".", "/", ":", " ", "T"))
     } yield parts(0) + seps(0) + parts(1) + seps(1) + parts(2), 300)
-    formatted ++ fixed ++ random ++ digitsAndSeparators
+    formatted ++ fractions ++ fixed ++ random ++ digitsAndSeparators
   }
 
   private def withConf[A](kv: (String, String)*)(body: => A): A = {

@@ -130,6 +130,17 @@ class StrategySpec extends SparkSpec {
         cdf("o", onset, SeriesContext(Identifier.Single("onset"), dataContext = Context.Onset(TimeKind.Date)))))
     }
     assert(e.getMessage.contains("unparseable"))
+    // strict: cells the preprocessor rejects are unparseable here too
+    // (Spark's lenient string-to-date cast read them as dates)
+    for (bad <- Seq("2020-7", "2020-07-01 junk")) {
+      val e2 = intercept[MappingException] {
+        DateToAgeStrategy().transform(Seq(
+          cdf("d", dob, SeriesContext(Identifier.Single("dob"), dataContext = Context.DateOfBirth)),
+          cdf("o", Seq(("P1", bad)).toDF("subject_id", "onset"),
+            SeriesContext(Identifier.Single("onset"), dataContext = Context.Onset(TimeKind.Date)))))
+      }
+      assert(e2.getMessage.contains("unparseable date values"), bad)
+    }
     // non-strict + MISSING DOB keeps the raw date string (reference
     // returns AnyValue::String(date) there, :177-179)
     val onset2 = Seq(("P1", "1998-04-25"), ("P9", "2001-06-29")).toDF("subject_id", "onset")
