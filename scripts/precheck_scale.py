@@ -16,23 +16,21 @@ The optional shard pair partitions the oracle map by sorted position so
 independent processes can split a multi-hour scale check; concatenate
 their outputs for the artifact.
 """
+import importlib.util
 import json
 import multiprocessing as mp
 import sys
 import time
 from pathlib import Path
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-
-
-def canon(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].map(lambda v: str(v) if v is not None else None)
-    df = df.astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+# The table list and the compare rule are precheck.py's, so the two
+# checks cannot drift apart.
+_spec = importlib.util.spec_from_file_location(
+    "precheck", Path(__file__).resolve().parent / "precheck.py")
+_precheck = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(_precheck)
+TABLES = _precheck.TABLES
+canon = _precheck.canon
 
 
 def check_one(sfdir, outdir, name, sql, q):

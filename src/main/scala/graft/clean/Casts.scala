@@ -42,7 +42,8 @@ object Casts {
         "yyyy-M-d", "yyyy.M.d", "M/d/yyyy", "d-M-yyyy", "d.M.yyyy")
 
   /** Datetime formats tried in order (reference `constants.rs:12-20`;
-    * RFC-822 rides [[graft.functions.Rfc1123Timestamp]]): 'T' or space
+    * RFC-822 rides [[graft.functions.MultiFormatParse]]'s java.time
+    * RFC-1123 parse): 'T' or space
     * separator, optional fraction of 1–9 digits (kept to microseconds,
     * Spark's precision), and after a 'T' an optional offset (`Z` or
     * `±HH:MM`). Naive datetimes are in the parse zone.
@@ -66,8 +67,8 @@ object Casts {
   def toDateMulti(c: Column): Column = multiFormat(c, timestamp = false)
 
   /** P7: multi-format datetime parse; RFC-822/1123 (reference
-    * `constants.rs:18`, `%a, %d %b %Y %H:%M:%S GMT`) rides
-    * `Rfc1123Timestamp` because Spark ≥3 rejects week-day letters in
+    * `constants.rs:18`, `%a, %d %b %Y %H:%M:%S GMT`) rides java.time's
+    * `RFC_1123_DATE_TIME` because Spark ≥3 rejects week-day letters in
     * its own patterns; then falls back to date-only formats (midnight)
     * like the reference cascade. Same native expression as
     * [[toDateMulti]]: the datetime formats are tried only on strings

@@ -26,13 +26,22 @@ import scala.jdk.CollectionConverters._
   */
 object ConfigRunner {
 
+  /** Every config fault (unknown strategy, resolver class that cannot
+    * be built, missing loader) is raised before the first Spark job:
+    * the strategies, the resolver and the loader are built before
+    * [[extractAll]] reads any source.
+    */
   def run(spark: SparkSession, configPath: String): Unit = {
     val cfg = ConfigLoader.load(configPath)
     val library = buildLibrary(cfg)
     val hgvs = cfg.hgvsCache.map(HgvsResolver.load).getOrElse(HgvsResolver.empty)
+    val strategies = cfg.strategies.map(strategyFor(_, library))
+    val resolver = buildResolver(cfg, library)
+    val out = cfg.loader.getOrElse(
+      throw new IllegalArgumentException("config has no file_system loader"))
     val tables = extractAll(spark, cfg)
     val pipeline = Pipeline(
-      strategies = cfg.strategies.map(strategyFor(_, library)),
+      strategies = strategies,
       library = library,
       assembler = AssemblerConfig(
         cohort = cfg.metaData.cohortName,
@@ -40,9 +49,7 @@ object ConfigRunner {
         createdBy = cfg.metaData.createdBy,
         submittedBy = cfg.metaData.submittedBy.getOrElse("")),
       hgvs = hgvs,
-      resolver = buildResolver(cfg, library))
-    val out = cfg.loader.getOrElse(
-      throw new IllegalArgumentException("config has no file_system loader"))
+      resolver = resolver)
     graft.load.FileSystemLoader.load(pipeline.transform(tables), out.outputDir, out.createDir)
   }
 

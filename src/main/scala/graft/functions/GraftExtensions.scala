@@ -1,94 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
 
-/** Session-extension entry point registering the engine's native
-  * expressions into the SQL function registry, so both the Column API
-  * and `spark.sql("SELECT iso_duration_seconds(...)")` reach them.
-  *
-  * Use via `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * or `GraftExtensions.register(spark)` on a live session.
+/** Column-API entry points for the engine's native expressions: each
+  * wraps one Catalyst expression of this package as a `Column`.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.isoDurationSeconds)
-    ext.injectFunction(GraftExtensions.vecDot)
-    ext.injectFunction(GraftExtensions.rfc1123)
-    ext.injectFunction(GraftExtensions.calendarAgeIso)
-    ext.injectFunction(GraftExtensions.nfcNormalize)
-    ext.injectFunction(GraftExtensions.lowerRoot)
-  }
-}
-
 object GraftExtensions {
 
-  private[functions] val isoDurationSeconds
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("iso_duration_seconds"),
-    new ExpressionInfo(classOf[IsoDurationSeconds].getName, "iso_duration_seconds"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "iso_duration_seconds takes exactly one argument")
-      IsoDurationSeconds(children.head)
-    })
-
-  private[functions] val vecDot
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "vec_dot takes exactly two arguments")
-      DotProduct(children.head, children(1))
-    })
-
-  private[functions] val rfc1123
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("rfc1123_timestamp"),
-    new ExpressionInfo(classOf[Rfc1123Timestamp].getName, "rfc1123_timestamp"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "rfc1123_timestamp takes exactly one argument")
-      Rfc1123Timestamp(children.head)
-    })
-
-  private[functions] val calendarAgeIso
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("calendar_age_iso"),
-    new ExpressionInfo(classOf[CalendarAgeIso].getName, "calendar_age_iso"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "calendar_age_iso takes exactly two arguments")
-      CalendarAgeIso(children.head, children(1))
-    })
-
-  private[functions] val nfcNormalize
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "nfc_normalize takes exactly one argument")
-      NfcNormalize(children.head)
-    })
-
-  private[functions] val lowerRoot
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("lower_root"),
-    new ExpressionInfo(classOf[LowerRoot].getName, "lower_root"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "lower_root takes exactly one argument")
-      LowerRoot(children.head)
-    })
-
-  /** Imperative registration for an existing session (tests, Verify). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(isoDurationSeconds, vecDot, rfc1123, calendarAgeIso, nfcNormalize,
-        lowerRoot).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-  }
-
-  /** Column-API access without SQL registration. */
+  /** ISO-8601 duration → seconds (see [[IsoDurationSeconds]]). */
   def iso_duration_seconds(c: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(IsoDurationSeconds(GraftColumnBridge.expression(c)))
@@ -112,8 +31,7 @@ object GraftExtensions {
     * bits) sketch; the unrolled per-plane vec_dot spelling grows the
     * generated method linearly with the planned shape and crossed
     * janino's 64 KB limit (silent interpreted fallback) at the 10×
-    * rehearsal. Not SQL-registered: the plane tensor is a driver-side
-    * parameter, not a literal a query could spell.
+    * rehearsal.
     */
   def lsh_sign_buckets(vec: Column, planes: Array[Array[Array[Double]]]): Column = {
     import org.apache.spark.sql.GraftColumnBridge
@@ -194,12 +112,6 @@ object GraftExtensions {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
       MinhashSig(GraftColumnBridge.expression(tokens), n, numHashes, family))
-  }
-
-  /** RFC-822/1123 datetime parse → timestamp (null when unparseable). */
-  def rfc1123_timestamp(c: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(Rfc1123Timestamp(GraftColumnBridge.expression(c)))
   }
 
   /** Calendar age between two dates as ISO-8601 (zero parts omitted). */

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, Tim
 import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.time.{DateTimeException, ZoneId}
+import java.time.{DateTimeException, ZoneId, ZonedDateTime}
+import java.time.format.{DateTimeFormatter, DateTimeParseException}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.regex.Pattern
 
@@ -30,7 +31,8 @@ import java.util.regex.Pattern
   * string has a `-`, `.` or `/`, the first of `Casts.dateFormats` that
   * parses wins, truncated to the day in the session zone. Datetime: if
   * the string has a `:`, the first of `Casts.datetimeFormats`; then, if
-  * it has a letter, RFC-1123 ([[Rfc1123Timestamp]]); then the date
+  * it has a letter, RFC-1123 (java.time's `RFC_1123_DATE_TIME`: Spark
+  * ≥3 rejects week-day letters in its own patterns); then the date
   * parse at midnight in the session zone. The guards use
   * `java.util.regex` `find()`, as `rlike` does.
   *
@@ -115,6 +117,14 @@ object MultiFormatParse {
     null
   }
 
+  /** Micros of an RFC-1123 datetime ("Mon, 04 Sep 2025 11:00:59 GMT";
+    * the reference's `%a, %d %b %Y %H:%M:%S GMT`), or null. */
+  private def rfc1123Boxed(s: String): java.lang.Long =
+    try {
+      val i = ZonedDateTime.parse(s.trim, DateTimeFormatter.RFC_1123_DATE_TIME).toInstant
+      java.lang.Long.valueOf(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    } catch { case _: DateTimeParseException => null }
+
   /** Epoch days, or null. */
   def dateBoxed(s: UTF8String, zone: ZoneId): java.lang.Integer = {
     val str = s.toString
@@ -139,7 +149,7 @@ object MultiFormatParse {
       if (micros != null) return micros
     }
     if (Letter.matcher(str).find()) {
-      val micros = Rfc1123Timestamp.evalBoxed(s)
+      val micros = rfc1123Boxed(str)
       if (micros != null) return micros
     }
     val days = dateBoxed(s, zone)

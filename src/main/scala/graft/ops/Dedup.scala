@@ -77,72 +77,6 @@ object Dedup {
       .distinct()
   }
 
-  /** [[shingleRows]] with HASHED gram keys: distinct (id, xxhash64
-    * gram) rows. The token columns feed the multi-argument xxhash64
-    * directly (tokens cannot contain whitespace, so the tuple is
-    * unambiguous — no separator string ever materializes), and every
-    * downstream exchange/sort/aggregate moves an 8-byte long instead
-    * of the gram text. Same approximation contract as
-    * [[verifiedJaccard]]'s hashed-set arrays: a 64-bit collision
-    * (~10⁻¹⁹ per gram pair) can collapse two grams — acceptable
-    * everywhere the gram key is an opaque join/count key, never where
-    * gram TEXT must survive (use [[shingleRows]] there).
-    */
-  def shingleHashRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    require(n >= 1 && n <= 8, "shingle width out of range")
-    val byDoc = Window.partitionBy(col("id")).orderBy(col("pos"))
-    val toks = df
-      .select(col(idCol).as("id"),
-        posexplode(split(col(textCol), "\\s+")).as(Seq("pos", "t")))
-      .filter(col("t") =!= "")
-    val withLeads = (1 until n).foldLeft(toks) { (acc, i) =>
-      acc.withColumn(s"t$i", lead(col("t"), i).over(byDoc))
-    }
-    val parts = col("t") +: (1 until n).map(i => col(s"t$i"))
-    withLeads
-      .filter(parts.map(_.isNotNull).reduce(_ && _))
-      .select(col("id"), xxhash64(parts: _*).as("g"))
-      .distinct()
-  }
-
-  /** Streaming-safe twin of [[shingleRows]]: distinct (id, g) rows
-    * built with ROW-LOCAL array lambdas instead of the posexplode +
-    * window-lead pass (streaming rejects non-time windows). ~5× slower
-    * in batch (interpreted higher-order functions — the reason the
-    * window form is the batch default); ops that accept streaming
-    * input switch to this form when `df.isStreaming`.
-    *
-    * Scope of the distinct: PER ROW. An id that spans multiple input
-    * rows emits each row's grams (the window form dedupes globally
-    * across rows — a global distinct here would be a second stateful
-    * op, which streaming queries with a downstream aggregate cannot
-    * hold). Equivalent to the batch form when each id arrives on one
-    * row — the exactly-once delivery that checkpointed sources
-    * provide; at-least-once redelivery double-counts.
-    */
-  def shingleRowsRowLocal(df: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame = {
-    require(n >= 1 && n <= 8, "shingle width out of range")
-    df.select(col(idCol).as("id"), tokens(col(textCol)).as("__tk"))
-      .filter(size(col("__tk")) >= n)
-      .select(col("id"), explode(array_distinct(transform(
-        sequence(lit(0), size(col("__tk")) - n),
-        i => concat_ws(" ", (0 until n).map(j => col("__tk").getItem(i + j)): _*)
-      ))).as("g"))
-  }
-
-  /** Array-valued shingles for one row (API/spec convenience — the
-    * distributed paths use shingleRows).
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    val grams = transform(
-      sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
-    array_distinct(when(size(toks) >= n, grams)
-      .otherwise(array().cast("array<string>")))
-  }
-
   /** Exact dedup: digest-groupBy; keeps the smallest id per text group.
     * Returns (fp, keeper_id, n_dupes). NULL text is excluded — md5(null)
     * is null and grouping it would collapse every extraction-failure
@@ -406,9 +340,9 @@ object Dedup {
     // aggregate are gone with the exchange (plan diff in
     // plans/r11/dedup_jaccard_prefix_*).
     //
-    // Gram keys are 64-bit hashes, not text — the [[shingleHashRows]]
-    // approximation contract now covers the prefix path too: a
-    // cross-gram collision (~10⁻¹⁹ per pair) can merge two grams'
+    // Gram keys are 64-bit hashes, not text — [[verifiedJaccard]]'s
+    // hashed-set approximation contract now covers the prefix path
+    // too: a cross-gram collision (~10⁻¹⁹ per pair) can merge two grams'
     // df counts and at worst drop a candidate whose every OTHER shared
     // prefix gram also collided; surviving pairs verify against full
     // per-doc hash sets exactly as before (the verify arrays were
@@ -634,7 +568,8 @@ object Dedup {
     // Hashed gram keys: the count path never needs gram TEXT — g is an
     // opaque equi-join/df key — so the whole pipeline (df aggregates,
     // the g-self-join and its sort) moves 8-byte longs instead of
-    // n-token strings (approximation contract in [[shingleHashRows]]).
+    // n-token strings (the hashed-set approximation contract of
+    // [[verifiedJaccard]]).
     // The per-doc DISTINCT hash array is ROW-LOCAL (native
     // WordNgramHash64 + codegen'd array_distinct in the scan task), so
     // the shingleRows posexplode + window-lead doc-keyed token
@@ -1193,8 +1128,8 @@ object Dedup {
     * codegen'd array_distinct in the scan task — the shingleRows
     * posexplode + window-lead pass shuffled every corpus token before
     * a single gram existed), and the semi-join moves 8-byte longs.
-    * Hashed keys carry the [[shingleHashRows]] approximation contract:
-    * a cross-set 64-bit collision (~10⁻¹⁹ per gram pair) can flag a
+    * Hashed keys carry [[verifiedJaccard]]'s hashed-set approximation
+    * contract: a cross-set 64-bit collision (~10⁻¹⁹ per gram pair) can flag a
     * clean document — acceptable for a guard whose false-positive cost
     * is one dropped document. Gram distinctness is per input ROW (the
     * corpus contract: one row per document) — semi-join semantics make
@@ -1227,8 +1162,8 @@ object Dedup {
     * and neither do tokens — grams are born ROW-LOCAL as 64-bit hashed
     * keys (native WordNgramHash64 + codegen'd array_distinct; the
     * shingleRows window-lead pass shuffled every corpus token). Hashed
-    * keys carry the [[shingleHashRows]] approximation contract (a
-    * cross-set collision inflates one doc's hit count by 1). Gram
+    * keys carry [[verifiedJaccard]]'s hashed-set approximation contract
+    * (a cross-set collision inflates one doc's hit count by 1). Gram
     * distinctness is per input ROW — the one-row-per-document corpus
     * contract every caller here satisfies. Documents shorter than `n`
     * tokens have no grams and are absent from the output (same domain
@@ -1395,7 +1330,7 @@ object Dedup {
     *
     * `family` picks the gram key hash: xxhash64 (default; 64-bit
     * collisions ~10⁻¹⁹ per gram pair can only OVER-remove — same
-    * contract as [[shingleHashRows]]) or [[Md5Family]] for
+    * contract as [[verifiedJaccard]]'s hashed sets) or [[Md5Family]] for
     * SQL-replayable gates. Null-text rows are excluded (the [[exact]]
     * rule); kept_text is whitespace-normalized (tokens re-joined with
     * single spaces). Returns (id, kept_text, n_toks, n_removed).
@@ -1550,9 +1485,8 @@ object Dedup {
   /** [[paragraphDedup]] for a STREAMING corpus: of all arrivals of an
     * identical paragraph within the watermark horizon, only the FIRST
     * survives (arrival order replaces the batch op's global
-    * (id, position) order — the streaming-ingest semantics,
-    * [[graft.streaming.EventStreams.dedupDocuments]]'s first-wins rule
-    * at paragraph grain); each document reassembles from its surviving
+    * (id, position) order — the streaming-ingest first-wins rule of
+    * `dropDuplicatesWithinWatermark`, at paragraph grain); each document reassembles from its surviving
     * paragraphs in original position order and emits when the
     * watermark closes its event-time window.
     *

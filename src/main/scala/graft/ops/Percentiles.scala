@@ -67,37 +67,6 @@ object Percentiles {
     histogramPlan(data, groupCol, valueCol, ties, percentiles, buckets, schema, rows.get)
   }
 
-  /** [[exactDiscrete]] with the source PINNED for the plan's three
-    * passes (range aggregate, histogram collect, narrow picked pass) —
-    * the [[SpanDedup.auditManaged]] trade. On remote object storage
-    * the dominant cost is the scan, and the unpinned plan pays it
-    * three times. Returns (result, cleanup); call cleanup() after the
-    * result has been consumed. Failures before return unpersist.
-    */
-  def exactDiscreteManaged(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      ties: Seq[String],
-      percentiles: Seq[(String, Double)],
-      buckets: Int = 1024,
-      maxDriverGroups: Int = 4096): (DataFrame, () => Unit) = {
-    checkArgs(percentiles, buckets)
-    checkValueType(df, valueCol)
-    val data = nonNull(df, groupCol, valueCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result =
-      try {
-        val (schema, rows) = collectRanges(data, groupCol, valueCol, maxDriverGroups)
-        require(rows.isDefined,
-          s"more than maxDriverGroups=$maxDriverGroups distinct '$groupCol' groups " +
-            "— use windowDiscrete or autoDiscrete")
-        histogramPlan(data, groupCol, valueCol, ties, percentiles, buckets,
-          schema, rows.get)
-      } catch { case e: Throwable => data.unpersist(); throw e }
-    (result, () => { data.unpersist(); () })
-  }
-
   /** The same discrete selection via the classic window formulation:
     * `row_number` per group, pick the `ceil(n·p)`-th row. One shuffle,
     * but each group sorts in ONE task — right for MANY SMALL groups,

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Gap-based batch sessionization: group an entity's event stream into
-  * sessions separated by inactivity gaps (the batch twin of
-  * `streaming.EventStreams`' state-timeout sessions; reference analogue:
+  * sessions separated by inactivity gaps (reference analogue:
   * per-patient encounter grouping, phenoxtract groups longitudinal rows
   * per subject before collecting — `src/transform/collecting/mod.rs`).
   *

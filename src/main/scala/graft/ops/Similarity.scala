@@ -198,20 +198,6 @@ object Similarity {
     topK(scorePairs(joined), k)
   }
 
-  /** Convenience one-shot IVF (tests / ad-hoc): computes centroids and
-    * assignment inline without the ingest artifact. Same math as the
-    * ingest path.
-    */
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    require(nprobe <= nlist, "nprobe must be <= nlist")
-    val centroids = ivfCentroids(corpus, idCol, vecCol, nlist)
-    val assigned = corpusSide(corpus, idCol, vecCol)
-      .withColumn("__cell", nearestCells(col("__v"), centroids, 1).getItem(0))
-    ivfProbe(assigned, centroids, queries, qidCol, qvecCol, k, nprobe)
-  }
-
   // --- embedding near-dup ---------------------------------------------
 
   /** ONE owner of the exact pair-scoring algebra: a frame carrying
@@ -778,12 +764,6 @@ object Similarity {
       }
     }
   }
-
-  /** Packed sign-bit bucket for one table's planes: `bits` native dots. */
-  def lshBucketFor(vec: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, b) =>
-      when(dot(vec, lit(p)) >= 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((x, y) => x.bitwiseOR(y))
 
   /** Coordinate sign-bit sketch family: table t's bucket packs the signs
     * of dimensions [t·bits, (t+1)·bits) — bit b set when that component

@@ -55,13 +55,6 @@ object SkewJoin {
       .drop("__salt")
   }
 
-  /** Top-N most frequent keys of a column — the reconnaissance step for
-    * deciding whether salting is warranted (one cheap aggregation).
-    */
-  def keyHistogram(df: DataFrame, key: String, topN: Int = 20): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc).limit(topN)
-
   /** Differentiated hot/cold equi-join: the `hotKeys` most frequent
     * left-side key tuples are joined via a BROADCAST of just their
     * right-side slice; everything else takes the ordinary shuffle join.

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — no suffix array, no driver state, four bounded
   * shuffles (both algorithm halves read ONE positioned token+gram
-  * pass, [[positionedGrams]] — recomputed per consumer by default,
-  * pinned once by [[auditManaged]]):
+  * pass, [[positionedGrams]]; [[audit]] reads its row-local successor,
+  * which it pins):
   *  1. doc-keyed: posexplode + window lead builds positioned grams;
   *  2. gram-keyed: distinct (gram, doc) pairs then a map-side-combined
   *     count — gram keys are md5 digests (32 hex chars), so the
@@ -60,8 +60,7 @@ object SpanDedup {
     * space-joined gram; null where the window runs off the document —
     * concat null-propagates over the missing leads). Both halves of
     * the algorithm (dup detection, coverage+rebuild) read THIS one
-    * dataframe, so a caller who pins it ([[auditManaged]]) scans the
-    * corpus once.
+    * dataframe, so a caller who pins it scans the corpus once.
     */
   def positionedGrams(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     require(n >= 2, s"gram length must be >= 2, got $n")
@@ -86,14 +85,6 @@ object SpanDedup {
     tokenStream(df, idCol, textCol)
       .select(col(idCol), col("__pos"), col("__tok"), guardedGram.as("__gh"))
   }
-
-  /** Positioned gram hashes: (id, __pos, __gh) for every start
-    * position with a full n-token window.
-    */
-  def gramStarts(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    positionedGrams(df, idCol, textCol, n)
-      .select(col(idCol), col("__pos"), col("__gh"))
-      .filter(col("__gh").isNotNull)
 
   /** Gram hashes occurring in ≥ `minDocs` distinct documents. */
   def duplicatedGrams(starts: DataFrame, idCol: String, minDocs: Int): DataFrame = {
@@ -172,28 +163,13 @@ object SpanDedup {
     * + per-position md5 gram pass — the dominant per-row cost of the
     * whole audit. The frame is persisted (MEMORY_AND_DISK — spills
     * rather than OOMs at cluster scale, the minhashLshPairs pattern;
-    * released by the context cleaner on plan GC). [[auditManaged]]
-    * additionally hands back an explicit release thunk for long-lived
-    * sessions.
+    * released by the context cleaner on plan GC).
     */
   def audit(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, minDocs: Int = 2): DataFrame = {
     val docs = spanDocs(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     auditFromDocs(docs, idCol, n, occ => duplicatedGrams(occ, idCol, minDocs))
-  }
-
-  /** As [[audit]], but the row-local document frame (token + gram
-    * arrays) is persisted (MEMORY_AND_DISK) and read by both halves —
-    * ONE corpus scan. Call the returned thunk after materializing the
-    * result.
-    */
-  def auditManaged(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 5, minDocs: Int = 2): (DataFrame, () => Unit) = {
-    val docs = spanDocs(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (auditFromDocs(docs, idCol, n, occ => duplicatedGrams(occ, idCol, minDocs)),
-      () => { docs.unpersist(); () })
   }
 
   /** Audit over a [[spanDocs]] frame. `dupOf` maps the exploded

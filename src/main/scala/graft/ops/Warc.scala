@@ -144,9 +144,6 @@ object Warc {
     /** Why parsing stopped early, if it did (lenient mode only). */
     def error: Option[String] = failure
 
-    /** Records successfully parsed so far. */
-    def recordCount: Int = recs
-
     private def fail(msg: String): None.type = {
       val full = s"record $recs: $msg"
       if (strict) throw new WarcFormatException(full)

@@ -241,9 +241,7 @@ object CorpusOps {
     val c = graft.ops.C4Rules.clean(g, "text", c4Conf)
     // audit pins its row-local document frame internally now, so the
     // Gopher+C4 chain upstream of it runs ONCE for all four of the
-    // audit's consumers; a long-lived pipeline that wants the cache
-    // released eagerly (not by the context cleaner) uses
-    // SpanDedup.auditManaged and calls the thunk after the write.
+    // audit's consumers.
     graft.ops.SpanDedup.audit(c, "doc_id", "text", n = 3, minDocs = 2)
       .select(col("doc_id"), col("n_tokens"), col("dup_tokens"),
         col("clean_text").as("final_text"))

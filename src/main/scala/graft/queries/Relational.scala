@@ -211,8 +211,7 @@ object Relational {
 
   // ------------------------------------------------------------------
   // q_events_hourly — tumbling 1-hour window aggregate over the event
-  // stream table (batch shape of the Structured-Streaming windowed agg;
-  // the streaming variant lives in graft.streaming).
+  // stream table (batch shape of the Structured-Streaming windowed agg).
   private val qEventsHourly: Q = (s, dir) =>
     Tables.load(s, dir, "events")
       .groupBy(

@@ -396,4 +396,40 @@ class ConfigSpec extends SparkSpec {
     assert(e.badValues == Seq("First onset"), e.getMessage)
     assert(e.getMessage.contains("no date of birth"), e.getMessage)
   }
+
+  test("config faults are reported before any source is read") {
+    val dir = Files.createTempDirectory("graftcfg")
+    val loader =
+      s"""  loader:
+         |    file_system:
+         |      output_dir: "${dir.resolve("out")}"
+         |""".stripMargin
+    // the only source path does not exist: reading it would fail first
+    def config(name: String, strategies: String, extra: String): String =
+      write(dir, name,
+        s"""data_sources:
+           |  - type: "csv"
+           |    source: "${dir.resolve("missing.csv")}"
+           |    series_contexts:
+           |$subjectSeries
+           |pipeline:
+           |  strategies: $strategies
+           |$extra  meta_data:
+           |    cohort_name: "c1"
+           |""".stripMargin)
+    val resolver =
+      """  resolver:
+        |    class: "graft.ontology.HttpTermResolver"
+        |""".stripMargin
+    val faults = Seq(
+      config("strategy.yaml", "[\"no_such_strategy\"]", loader) ->
+        "unknown strategy 'no_such_strategy'",
+      config("resolver.yaml", "[]", resolver + loader) ->
+        "could not instantiate resolver graft.ontology.HttpTermResolver",
+      config("loader.yaml", "[]", "") -> "config has no file_system loader")
+    faults.foreach { case (cfgPath, message) =>
+      val e = intercept[IllegalArgumentException](ConfigRunner.run(spark, cfgPath))
+      assert(e.getMessage.contains(message), e.getMessage)
+    }
+  }
 }

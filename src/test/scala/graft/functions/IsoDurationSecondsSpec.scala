@@ -44,12 +44,6 @@ class IsoDurationSecondsSpec extends SparkSpec {
     assert(got == Seq(None, Some("P1Y")))
   }
 
-  test("SQL registration via GraftExtensions") {
-    GraftExtensions.register(spark)
-    val out = spark.sql("SELECT iso_duration_seconds('P45Y10M5D') AS s").head().getLong(0)
-    assert(out == 45L * 31557600L + 10L * 2629800L + 5L * 86400L)
-  }
-
   test("stays codegen-compatible (no interpreted fallback errors) over a real column") {
     val df = spark.range(1000)
       .select(concat(lit("P"), col("id").cast("string"), lit("D")).as("d"))

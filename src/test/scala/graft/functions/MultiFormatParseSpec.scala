@@ -146,11 +146,20 @@ object MultiFormatParseSpec {
       .otherwise(when(c.rlike("[-./]"), viaFormats))
   }
 
+  /** RFC-1123 micros through java.time, null when unparseable. */
+  private val rfc1123Micros = udf { (s: String) =>
+    if (s == null) null: java.lang.Long
+    else try {
+      val i = java.time.ZonedDateTime.parse(s.trim, DateTimeFormatter.RFC_1123_DATE_TIME).toInstant
+      java.lang.Long.valueOf(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    } catch { case _: java.time.format.DateTimeParseException => null: java.lang.Long }
+  }
+
   /** The datetime cascade as it was spelled before the native
     * expression: the oracle. */
   def oracleTimestamp(c: Column): Column =
     coalesce(
       when(c.rlike(":"), coalesce(Casts.datetimeFormats.map(f => try_to_timestamp(c, lit(f))): _*)),
-      when(c.rlike("[A-Za-z]"), GraftExtensions.rfc1123_timestamp(c)),
+      when(c.rlike("[A-Za-z]"), timestamp_micros(rfc1123Micros(c))),
       oracleDate(c).cast(TimestampType))
 }

@@ -470,24 +470,27 @@ class OpsSpec extends SparkSpec {
     assert(recall >= 0.9, s"multi-table LSH recall $recall < 0.9")
   }
 
-  test("IVF ingest artifact (cell-partitioned parquet) probes to identical scores") {
+  test("IVF ingest probe scores equal brute-force scores") {
     val vecs = (0 until 60).map { i =>
       val v = (0 until 8).map(d => math.cos(i * 0.37 + d * 1.3).toFloat).toArray
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val queries = vecs.filter($"vec_id" < 3)
+    val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 59)
+      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
+      .collect().map(r => (r._1, r._2) -> r._3).toMap
     val centroids = Similarity.ivfCentroids(vecs, "vec_id", "embedding", nlist = 8)
     val path = java.nio.file.Files.createTempDirectory("ivf_spec_").resolve("c").toString
     val assigned = Similarity.ivfIngest(vecs, "vec_id", "embedding", centroids, path)
-    val viaIngest = Similarity.ivfProbe(assigned, centroids,
+    val ivf = Similarity.ivfProbe(assigned, centroids,
       queries, "vec_id", "embedding", k = 5, nprobe = 3)
       .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect().sortBy(r => (r._1, r._2))
-    val inline = Similarity.ivfTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 3)
-      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect().sortBy(r => (r._1, r._2))
-    assert(viaIngest.toSeq == inline.toSeq)
+      .collect()
+    assert(ivf.nonEmpty)
+    ivf.foreach { case (q, n, s) => assert(math.abs(brute((q, n)) - s) < 1e-12) }
+    // every query returns at most k rows, all from probed cells
+    ivf.groupBy(_._1).foreach { case (_, rows) => assert(rows.length <= 5) }
     // the read-back corpus is genuinely partitioned by cell
     assert(assigned.columns.contains("__cell"))
   }
@@ -926,18 +929,6 @@ class OpsSpec extends SparkSpec {
     assert(ranks == Map(2L -> 1L, 7L -> 2L, 10L -> 3L))
   }
 
-  test("row-local shingles equal the window-lead shingles exactly") {
-    val docs = Seq(
-      (1L, "a b c d a b c"), (2L, "  x   y  "), (3L, ""),
-      (4L, null.asInstanceOf[String]), (5L, "p q r")).toDF("doc_id", "text")
-    for (n <- Seq(1, 2, 3)) {
-      val win = Dedup.shingleRows(docs, "doc_id", "text", n)
-      val local = Dedup.shingleRowsRowLocal(docs, "doc_id", "text", n)
-      assert(local.except(win).isEmpty && win.except(local).isEmpty, s"n=$n")
-      assert(local.count() == win.count(), s"n=$n count")
-    }
-  }
-
   test("contamination score counts distinct reference-gram hits per doc") {
     val corpus = Seq(
       (1L, "a b c d"),        // grams: "a b c", "b c d"
@@ -1368,26 +1359,6 @@ class OpsSpec extends SparkSpec {
     assert(Multimodal.sniff(hex(
       "424D 46000000 00000000 36000000 28000000 00000000 32000000 0100 1800"))
       == ("unknown", -1, -1))
-  }
-
-  test("IVF top-k: probed-cell scores equal brute-force scores; recall reasonable") {
-    val vecs = (0 until 60).map { i =>
-      val v = (0 until 8).map(d => math.cos(i * 0.37 + d * 1.3).toFloat).toArray
-      (i.toLong, v)
-    }.toDF("vec_id", "embedding")
-    val queries = vecs.filter($"vec_id" < 3)
-    val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 59)
-      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect().map(r => (r._1, r._2) -> r._3).toMap
-    val ivf = Similarity.ivfTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 3)
-      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect()
-    assert(ivf.nonEmpty)
-    ivf.foreach { case (q, n, s) => assert(math.abs(brute((q, n)) - s) < 1e-12) }
-    // every query returns at most k rows, all from probed cells
-    ivf.groupBy(_._1).foreach { case (_, rows) => assert(rows.length <= 5) }
   }
 
   test("trigram stupid backoff: every branch of the chain, hand-computed") {

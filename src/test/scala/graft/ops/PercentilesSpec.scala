@@ -49,18 +49,6 @@ class PercentilesSpec extends SparkSpec {
       5000000000000000000L)))
   }
 
-  test("exactDiscreteManaged equals exactDiscrete and releases its pin") {
-    val df = Seq(("g", 3.0, 1L), ("g", 1.0, 2L), ("g", 2.0, 3L)).toDF("g", "v", "id")
-    // other suites share the session — assert on the DELTA of cached
-    // RDDs, not the global set
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (res, cleanup) = Percentiles.exactDiscreteManaged(df, "g", "v", Seq("id"),
-      Seq("p50" -> 0.5))
-    assert(res.as[(String, Double)].collect().toSeq == Seq(("g", 2.0)))
-    cleanup()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
-  }
-
   test("degenerate shapes: constant column, single-row group, p100") {
     val df = Seq(
       ("const", 5.0, 1L), ("const", 5.0, 2L), ("const", 5.0, 3L),

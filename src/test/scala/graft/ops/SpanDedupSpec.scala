@@ -59,22 +59,6 @@ class SpanDedupSpec extends SparkSpec {
     assert(a(2L) == ((5L, 4L, "z")))
   }
 
-  test("auditManaged equals audit and releases its pin") {
-    val df = Seq(
-      (1L, "alpha beta gamma delta unique one"),
-      (2L, "other words alpha beta gamma delta tail")).toDF("id", "text")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (out, release) = SpanDedup.auditManaged(df, "id", "text", n = 3, minDocs = 2)
-    val managed = out.collect().map(_.toSeq).toSet
-    val plain = SpanDedup.audit(df, "id", "text", n = 3, minDocs = 2)
-      .collect().map(_.toSeq).toSet
-    assert(managed == plain)
-    release()
-    // other suites may share the session — only OUR pin must be gone
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before),
-      "span-dedup pin must be released")
-  }
-
   test("duplicate document ids fail loudly instead of stitching grams across texts") {
     val df = Seq((1L, "a b c d e f"), (1L, "g h i j k l"), (2L, "m n o p q r"))
       .toDF("doc_id", "text")

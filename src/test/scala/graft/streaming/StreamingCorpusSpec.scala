@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** The corpus-prep FILTER surface under Structured Streaming: language
   * guess, quality bounds, and PII redaction are stateless row-local
   * expressions, so the same Columns drive a streaming ingest unchanged
-  * (exact dedup is the stateful stage and lives with the other
-  * stateful ops — see EventStreams' dedup path).
+  * (exact dedup is the stateful stage — see the
+  * `Dedup.paragraphDedupStream` cases below).
   */
 class StreamingCorpusSpec extends SparkSpec {
   import spark.implicits._
