@@ -470,27 +470,30 @@ class OpsSpec extends SparkSpec {
     assert(recall >= 0.9, s"multi-table LSH recall $recall < 0.9")
   }
 
-  test("IVF ingest probe scores equal brute-force scores") {
+  test("IVF ingest artifact (cell-partitioned parquet) probes to identical scores") {
     val vecs = (0 until 60).map { i =>
       val v = (0 until 8).map(d => math.cos(i * 0.37 + d * 1.3).toFloat).toArray
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val queries = vecs.filter($"vec_id" < 3)
-    val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 59)
-      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect().map(r => (r._1, r._2) -> r._3).toMap
     val centroids = Similarity.ivfCentroids(vecs, "vec_id", "embedding", nlist = 8)
     val path = java.nio.file.Files.createTempDirectory("ivf_spec_").resolve("c").toString
     val assigned = Similarity.ivfIngest(vecs, "vec_id", "embedding", centroids, path)
-    val ivf = Similarity.ivfProbe(assigned, centroids,
+    val viaIngest = Similarity.ivfProbe(assigned, centroids,
       queries, "vec_id", "embedding", k = 5, nprobe = 3)
       .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect()
-    assert(ivf.nonEmpty)
-    ivf.foreach { case (q, n, s) => assert(math.abs(brute((q, n)) - s) < 1e-12) }
-    // every query returns at most k rows, all from probed cells
-    ivf.groupBy(_._1).foreach { case (_, rows) => assert(rows.length <= 5) }
+      .collect().sortBy(r => (r._1, r._2))
+    // the same cell assignment made inline, without the parquet artifact
+    val inlineAssigned = vecs.select($"vec_id".as("neighbor_id"),
+        $"embedding".cast("array<double>").as("__v"))
+      .withColumn("__nv", Similarity.norm($"__v"))
+      .withColumn("__cell", Similarity.nearestCells($"__v", centroids, 1).getItem(0))
+    val inline = Similarity.ivfProbe(inlineAssigned, centroids,
+      queries, "vec_id", "embedding", k = 5, nprobe = 3)
+      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
+      .collect().sortBy(r => (r._1, r._2))
+    assert(viaIngest.nonEmpty)
+    assert(viaIngest.toSeq == inline.toSeq)
     // the read-back corpus is genuinely partitioned by cell
     assert(assigned.columns.contains("__cell"))
   }
@@ -1359,6 +1362,29 @@ class OpsSpec extends SparkSpec {
     assert(Multimodal.sniff(hex(
       "424D 46000000 00000000 36000000 28000000 00000000 32000000 0100 1800"))
       == ("unknown", -1, -1))
+  }
+
+  test("IVF top-k: probed-cell scores equal brute-force scores; recall reasonable") {
+    val vecs = (0 until 60).map { i =>
+      val v = (0 until 8).map(d => math.cos(i * 0.37 + d * 1.3).toFloat).toArray
+      (i.toLong, v)
+    }.toDF("vec_id", "embedding")
+    val queries = vecs.filter($"vec_id" < 3)
+    val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 59)
+      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
+      .collect().map(r => (r._1, r._2) -> r._3).toMap
+    val centroids = Similarity.ivfCentroids(vecs, "vec_id", "embedding", nlist = 8)
+    val path = java.nio.file.Files.createTempDirectory("ivf_spec_").resolve("c").toString
+    val assigned = Similarity.ivfIngest(vecs, "vec_id", "embedding", centroids, path)
+    val ivf = Similarity.ivfProbe(assigned, centroids,
+      queries, "vec_id", "embedding", k = 5, nprobe = 3)
+      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
+      .collect()
+    assert(ivf.nonEmpty)
+    ivf.foreach { case (q, n, s) => assert(math.abs(brute((q, n)) - s) < 1e-12) }
+    // every query returns at most k rows, all from probed cells
+    ivf.groupBy(_._1).foreach { case (_, rows) => assert(rows.length <= 5) }
   }
 
   test("trigram stupid backoff: every branch of the chain, hand-computed") {
