@@ -406,10 +406,21 @@ object ConfigLoader {
   private def req(n: JsonNode, field: String): String =
     text(n, field).getOrElse(
       throw new IllegalArgumentException(s"config missing required field '$field'"))
-  // filterNot(isNull) like text(): an EXPLICITLY null value
-  // ("has_headers:" with nothing after it) must fall back to the
-  // declared default, not silently become asBoolean's false — which
-  // would flip defaults that are true (header row ingested as data).
-  private def bool(n: JsonNode, field: String, default: Boolean): Boolean =
-    Option(n.get(field)).filterNot(_.isNull).map(_.asBoolean()).getOrElse(default)
+  /** A boolean config field: a boolean, "true"/"false" in any case, or
+    * 0/1. An EXPLICITLY null value ("has_headers:" with nothing after
+    * it) keeps the declared default, like text(). Anything else fails
+    * naming the field: Jackson's asBoolean() reads every other value —
+    * a `ture` typo included — as false, which would silently ingest a
+    * header row as data or transpose a table.
+    */
+  private[config] def bool(n: JsonNode, field: String, default: Boolean): Boolean =
+    Option(n.get(field)).filterNot(_.isNull).fold(default) { v =>
+      if (v.isBoolean) v.booleanValue()
+      else if (v.isTextual && v.textValue.equalsIgnoreCase("true")) true
+      else if (v.isTextual && v.textValue.equalsIgnoreCase("false")) false
+      else if (v.isIntegralNumber && v.canConvertToInt && (v.intValue == 0 || v.intValue == 1))
+        v.intValue == 1
+      else throw new IllegalArgumentException(
+        s"config field '$field' must be true or false, got '${v.asText}'")
+    }
 }

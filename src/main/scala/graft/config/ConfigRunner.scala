@@ -141,9 +141,8 @@ object ConfigRunner {
       case "default_vital_status_mapping" => MappingStrategy.defaultVitalStatus
       case "age_to_iso8601"          => AgeToIso8601Strategy()
       case "date_to_age" =>
-        val strict = spec.params.flatMap(p => Option(p.get("strict")))
-          .forall(_.asBoolean(true))
-        DateToAgeStrategy(strict)
+        DateToAgeStrategy(
+          spec.params.forall(ConfigLoader.bool(_, "strict", default = true)))
       case "date_to_age_lenient"     => DateToAgeStrategy(strict = false)
       case "multi_hpo_col_expansion" => MultiHpoColExpansionStrategy
       case "ontology_normaliser" =>

@@ -144,8 +144,7 @@ object Binning {
       s"label column '$labelCol' already exists on the input")
     val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // A validation failure inside boundsOf must not leave the cache
-    // pinned with no handle returned to the caller (partitionBounds
-    // guards the same call with try/finally; here the cache outlives
+    // pinned with no handle returned to the caller (the cache outlives
     // the call on SUCCESS, so only the failure path unpersists).
     val bounds =
       try boundsOf(input, groupCol, valueCol, ties, parts, maxDriverGroups)
@@ -154,31 +153,6 @@ object Binning {
     // caller's assignment pass and is reclaimed by the context cleaner
     // once the plan is garbage-collected.
     assignLabels(input, bounds, groupCol, valueCol, parts, labelCol)
-  }
-
-  /** The fit half of [[labeledPartition]]: one MATERIALIZED row per
-    * group carrying the (parts.size - 1) boundary values (columns
-    * `__lp0`, `__lp1`, …). Persist it as a table and feed fresh data —
-    * batch or a stream — through [[assignLabels]]: the CCNet
-    * deployment shape, where cuts are fit on a reference crawl and new
-    * documents are labeled on ingest without refitting.
-    *
-    * Boundary location is multi-pass, so `df` is cached for the
-    * duration of this call and released before returning (the bounds
-    * are collected eagerly, so nothing returned depends on the cache).
-    * Pass an UNPERSISTED frame — a caller-managed cache on the same
-    * plan would be dropped by the internal release.
-    */
-  def partitionBounds(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      ties: Seq[String],
-      parts: Seq[(String, Int)],
-      maxDriverGroups: Int = 4096): DataFrame = {
-    val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try boundsOf(input, groupCol, valueCol, ties, parts, maxDriverGroups)
-    finally { input.unpersist(); () }
   }
 
   private def boundsOf(
@@ -205,9 +179,10 @@ object Binning {
     * same count-of-boundaries-below as [[quantileBins]], mapped
     * through the label list. A broadcast join plus a row-local
     * codegen'd expression: stateless, so it runs unchanged over a
-    * streaming DataFrame (stream-static join against the fitted
-    * bounds). Null values and null-boundary groups get a null label;
-    * rows whose group is absent from `bounds` too (left join).
+    * streaming DataFrame. `bounds` carries one row per group with the
+    * (parts.size - 1) boundary values in columns `__lp0`, `__lp1`, ….
+    * Null values and null-boundary groups get a null label; rows whose
+    * group is absent from `bounds` too (left join).
     */
   def assignLabels(
       df: DataFrame,

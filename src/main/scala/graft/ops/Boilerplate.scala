@@ -102,55 +102,10 @@ object Boilerplate {
       .select(col("id"), coalesce(col("text"), lit("")).as("text"))
   }
 
-  /** [[domainBoilerplate]] for a STREAMING corpus, against a STATIC
-    * boilerplate set (the [[domainBoilerplateSet]] artifact — built
-    * offline, committed, then applied to live intake like the
-    * incremental-dedup and keep-best streaming twins): every arriving
-    * page drops the lines its domain's artifact marks as boilerplate
-    * and reassembles when the watermark closes its window.
-    *
-    * The frequency THRESHOLD is corpus-global, so it cannot be decided
-    * row-locally in a stream — the artifact split is what makes the
-    * semantics exact rather than approximate: streaming output ==
-    * batch output whenever the artifact came from the same corpus
-    * (the twin spec pins this). One stateful operator (the windowed
-    * reassembly agg); the anti-join is stream-static at line grain
-    * (digest-keyed); a per-document SENTINEL row rides through so a
-    * fully-boilerplate page still emits, with empty text.
-    */
-  def domainBoilerplateStream(docs: DataFrame, boilerSet: DataFrame,
-      idCol: String, tsCol: String, domainCol: String, textCol: String,
-      sep: String = "\n", watermark: String = "1 hour",
-      windowLen: String = "1 hour"): DataFrame = {
-    val fps = boilerSet
-      .select(col("domain"), md5(col("line")).as("__fp")).distinct()
-    val lines = docs.select(col(idCol).as("id"), col(tsCol).as("__ts"),
-      col(domainCol).as("domain"),
-      posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
-        .as(Seq("pos", "line")))
-    val sentinels = docs.select(col(idCol).as("id"), col(tsCol).as("__ts"),
-      col(domainCol).as("domain"), lit(-1).as("pos"),
-      lit(null).cast("string").as("line"))
-    // sentinel fingerprints ("__doc__<id>") can never collide with a
-    // real line's 32-hex md5, so they survive the anti-join
-    lines.unionByName(sentinels)
-      .withColumn("__fp",
-        coalesce(md5(col("line")), concat(lit("__doc__"), col("id"))))
-      .join(fps, Seq("domain", "__fp"), "left_anti")
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowLen), col("id"))
-      .agg(concat_ws(sep,
-        transform(array_sort(collect_list(struct(col("pos"), col("line")))),
-          s => s.getField("line"))).as("text"))
-      .select(col("id"), col("text"))
-  }
-
   /** The boilerplate digest set itself — (domain, line) pairs crossing
     * the threshold, with their per-domain document frequency and the
     * domain size. The observability half of [[domainBoilerplate]]:
-    * pipelines audit WHAT a site's boilerplate is before deleting it,
-    * and the artifact is reusable as a static side for streaming
-    * intake (join new pages against a committed boilerplate set).
+    * pipelines audit WHAT a site's boilerplate is before deleting it.
     * Carries the line BODY via the same min-struct trick as
     * paragraphDedup: the aggregate ships one (digest, body) row per
     * input partition, never a per-occurrence funnel.
@@ -161,9 +116,8 @@ object Boilerplate {
     require(ratioMilli > 0 && ratioMilli <= 1000,
       s"ratioMilli must be in (0, 1000], got $ratioMilli")
     // Same guard as domainBoilerplate: a minDocs <= 0 would silently
-    // disable the small-domain floor in the ARTIFACT builder, letting a
-    // streaming side build a set the batch op would loudly reject —
-    // breaking the streaming==batch twin guarantee without an error.
+    // disable the small-domain floor, auditing a set the removal op
+    // would loudly reject.
     require(minDocs >= 1, s"minDocs must be >= 1, got $minDocs")
     val rows = df.select(col(idCol).as("id"), col(domainCol).as("domain"),
       explode(split(col(textCol), java.util.regex.Pattern.quote(sep)))

@@ -136,17 +136,4 @@ object CountMin {
     docs.select(explode(graft.functions.GraftExtensions.word_ngrams(
       Dedup.tokens(col(textCol)), n)).as("g"))
   }
-
-  /** Exact corpus-wide top-`k` n-grams by occurrence count (ties by
-    * gram): the heavy-hitter ground truth. One gram-keyed aggregate
-    * (map-side combined) + TakeOrderedAndProject — no global sort.
-    */
-  def topKNgrams(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    ngramStream(docs, idCol, textCol, n)
-      .groupBy(col("g")).agg(count(lit(1)).as("exact_n"))
-      .orderBy(col("exact_n").desc, col("g"))
-      .limit(k)
-  }
 }

@@ -88,64 +88,6 @@ object Dedup {
       .groupBy(md5(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_dupes"))
 
-  /** A chosen LSH banding: `bands × rowsPerBand` hashes, with the
-    * S-curve diagnostics at the target threshold. `estFalsePos` /
-    * `estFalseNeg` are the collision-probability mass on the wrong
-    * side of the threshold (∫₀ᵗ p(s) ds and ∫ₜ¹ (1−p(s)) ds for
-    * p(s) = 1 − (1 − sʳ)ᵇ), assuming similarity uniform on [0,1] —
-    * a shape diagnostic, not a corpus estimate.
-    */
-  final case class BandPlan(bands: Int, rowsPerBand: Int,
-      estFalsePos: Double, estFalseNeg: Double) {
-    def numHashes: Int = bands * rowsPerBand
-    /** The similarity at which a pair has a 50% candidate chance —
-      * the classic (1/b)^(1/r) approximation's exact counterpart. */
-    def impliedThreshold: Double =
-      math.pow(1 - math.pow(0.5, 1.0 / bands), 1.0 / rowsPerBand)
-  }
-
-  /** Pick (bands, rowsPerBand) for [[minhashLshPairs]] given a target
-    * Jaccard `threshold` and a hash budget: enumerate every banding
-    * with `bands × rows <= maxHashes` and keep the one minimizing
-    * `estFalsePos + fnWeight · estFalseNeg` (midpoint-rule integrals
-    * of the S-curve). `fnWeight > 1` buys recall: dedup pipelines
-    * usually prefer verifying extra candidates (the verify join
-    * discards false positives exactly) over silently missing
-    * near-duplicates, which nothing downstream can recover.
-    *
-    * Driver-side arithmetic over ≤ maxHashes² candidates — no Spark
-    * plan involved; call once and pass the result's `bands` /
-    * `numHashes` to the corpus-scale ops.
-    */
-  def planBands(threshold: Double, maxHashes: Int,
-      fnWeight: Double = 1.0): BandPlan = {
-    require(threshold > 0 && threshold < 1, "threshold must be in (0, 1)")
-    require(maxHashes >= 2, "need at least 2 hashes")
-    require(fnWeight > 0, "fnWeight must be positive")
-    val steps = 1000
-    def errors(b: Int, r: Int): (Double, Double) = {
-      var fp = 0.0; var fn = 0.0
-      var i = 0
-      while (i < steps) {
-        val s = (i + 0.5) / steps
-        val p = 1 - math.pow(1 - math.pow(s, r), b)
-        if (s < threshold) fp += p else fn += 1 - p
-        i += 1
-      }
-      (fp / steps, fn / steps)
-    }
-    val candidates = for {
-      r <- 1 to maxHashes
-      b <- 1 to maxHashes / r
-      if b * r >= 2
-    } yield {
-      val (fp, fn) = errors(b, r)
-      (fp + fnWeight * fn, BandPlan(b, r, fp, fn))
-    }
-    // deterministic tie-break: fewest hashes, then most bands
-    candidates.minBy { case (cost, p) => (cost, p.numHashes, -p.bands) }._2
-  }
-
   /** MinHash signatures for a whole corpus from shingle rows (id, g):
     * `numHashes` seeded min-hash aggregates per document — fully
     * codegen'd with map-side partial aggregation; the shuffle carries
@@ -214,9 +156,7 @@ object Dedup {
       .filter(col("sig").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = docs.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => family.hashLongArray(b, slice(col("sig"), b * lit(rows) + lit(1), lit(rows)))))
-        .as(Seq("band_id", "band_hash")))
+      bandHashes(col("sig"), bands, rows, family))
     // Bucket members, then in-bucket pair expansion. Pair expansion is
     // quadratic in bucket size, so buckets beyond `maxBucket` (a
     // boilerplate-heavy corpus WILL produce one) are DROPPED, not
@@ -302,8 +242,7 @@ object Dedup {
     * "jaccard_prefix_grams" observation). The
     * default keeps the cap off — recall exactly 1.0; with a cap, a
     * pair is missed only if EVERY prefix gram it shares is hotter than
-    * the cap (boilerplate-only pairs — [[SpanDedup]]'s job, same
-    * division of labor as [[Winnow.candidatePairs]]).
+    * the cap (boilerplate-only pairs — [[SpanDedup]]'s job).
     */
   def ngramJaccardPrefixPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double,
@@ -536,7 +475,14 @@ object Dedup {
     * division of labor ([[SpanDedup]] owns boilerplate) as the prefix
     * path's recall bound, stated for counting instead of candidates.
     *
-    * Use [[ngramJaccardJoin]] to pick the regime by threshold.
+    * Regime by threshold: this path below t ≈ 0.6,
+    * [[ngramJaccardPrefixPairs]] above. Prefix length is `|S|(1−t)+1`,
+    * so the prefix candidate join shrinks ~(1−t)² while its verify
+    * re-join adds candidates × avg|S| rows; that pays only once
+    * prefixes are small (measured: 622 s prefix vs one-pass count on
+    * the sf1 rehearsal at t=0.3). Under a `maxGramDocs` cap the two
+    * degrade differently: the prefix path verifies against FULL gram
+    * sets, this path excludes over-cap grams from `n_common`.
     *
     * `maxPairBudget` bounds the ENUMERATION ITSELF: the co-occurrence
     * join emits exactly Σ_g df_g·(df_g−1)/2 rows, so a corpus of many
@@ -599,7 +545,7 @@ object Dedup {
           Seq("g"), "left_anti")
       } else {
         // Budget path: one eager histogram aggregate (this op is a
-        // planner+executor, like planBands) → driver cutoff → a g-window
+        // planner+executor) → driver cutoff → a g-window
         // filter on the SAME key as the self-join, so the df filter adds
         // no exchange beyond the one the join needs anyway. The hot list
         // is unbounded here (a budget-derived cutoff can be small —
@@ -701,49 +647,6 @@ object Dedup {
     }
     PairBudgetPlan(cutoff, kept, dropped, droppedGrams)
   }
-
-  /** Threshold at and above which [[ngramJaccardJoin]] routes to the
-    * prefix path. Rationale: prefix length is `|S|(1−t)+1`, so the
-    * candidate join shrinks ~(1−t)² vs full enumeration while the
-    * verify re-join adds candidates × avg|S| rows — the trade pays only
-    * once prefixes are small. At t=0.6 the prefix is ~40% of each
-    * document (candidate volume ~16% of full) and minOverlap
-    * t/(1+t)·(|S|+|T|) starts rejecting most spurious candidates
-    * before verification. Below it, counting co-occurrences once is
-    * strictly less work (measured: 622 s prefix vs one-pass count on
-    * the sf1 rehearsal at t=0.3).
-    */
-  val JaccardPrefixRegimeThreshold = 0.6
-
-  /** EXACT n-gram Jaccard join with the regime picked by threshold:
-    * [[ngramJaccardPrefixPairs]] (PPJoin) when `threshold ≥`
-    * [[JaccardPrefixRegimeThreshold]], [[ngramJaccardCountPairs]]
-    * (one-pass co-occurrence counting) below.
-    *
-    * At the default `maxGramDocs = Int.MaxValue` both regimes are
-    * recall 1.0 with identical output columns, so the choice is pure
-    * cost. WITH a cap the two regimes degrade differently and the
-    * output is NOT continuous across the regime boundary: the prefix
-    * path verifies surviving candidates against FULL gram sets (true
-    * Jaccard values; a pair is lost only when every shared prefix gram
-    * is over-cap), while the count path excludes over-cap grams from
-    * `n_common` (values for pairs sharing hot grams are depressed, and
-    * pairs riding only on boilerplate fall below threshold — see
-    * [[ngramJaccardCountPairs]]'s cap-semantics note). Callers tuning
-    * `threshold` across [[JaccardPrefixRegimeThreshold]] under a cap
-    * should expect both the pair set and the jaccard values to shift;
-    * pin the regime by calling the underlying method directly if that
-    * matters.
-    */
-  def ngramJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double,
-      maxGramDocs: Int = Int.MaxValue,
-      maxPairBudget: Long = Long.MaxValue): DataFrame =
-    if (threshold >= JaccardPrefixRegimeThreshold)
-      ngramJaccardPrefixPairs(df, idCol, textCol, n, threshold, maxGramDocs,
-        maxPairBudget)
-    else ngramJaccardCountPairs(df, idCol, textCol, n, threshold, maxGramDocs,
-      maxPairBudget)
 
   /** Exact Jaccard for given (id_a, id_b) pairs from shingle rows:
     * per-pair ARRAY INTERSECT over hashed gram sets, |union| = n_a +
@@ -1076,18 +979,6 @@ object Dedup {
     * never ride any shuffle.
     */
   def keepBestOfCluster(corpus: DataFrame, idCol: String, scoreCol: String,
-      pairs: DataFrame, idA: String = "id_a", idB: String = "id_b"): DataFrame =
-    corpus.join(clusterLosers(corpus, idCol, scoreCol, pairs, idA, idB),
-      corpus(idCol) === col("__dup_id"), "left_anti")
-
-  /** The loser list behind [[keepBestOfCluster]] — every cluster member
-    * EXCEPT each cluster's best — factored out as a buildable ARTIFACT
-    * so batch removal and streaming ingest share one definition (the
-    * [[minhashArtifact]] pattern): persist this once offline, then any
-    * batch OR stream filters against it via
-    * [[keepBestOfClusterStream]]. One column, `__dup_id`.
-    */
-  def clusterLosers(corpus: DataFrame, idCol: String, scoreCol: String,
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     val comp = connectedComponents(pairs, idA, idB)
     val members = corpus
@@ -1095,25 +986,11 @@ object Dedup {
       .join(comp, Seq("id"))
     val byComp = Window.partitionBy(col("component"))
       .orderBy(col("__score").desc_nulls_last, col("id"))
-    members
+    val losers = members
       .withColumn("__rk", row_number().over(byComp))
       .filter(col("__rk") =!= 1)
       .select(col("id").as("__dup_id"))
-  }
-
-  /** [[keepBestOfCluster]] for a STREAMING corpus against a static
-    * [[clusterLosers]] artifact — the on-ingest half of the
-    * representative-selection pipeline (the artifact is fit offline
-    * from the pair graph + corpus scores; each arriving document
-    * passes unless the artifact names it a loser). A stream-static
-    * LEFT ANTI join: stateless on the stream side, the artifact rides
-    * a broadcast when small. Identical to the batch op by
-    * construction — both consume the same loser list.
-    */
-  def keepBestOfClusterStream(docs: DataFrame, idCol: String,
-      losers: DataFrame): DataFrame = {
-    require(!losers.isStreaming, "the losers artifact must be static")
-    docs.join(losers, docs(idCol) === col("__dup_id"), "left_anti")
+    corpus.join(losers, corpus(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** Benchmark decontamination (the eval-leakage guard every training
@@ -1482,59 +1359,6 @@ object Dedup {
     coverAndRewrite(docs, marked, k)
   }
 
-  /** [[paragraphDedup]] for a STREAMING corpus: of all arrivals of an
-    * identical paragraph within the watermark horizon, only the FIRST
-    * survives (arrival order replaces the batch op's global
-    * (id, position) order — the streaming-ingest first-wins rule of
-    * `dropDuplicatesWithinWatermark`, at paragraph grain); each document reassembles from its surviving
-    * paragraphs in original position order and emits when the
-    * watermark closes its event-time window.
-    *
-    * Determinism boundary — stated, not papered over: "first" is
-    * well-defined ACROSS micro-batches (earlier batches always win —
-    * the state store holds their fingerprints), but WITHIN one
-    * micro-batch Spark's `dropDuplicatesWithinWatermark` keeps
-    * whichever same-fingerprint row its shuffle delivers first, so a
-    * paragraph duplicated at two positions in a single batch keeps an
-    * unspecified occurrence (the batch op deterministically keeps the
-    * smallest (id, position)). Feeders that need bit-stable output
-    * must not co-batch duplicate paragraphs; the streaming==batch twin
-    * spec separates them by batch for exactly this reason.
-    *
-    * Two stateful operators chain here (paragraph-fingerprint dedup →
-    * per-document windowed reassembly) — legal in append mode since
-    * Spark supports multiple stateful operators with watermark
-    * propagation. State is bounded on both: one fingerprint per
-    * distinct paragraph within the horizon, one open group per
-    * (window, doc).
-    *
-    * A per-document SENTINEL row (null paragraph, unique fingerprint)
-    * rides through the dedup so a document whose every real paragraph
-    * was removed still emits, with empty text — the batch op's
-    * contract. `concat_ws` skips the sentinel's null.
-    */
-  def paragraphDedupStream(docs: DataFrame, idCol: String, tsCol: String,
-      textCol: String, sep: String = "\n\n", watermark: String = "1 hour",
-      windowLen: String = "1 hour"): DataFrame = {
-    val paras = docs.select(col(idCol).as("id"), col(tsCol).as("__ts"),
-      posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
-        .as(Seq("pos", "para")))
-    val sentinels = docs.select(col(idCol).as("id"), col(tsCol).as("__ts"),
-      lit(-1).as("pos"), lit(null).cast("string").as("para"))
-    // sentinel fingerprints ("__doc__<id>") can never collide with a
-    // real paragraph's 32-hex md5
-    paras.unionByName(sentinels)
-      .withColumn("__fp",
-        coalesce(md5(col("para")), concat(lit("__doc__"), col("id"))))
-      .withWatermark("__ts", watermark)
-      .dropDuplicatesWithinWatermark("__fp")
-      .groupBy(window(col("__ts"), windowLen), col("id"))
-      .agg(concat_ws(sep,
-        transform(array_sort(collect_list(struct(col("pos"), col("para")))),
-          s => s.getField("para"))).as("text"))
-      .select(col("id"), col("text"))
-  }
-
   /** 64-bit SimHash over the token multiset, appended as column `out`.
     * Bit j of the result is set iff the sum over tokens of ±1 (sign from
     * bit j of the token's xxhash64) is positive. Pure column algebra
@@ -1583,10 +1407,6 @@ object Dedup {
       .drop(t)
   }
 
-  /** Hamming distance between two simhash values. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Banded MinHash signature ARTIFACT for a corpus — compute once at
     * ingest, store, and dedupe every future shard against it without
     * ever rescanning corpus text ([[incrementalNearDupMatches]]).
@@ -1608,20 +1428,38 @@ object Dedup {
     val rows = numHashes / bands
     val sig = minhashSignaturesLocal(corpus, idCol, textCol, n, numHashes, family)
     val banded = sig.select(col("id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => family.hashLongArray(b, slice(col("sig"), b * lit(rows) + lit(1), lit(rows)))))
-        .as(Seq("band_id", "band_hash")))
-    val sizes = banded.groupBy(col("band_id"), col("band_hash"))
-      .agg(count(lit(1)).as("__bsz"))
-      .observe(s"dedup_artifact_buckets_${ObsId.next()}",
-        sum(when(col("__bsz") > maxBucket, 1L).otherwise(0L)).as("dropped_buckets"),
-        max(col("__bsz")).as("max_bucket"))
-    banded.join(sizes.filter(col("__bsz") <= maxBucket),
-      Seq("band_id", "band_hash"), "left_semi")
+      bandHashes(col("sig"), bands, rows, family))
+    capBuckets(banded, maxBucket, "dedup_artifact_buckets")
       .withColumn("n", lit(n))
       .withColumn("num_hashes", lit(numHashes))
       .withColumn("bands", lit(bands))
       .withColumn("hash_family", lit(family.tag))
+  }
+
+  /** The LSH banding every MinHash path shares: one (band_id,
+    * band_hash) row per band, band b hashing signature components
+    * [b·rows, (b+1)·rows). An artifact and a shard match must band
+    * identically, or the match silently finds nothing.
+    */
+  private def bandHashes(sig: Column, bands: Int, rows: Int,
+      family: HashFamily): Column =
+    posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      b => family.hashLongArray(b, slice(sig, b * lit(rows) + lit(1), lit(rows)))))
+      .as(Seq("band_id", "band_hash"))
+
+  /** `banded` without the (band_id, band_hash) buckets of more than
+    * `maxBucket` rows; the dropped count and the largest bucket are
+    * observed under `obsPrefix`.
+    */
+  private def capBuckets(banded: DataFrame, maxBucket: Int,
+      obsPrefix: String): DataFrame = {
+    val sizes = banded.groupBy(col("band_id"), col("band_hash"))
+      .agg(count(lit(1)).as("__bsz"))
+      .observe(s"${obsPrefix}_${ObsId.next()}",
+        sum(when(col("__bsz") > maxBucket, 1L).otherwise(0L)).as("dropped_buckets"),
+        max(col("__bsz")).as("max_bucket"))
+    banded.join(sizes.filter(col("__bsz") <= maxBucket),
+      Seq("band_id", "band_hash"), "left_semi")
   }
 
   /** Incremental NEAR-dup: match a new shard against a corpus
@@ -1689,16 +1527,8 @@ object Dedup {
     val rows = numHashes / bands
     val sig = minhashSignaturesLocal(shard, idCol, textCol, n, numHashes, family)
     val banded = sig.select(col("id").as("shard_id"), col("sig").as("__ssig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => family.hashLongArray(b, slice(col("sig"), b * lit(rows) + lit(1), lit(rows)))))
-        .as(Seq("band_id", "band_hash")))
-    val shardSizes = banded.groupBy(col("band_id"), col("band_hash"))
-      .agg(count(lit(1)).as("__bsz"))
-      .observe(s"dedup_shard_buckets_${ObsId.next()}",
-        sum(when(col("__bsz") > maxShardBucket, 1L).otherwise(0L)).as("dropped_buckets"),
-        max(col("__bsz")).as("max_bucket"))
-    val capped = banded.join(shardSizes.filter(col("__bsz") <= maxShardBucket),
-      Seq("band_id", "band_hash"), "left_semi")
+      bandHashes(col("sig"), bands, rows, family))
+    val capped = capBuckets(banded, maxShardBucket, "dedup_shard_buckets")
     val agree = aggregate(
       zip_with(col("__ssig"), col("__csig"), (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / numHashes

@@ -21,23 +21,17 @@ import graft.functions.GraftExtensions.{lower_root => lowerRoot}
   *     exactly there;
   *  3. selection: [[resampleTopK]] keeps the k highest-scoring
   *     documents with an md5-of-id tiebreak — fully deterministic and
-  *     oracle-checkable. [[resampleGumbel]] is the paper's stochastic
-  *     variant: Gumbel noise derived from md5(id, seed), so it is
-  *     reproducible across runs and partitionings, but it goes through
-  *     `ln` (libm last-ulp territory) and is therefore NOT for
-  *     cross-engine hash comparison.
+  *     oracle-checkable (the paper's Gumbel-top-k variant goes through
+  *     `ln`, libm last-ulp territory, so it could not be replayed by
+  *     an oracle).
   *
   * Scale shape: the weight table is `buckets`-sized and broadcast;
   * features explode into (doc, bucket) rows, the weight join is a
   * broadcast hash join, the per-doc sum is one map-side-combinable
   * doc-keyed aggregate, and top-k is Spark's TakeOrdered (per-partition
-  * heaps, no global sort). Fitting reduces each corpus to ≤ `buckets`
-  * counting cells before anything reaches the driver.
+  * heaps, no global sort).
   */
 object Dsir {
-
-  /** Max bucket count [[fitWeightsMilli]] will bring to the driver. */
-  val MaxBuckets: Int = 1 << 20
 
   /** md5 bucket of one n-gram — the engine-portable hash idiom
     * ([[Md5Family.hex60]] → mod).
@@ -45,25 +39,10 @@ object Dsir {
   def bucketOf(term: Column, buckets: Int): Column =
     pmod(Md5Family.hex60(term), lit(buckets.toLong))
 
-  /** Word unigram + bigram feature terms of a text column (lowercased,
-    * whitespace-tokenized; bigrams joined with one space). Null/blank
-    * text → empty array.
-    */
-  def featureTerms(text: Column): Column = {
-    val ts = coalesce(Dedup.tokens(lowerRoot(text)), array().cast("array<string>"))
-    val bigrams = when(size(ts) >= 2,
-      transform(sequence(lit(1), size(ts) - 1),
-        i => concat(element_at(ts, i), lit(" "), element_at(ts, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    concat(ts, bigrams)
-  }
-
-  /** (id, __term) feature OCCURRENCE rows — the hot-path form of
-    * [[featureTerms]]: tokens and bigrams are born ROW-LOCAL (native
-    * tokenize + n-gram in the scan task; term text byte-identical).
-    * The previous posexplode + window-lead spelling paid a doc-keyed
-    * exchange + sort of every corpus token to build bigram adjacency;
-    * no shuffle exists here at all.
+  /** (id, __term) feature OCCURRENCE rows: word unigrams and bigrams
+    * (lowercased, whitespace-tokenized; bigrams joined with one
+    * space), born ROW-LOCAL (native tokenize + n-gram in the scan
+    * task) — no shuffle. Null/blank text yields no rows.
     */
   def featureOccurrences(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tk = Dedup.tokens(lowerRoot(col(textCol)))
@@ -95,41 +74,6 @@ object Dsir {
       .select(col(idCol), coalesce(col("__ds_sum"), lit(0L)).as("milli_weight"))
   }
 
-  /** Fit milli-nat bucket weights from a target and a raw corpus:
-    * λ_b = 1000 · (ln p̂_target(b) − ln p̂_raw(b)), add-`alpha`
-    * smoothed over `buckets` cells, rounded to the nearest milli-nat.
-    * Both corpora reduce to ≤ `buckets` counting cells distributed-side
-    * (`buckets ≤ MaxBuckets` keeps the driver map bounded); the log
-    * ratio runs on the driver over exact counts, so refitting on the
-    * same corpora always reproduces the same table — treat the result
-    * as a model artifact, exactly like a [[Bpe]] merge table.
-    */
-  def fitWeightsMilli(target: DataFrame, raw: DataFrame, textCol: String,
-      buckets: Int, alpha: Double = 0.5): Map[Int, Long] = {
-    require(buckets > 0 && buckets <= MaxBuckets,
-      s"buckets must be in [1, $MaxBuckets] (driver holds one cell per bucket)")
-    require(alpha > 0, "alpha must be positive (unseen buckets need mass)")
-    def counts(df: DataFrame): Map[Int, Long] = {
-      // synthetic per-row id: adjacency is per-document no matter what
-      // columns the corpus carries
-      val withId = df.select(col(textCol))
-        .withColumn("__ds_id", monotonically_increasing_id())
-      featureOccurrences(withId, "__ds_id", textCol)
-        .select(bucketOf(col("__term"), buckets).cast("int").as("b"))
-        .groupBy(col("b")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
-    val t = counts(target)
-    val r = counts(raw)
-    val tTot = t.values.sum + alpha * buckets
-    val rTot = r.values.sum + alpha * buckets
-    (0 until buckets).map { b =>
-      val lp = StrictMath.log((t.getOrElse(b, 0L) + alpha) / tTot)
-      val lq = StrictMath.log((r.getOrElse(b, 0L) + alpha) / rTot)
-      b -> StrictMath.round((lp - lq) * 1000.0)
-    }.filter(_._2 != 0L).toMap
-  }
-
   /** Deterministic importance selection: the `k` highest-scoring
     * documents (ties broken by md5 of the id, then the id). Returns
     * (id, milli_weight) — semi-join back for payloads.
@@ -139,28 +83,6 @@ object Dsir {
     require(k > 0, "k must be positive")
     score(df, idCol, textCol, milliWeights, buckets)
       .orderBy(col("milli_weight").desc,
-        md5(col(idCol).cast("string")), col(idCol))
-      .limit(k)
-  }
-
-  /** The paper's Gumbel-top-k resample (sampling without replacement
-    * ∝ exp(weight)): score + Gumbel noise, noise derived from
-    * md5(id ":" seed) so every run, partitioning and executor count
-    * draws the SAME sample. Not cross-engine exact (`ln`); use
-    * [[resampleTopK]] where an oracle must replay the choice.
-    */
-  def resampleGumbel(df: DataFrame, idCol: String, textCol: String,
-      milliWeights: Map[Int, Long], buckets: Int, k: Int,
-      seed: Int = 42): DataFrame = {
-    require(k > 0, "k must be positive")
-    // both-endpoints-open uniform: the double log below never sees 0
-    val u = Sampling.md5Uniform(
-      concat(col(idCol).cast("string"), lit(":"), lit(seed.toString)),
-      openTop = true)
-    val gumbelMilli = (-log(-log(u)) * 1000.0).cast("long")
-    score(df, idCol, textCol, milliWeights, buckets)
-      .withColumn("milli_perturbed", col("milli_weight") + gumbelMilli)
-      .orderBy(col("milli_perturbed").desc,
         md5(col(idCol).cast("string")), col(idCol))
       .limit(k)
   }

@@ -606,46 +606,4 @@ object Multimodal {
       }
       .toDF(idCol, "frame_idx", "byte_start", "frame_size", "frame", "source")
   }
-
-  final case class ByteFeatures(
-      id: Long, n_bytes: Int, entropy_milli: Long, hist: Array[Long])
-
-  /** Content features from raw bytes, no codec: a `bins`-bin byte
-    * histogram and Shannon entropy in milli-bits — the cheap
-    * compressibility/corruption signal (encrypted/compressed payloads
-    * sit near 8000 milli-bits, text and bitmaps far lower). Same
-    * single-iterator-pass batch shape as [[decodeImageMeta]] (the
-    * `mapInPandas` analogue); the histogram vector feeds the embedding
-    * ops ([[VectorAgg]], [[Similarity]]) as a feature column.
-    */
-  def byteFeatures(df: DataFrame, idCol: String, payloadCol: String,
-      bins: Int = 16): Dataset[ByteFeatures] = {
-    require(bins >= 2 && bins <= 256 && 256 % bins == 0,
-      "bins must divide 256")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val width = 256 / bins
-    idPayload(df, idCol, payloadCol)
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val hist = new Array[Long](bins)
-          val n = if (bytes == null) 0 else bytes.length
-          var i = 0
-          while (i < n) { hist((bytes(i) & 0xff) / width) += 1; i += 1 }
-          var entBits = 0.0
-          if (n > 0) {
-            var b = 0
-            while (b < bins) {
-              val c = hist(b)
-              if (c > 0) {
-                val p = c.toDouble / n
-                entBits -= p * math.log(p) / math.log(2.0)
-              }
-              b += 1
-            }
-          }
-          ByteFeatures(id, n, math.floor(entBits * 1000).toLong, hist)
-        }
-      }
-  }
 }

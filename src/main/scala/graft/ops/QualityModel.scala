@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Model-based quality filtering — the fasttext-style linear classifier
@@ -51,22 +51,6 @@ object QualityModel {
       .withColumn("kept", col("milli_logit") >= 0)
       .withColumn("score",
         lit(1.0) / (lit(1.0) + exp(-col("milli_logit").cast("double") / 1000.0)))
-  }
-
-  /** The same exact milli-logit as a ROW-LOCAL Column (literal map +
-    * higher-order fold): stateless, so it drives a Structured
-    * Streaming quality filter unchanged — no aggregate, no state. The
-    * higher-order fold is interpreted (not codegen); for the batch hot
-    * path prefer [[scoreLinear]]'s broadcast-join formulation.
-    */
-  def logitColumn(text: Column, milliWeights: Map[String, Long],
-      milliBias: Long = 0L): Column = {
-    require(milliWeights.nonEmpty, "need at least one token weight")
-    val m = typedlit(milliWeights)
-    // null text folds over an empty array → bias, matching scoreLinear's
-    // left-join semantics (tokens() yields null for null input).
-    aggregate(coalesce(Dedup.tokens(text), array().cast("array<string>")),
-      lit(milliBias), (acc, t) => acc + coalesce(element_at(m, t), lit(0L)))
   }
 
   /** The filter composition: keep documents the model scores ≥ 0.5. */

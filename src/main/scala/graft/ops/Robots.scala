@@ -16,14 +16,13 @@ import org.apache.spark.sql.functions._
   *    substring of ours, `*` as fallback; same-token groups merge per
   *    RFC 9309 §2.2.1), `Allow`/`Disallow` values with the `*`
   *    wildcard and trailing-`$` anchor.
-  *  - [[robotsDecisions]] / [[filterByRobots]]: the distributed
-  *    application. The robots TABLE (one row per host — millions of
-  *    rows at web scale) parses once into a (host, rules) side; URL
-  *    rows project to (id, host, path-and-query) — bodies and full
-  *    URLs never ride the join. Longest-match-wins with Allow winning
-  *    length ties (§2.2.2) is one map-side-combinable
-  *    `max(struct(specificity, allow))` aggregate; no matching rule →
-  *    allowed (§2.2.3).
+  *  - [[robotsDecisions]]: the distributed application. The robots
+  *    TABLE (one row per host — millions of rows at web scale) parses
+  *    once into a (host, rules) side; URL rows project to (id, host,
+  *    path-and-query) — bodies and full URLs never ride the join.
+  *    Longest-match-wins with Allow winning length ties (§2.2.2) is
+  *    one map-side-combinable `max(struct(specificity, allow))`
+  *    aggregate; no matching rule → allowed (§2.2.3).
   *
   * Matching subject is path + `?query` (fragment dropped), `/` when
   * the path is empty. Wildcard-free rules (the overwhelming majority
@@ -167,20 +166,5 @@ object Robots {
       .select(col("__rb_id").as(idCol),
         coalesce(col("__rb_win.__rb_allow"), lit(true)).as("allowed"))
     verdicts
-  }
-
-  /** Drop rows whose URL the host's robots.txt disallows for
-    * `userAgent`. One narrow id anti-join against the denied set —
-    * URL/text bodies never shuffle ([[Dedup.removeNearDuplicates]]'s
-    * glue shape).
-    */
-  def filterByRobots(urls: DataFrame, idCol: String, urlCol: String,
-      robots: DataFrame, hostCol: String, bodyCol: String,
-      userAgent: String): DataFrame = {
-    val denied = robotsDecisions(urls, idCol, urlCol, robots, hostCol,
-        bodyCol, userAgent)
-      .filter(!col("allowed"))
-      .select(col(idCol).as("__rb_denied"))
-    urls.join(denied, urls(idCol) === col("__rb_denied"), "left_anti")
   }
 }

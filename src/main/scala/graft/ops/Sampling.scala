@@ -144,17 +144,13 @@ object Sampling {
   }
 
   /** First 8 md5 hex digits of the stringified key → a deterministic
-    * uniform draw. `openTop = false` (default) maps into (0, 1] — safe
-    * under a single `-ln(u)` (u = 1 gives exactly 0); `openTop = true`
-    * maps into (0, 1), both endpoints open — required under NESTED
-    * logs (`-ln(-ln(u))`, the Gumbel draw, which is infinite at u = 1).
-    * The 32-bit uniform spelling of the md5 idiom — see
-    * [[Md5Family.hex60]] for the 60-bit hash spelling.
+    * uniform draw in (0, 1] — safe under a single `-ln(u)` (u = 1
+    * gives exactly 0). The 32-bit uniform spelling of the md5 idiom —
+    * see [[Md5Family.hex60]] for the 60-bit hash spelling.
     */
-  def md5Uniform(key: Column, openTop: Boolean = false): Column = {
-    val h1 = conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long") + 1
-    if (openTop) h1 / lit(4294967297.0) else h1 / lit(4294967296.0)
-  }
+  def md5Uniform(key: Column): Column =
+    (conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long") + 1) /
+      lit(4294967296.0)
 
   /** Disjoint deterministic split: bucket i of `weights.length` buckets,
     * with cut points at the cumulative weight fractions. Rows with the

@@ -33,9 +33,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine via a per-pair dot and PRE-PROJECTED norms — see topK. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Window top-k over scored (query_id, neighbor_id, cos_sim) rows. */
   private def topK(scored: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -215,7 +212,7 @@ object Similarity {
   /** Exact embedding near-dup pairs: all (id_a < id_b) with cosine >=
     * threshold. QUADRATIC in the corpus — the oracle twin for bounded
     * subsets, like `Dedup.ngramJaccardPairs`; the scale path is
-    * [[embeddingNearDupLsh]].
+    * [[embeddingNearDupBucketedArray]].
     *
     * Executed as a BLOCK-PARTITIONED kernel, not a row-level cross
     * join: rows hash into B ≈ n/targetBlock blocks, each row is
@@ -420,58 +417,14 @@ object Similarity {
   }
 
   /** LSH-bucketed embedding near-dup (scale path): candidate pairs are
-    * corpus rows sharing a sign-bit bucket in ANY of the `tables`
-    * hash tables (per-table EQUI self-joins — never an all-pairs
-    * product), deduped before the single exact scoring pass. Same
-    * recall/tables trade-off as [[lshTopK]]; high-cosine pairs (true
-    * near-dups) collide with high probability.
-    *
-    * Buckets larger than `maxBucket` are DROPPED, not expanded (the
-    * [[embeddingNearDupBucketed]] cap — in-bucket pairing is quadratic,
-    * so a near-constant embedding region would otherwise become an
-    * all-pairs straggler). Pass `maxBucket = Int.MaxValue` to recover
-    * the uncapped pre-cap behavior; drops are observable via the
-    * "embedding_lsh_buckets" observation.
-    *
-    * @note BEHAVIOR CHANGE: before the cap existed this operator was
-    *       uncapped; the 4096 default means dense regions (> 4096 docs
-    *       in one LSH bucket) now silently lose in-bucket pairs unless
-    *       callers raise `maxBucket` or watch the dropped_buckets
-    *       metric. The capped default is deliberate — it is the
-    *       100 TB-safe posture — but existing callers should audit.
-    */
-  /** Vector dimension sniffed from the first non-null vector; None when
-    * the frame has none (empty corpus / all-null batch — routine states
-    * in a scheduled pipeline, which must degrade to an empty result,
-    * not die in `first()` on an empty iterator).
-    */
-  private def dimOf(df: DataFrame, vecCol: String): Option[Int] =
-    df.select(size(col(vecCol)).as("__d")).filter(col("__d") >= 0)
-      .limit(1).collect().headOption.map(_.getInt(0))
-
-  def embeddingNearDupLsh(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, bits: Int = 12, tables: Int = 6, seed: Int = 42,
-      maxBucket: Int = 4096): DataFrame =
-    dimOf(corpus, vecCol) match {
-      case None => // no vectors at all → no pairs, correct schema
-        embeddingNearDupExact(corpus.limit(0), idCol, vecCol, threshold)
-      case Some(dim) =>
-        // ONE native sketch expression for the whole (tables × bits)
-        // shape — the per-plane vec_dot spelling grows the generated
-        // method with the planned shape and silently fell back to
-        // interpreted execution past ~200 planes (janino 64 KB limit,
-        // measured at the 10× rehearsal with planSignBits shapes).
-        val planes = lshPlanes(dim, bits, tables, seed)
-        embeddingNearDupBucketedArray(corpus, idCol, vecCol, threshold,
-          v => graft.functions.GraftExtensions.lsh_sign_buckets(v, planes), maxBucket)
-    }
-
-  /** [[embeddingNearDupLsh]] generalized over the bucket family: one
-    * bucket column per hash table, produced by `buckets(t)(vec)`.
-    * Random hyperplanes ([[lshPlanes]]) are the production default;
-    * [[coordinateSketches]] gives an exactly-SQL-expressible family for
-    * oracle-checked runs (float sign comparisons only — no dot sums
-    * whose summation order could flip a bucket bit between engines).
+    * corpus rows sharing a bucket in ANY hash table (per-table EQUI
+    * self-joins — never an all-pairs product), deduped before the
+    * single exact scoring pass. One bucket column per hash table,
+    * produced by `buckets(t)(vec)`. [[coordinateSketches]] gives an
+    * exactly-SQL-expressible family for oracle-checked runs (float
+    * sign comparisons only — no dot sums whose summation order could
+    * flip a bucket bit between engines); random hyperplanes
+    * ([[lshPlanesPortable]]) go through [[embeddingNearDupBucketedArray]].
     *
     * In-bucket pairing is quadratic in bucket size, so buckets beyond
     * `maxBucket` are DROPPED, not expanded — the same guard as
@@ -653,11 +606,6 @@ object Similarity {
 
   // --- sign-bit LSH ----------------------------------------------------
 
-  /** Deterministic hyperplanes for `tables` × `bits` sign projections:
-    * component (t, b, d) is a splitmix-style hash of the indices scaled
-    * into [-1, 1]. Driver-sized (tables × bits × dim doubles); identical
-    * on every run and executor.
-    */
   /** Chosen sign-LSH shape and its predicted behavior: `bits` per
     * table, `tables` tables, the expected MEAN bucket size under
     * uniform occupancy, and the candidate-recall at the threshold.
@@ -665,8 +613,8 @@ object Similarity {
   final case class SignBitPlan(
       bits: Int, tables: Int, expectedBucket: Double, recallAtThreshold: Double)
 
-  /** Size the sign-LSH shape for a corpus — the [[Dedup.planBands]]
-    * analogue for [[embeddingNearDupLsh]]/[[lshTopK]]: in-bucket
+  /** Size the sign-LSH shape for a corpus (the [[lshPlanesPortable]]
+    * tensor behind [[embeddingNearDupBucketedArray]]): in-bucket
     * pairing is quadratic in bucket size, so `bits` must GROW with the
     * corpus (bits ≈ log2(N / targetBucket)); a shape tuned at small
     * scale (few bits → giant buckets) degrades superlinearly at 10×
@@ -727,18 +675,6 @@ object Similarity {
     SignBitPlan(bits, tables, corpusSize.toDouble / (1L << bits), recall)
   }
 
-  def lshPlanes(dim: Int, bits: Int, tables: Int, seed: Int): Array[Array[Array[Double]]] =
-    Array.tabulate(tables, bits) { (t, b) =>
-      Array.tabulate(dim) { d =>
-        var z = seed.toLong * 0x9E3779B97F4A7C15L + t * 0xBF58476D1CE4E5B9L +
-          b * 0x94D049BB133111EBL + d * 0x2545F4914F6CDD1DL
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        z ^= z >>> 31
-        z.toDouble / Long.MaxValue.toDouble
-      }
-    }
-
   /** Engine-PORTABLE plane tensor — the [[graft.ops.Md5Family]] stance
     * applied to hyperplanes: plane(t)(b)(d) is derived from
     * md5("lshp:t:b:d") so ANY engine with an md5 can regenerate the
@@ -750,7 +686,6 @@ object Similarity {
     * double, h − 2^51 is exact (magnitude < 2^52), and dividing by
     * 2^51 is a power-of-two scale — so every plane value, hence every
     * left-to-right dot sum, is bit-identical across IEEE-754 engines.
-    * Production callers keep [[lshPlanes]] (cheaper, wider state).
     */
   def lshPlanesPortable(dim: Int, bits: Int, tables: Int): Array[Array[Array[Double]]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -793,35 +728,12 @@ object Similarity {
   }
 
   /** Multi-table LSH ANN top-k (OR-amplification): a corpus vector is a
-    * candidate for a query if they share a bucket in ANY of the
-    * `tables` hash tables. Candidates are deduped before scoring, so
-    * each surviving pair costs exactly one dot product. Recall rises
-    * with `tables` (and falls with `bits`); scores are exact for every
+    * candidate for a query if they share a bucket in ANY of the hash
+    * tables, one bucket column per table (see
+    * [[embeddingNearDupBucketed]] for the family choice). Candidates
+    * are deduped after scoring; recall rises with the table count (and
+    * falls with the bits per table); scores are exact for every
     * returned pair.
-    */
-  def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, bits: Int = 8, tables: Int = 4, seed: Int = 42): DataFrame =
-    dimOf(queries, qvecCol) match {
-      case None => // empty/all-null query batch → empty result, correct schema
-        cosineScores(corpus.limit(0), idCol, vecCol,
-          queries.limit(0), qidCol, qvecCol)
-      case Some(dim) =>
-        // element_at over the ONE native sketch expression: every
-        // per-table function shares the same LshSignBuckets subtree
-        // (same plane tensor reference), so subexpression elimination
-        // computes the sketch once per row and the generated code stays
-        // constant-size for any planned (bits, tables) — the unrolled
-        // per-plane spelling fell back to interpreted past ~200 planes.
-        val planes = lshPlanes(dim, bits, tables, seed)
-        bucketedTopK(corpus, idCol, vecCol, queries, qidCol, qvecCol, k,
-          (0 until tables).map(t => (v: Column) =>
-            element_at(graft.functions.GraftExtensions.lsh_sign_buckets(v, planes),
-              t + 1)))
-    }
-
-  /** [[lshTopK]] generalized over the bucket family (one bucket column
-    * per table — see [[embeddingNearDupBucketed]] for the choice).
     */
   def bucketedTopK(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
@@ -856,7 +768,7 @@ object Similarity {
   /** Recall@k of an approximate neighbor result against the exact one —
     * the acceptance metric every ANN deployment tracks (FAISS-style):
     * per query, the fraction of the EXACT top-k the approximate index
-    * retrieved. Feed it two (query, neighbor) sets, e.g. [[lshTopK]]
+    * retrieved. Feed it two (query, neighbor) sets, e.g. [[bucketedTopK]]
     * vs [[bruteForceTopK]] on a held-out query sample.
     *
     * Queries the approximate side missed entirely still appear (recall

@@ -76,8 +76,7 @@ object SkewJoin {
     * whose count joins are exactly that shape). BATCH-ONLY: the recon
     * pass collects, which a streaming left side cannot do — a
     * streaming caller must split on hot keys recon'd from a prior
-    * batch ([[splitJoin]]; `TextRank.scoreTrigramsStream` shows the
-    * pattern).
+    * batch ([[splitJoin]]).
     *
     * Null key tuples never match in an equi-join; they ride the cold
     * path (preserving their left-outer behavior). Inner/left only —

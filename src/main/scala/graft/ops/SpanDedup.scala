@@ -95,42 +95,6 @@ object SpanDedup {
       .select(col("__gh"))
   }
 
-  /** Distinct-document count per gram hash: (__gh, n_docs) — the
-    * MERGEABLE count side of the audit. A document contributes to
-    * exactly one shard, so per-shard counts SUM to the whole-corpus
-    * count: a streaming ingest appends each micro-batch's counts to an
-    * artifact and `sum(n_docs) >= minDocs` over the accumulated rows
-    * is exactly [[duplicatedGrams]] of everything seen so far (the
-    * contamination-score stream-static shape; proven in
-    * `StreamingCorpusSpec`).
-    */
-  def gramDocCounts(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    // Row-local gram arrays (the [[spanDocs]] audit shape — no
-    // window-lead token exchange; also STREAMING-safe, which the
-    // window form never was): per-row array_distinct stands in for
-    // the (gh, id) distinct's per-doc dedup, and the remaining
-    // cross-row distinct handles ids split over multiple rows.
-    spanDocs(df, idCol, textCol, n)
-      .select(col(idCol), explode(array_distinct(col("__gha"))).as("__gh"))
-      .filter(col("__gh").isNotNull)
-      .select(col("__gh"), col(idCol)).distinct()
-      .groupBy(col("__gh")).agg(count(lit(1)).as("n_docs"))
-
-  /** [[audit]] against an EXTERNAL duplicated-gram set (`__gh` rows —
-    * build one from accumulated [[gramDocCounts]], or reuse another
-    * corpus's): the incremental/streaming deploy, where each shard is
-    * audited against the grams of everything ingested so far instead
-    * of only itself. With `dupGrams = duplicatedGrams(...)` of the same
-    * corpus this is identical to [[audit]].
-    */
-  def auditAgainst(df: DataFrame, idCol: String, textCol: String,
-      n: Int, dupGrams: DataFrame): DataFrame = {
-    require(dupGrams.columns.contains("__gh"),
-      "dupGrams must carry the __gh gram-hash column (see gramDocCounts)")
-    auditFromDocs(spanDocs(df, idCol, textCol, n), idCol, n,
-      _ => dupGrams.select(col("__gh")))
-  }
-
   /** The row-local document frame every audit half reads: one row per
     * input row, (id, __tk token array, __gha positioned md5-hex gram
     * array — element i = the gram starting at token i). Null text →
@@ -141,8 +105,7 @@ object SpanDedup {
     * the coverage half paid a third doc-keyed exchange for its window;
     * all three exchanges vanish here (grams are born in the scan
     * task). Gram VALUES are byte-identical (md5 of the space-joined
-    * gram), so external dup-gram artifacts ([[gramDocCounts]]) stay
-    * compatible.
+    * gram).
     */
   private def spanDocs(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
@@ -164,18 +127,6 @@ object SpanDedup {
     * whole audit. The frame is persisted (MEMORY_AND_DISK — spills
     * rather than OOMs at cluster scale, the minhashLshPairs pattern;
     * released by the context cleaner on plan GC).
-    */
-  def audit(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 5, minDocs: Int = 2): DataFrame = {
-    val docs = spanDocs(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    auditFromDocs(docs, idCol, n, occ => duplicatedGrams(occ, idCol, minDocs))
-  }
-
-  /** Audit over a [[spanDocs]] frame. `dupOf` maps the exploded
-    * (id, __pos, __gh) occurrence frame to the duplicated-gram list —
-    * [[duplicatedGrams]] for the self-contained audit, a constant
-    * artifact for [[auditAgainst]].
     *
     * Coverage and rebuild are ROW-LOCAL over the token array (the
     * [[Dedup.substringDedup]] coverAndRewrite shape): marked start
@@ -189,12 +140,14 @@ object SpanDedup {
     * frame — the window form got this check for free from its sort,
     * the row-local form pays one count(*)-per-id pass over bare ids.
     */
-  private def auditFromDocs(docs: DataFrame, idCol: String, n: Int,
-      dupOf: DataFrame => DataFrame): DataFrame = {
+  def audit(df: DataFrame, idCol: String, textCol: String,
+      n: Int = 5, minDocs: Int = 2): DataFrame = {
+    val docs = spanDocs(df, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val occ = docs
       .select(col(idCol), posexplode(col("__gha")).as(Seq("__pos", "__gh")))
       .filter(col("__gh").isNotNull)
-    val dup = dupOf(occ)
+    val dup = duplicatedGrams(occ, idCol, minDocs)
     val markedPerDoc = occ.join(dup.select(col("__gh")), Seq("__gh"), "left_semi")
       .groupBy(col(idCol)).agg(collect_list(col("__pos")).as("__mp"))
     // Null-safe equi-join (hash-joinable — a constant-key poison join
@@ -219,22 +172,5 @@ object SpanDedup {
         (coalesce(size(col("__tk")), lit(0)) - coalesce(size(kept), lit(0)))
           .cast("long").as("dup_tokens"),
         when(size(kept) > 0, array_join(kept, " ")).as("clean_text"))
-  }
-
-  /** The rewrite composition: every row, `textCol` replaced by the
-    * span-deduplicated text (null when nothing survives); other
-    * columns pass through.
-    */
-  def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 5, minDocs: Int = 2): DataFrame = {
-    // unique internal name: the input may legitimately carry a
-    // clean_text column (e.g. another audit's output joined back)
-    require(!df.columns.contains("__sd_clean"),
-      "reserved column name collision (__sd_clean)")
-    val cleaned = audit(df, idCol, textCol, n, minDocs)
-      .select(col(idCol), col("clean_text").as("__sd_clean"))
-    df.drop(textCol)
-      .join(cleaned, Seq(idCol), "left")
-      .withColumnRenamed("__sd_clean", textCol)
   }
 }

@@ -383,11 +383,7 @@ object TextRank {
 
   /** The count tables behind [[trigramStupidBackoff]] — the reference
     * LM as data. Fit once on the reference corpus, persist as tables,
-    * and score fresh data (batch via [[scoreTrigrams]], a stream via
-    * [[scoreTrigramsStream]]) without refitting: with
-    * [[Binning.partitionBounds]]/`assignLabels` this completes the
-    * CCNet on-ingest pipeline (score → bucket) against offline
-    * artifacts.
+    * and score fresh data via [[scoreTrigrams]] without refitting.
     */
   final case class TrigramCounts(tri: DataFrame, big: DataFrame,
       uni: DataFrame, total: DataFrame)
@@ -456,24 +452,6 @@ object TextRank {
     TrigramCounts(tri, big, uni, total)
   }
 
-  /** Merge two fitted [[TrigramCounts]] — count tables are mergeable
-    * state (a document lives in exactly one fit batch, so per-batch
-    * counts SUM to the union corpus's counts). This is the periodic
-    * refit path for a long-lived ingest pipeline: fit each new batch
-    * alone, merge into the serving artifact, never re-tokenize the
-    * history. The invariant `merge(fit(A), fit(B)) == fit(A ∪ B)` is
-    * spec-pinned exactly.
-    */
-  def mergeTrigramCounts(a: TrigramCounts, b: TrigramCounts): TrigramCounts = {
-    def merged(x: DataFrame, y: DataFrame, keys: Seq[String], cnt: String) =
-      x.unionByName(y).groupBy(keys.map(col): _*).agg(sum(cnt).as(cnt))
-    TrigramCounts(
-      merged(a.tri, b.tri, Seq("__w1", "__w2", "__w3"), "__c3"),
-      merged(a.big, b.big, Seq("__w1", "__w2"), "__c12"),
-      merged(a.uni, b.uni, Seq("__w"), "__cu"),
-      a.total.unionByName(b.total).agg(sum("__n").as("__n")))
-  }
-
   /** Score a batch corpus against fitted [[TrigramCounts]] — the
     * execution half of [[trigramStupidBackoff]] (see there for the
     * scoring algebra and the skew notes).
@@ -512,11 +490,9 @@ object TextRank {
         sum(col("__n3")).as("n_trigrams"))
   }
 
-  /** The shared backoff chain: count joins + the `__s` score column
-    * over a (…, __w1, __w2, __w3) gram frame. ONE definition feeds
-    * both [[scoreTrigrams]] (doc-collapsed grams, optionally hot-key
-    * routed) and [[scoreTrigramsStream]] (occurrence grams, plain
-    * joins) so the scoring algebra can never drift between the twins.
+  /** The backoff chain of [[scoreTrigrams]]: count joins (through
+    * `countJoin`, plain or hot-key routed) + the `__s` score column
+    * over a (…, __w1, __w2, __w3) gram frame.
     */
   private def backoffScored(grams: DataFrame, counts: TrigramCounts,
       alpha: Double,
@@ -563,72 +539,5 @@ object TextRank {
         .otherwise(
           log(coalesce(col("__c3u"), lit(1L)).cast("double") / col("__n"))
             + lit(2 * lnA)))
-  }
-
-  /** [[scoreTrigrams]] for a STREAMING corpus against static fitted
-    * counts — the on-ingest half of the CCNet pipeline. Two batch
-    * constructs are illegal on a stream and are traded away:
-    *
-    *  - gram adjacency comes from a row-local array transform instead
-    *    of the posexplode+lead window (windows don't stream; the
-    *    array form is the measured-slower-but-legal twin);
-    *  - the scoring joins carry per-OCCURRENCE rows, not the
-    *    doc-collapsed (doc, trigram, n) aggregate — a pre-join
-    *    aggregate would make the per-doc mean a SECOND streaming
-    *    aggregation, which Structured Streaming rejects without
-    *    event-time watermarks. Occurrence rows are bounded by document
-    *    length, and the per-occurrence mean equals the n-weighted mean
-    *    exactly, so scores are identical to the batch path.
-    *
-    * All five count joins are stream-static (counts are batch tables);
-    * the single streaming aggregate is the per-doc mean. Run with
-    * complete/update output mode.
-    *
-    * `hotKeys > 0` applies the prior-batch recon pattern
-    * [[SkewJoin.splitJoin]] documents: a stream cannot be recon'd (no
-    * collect), but the FIT corpus's own count tables are batch frames
-    * and stopword grams are hot in any natural-language corpus — so
-    * the top-`hotKeys` grams BY FIT COUNT route each count join's hot
-    * slice over a broadcast while the tail shuffles. An imperfect
-    * proxy for the stream's true hot keys, and exactly as safe:
-    * splitJoin's routing never changes a row.
-    */
-  def scoreTrigramsStream(counts: TrigramCounts, docs: DataFrame, idCol: String,
-      textCol: String, alpha: Double = 0.4, hotKeys: Int = 0,
-      maxVocab: Int = Int.MaxValue): DataFrame = {
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    val ts = filter(split(lowerRoot(col(textCol)), "[^a-z0-9]+"), t => t =!= "")
-    val grams = docs.select(col(idCol),
-        explode(when(size(ts) >= 3,
-            transform(sequence(lit(0), size(ts) - 3),
-              i => struct(element_at(ts, i + 1).as("__w1"),
-                element_at(ts, i + 2).as("__w2"),
-                element_at(ts, i + 3).as("__w3"))))
-          .otherwise(array().cast("array<struct<__w1:string,__w2:string,__w3:string>>")))
-          .as("__g"))
-      .select(col(idCol), col("__g.__w1"), col("__g.__w2"), col("__g.__w3"))
-    val cj: (DataFrame, DataFrame, Seq[String]) => DataFrame =
-      if (hotKeys == 0) (l, r, ks) => l.join(r, ks, "left")
-      else {
-        // recon off the BATCH count tables (ordered by fit frequency),
-        // once at plan time — the stream side is never collected
-        def hotByCount(df: DataFrame, countCol: String, ks: Seq[String]) =
-          df.orderBy(col(countCol).desc, struct(ks.map(col): _*))
-            .limit(hotKeys).select(ks.map(col): _*).collect()
-        val hot3 = hotByCount(counts.tri, "__c3", Seq("__w1", "__w2", "__w3"))
-        val hot12 = hotByCount(counts.big, "__c12", Seq("__w1", "__w2"))
-        val hot23 = hotByCount(
-          counts.big.select(col("__w1").as("__w2"), col("__w2").as("__w3"),
-            col("__c12").as("__c23")), "__c23", Seq("__w2", "__w3"))
-        val byKeys = Map(
-          Seq("__w1", "__w2", "__w3") -> hot3,
-          Seq("__w1", "__w2") -> hot12,
-          Seq("__w2", "__w3") -> hot23)
-        (l, r, ks) => SkewJoin.splitJoin(l, r, ks, byKeys(ks), "left")
-      }
-    backoffScored(grams, counts, alpha, cj, maxVocab)
-      .groupBy(col(idCol))
-      .agg((sum(col("__s")) / count(lit(1))).as("mean_logprob"),
-        count(lit(1)).as("n_trigrams"))
   }
 }

@@ -111,8 +111,8 @@ object Urls {
     * — they have no URL identity to collide on — and so are null-id
     * rows (an equi-anti-join never matches null).
     *
-    * Shape: the [[Dedup.clusterLosers]] idiom. The canonical-digest
-    * shuffle carries only (md5(canonical), id) — never URL or
+    * Shape: the [[Dedup.keepBestOfCluster]] loser-list idiom. The
+    * canonical-digest shuffle carries only (md5(canonical), id) — never URL or
     * document text — and produces the LOSER id list; the corpus is
     * then anti-joined on id alone, which broadcasts whenever the
     * loser list is small (the common case: most URLs are unique) and

@@ -53,38 +53,4 @@ object Winnow {
         explode(winnow_fingerprints(
           word_ngram_md5(ws_tokens(col(textCol)), n), w)).as("fingerprint"))
   }
-
-  /** Cross-document candidate pairs: documents sharing at least
-    * `minShared` fingerprints (id_a < id_b). The fingerprint-keyed
-    * groupBy is the only corpus-wide shuffle; buckets larger than
-    * `maxBucket` docs are dropped, not paired (the standard quadratic
-    * guard — a fingerprint shared by half the corpus is boilerplate,
-    * which is [[SpanDedup]]'s job to remove, not a similarity signal).
-    */
-  def candidatePairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 4, w: Int = 4, minShared: Int = 2,
-      maxBucket: Int = 1024): DataFrame = {
-    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    // maxBucket <= 0 would classify EVERY bucket as hot and silently
-    // return an empty result — indistinguishable from "no similar
-    // documents" (the Dedup.ngramJaccardPrefixPairsManaged guard).
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    val fps = fingerprints(df, idCol, textCol, n, w)
-    // Bucket sizes as a map-side-combined AGGREGATE and the cap as a
-    // broadcast anti-join — the same shape as the prefix-jaccard cap
-    // (Dedup.ngramJaccardPrefixPairsManaged): a per-fingerprint window
-    // would funnel a corpus-wide boilerplate fingerprint into ONE task
-    // before the cap could drop it. The over-cap list is broadcast-
-    // sized by pigeonhole (≤ |fps| / maxBucket entries).
-    val hot = fps.groupBy(col("fingerprint")).agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") > maxBucket).select(col("fingerprint"))
-    val capped = fps.join(broadcast(hot), Seq("fingerprint"), "left_anti")
-    val a = capped.select(col("fingerprint"), col(idCol).as("id_a"))
-    val b = capped.select(col("fingerprint"), col(idCol).as("id_b"))
-    a.join(b, Seq("fingerprint"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering keys for multi-dimensional file layout.
@@ -40,20 +40,5 @@ object ZOrder {
     (0 until Bits).foldLeft(0L) { (acc, i) =>
       acc | (((x >> i) & 1L) << (2 * i + 1)) | (((y >> i) & 1L) << (2 * i))
     }
-  }
-
-  /** Cluster `df` for writing: z-key on two bounded-int columns, then
-    * range-repartition + in-partition sort by it. `numFiles` bounds the
-    * output file count; each file covers a compact z-range, i.e. a
-    * rectangle-ish region of (xCol, yCol) space with tight min/max
-    * stats on both.
-    */
-  def clusterByZ(df: DataFrame, xCol: String, yCol: String,
-      numFiles: Int): DataFrame = {
-    require(!df.columns.contains("__zkey"), "input must not contain __zkey")
-    df.withColumn("__zkey", interleave2(col(xCol), col(yCol)))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
   }
 }

@@ -190,9 +190,8 @@ object CorpusOps {
       |FROM k""".stripMargin
 
   // DSIR importance selection (ops.Dsir): hashed unigram+bigram
-  // features over 64 buckets, literal milli-nat bucket weights (the
-  // fitted-weights path is spec-tested — weights are a model artifact
-  // here, like the BPE merge table), deterministic top-k. The SQL is
+  // features over 64 buckets, literal milli-nat bucket weights (a
+  // model artifact, like the BPE merge table), deterministic top-k. The SQL is
   // GENERATED from the same map, so both engines score identically.
   private val dsirBuckets = 64
   private val dsirWeights: Map[Int, Long] =

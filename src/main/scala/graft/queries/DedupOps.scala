@@ -282,7 +282,8 @@ object DedupOps {
   // pipeline (one md5 per gram + integer mixing per seed; see
   // HashFamily for why this halves the gate's hashing cost).
   //
-  // CALIBRATED banding (planBands(0.5, 32) = 8 bands × 4 rows), hunting
+  // CALIBRATED banding (8 bands × 4 rows: the S-curve's 50% point
+  // (1 − 0.5^(1/8))^(1/4) ≈ 0.54 sits just above t = 0.5), hunting
   // the J ≈ 0.9+ near-duplicates the corpus actually carries: seeded
   // marker dups at the gate scales (the jaccard-entry pattern — a gate
   // that can't tell a correct plan from `LIMIT 0` is not a gate) and

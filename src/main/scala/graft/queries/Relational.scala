@@ -517,8 +517,8 @@ object Relational {
 
   // q_zorder_key — Morton clustering key (ops.ZOrder) over the two
   // join/filter dimensions of lineitem. The key itself is pure
-  // codegen'd bit algebra; at write time clusterByZ range-partitions
-  // and sorts by it so every parquet file holds a compact rectangle of
+  // codegen'd bit algebra; a writer that range-partitions and sorts by
+  // it makes every parquet file hold a compact rectangle of
   // (partkey, suppkey) space — row-group pruning for predicates on
   // EITHER column. The oracle reproduces the interleave bit-by-bit.
   private val qZorder: Q = (s, dir) =>

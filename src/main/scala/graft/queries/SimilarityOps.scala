@@ -237,11 +237,10 @@ object SimilarityOps {
   // bit-identical across IEEE engines), so the ENTIRE pipeline —
   // planSignBits shape arithmetic, plane tensor, sign buckets, cap,
   // candidate join, cosine verify — replays in DuckDB and the row is
-  // hash-checked like any other. The splitmix production default
-  // (lshPlanes — wrapping 64-bit multiplies, inexpressible in engines
-  // whose integer ops trap on overflow) keeps its recall spec in
-  // OpsSpec; this is the Md5Family-for-gates stance the minhash and
-  // simhash entries already take.
+  // hash-checked like any other (a splitmix plane hash's wrapping
+  // 64-bit multiplies are inexpressible in engines whose integer ops
+  // trap on overflow); this is the Md5Family-for-gates stance the
+  // minhash and simhash entries already take.
   // maxCandidates = 100 M planned pair rows (~4 GB of id-pair shuffle):
   // without it the recall-first plan at 200 k vectors / t=0.4 asks for
   // 6 bits × 36 tables = ~11 B candidate rows — the r9 sf10 warmup

@@ -333,6 +333,35 @@ class ConfigSpec extends SparkSpec {
     assert(cfg.csvSources.head.hasHeaders === true)
   }
 
+  test("a misspelled config boolean fails naming the field instead of reading as false") {
+    val dir = Files.createTempDirectory("graftcfg")
+    write(dir, "data.csv", "Patient ID\nP001\n")
+    // `ture` parses as a YAML string, which Jackson's asBoolean() reads
+    // as false: the header row would be ingested as a patient
+    val headers = write(dir, "headers.yaml",
+      s"""data_sources:
+         |  - type: "csv"
+         |    source: "${dir.resolve("data.csv")}"
+         |    has_headers: ture
+         |    series_contexts:
+         |$subjectSeries
+         |pipeline:
+         |  strategies: []
+         |  loader:
+         |    file_system:
+         |      output_dir: "${dir.resolve("out")}"
+         |""".stripMargin)
+    val e1 = intercept[IllegalArgumentException](ConfigLoader.load(headers))
+    assert(e1.getMessage.contains("'has_headers'") && e1.getMessage.contains("'ture'"),
+      e1.getMessage)
+    // `flase` would silently keep date_to_age strict
+    val strict = multiSourceConfig(dir, "[{\"date_to_age\": {\"strict\": flase}}]",
+      "data.csv" -> subjectSeries)
+    val e2 = intercept[IllegalArgumentException](ConfigRunner.run(spark, strict))
+    assert(e2.getMessage.contains("'strict'") && e2.getMessage.contains("'flase'"),
+      e2.getMessage)
+  }
+
   /** A config over the given `(file name, series_contexts YAML)` CSV
     * sources, in that order, running `strategies`. */
   private def multiSourceConfig(dir: java.nio.file.Path, strategies: String,

@@ -31,23 +31,6 @@ class CorpusCurationSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet == Set(1L))
   }
 
-  test("quality model: row-local logitColumn equals the broadcast-join scorer") {
-    val rnd = new scala.util.Random(5)
-    val vocab = Seq("the", "and", "lorem", "click", "cat", "dog")
-    val df = (1 to 200).map { i =>
-      val text = if (i % 50 == 0) null
-        else (0 until rnd.nextInt(12)).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" ")
-      (i.toLong, text)
-    }.toDF("doc_id", "text")
-    val w = Map("the" -> 400L, "and" -> 250L, "lorem" -> -800L, "click" -> -500L)
-    val viaJoin = QualityModel.scoreLinear(df, "doc_id", "text", w, -300L)
-      .select("doc_id", "milli_logit").as[(Long, Long)].collect().toMap
-    val viaColumn = df.select($"doc_id",
-        QualityModel.logitColumn($"text", w, -300L).as("l"))
-      .as[(Long, Long)].collect().toMap
-    assert(viaColumn == viaJoin)
-  }
-
   test("bigram LM: hand-computed transition probabilities, junk sinks") {
     val df = Seq(
       (1L, "a b a b a b"),     // typical transitions

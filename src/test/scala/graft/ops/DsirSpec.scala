@@ -16,11 +16,13 @@ class DsirSpec extends SparkSpec {
       .head().getInt(0)
 
   test("featureTerms yields lowercased unigrams plus space-joined bigrams") {
-    val out = Seq("The cat Sat", "x", "", null.asInstanceOf[String])
-      .toDF("t").select(Dsir.featureTerms(col("t"))).as[Seq[String]].collect()
-    assert(out(0) == Seq("the", "cat", "sat", "the cat", "cat sat"))
-    assert(out(1) == Seq("x"))
-    assert(out(2) == Seq.empty && out(3) == Seq.empty)
+    val docs = Seq((0L, "The cat Sat"), (1L, "x"), (2L, ""), (3L, null.asInstanceOf[String]))
+      .toDF("id", "t")
+    val out = Dsir.featureOccurrences(docs, "id", "t").as[(Long, String)].collect()
+      .groupBy(_._1).map { case (id, ts) => id -> ts.map(_._2).toSeq }
+    assert(out(0L) == Seq("the", "cat", "sat", "the cat", "cat sat"))
+    assert(out(1L) == Seq("x"))
+    assert(!out.contains(2L) && !out.contains(3L))
   }
 
   test("score sums milli weights over feature occurrences, exactly") {
@@ -38,22 +40,6 @@ class DsirSpec extends SparkSpec {
     assert(s(3L) == 0L)
   }
 
-  test("fitWeightsMilli matches the hand-computed smoothed log ratio") {
-    val target = Seq(1L -> "aa aa", 2L -> "aa").toDF("id", "text")
-    val raw = Seq(1L -> "bb", 2L -> "bb bb").toDF("id", "text")
-    val w = Dsir.fitWeightsMilli(target, raw, "text", B, alpha = 0.5)
-    // target occurrences: aa×3 + bigram "aa aa"×1; raw: bb×3 + "bb bb"×1
-    val tTot = 4 + 0.5 * B
-    val rTot = 4 + 0.5 * B
-    def lam(tc: Long, rc: Long): Long = StrictMath.round(
-      (StrictMath.log((tc + 0.5) / tTot) - StrictMath.log((rc + 0.5) / rTot)) * 1000.0)
-    assert(w(bucket("aa")) == lam(3, 0))
-    assert(w(bucket("bb")) == lam(0, 3))
-    assert(w(bucket("aa aa")) == lam(1, 0))
-    // unseen-everywhere buckets carry weight 0 and are dropped from the map
-    assert(!w.contains(bucket("zz")))
-  }
-
   test("resampleTopK keeps the k best with the md5 tiebreak; Gumbel variant is run-stable") {
     val w = Map(bucket("hot") -> 1000L)
     val df = (1L to 20L).map(i => (i, if (i <= 5) "hot" else "cold")).toDF("id", "text")
@@ -66,11 +52,5 @@ class DsirSpec extends SparkSpec {
       java.security.MessageDigest.getInstance("MD5").digest(i.toString.getBytes)
         .map("%02x".format(_)).mkString).sortBy(_._2).map(_._1).take(2).toSet
     assert(top.drop(5).map(_._1).toSet == coldByMd5)
-
-    val g1 = Dsir.resampleGumbel(df, "id", "text", w, B, k = 7, seed = 9)
-      .select("id").as[Long].collect().toSeq
-    val g2 = Dsir.resampleGumbel(df.repartition(7), "id", "text", w, B, k = 7, seed = 9)
-      .select("id").as[Long].collect().toSeq
-    assert(g1 == g2 && g1.size == 7)
   }
 }

@@ -177,12 +177,9 @@ class OpsSpec extends SparkSpec {
     val hashed = Dedup.withSimhash(docs, "text")
       .select("doc_id", "simhash").as[(Long, Long)].collect().toMap
     assert(hashed(1L) == hashed(6L)) // identical text → identical simhash
-    val nearDist = spark.range(1)
-      .select(Dedup.hamming64(lit(hashed(1L)), lit(hashed(2L))).as("d"))
-      .head().getInt(0)
-    val farDist = spark.range(1)
-      .select(Dedup.hamming64(lit(hashed(1L)), lit(hashed(4L))).as("d"))
-      .head().getInt(0)
+    def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
+    val nearDist = hamming(hashed(1L), hashed(2L))
+    val farDist = hamming(hashed(1L), hashed(4L))
     assert(nearDist < farDist)
   }
 
@@ -393,8 +390,9 @@ class OpsSpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.lshTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, bits = 2)
+    val buckets = SignLsh.perTable(dim = 8, bits = 2, tables = 4)
+    val lsh = Similarity.bucketedTopK(vecs, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 5, buckets)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(brute.size == 10) // k per query
     assert(lsh.nonEmpty)
@@ -404,8 +402,8 @@ class OpsSpec extends SparkSpec {
       queries, "vec_id", "embedding", k = 49)
       .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
-    Similarity.lshTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, bits = 2)
+    Similarity.bucketedTopK(vecs, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 5, buckets)
       .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
       .collect().foreach { case (q, n, s) =>
         assert(math.abs(bruteScores((q, n)) - s) < 1e-12)
@@ -463,8 +461,9 @@ class OpsSpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.lshTopK(vecs, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, bits = 8, tables = 6)
+    val lsh = Similarity.bucketedTopK(vecs, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 5,
+      SignLsh.perTable(dim = 16, bits = 8, tables = 6))
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (brute intersect lsh).size.toDouble / brute.size
     assert(recall >= 0.9, s"multi-table LSH recall $recall < 0.9")
@@ -513,8 +512,8 @@ class OpsSpec extends SparkSpec {
       .select("id_a", "id_b", "cos_sim").as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(exact.nonEmpty)
-    val lsh = Similarity.embeddingNearDupLsh(vecs, "vec_id", "embedding",
-      0.95, bits = 12, tables = 6)
+    val lsh = Similarity.embeddingNearDupBucketedArray(vecs, "vec_id", "embedding",
+      0.95, SignLsh.array(dim = 16, bits = 12, tables = 6))
       .select("id_a", "id_b", "cos_sim").as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     val recall = (exact.keySet intersect lsh.keySet).size.toDouble / exact.size
@@ -969,8 +968,11 @@ class OpsSpec extends SparkSpec {
   test("ngram stream is the occurrence multiset; topK ties break by gram") {
     val docs = Seq((1L, "x y x y"), (2L, "x y z")).toDF("doc_id", "text")
     // bigram occurrences: "x y"×3, "y x"×1, "y z"×1
-    val top = CountMin.topKNgrams(docs, "doc_id", "text", n = 2, k = 2)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val grams = CountMin.ngramStream(docs, "doc_id", "text", n = 2)
+    assert(grams.as[String].collect().sorted.toSeq ==
+      Seq("x y", "x y", "x y", "y x", "y z"))
+    val top = grams.groupBy("g").count().orderBy(col("count").desc, col("g"))
+      .limit(2).collect().map(r => (r.getString(0), r.getLong(1)))
     assert(top.toSeq == Seq(("x y", 3L), ("y x", 1L)))
   }
 
@@ -1015,23 +1017,6 @@ class OpsSpec extends SparkSpec {
         s"salted grid at t=$t")
       assert(salted.count() == cnt.count(), s"salted count at t=$t")
     }
-  }
-
-  test("jaccard regime dispatcher: count plan below 0.6, prefix plan at and above") {
-    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g")).toDF("doc_id", "text")
-    // The prefix path is recognizable by its rarity-rank window
-    // (row_number over __df); the count path has no window over grams.
-    def plan(t: Double): String =
-      Dedup.ngramJaccardJoin(docs, "doc_id", "text", n = 2, threshold = t)
-        .queryExecution.optimizedPlan.toString
-    assert(!plan(0.3).contains("row_number"))
-    assert(plan(0.8).contains("row_number"))
-    // and the two REGIMES agree on the answer at the same threshold
-    // (count via the dispatcher vs prefix called directly — not the
-    // count path against itself)
-    val lo = Dedup.ngramJaccardJoin(docs, "doc_id", "text", n = 2, threshold = 0.3)
-    val hi = Dedup.ngramJaccardPrefixPairs(docs, "doc_id", "text", n = 2, threshold = 0.3)
-    assert(lo.except(hi).isEmpty && hi.except(lo).isEmpty)
   }
 
   test("count-based jaccard: the shingle pipeline runs ONCE in the shuffle-join " +
@@ -1208,22 +1193,6 @@ class OpsSpec extends SparkSpec {
     assert(out == Map(1L -> ((320, 240)), 2L -> ((100, 50)), 3L -> ((-1, -1))))
   }
 
-  test("byte features: hand-computed histogram and entropy; vectors feed similarity") {
-    // 8 bytes: 4 in bin 0 (0x00-0x0F), 4 in bin 15 (0xF0-0xFF) → 1 bit entropy
-    val p = Array[Byte](0, 1, 2, 3, -1, -2, -3, -4)
-    val df = Seq((1L, p), (2L, Array[Byte]())).toDF("id", "payload")
-    val feats = Multimodal.byteFeatures(df, "id", "payload", bins = 16)
-      .collect().map(f => f.id -> f).toMap
-    assert(feats(1L).hist.toSeq == Seq(4L, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 4L))
-    assert(feats(1L).entropy_milli == 1000L) // exactly 1 bit
-    assert(feats(2L).n_bytes == 0 && feats(2L).entropy_milli == 0L)
-    // the histogram is a usable feature vector for the embedding ops
-    val vecs = Multimodal.byteFeatures(df, "id", "payload", bins = 16)
-      .toDF().select(col("id").as("vec_id"),
-        col("hist").cast("array<double>").as("embedding"))
-    assert(vecs.filter(size(col("embedding")) === 16).count() == 2)
-  }
-
   test("wav sniff walks chunks, honors odd-size padding, rejects malformed") {
     // canonical: RIFF/WAVE, fmt (PCM stereo 44100 16-bit), data 8 bytes → 2 frames
     val wav = hex("52494646 24000000 57415645" +
@@ -1344,8 +1313,6 @@ class OpsSpec extends SparkSpec {
       .map(_.id).toSeq == Seq(1L))
     assert(Multimodal.decodeAudioMeta(df, "doc_id", "payload").collect()
       .map(_.id).toSeq == Seq(1L))
-    assert(Multimodal.byteFeatures(df, "doc_id", "payload").collect()
-      .map(_.id).toSeq == Seq(1L))
     assert(Multimodal.frameSampleMp4(df, "doc_id", "payload",
       fallbackFrameBytes = 1).select("doc_id").distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(1L))
@@ -1442,25 +1409,6 @@ class OpsSpec extends SparkSpec {
       assert(triBroadcast,
         s"expected the hot trigram slice on a 3-key broadcast join:\n${planStr.take(1500)}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-  }
-
-  test("merged trigram counts equal counts fit on the union corpus") {
-    val fitA = Seq((1L, "a b c a b d"), (2L, "c a b e")).toDF("doc_id", "text")
-    val fitB = Seq((3L, "a b c c a"), (4L, "e f g")).toDF("doc_id", "text")
-    val merged = TextRank.mergeTrigramCounts(
-      TextRank.trigramCounts(fitA, "doc_id", "text"),
-      TextRank.trigramCounts(fitB, "doc_id", "text"))
-    val whole = TextRank.trigramCounts(fitA.unionByName(fitB), "doc_id", "text")
-    def same(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame) =
-      x.except(y).isEmpty && y.except(x).isEmpty
-    assert(same(merged.tri, whole.tri))
-    assert(same(merged.big, whole.big))
-    assert(same(merged.uni, whole.uni))
-    assert(same(merged.total, whole.total))
-    // and scoring through the merged artifact is scoring through the union
-    val docs = Seq((9L, "a b c"), (10L, "x b c")).toDF("doc_id", "text")
-    assert(same(TextRank.scoreTrigrams(merged, docs, "doc_id", "text"),
-      TextRank.scoreTrigrams(whole, docs, "doc_id", "text")))
   }
 
   test("trigram stupid backoff never backs off when scored on its own fit") {
@@ -1633,28 +1581,6 @@ class OpsSpec extends SparkSpec {
     // and the signs are genuinely mixed across the 8 cells (not all +1)
     val signs = for (k <- 0 until 2; d <- 0 until 4) yield VectorAgg.projSign("rp", k, d)
     assert(signs.toSet == Set(1.0, -1.0))
-  }
-
-  test("planBands: classic bandings, budget respected, knobs move the right way") {
-    // the textbook t=0.5 / 32-hash answer is 8 bands × 4 rows
-    val classic = Dedup.planBands(0.5, 32)
-    assert(classic.bands == 8 && classic.rowsPerBand == 4)
-    // implied threshold tracks the target across the range
-    for (t <- Seq(0.3, 0.5, 0.7, 0.9)) {
-      val p = Dedup.planBands(t, 128)
-      assert(p.numHashes <= 128)
-      assert(math.abs(p.impliedThreshold - t) < 0.15,
-        s"t=$t implied=${p.impliedThreshold}")
-    }
-    // a bigger hash budget buys a sharper curve (total error shrinks)
-    val small = Dedup.planBands(0.7, 32)
-    val large = Dedup.planBands(0.7, 256)
-    assert(large.estFalsePos + large.estFalseNeg <
-      small.estFalsePos + small.estFalseNeg)
-    // weighting false negatives buys recall: implied threshold drops
-    val recall = Dedup.planBands(0.7, 32, fnWeight = 4.0)
-    assert(recall.impliedThreshold < small.impliedThreshold)
-    assert(recall.estFalseNeg < small.estFalseNeg)
   }
 
   test("substringDedup strips non-first duplicated k-token runs") {

@@ -89,10 +89,6 @@ class RobotsSpec extends SparkSpec {
       .as[(Long, Boolean)].collect().toMap
     assert(got == Map(1L -> true, 2L -> false, 3L -> true, 4L -> true,
       5L -> false, 6L -> true, 7L -> true, 8L -> true))
-    val kept = Robots.filterByRobots(urls, "doc_id", "url",
-        robots, "host", "robots", "AnyBot")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(1L, 3L, 4L, 6L, 7L, 8L))
   }
 
   test("matching subject is path+query with '/' for empty; host matching uses the canonical host") {

@@ -50,15 +50,18 @@ class SimilarityGuardsSpec extends SparkSpec {
 
   test("empty or all-null batches degrade to empty results, not first() crashes") {
     val emptyQ = Seq.empty[(Long, Array[Double])].toDF("qid", "qvec")
-    val r1 = Similarity.lshTopK(corpus, "id", "vec", emptyQ, "qid", "qvec", 3)
+    val buckets = SignLsh.perTable(dim = 4, bits = 8, tables = 4)
+    val r1 = Similarity.bucketedTopK(corpus, "id", "vec", emptyQ, "qid", "qvec", 3, buckets)
     assert(r1.columns.toSeq === Seq("query_id", "neighbor_id", "cos_sim"))
     assert(r1.count() === 0L)
 
     val nullQ = Seq((10L, null.asInstanceOf[Array[Double]])).toDF("qid", "qvec")
-    assert(Similarity.lshTopK(corpus, "id", "vec", nullQ, "qid", "qvec", 3).count() === 0L)
+    assert(Similarity.bucketedTopK(corpus, "id", "vec", nullQ, "qid", "qvec", 3, buckets)
+      .count() === 0L)
 
     val emptyC = Seq.empty[(Long, Array[Double])].toDF("id", "vec")
-    val r2 = Similarity.embeddingNearDupLsh(emptyC, "id", "vec", 0.9)
+    val r2 = Similarity.embeddingNearDupBucketedArray(emptyC, "id", "vec", 0.9,
+      SignLsh.array(dim = 4, bits = 12, tables = 6))
     assert(r2.columns.toSeq === Seq("id_a", "id_b", "cos_sim"))
     assert(r2.count() === 0L)
   }
@@ -132,8 +135,8 @@ class SimilarityGuardsSpec extends SparkSpec {
     // the planned shape feeds the real op and still finds near-dups
     val df = corpus.toDF("vec_id", "embedding")
     val tiny = Similarity.planSignBits(4L, threshold = 0.9, targetBucket = 2)
-    val pairs = Similarity.embeddingNearDupLsh(df, "vec_id", "embedding",
-      threshold = 0.9, bits = tiny.bits, tables = tiny.tables)
+    val pairs = Similarity.embeddingNearDupBucketedArray(df, "vec_id", "embedding",
+      threshold = 0.9, SignLsh.array(dim = 4, tiny.bits, tiny.tables))
     assert(pairs.columns.toSeq == Seq("id_a", "id_b", "cos_sim"))
   }
 
@@ -181,8 +184,8 @@ class SimilarityGuardsSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact.size >= 200, "planted twins must be exact near-dups")
     val plan = Similarity.planSignBits(400L, threshold = 0.9, targetBucket = 64)
-    val approx = Similarity.embeddingNearDupLsh(rows, "vec_id", "embedding",
-        threshold = 0.9, bits = plan.bits, tables = plan.tables)
+    val approx = Similarity.embeddingNearDupBucketedArray(rows, "vec_id", "embedding",
+        threshold = 0.9, SignLsh.array(dim = 16, plan.bits, plan.tables))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(approx.nonEmpty, "planned shape must not be vacuous")
     assert(approx.subsetOf(exact), "every LSH pair is exact-rescored")
@@ -216,8 +219,8 @@ class SimilarityGuardsSpec extends SparkSpec {
     // as the minhash mega-bucket spec).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val pairs = Similarity.embeddingNearDupLsh(big, "vec_id", "embedding",
-        threshold = 0.4, bits = 1, tables = 2, maxBucket = 20)
+      val pairs = Similarity.embeddingNearDupBucketedArray(big, "vec_id", "embedding",
+        threshold = 0.4, SignLsh.array(dim = 8, bits = 1, tables = 2), maxBucket = 20)
       assert(pairs.count() == 0) // every bucket over cap → empty result
       val deadline = System.currentTimeMillis() + 10000
       while (observed.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)

@@ -70,14 +70,4 @@ class SpanDedupSpec extends SparkSpec {
     assert(SpanDedup.audit(df.filter($"text" =!= "g h i j k l"),
       "doc_id", "text", n = 3).count() == 2)
   }
-
-  test("removeDuplicatedSpans rewrites in place and keeps other columns") {
-    val df = Seq((1L, "shared run here plus own words", "keepme"),
-      (2L, "prefix shared run here suffix", "other")).toDF("id", "text", "tag")
-    val out = SpanDedup.removeDuplicatedSpans(df, "id", "text", n = 3, minDocs = 2)
-      .select("id", "text", "tag").as[(Long, String, String)].collect()
-      .map { case (i, t, g) => i -> ((t, g)) }.toMap
-    assert(out(1L) == (("plus own words", "keepme")))
-    assert(out(2L) == (("prefix suffix", "other")))
-  }
 }

@@ -410,98 +410,6 @@ class VolumeStressSpec extends SparkSpec {
     }
   }
 
-  test("winnowing pairs at 200k docs: a corpus-wide boilerplate fingerprint " +
-      "is capped without pinning one task; the planted twin still surfaces") {
-    // Every doc ends with the SAME 7-token boilerplate run (>= n+w-1,
-    // so winnowing guarantees a common fingerprint across ALL 200k
-    // docs — a 200k-doc bucket). The cap must drop it via the
-    // aggregate + broadcast-anti-join shape (a per-fingerprint window
-    // would read the hot bucket in ONE task), while the twin pair's
-    // unique-prefix fingerprint survives: the first window's grams all
-    // touch a unique token, so every doc keeps >= 1 fingerprint of its
-    // own text.
-    def corpus(ids: org.apache.spark.sql.DataFrame) = ids.select(col("id"),
-      concat(lit("u"), col("id"), lit(" v"), col("id"), lit(" x"), col("id"),
-        lit(" y"), col("id"), lit(" z"), col("id"),
-        lit(" all rights reserved legal terms apply now")).as("text"))
-    val docs = corpus(spark.range(0, 200000).toDF("id"))
-      .union(corpus(Seq(200007L).toDF("id"))
-        .select(col("id"), regexp_replace(col("text"), "200007", "7").as("text")))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevCoalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      var out: Array[(Long, Long)] = null
-      val maxTask = maxTaskShuffleRead {
-        out = Winnow.candidatePairs(docs, "id", "text", n = 4, w = 4,
-          minShared = 1, maxBucket = 1000)
-          .select("id_a", "id_b").as[(Long, Long)].collect()
-      }
-      assert(out.contains((7L, 200007L)), out.take(5).mkString(", "))
-      // A boiler gram whose fixed hash sits at a high percentile is
-      // window-min for only a handful of random docs — a GENUINE small
-      // shared bucket (a few hundred coincidence pairs). What must NOT
-      // happen is quadratic blowup from the 200k-doc buckets.
-      assert(out.length <= 5000,
-        s"capped pairs must stay far below bucket-quadratic, got ${out.length}")
-      // ~12 tokens/doc → ~2.4M positioned rows over 32 partitions
-      // ≈ 75k/task in the doc-keyed winnowing windows; the old window
-      // cap read the 200k-row hot bucket in one task.
-      assert(maxTask <= 120000L,
-        s"hot fingerprint must not funnel into one task, max task read $maxTask")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
-    }
-  }
-
-  test("span REWRITE at 300k docs with a corpus-wide boilerplate run: " +
-      "exact surgery on every row, passthrough columns intact") {
-    // The audit path has its own 100k spec; this drives the rewrite
-    // composition (coverage window + text rebuild + join-back) at 3×
-    // that scale with the same maximally-hot gram keys, asserting the
-    // SURGERY result on all rows distributively (no driver collect of
-    // the corpus): every doc must lose exactly the boilerplate run and
-    // keep its prose and its non-text columns.
-    val docs = spark.range(0, 300000).select(col("id"),
-      concat(lit("u"), col("id"), lit(" v"), col("id"),
-        lit(" all rights reserved legal"), lit(" w"), col("id")).as("text"),
-      pmod(col("id"), lit(7)).as("extra"))
-    val out = SpanDedup.removeDuplicatedSpans(docs, "id", "text", n = 4, minDocs = 2)
-    val good = out.filter(
-      col("text") === concat(lit("u"), col("id"), lit(" v"), col("id"),
-        lit(" w"), col("id")) &&
-      col("extra") === pmod(col("id"), lit(7))).count()
-    assert(good == 300000L, s"every rewritten row must match exactly, got $good")
-  }
-
-  test("DSIR fit at >2M distinct terms into 10k buckets: bounded driver map, " +
-      "separating weights, identical corpora fit to zero") {
-    // 150k raw docs × 8 unique tokens each → >1.2M distinct unigrams
-    // (+ ~1M distinct bigrams) hashed into 10^4 counting cells; the
-    // driver must only ever see ≤ buckets cells. Weights fit against a
-    // concentrated target corpus must rank target-like docs above all
-    // raw docs; fitting a corpus against itself must cancel exactly
-    // (integer milli-nats: every λ rounds to 0 and is dropped).
-    val raw = spark.range(0, 150000).select(col("id"),
-      concat_ws(" ", (0 until 8).map(k =>
-        concat(lit("t"), col("id") * 8 + lit(k))): _*).as("text"))
-    val target = spark.range(0, 2000)
-      .select(col("id"), lit(("alpha beta " * 10).trim).as("text"))
-    assert(Dsir.fitWeightsMilli(raw, raw, "text", buckets = 10000).isEmpty,
-      "identical corpora must fit to the empty weight table")
-    val w = Dsir.fitWeightsMilli(target, raw, "text", buckets = 10000)
-    assert(w.size <= 10000 && w.keys.forall(b => b >= 0 && b < 10000))
-    // mixed corpus: 100 target-like docs hidden among the raw 150k
-    val mixed = raw.unionByName(spark.range(1000000, 1000100)
-      .select(col("id"), lit(("alpha beta " * 8).trim).as("text")))
-    val picked = Dsir.resampleTopK(mixed, "id", "text", w, buckets = 10000, k = 100)
-      .select("id").as[Long].collect().toSet
-    assert(picked == (1000000L until 1000100L).toSet,
-      s"importance selection must surface exactly the target-like docs; got ${picked.take(5)}")
-  }
-
   test("bigram LM under ONE dominant transition: AQE can NOT split the " +
       "aggregate-fed scoring join; hotKeyJoin broadcasts it — same scores") {
     // 150k docs all containing the same hot transition once: after

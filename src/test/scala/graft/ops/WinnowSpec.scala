@@ -36,19 +36,4 @@ class WinnowSpec extends SparkSpec {
     assert(fps(1L) == Set(Seq("a b", "b c").map(md5hex).min))
     assert(!fps.contains(2L) && !fps.contains(3L))
   }
-
-  test("candidatePairs finds sharing docs and the mega-bucket cap silences boilerplate") {
-    val df = Seq(
-      1L -> "alpha beta gamma delta epsilon zeta",
-      2L -> "alpha beta gamma delta epsilon eta",
-      3L -> "totally different words everywhere here now").toDF("id", "text")
-    val pairs = Winnow.candidatePairs(df, "id", "text", n = 2, w = 2, minShared = 2)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 2L)))
-    // every doc shares one fingerprint: cap of 1 drops that bucket
-    val capped = Winnow.candidatePairs(
-      Seq(1L -> "same text", 2L -> "same text", 3L -> "same text").toDF("id", "text"),
-      "id", "text", n = 2, w = 2, minShared = 1, maxBucket = 1)
-    assert(capped.count() == 0L)
-  }
 }

