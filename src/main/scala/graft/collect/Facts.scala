@@ -9,24 +9,20 @@ import org.apache.spark.sql.functions._
 /** One normalized row of per-patient evidence, extracted from a
   * contextualized table. The union of all tables' facts is THE single
   * shuffle of the pipeline: `groupByKey(subject)` feeds the assembly
-  * aggregator (reference G1/G2,
-  * `transform/collecting/cdf_collector_broker.rs:36-91` — which instead
-  * materializes one sub-DataFrame per patient, its main scalability
-  * cliff; here patients stay distributed).
+  * aggregator (reference G1/G2, `cdf_collector_broker.rs:36-91`, which
+  * instead materializes one sub-DataFrame per patient; here patients
+  * stay distributed).
   *
-  * Attribute columns are a FLAT fixed-width nullable schema (not a
-  * `Map[String,String]`): Tungsten encodes null strings as a bit + an
-  * empty slot, so unused attributes cost nothing on the shuffle wire,
-  * the schema is column-prunable, and no per-row map/key objects are
-  * built — this matters at 100 TB where the fact union is the dominant
-  * shuffle payload.
+  * Attributes are a FLAT fixed-width nullable schema, not a map: a null
+  * string costs a bit on the shuffle wire, the schema is
+  * column-prunable, and no per-row map objects are built.
   *
   * Ordering: the assembler sorts by `(src, idx, seq)` = (data-source
-  * registration order, COLUMN order, row order within the column) —
-  * column-major within a table, because the reference's collectors
-  * iterate the Polars column store series-by-series (verified against
-  * the reference's own expected_P001 golden). The shuffle reader yields
-  * groups in arbitrary order; these ordinals reconstruct it.
+  * registration order, the fact's position in its table's plan, row
+  * order) — column-major within a table, as the reference's collectors
+  * iterate the column store series by series (verified against its
+  * expected_P001 golden). The shuffle loses this order; the ordinals
+  * rebuild it.
   */
 final case class Fact(
     subject: String,
@@ -52,236 +48,190 @@ final case class Fact(
 object Fact {
   /** Nullable attr column → Option, blank-safe. */
   def opt(s: String): Option[String] = Option(s).map(_.trim).filter(_.nonEmpty)
+
+  /** The attribute fields: all after `kind`. */
+  val attrNames: Seq[String] = Fact(null, 0, null, 0L, 0, null, null).productElementNames.drop(7).toSeq
+}
+
+/** One fact a table yields per row: its kind and building block, the
+  * sources that keep it, and where each non-null attribute comes from.
+  * A row yields the fact when a `keep` source reads non-blank (not null,
+  * not only U+0020 spaces: Spark's `trim`; the reference's collectors
+  * skip empty cells). The presence fact's empty `keep` always keeps it.
+  */
+final case class FactPlan(kind: String, block: String, keep: Seq[FactPlan.Source],
+    attrs: Seq[(String, FactPlan.Source)])
+
+object FactPlan {
+  sealed trait Source
+  /** A constant of the table context (an assay id, a decoded HPO header). */
+  final case class Lit(value: String) extends Source
+  /** One cell of the row, cast to string by Spark. */
+  final case class Cell(column: String) extends Source
+  /** `concat_ws("||", trim(cell)…)` of a block's HGVS cells: null cells
+    * are skipped, and all-null cells give "". */
+  final case class HgvsJoin(columns: Seq[String]) extends Source
 }
 
 object Facts {
-
+  import ContextKind._
   import FactKinds._
+  import FactPlan._
 
-  /** Attribute columns of the flat Fact schema, in declaration order. */
-  private val attrNames = Seq(
-    "field", "value",
-    "hpo", "observed", "onset", "resolution", "severity",
-    "term", "primarySite",
-    "assay", "unit", "time", "refLow", "refHigh",
-    "code", "bodySite",
-    "agent", "route", "drugType", "qtyValue", "qtyUnit",
-    "target", "intent", "response", "termination",
-    "gene", "variants", "disease")
-
-  /** Extract all facts of one contextualized table: a narrow projection
-    * (select + posexplode), no shuffle. Column→fact planning happens
-    * driver-side from the table context; cell work is codegen'd.
-    *
-    * `src` is the table's data-source ordinal (pipeline registration
-    * order) — it makes cross-table fact ordering deterministic.
+  /** All facts of one table, by one narrow operator: one `select` casts
+    * the subject and each cell [[plan]] reads to string once, into one
+    * array; one `flatMap` applies the plan to each row and emits each
+    * fact's strings as one array too, which a final `select` names. The
+    * generated code grows with the cells read, not with facts × schema.
+    * `src` is the table's data-source ordinal (registration order).
     */
   def extract(cdf: Cdf, src: Int = 0): Dataset[Fact] = {
-    val spark = cdf.df.sparkSession
-    import spark.implicits._
-
+    import cdf.df.sparkSession.implicits._
     val subject = cdf.subjectIdColumn
-    val factCols = factStructs(cdf)
-    if (factCols.isEmpty) return spark.emptyDataset[Fact]
+    val plans = plan(cdf)
+    val cells = plans.flatMap(p => (p.keep ++ p.attrs.map(_._2)).flatMap {
+      case Cell(c) => Seq(c); case HgvsJoin(cs) => cs; case Lit(_) => Nil
+    }).distinct
+    val at = cells.zipWithIndex.toMap
+    val strings = Seq("subject", "block", "kind") ++ Fact.attrNames
+    val emitters = plans.zipWithIndex.map { case (p, idx) =>
+      val keep = p.keep.map(reader(_, at))
+      val attrs = p.attrs.map { case (name, source) => (strings.indexOf(name), reader(source, at)) }
+      (subject: String, seq: Long, v: Array[String]) =>
+        if (keep.nonEmpty && !keep.exists(k => Option(k(v)).exists(_.exists(_ != ' ')))) None
+        else {
+          val a = new Array[String](strings.size)
+          a(0) = subject; a(1) = p.block; a(2) = p.kind
+          attrs.foreach { case (i, read) => a(i) = read(v) }
+          Some((seq, idx, a))
+        }
+    }
 
     cdf.df
-      // A blank subject cell can slip past construction-time validation
-      // (it checks nulls BEFORE the preprocessor trims whitespace to
-      // null); rows with no subject must not become a "cohort-null"
-      // packet via the presence fact. Java trim, as the preprocessor's:
-      // a table that skipped it may carry a "\t" subject, which Spark's
-      // `trim` (spaces only) would keep.
+      // A blank subject passes construction-time validation (it checks
+      // nulls before the preprocessor trims to null) and must not become
+      // a "cohort-null" packet. Java trim, as the preprocessor's: a table
+      // that skipped it may carry a "\t" subject Spark's `trim` keeps.
       .filter(col(subject).isNotNull && Casts.javaTrim(col(subject).cast("string")) =!= "")
-      .withColumn("__seq", monotonically_increasing_id())
-      .select(
-        col(subject).cast("string").as("subject"),
-        col("__seq").as("seq"),
-        posexplode(array(factCols: _*)).as(Seq("idx", "f")))
-      .filter(col("f.__keep"))
-      .select(
-        (col("subject") +: lit(src).as("src") +: lit(cdf.context.name).as("table") +:
-          col("seq") +: col("idx") +:
-          col("f.block").as("block") +: col("f.kind").as("kind") +:
-          attrNames.map(n => col(s"f.$n").as(n))): _*)
+      .select(col(subject).cast("string"), monotonically_increasing_id(),
+        array(cells.map(col(_).cast("string")): _*).cast("array<string>"))
+      .as[(String, Long, Array[String])]
+      .flatMap { case (subject, seq, v) => emitters.flatMap(_(subject, seq, v)) }
+      .select(get(col("_3"), lit(0)).as("subject") +: lit(src).as("src") +: lit(cdf.context.name).as("table") +:
+        col("_1").as("seq") +: col("_2").as("idx") +:
+        strings.zipWithIndex.tail.map { case (n, i) => get(col("_3"), lit(i)).as(n) }: _*)
       .as[Fact]
   }
 
-  /** Union the facts of every table (narrow union, preserves
-    * partitioning of each input). Table order = source ordinal.
-    */
+  /** The narrow union of every table's facts; table order = source ordinal. */
   def extractAll(tables: Seq[Cdf]): Dataset[Fact] = {
     require(tables.nonEmpty,
       "fact extraction needs at least one table — no data sources were configured/loaded")
     tables.zipWithIndex.map { case (t, i) => extract(t, i) }.reduce(_ unionByName _)
   }
 
-  // ------------------------------------------------------------------
+  /** Reads a source from the cells `extract` selects (`at`: cell → index). */
+  private def reader(source: Source, at: Map[String, Int]): Array[String] => String = source match {
+    case Lit(value) => _ => value
+    case Cell(c) => val i = at(c); _(i)
+    case HgvsJoin(cs) => val is = cs.map(at)
+      v => is.flatMap(i => Option(v(i))).map(_.replaceAll("^ +| +$", "")).mkString("||")
+  }
 
-  private def s(c: String) = col(c).cast("string")
+  /** Individual fields (collector C1), by data-context kind. */
+  private val individualFields: Map[ContextKind, String] = Map(
+    KSubjectSex -> "sex", KDateOfBirth -> "dateOfBirth", KVitalStatus -> "vitalStatus",
+    KCauseOfDeath -> "causeOfDeath", KSurvivalTimeDays -> "survivalTimeInDays",
+    KTimeAtLastEncounter -> "timeAtLastEncounter", KTimeOfDeath -> "timeOfDeath")
 
-  /** A fact is kept only when its primary payload cell is non-blank —
-    * the reference's collectors skip empty cells the same way.
+  private val actionOutcome = Seq("target" -> KTreatmentTarget, "intent" -> KTreatmentIntent,
+    "response" -> KResponseToTreatment, "termination" -> KTreatmentTerminationReason)
+
+  /** The payload kinds that carry linked cells of their building block
+    * (collectors C2, C4, C6–C9), in fact order: data-context kind → (fact kind,
+    * payload attribute, `(attribute, linked kind)` pairs).
     */
-  private def present(c: org.apache.spark.sql.Column) =
-    c.isNotNull && trim(c.cast("string")) =!= ""
+  private type Links = Seq[(String, ContextKind)]
+  private val payloads: Seq[(ContextKind, (String, String, Links))] = Seq(
+    KHpo -> (HpoCell, "hpo", Seq("onset" -> KOnset, "resolution" -> KTimeOfResolution,
+      "severity" -> KSeverity, "observed" -> KObservationStatus)),
+    KDisease -> (DiseaseK, "term",
+      Seq("onset" -> KOnset, "resolution" -> KTimeOfResolution, "primarySite" -> KPrimarySite)),
+    KQuantitativeMeasurement -> (Quant, "value", Seq("time" -> KTimeOfMeasurement,
+      "refLow" -> KReferenceRangeStart, "refHigh" -> KReferenceRangeEnd)),
+    KQualitativeMeasurement -> (Qual, "value", Seq("time" -> KTimeOfMeasurement)),
+    KProcedure -> (ProcedureK, "code",
+      Seq("bodySite" -> KProcedureBodySite, "time" -> KTimeOfProcedure) ++ actionOutcome),
+    KTreatmentAgent -> (TreatmentK, "agent", Seq("route" -> KRouteOfAdministration,
+      "drugType" -> KDrugType, "qtyValue" -> KQuantityValue, "qtyUnit" -> KQuantityUnit) ++ actionOutcome))
 
-  private def factStructs(cdf: Cdf): Seq[org.apache.spark.sql.Column] = {
+  /** Attributes a measurement's own data context fixes. */
+  private def literals(c: Context): Seq[(String, Source)] = c match {
+    case Context.QuantitativeMeasurement(assay, unit) => Seq("assay" -> Lit(assay), "unit" -> Lit(unit))
+    case Context.QualitativeMeasurement(assay) => Seq("assay" -> Lit(assay))
+    case _ => Nil
+  }
+
+  /** Every fact one row of `cdf` can yield, in `idx` order: presence,
+    * individual fields, HPO cells, HPO headers, diseases, quantitative
+    * and qualitative measurements, procedures, treatments,
+    * interpretations. Starts no Spark job; throws when a building block
+    * links more than one column of a kind.
+    */
+  def plan(cdf: Cdf): Seq[FactPlan] = {
     val b = cdf.bindings
+    def linked(block: Option[String], attrs: Links): Seq[(String, Source)] =
+      attrs.flatMap { case (a, k) => cdf.singleLinkedColumn(block, Set(k)).map(a -> Cell(_)) }
+    def unheaded(sc: SeriesContext) = sc.headerContext == Context.NoContext
 
-    def blockOf(sc: SeriesContext): String = sc.buildingBlockId.getOrElse("")
-    def linked(block: Option[String], kinds: ContextKind*): Option[String] =
-      cdf.singleLinkedColumn(block, kinds.toSet)
-
-    def mk(kind: String, block: String, keep: org.apache.spark.sql.Column,
-        attrs: (String, org.apache.spark.sql.Column)*) = {
-      val given = attrs.toMap
-      val fields =
-        lit(block).as("block") +: lit(kind).as("kind") +: keep.as("__keep") +:
-          attrNames.map(n =>
-            given.get(n).map(_.cast("string")).getOrElse(lit(null).cast("string")).as(n))
-      struct(fields: _*)
-    }
-
-    // One presence fact per row: every subject that appears in any
-    // table yields a (possibly minimal) packet, exactly like the
-    // reference broker's get_or_create_phenopacket-per-partition
-    // (cdf_collector_broker.rs:36-71) — even when every data cell of
-    // the row is null.
-    val presence = Seq(mk(Subject, "", lit(true)))
+    // One presence fact per row: every subject in any table yields a
+    // packet, even when every data cell of the row is null (reference
+    // get_or_create_phenopacket, cdf_collector_broker.rs:36-71).
+    val presence = FactPlan(Subject, "", Nil, Nil)
 
     val individual = b.collect {
-      case (c, sc) if sc.headerContext == Context.NoContext =>
-        def f(field: String) =
-          mk(Individual_, blockOf(sc), present(col(c)), "field" -> lit(field), "value" -> s(c))
-        sc.dataContext match {
-          case Context.SubjectSex       => Some(f("sex"))
-          case Context.DateOfBirth      => Some(f("dateOfBirth"))
-          case Context.VitalStatus      => Some(f("vitalStatus"))
-          case Context.CauseOfDeath     => Some(f("causeOfDeath"))
-          case Context.SurvivalTimeDays => Some(f("survivalTimeInDays"))
-          case Context.TimeAtLastEncounter(_) => Some(f("timeAtLastEncounter"))
-          case Context.TimeOfDeath(_)         => Some(f("timeOfDeath"))
-          case _ => None
-        }
-    }.flatten
-
-    val hpoCells = b.collect {
-      case (c, sc) if sc.dataContext.kind == ContextKind.KHpo &&
-          sc.headerContext == Context.NoContext =>
-        val blk = sc.buildingBlockId
-        mk(HpoCell, blockOf(sc), present(col(c)),
-          "hpo" -> s(c),
-          "onset" -> linked(blk, ContextKind.KOnset).map(s).getOrElse(lit(null)),
-          "resolution" -> linked(blk, ContextKind.KTimeOfResolution).map(s).getOrElse(lit(null)),
-          "severity" -> linked(blk, ContextKind.KSeverity).map(s).getOrElse(lit(null)),
-          "observed" -> linked(blk, ContextKind.KObservationStatus).map(s).getOrElse(lit(null)))
+      case (c, sc) if unheaded(sc) && individualFields.contains(sc.dataContext.kind) =>
+        FactPlan(Individual_, sc.buildingBlockId.getOrElse(""), Seq(Cell(c)),
+          Seq("field" -> Lit(individualFields(sc.dataContext.kind)), "value" -> Cell(c)))
     }
 
-    val hpoHeaders = b.collect {
+    def payload(entry: (ContextKind, (String, String, Links))) = entry match {
+      case (data, (kind, attr, links)) => b.collect {
+        // HPO cells and diseases come only from columns without a header context
+        case (c, sc) if sc.dataContext.kind == data && (unheaded(sc) || (data != KHpo && data != KDisease)) =>
+          FactPlan(kind, sc.buildingBlockId.getOrElse(""), Seq(Cell(c)),
+            literals(sc.dataContext) ++ ((attr -> Cell(c)) +: linked(sc.buildingBlockId, links)))
+      }
+    }
+    def hpoHeaders = b.collect {
       // Reference collects header=Hpo columns whose CELLS are
       // observation statuses (hpo_in_header_collector) — a header=Hpo
       // column with some other data context is not an observation grid.
-      case (c, sc) if sc.headerContext.kind == ContextKind.KHpo &&
-          sc.dataContext.kind == ContextKind.KObservationStatus =>
+      case (c, sc) if sc.headerContext.kind == KHpo && sc.dataContext.kind == KObservationStatus =>
         val (hpoId, blockFromHeader) = MultiHpoColExpansionStrategy.decodeHeader(c)
         val blk = sc.buildingBlockId.orElse(blockFromHeader)
-        val onsetCol = cdf.singleLinkedColumn(blk, Set(ContextKind.KOnset))
-        mk(HpoHeader, blk.getOrElse(""), present(col(c)),
-          "hpo" -> lit(hpoId),
-          "observed" -> s(c),
-          "onset" -> onsetCol.map(s).getOrElse(lit(null)))
+        FactPlan(HpoHeader, blk.getOrElse(""), Seq(Cell(c)),
+          Seq("hpo" -> Lit(hpoId), "observed" -> Cell(c)) ++ linked(blk, Seq("onset" -> KOnset)))
     }
 
-    val diseases = b.collect {
-      case (c, sc) if sc.dataContext.kind == ContextKind.KDisease &&
-          sc.headerContext == Context.NoContext =>
-        val blk = sc.buildingBlockId
-        mk(DiseaseK, blockOf(sc), present(col(c)),
-          "term" -> s(c),
-          "onset" -> linked(blk, ContextKind.KOnset).map(s).getOrElse(lit(null)),
-          "resolution" -> linked(blk, ContextKind.KTimeOfResolution).map(s).getOrElse(lit(null)),
-          "primarySite" -> linked(blk, ContextKind.KPrimarySite).map(s).getOrElse(lit(null)))
-    }
-
-    val quants = b.collect {
-      case (c, sc) if sc.dataContext.kind == ContextKind.KQuantitativeMeasurement =>
-        val Context.QuantitativeMeasurement(assay, unit) = sc.dataContext: @unchecked
-        val blk = sc.buildingBlockId
-        mk(Quant, blockOf(sc), present(col(c)),
-          "assay" -> lit(assay), "unit" -> lit(unit), "value" -> s(c),
-          "time" -> linked(blk, ContextKind.KTimeOfMeasurement).map(s).getOrElse(lit(null)),
-          "refLow" -> linked(blk, ContextKind.KReferenceRangeStart).map(s).getOrElse(lit(null)),
-          "refHigh" -> linked(blk, ContextKind.KReferenceRangeEnd).map(s).getOrElse(lit(null)))
-    }
-
-    val quals = b.collect {
-      case (c, sc) if sc.dataContext.kind == ContextKind.KQualitativeMeasurement =>
-        val Context.QualitativeMeasurement(assay) = sc.dataContext: @unchecked
-        val blk = sc.buildingBlockId
-        mk(Qual, blockOf(sc), present(col(c)),
-          "assay" -> lit(assay), "value" -> s(c),
-          "time" -> linked(blk, ContextKind.KTimeOfMeasurement).map(s).getOrElse(lit(null)))
-    }
-
-    val procedures = b.collect {
-      case (c, sc) if sc.dataContext.kind == ContextKind.KProcedure =>
-        val blk = sc.buildingBlockId
-        mk(ProcedureK, blockOf(sc), present(col(c)),
-          "code" -> s(c),
-          "bodySite" -> linked(blk, ContextKind.KProcedureBodySite).map(s).getOrElse(lit(null)),
-          "time" -> linked(blk, ContextKind.KTimeOfProcedure).map(s).getOrElse(lit(null)),
-          "target" -> linked(blk, ContextKind.KTreatmentTarget).map(s).getOrElse(lit(null)),
-          "intent" -> linked(blk, ContextKind.KTreatmentIntent).map(s).getOrElse(lit(null)),
-          "response" -> linked(blk, ContextKind.KResponseToTreatment).map(s).getOrElse(lit(null)),
-          "termination" -> linked(blk, ContextKind.KTreatmentTerminationReason).map(s).getOrElse(lit(null)))
-    }
-
-    val treatments = b.collect {
-      case (c, sc) if sc.dataContext.kind == ContextKind.KTreatmentAgent =>
-        val blk = sc.buildingBlockId
-        mk(TreatmentK, blockOf(sc), present(col(c)),
-          "agent" -> s(c),
-          "route" -> linked(blk, ContextKind.KRouteOfAdministration).map(s).getOrElse(lit(null)),
-          "drugType" -> linked(blk, ContextKind.KDrugType).map(s).getOrElse(lit(null)),
-          "qtyValue" -> linked(blk, ContextKind.KQuantityValue).map(s).getOrElse(lit(null)),
-          "qtyUnit" -> linked(blk, ContextKind.KQuantityUnit).map(s).getOrElse(lit(null)),
-          "target" -> linked(blk, ContextKind.KTreatmentTarget).map(s).getOrElse(lit(null)),
-          "intent" -> linked(blk, ContextKind.KTreatmentIntent).map(s).getOrElse(lit(null)),
-          "response" -> linked(blk, ContextKind.KResponseToTreatment).map(s).getOrElse(lit(null)),
-          "termination" -> linked(blk, ContextKind.KTreatmentTerminationReason).map(s).getOrElse(lit(null)))
-    }
-
-    // Interpretation evidence: gene + variant columns grouped by block;
-    // the disease term of the same block rides along for diagnosis
-    // assembly (reference `interpretation_collector.rs:16-196`).
-    // Only NAMED building blocks form interpretations (reference
-    // filters where_building_block(IsSome) — block-less genetics
-    // columns are never married to unrelated diseases).
-    val interpBlocks = b.collect {
-      case (_, sc) if (sc.dataContext.kind == ContextKind.KHgnc ||
-          sc.dataContext.kind == ContextKind.KHgvs) &&
+    // Interpretations: gene + variant columns of one NAMED block, with
+    // the block's disease for the diagnosis (reference
+    // interpretation_collector.rs:16-196 filters
+    // where_building_block(IsSome): block-less genetics never marry
+    // unrelated diseases).
+    def interps = b.collect {
+      case (_, sc) if (sc.dataContext.kind == KHgnc || sc.dataContext.kind == KHgvs) &&
           sc.buildingBlockId.isDefined => sc.buildingBlockId
-    }.distinct
-    val interps = interpBlocks.map { blk =>
-      val geneCol = linked(blk, ContextKind.KHgnc)
-      val hgvsCols = cdf.bindings.collect {
-        case (c2, sc2) if sc2.buildingBlockId == blk &&
-          sc2.dataContext.kind == ContextKind.KHgvs => c2
-      }
-      val diseaseCol = linked(blk, ContextKind.KDisease)
-      val variantsExpr =
-        if (hgvsCols.isEmpty) lit(null).cast("string")
-        else concat_ws("||", hgvsCols.map(c => trim(s(c))): _*)
-      val geneExpr = geneCol.map(s).getOrElse(lit(null).cast("string"))
-      mk(Interp, blk.getOrElse(""),
-        present(geneExpr) || present(variantsExpr),
-        "gene" -> geneExpr,
-        "variants" -> variantsExpr,
-        "disease" -> diseaseCol.map(s).getOrElse(lit(null)))
+    }.distinct.map { blk =>
+      val hgvs = b.collect { case (c, sc) if sc.buildingBlockId == blk && sc.dataContext.kind == KHgvs => c }
+      val evidence = linked(blk, Seq("gene" -> KHgnc)) ++
+        (if (hgvs.isEmpty) Nil else Seq("variants" -> HgvsJoin(hgvs)))
+      FactPlan(Interp, blk.get, evidence.map(_._2), evidence ++ linked(blk, Seq("disease" -> KDisease)))
     }
 
-    presence ++ individual ++ hpoCells ++ hpoHeaders ++ diseases ++ quants ++ quals ++
-      procedures ++ treatments ++ interps
+    // planned in idx order (hence the defs): the first duplicate linked column is the one reported
+    Seq(presence) ++ individual ++ payload(payloads.head) ++ hpoHeaders ++
+      payloads.tail.flatMap(payload) ++ interps
   }
 }
 

@@ -6,6 +6,7 @@ import graft.model._
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** S7 — declarative pipeline configuration (reference
   * `phenoxtract/src/config/config_loader.rs:8-44`,
@@ -191,10 +192,8 @@ object ConfigLoader {
       resolver = Option(pipeline.get("resolver")).map { r =>
         ResolverConfig(
           className = req(r, "class"),
-          cacheSize = Option(r.get("cache_size")).filterNot(_.isNull)
-            .map(_.asInt(100000)).getOrElse(100000),
-          ratePerSec = Option(r.get("rate_limit_per_sec")).filterNot(_.isNull)
-            .map(_.asDouble()),
+          cacheSize = positive(r, "cache_size", integral = true).fold(100000)(_.toInt),
+          ratePerSec = positive(r, "rate_limit_per_sec", integral = false).map(_.toDouble),
           // text(), not raw asText(): an explicit null would otherwise
           // become the literal string "null" and reach the HTTP layer
           // as a URL/credential instead of failing the required-field
@@ -422,5 +421,19 @@ object ConfigLoader {
         v.intValue == 1
       else throw new IllegalArgumentException(
         s"config field '$field' must be true or false, got '${v.asText}'")
+    }
+
+  /** A positive number config field (an integer when `integral`): a
+    * number or numeric text. An explicitly null value keeps the
+    * declared default, like text(). Anything else fails naming the
+    * field: Jackson's asInt(default) reads `big` as the default and
+    * truncates 1.5, and asDouble() reads `fast` as 0.0.
+    */
+  private[config] def positive(n: JsonNode, field: String, integral: Boolean): Option[BigDecimal] =
+    Option(n.get(field)).filterNot(_.isNull).map { v =>
+      val number = if (v.isNumber || v.isTextual) Try(BigDecimal(v.asText.trim)).toOption else None
+      number.filter(x => x > 0 && (!integral || x.isValidInt)).getOrElse(
+        throw new IllegalArgumentException(s"config field '$field' must be a positive " +
+          s"${if (integral) "integer" else "number"}, got '${v.asText}'"))
     }
 }

@@ -1,5 +1,6 @@
 package graft.config
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.Pipeline
 import graft.collect.AssemblerConfig
 import graft.extract.{CsvSource, CsvSourceConfig, ExcelSheetConfig, ExcelSource}
@@ -125,10 +126,22 @@ object ConfigRunner {
 
   /** Build one strategy from its config entry (reference
     * `config/strategy_config.rs` + `strategies/strategy_factory.rs`).
+    * Parameter blocks are decoded strictly, as the reference's
+    * `deny_unknown_fields`: a strategy accepts only the keys it reads,
+    * and one that reads none rejects any non-null block.
     */
-  def strategyFor(spec: ConfigLoader.StrategySpec, library: BiDictLibrary): Strategy =
+  def strategyFor(spec: ConfigLoader.StrategySpec, library: BiDictLibrary): Strategy = {
+    def params(keys: String*): Option[JsonNode] = spec.params.filterNot(_.isNull).map { p =>
+      // the first key it does not take, else the block when it takes none
+      val bad = if (p.isObject) p.fieldNames.asScala.find(!keys.contains(_)) else Some(p.toString)
+      bad.orElse(Option.when(keys.isEmpty)(p.toString)).foreach { key =>
+        throw new IllegalArgumentException(s"strategy '${spec.name.trim}' " +
+          (if (keys.isEmpty) "takes no parameters" else s"takes only ${keys.mkString(", ")}") +
+          s", got '$key'")
+      }
+      p
+    }
     spec.name.trim.toLowerCase match {
-      case "alias_map"               => AliasMapStrategy
       case "default_mapping" =>
         spec.params.map(_.asText("")).getOrElse("sex") match {
           case "sex"          => MappingStrategy.defaultSex
@@ -136,20 +149,12 @@ object ConfigRunner {
           case other => throw new IllegalArgumentException(
             s"unknown default_mapping '$other' (expected sex | vital_status)")
         }
-      case "mapping"                 => MappingStrategy.defaultSex
-      case "default_sex_mapping"     => MappingStrategy.defaultSex
-      case "default_vital_status_mapping" => MappingStrategy.defaultVitalStatus
-      case "age_to_iso8601"          => AgeToIso8601Strategy()
       case "date_to_age" =>
-        DateToAgeStrategy(
-          spec.params.forall(ConfigLoader.bool(_, "strict", default = true)))
-      case "date_to_age_lenient"     => DateToAgeStrategy(strict = false)
-      case "multi_hpo_col_expansion" => MultiHpoColExpansionStrategy
+        DateToAgeStrategy(params("strict").forall(ConfigLoader.bool(_, "strict", default = true)))
       case "ontology_normaliser" =>
-        spec.params match {
+        params("ontology", "data_context_kind") match {
           case None => OntologyNormaliserStrategy(library)
           case Some(p) =>
-            // {ontology: <scope-or-resource-id>, data_context_kind: <kind>}
             val onto = Option(p.get("ontology")).map(_.asText()).getOrElse(
               throw new IllegalArgumentException("ontology_normaliser needs 'ontology'"))
             val kind = Option(p.get("data_context_kind")).map(_.asText()).getOrElse(
@@ -162,7 +167,20 @@ object ConfigRunner {
             OntologyNormaliserStrategy(BiDictLibrary(scopedDicts),
               Set(ConfigLoader.contextKind(kind)))
         }
-      case "hpo_disease_splitter"    => HpoDiseaseSplitterStrategy(library)
-      case other => throw new IllegalArgumentException(s"unknown strategy '$other'")
+      case other =>
+        val strategy = other match {
+          case "alias_map"                    => AliasMapStrategy
+          case "mapping"                      => MappingStrategy.defaultSex
+          case "default_sex_mapping"          => MappingStrategy.defaultSex
+          case "default_vital_status_mapping" => MappingStrategy.defaultVitalStatus
+          case "age_to_iso8601"               => AgeToIso8601Strategy()
+          case "date_to_age_lenient"          => DateToAgeStrategy(strict = false)
+          case "multi_hpo_col_expansion"      => MultiHpoColExpansionStrategy
+          case "hpo_disease_splitter"         => HpoDiseaseSplitterStrategy(library)
+          case _ => throw new IllegalArgumentException(s"unknown strategy '$other'")
+        }
+        params() // none of these reads a parameter
+        strategy
     }
+  }
 }

@@ -127,19 +127,21 @@ class AssemblerSpec extends SparkSpec {
     }
   }
 
-  test("facts order deterministically by (src, seq, idx) regardless of arrival order") {
+  test("facts order deterministically by (src, idx, seq) regardless of arrival order") {
     val hp = BiDict.fromEntries(Resource("hp", "HPO", "u", "v", "HP", "i"),
-      Seq(("HP:1", "f1", Seq.empty), ("HP:2", "f2", Seq.empty), ("HP:3", "f3", Seq.empty)))
+      (1 to 5).map(i => (s"HP:$i", s"f$i", Seq.empty[String])))
     val l2 = BiDictLibrary(Seq(hp))
     val ordered = Seq(
       fact(0, "b", 0, "", FactKinds.HpoCell).copy(hpo = "HP:1"),
+      fact(0, "b", 5, "", FactKinds.HpoCell).copy(hpo = "HP:4"),
       fact(0, "b", 0, "", FactKinds.HpoCell).copy(idx = 1, hpo = "HP:2"),
+      fact(0, "b", 1, "", FactKinds.HpoCell).copy(idx = 1, hpo = "HP:5"),
       fact(1, "a", 0, "", FactKinds.HpoCell).copy(hpo = "HP:3"))
-    val shuffled = Seq(ordered(2), ordered(1), ordered(0))
-    val p = Assembler.assembleOne("P1", shuffled, l2, cfg)
-    // src order wins over table-name order ("b" before "a"), idx breaks
-    // ties within a row.
-    assert(p.phenotypicFeatures.map(_.`type`.id) == Seq("HP:1", "HP:2", "HP:3"))
+    val p = Assembler.assembleOne("P1", ordered.reverse, l2, cfg)
+    // src order wins over table-name order ("b" before "a"); within a
+    // table a fact's plan position comes before its row (column-major):
+    // (idx 0, seq 5) precedes (idx 1, seq 0).
+    assert(p.phenotypicFeatures.map(_.`type`.id) == Seq("HP:1", "HP:4", "HP:2", "HP:5", "HP:3"))
   }
 
   test("unparseable time cells error like the reference (never ride into a packet)") {

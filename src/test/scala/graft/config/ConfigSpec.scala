@@ -362,6 +362,54 @@ class ConfigSpec extends SparkSpec {
       e2.getMessage)
   }
 
+  test("resolver numbers that are not positive numbers fail naming the field") {
+    val dir = Files.createTempDirectory("graftcfg")
+    def resolver(field: String, value: String) = write(dir, s"resolver-$field.yaml",
+      s"""data_sources: []
+         |pipeline:
+         |  strategies: []
+         |  resolver:
+         |    class: "graft.ontology.StubRemoteResolver"
+         |    $field: $value
+         |""".stripMargin)
+    // asInt(100000) read `big` as 100000 and truncated 1.5; asDouble()
+    // read `fast` as 0.0, which failed later without naming the field
+    val bad = Seq("cache_size" -> "big", "rate_limit_per_sec" -> "fast",
+      "cache_size" -> "1.5", "rate_limit_per_sec" -> "0")
+    bad.foreach { case (field, value) =>
+      val e = intercept[IllegalArgumentException](ConfigLoader.load(resolver(field, value)))
+      assert(e.getMessage.contains(s"'$field'") && e.getMessage.contains(s"'$value'"), e.getMessage)
+    }
+    // an explicit null keeps the default
+    assert(ConfigLoader.load(resolver("cache_size", "")).resolver.get.cacheSize == 100000)
+    assert(ConfigLoader.load(resolver("rate_limit_per_sec", "2.5")).resolver.get.ratePerSec ==
+      Some(2.5))
+  }
+
+  test("strategy parameter blocks decode strictly, naming the strategy and the key") {
+    val dir = Files.createTempDirectory("graftcfg")
+    val cfg = ConfigLoader.load(write(dir, "strategies.yaml",
+      """data_sources: []
+        |pipeline:
+        |  strategies:
+        |    - date_to_age_lenient: {strict: true}
+        |    - date_to_age: {strct: false}
+        |    - age_to_iso8601: {x: 1}
+        |    - date_to_age: {strict: false}
+        |    - ontology_normaliser:
+        |""".stripMargin))
+    val library = ConfigRunner.buildLibrary(cfg)
+    // each of these was accepted: lenient ran lenient, `strct` left
+    // date_to_age strict, and the unknown key was dropped
+    Seq("date_to_age_lenient" -> "strict", "date_to_age" -> "strct", "age_to_iso8601" -> "x")
+      .zip(cfg.strategies).foreach { case ((name, key), spec) =>
+        val e = intercept[IllegalArgumentException](ConfigRunner.strategyFor(spec, library))
+        assert(e.getMessage.contains(s"'$name'") && e.getMessage.contains(s"'$key'"), e.getMessage)
+      }
+    val valid = cfg.strategies.drop(3).map(ConfigRunner.strategyFor(_, library))
+    assert(valid.head == graft.strategy.DateToAgeStrategy(strict = false))
+  }
+
   /** A config over the given `(file name, series_contexts YAML)` CSV
     * sources, in that order, running `strategies`. */
   private def multiSourceConfig(dir: java.nio.file.Path, strategies: String,

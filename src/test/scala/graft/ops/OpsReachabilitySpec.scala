@@ -5,17 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Drift guard: `ops/` keeps only what a catalog query, an ETL stage or
-  * a main reaches. Every non-private `def`, `val` or `case class`
-  * declared at member level of an object in `src/main/scala/graft/ops`
-  * must be named (word-bounded, comments stripped) somewhere in
-  * `src/main` or `perfbench/src` besides a declaration. The only
-  * exceptions are the reference twins that tests compare a reached path
-  * against, each listed with the test that uses it.
+/** Drift guard: `ops/` and `functions/` keep only what a catalog query,
+  * an ETL stage or a main reaches. Every non-private top-level
+  * `case class` or `object`, and every non-private `def`, `val` or
+  * `case class` declared at member level of a top-level object, in
+  * `src/main/scala/graft/ops` or `src/main/scala/graft/functions` must
+  * be named (word-bounded, comments stripped) somewhere in `src/main` or
+  * `perfbench/src` besides a declaration. The only exceptions are the
+  * reference twins that tests compare a reached path against, each
+  * listed with the test that uses it.
   */
 class OpsReachabilitySpec extends AnyFunSuite {
 
-  private val referenceTwins = Map(
+  private val opsTwins = Map(
     "Dedup.minhashSignatures" ->
       "OpsSpec: minhash_sig equals the shingleRows + min-aggregate signatures per family",
     "Dedup.ngramJaccardPairs" ->
@@ -24,6 +26,11 @@ class OpsReachabilitySpec extends AnyFunSuite {
       "OpsSpec: winnow fingerprints equal the window-algebra spelling over positioned grams",
     "ZOrder.interleave2Scalar" ->
       "ZOrderSpec: column expression matches the scalar reference on a value grid")
+  private val functionsTwins = Map(
+    "DateTimeFns.calendarDiff" ->
+      "PropertySpec: calendar diff round-trips; native calendar_age_iso equals the algebra",
+    "DateTimeFns.toIso8601" ->
+      "IsoDurationSecondsSpec: toIso8601 renders a negative calendar diff as null")
 
   /** `src` with comments removed, and with string literal contents
     * removed too when `keepStrings` is false (so braces inside strings
@@ -76,10 +83,12 @@ class OpsReachabilitySpec extends AnyFunSuite {
 
   private val declRe = ("""^\s*(?:@\w+\s+)*((?:(?:final|override|implicit|lazy|private|protected)""" +
     """(?:\[\w+\])?\s+)*)(?:def|val|case\s+class)\s+([A-Za-z_]\w*)""").r
+  private val topRe = """^(?:(?:final|sealed|abstract)\s+)*(?:case\s+class|object)\s+([A-Za-z_]\w*)""".r
   private val tokenRe = """\b(object|class|trait)\b|[{}]""".r
 
-  /** (object.name) of every non-private member declared directly in a
-    * top-level object of `file`.
+  /** The name of every non-private top-level case class or object of
+    * `file`, and (object.name) of every non-private member declared
+    * directly in one of its top-level objects.
     */
   private def members(file: Path): Seq[String] = {
     var kinds = List.empty[String] // innermost first
@@ -88,7 +97,8 @@ class OpsReachabilitySpec extends AnyFunSuite {
     var current = ""
     strip(Files.readString(file), keepStrings = false).split("\n").toSeq.flatMap { line =>
       val found =
-        if (kinds.size == 1 && kinds.head == "object")
+        if (kinds.isEmpty) topRe.findFirstMatchIn(line).map(_.group(1))
+        else if (kinds.size == 1 && kinds.head == "object")
           declRe.findFirstMatchIn(line)
             .filterNot(m => Option(m.group(1))
               .exists(mods => mods.contains("private") || mods.contains("protected")))
@@ -110,21 +120,33 @@ class OpsReachabilitySpec extends AnyFunSuite {
     }
   }
 
-  test("every public ops member is reached from src/main or perfbench, or is a listed reference twin") {
-    val opsDir = Paths.get("src/main/scala/graft/ops")
-    val declared = scalaFiles(opsDir).flatMap(members)
-    assert(declared.size > 100, s"member scan found only ${declared.size} declarations")
-    val corpus = (scalaFiles(Paths.get("src/main")) ++ scalaFiles(Paths.get("perfbench/src")))
-      .map(p => strip(Files.readString(p), keepStrings = true)).mkString("\n")
+  private lazy val corpus = (scalaFiles(Paths.get("src/main")) ++ scalaFiles(Paths.get("perfbench/src")))
+    .map(p => strip(Files.readString(p), keepStrings = true)).mkString("\n")
+
+  /** Fails unless every definition scanned in `src/main/scala/graft/<dir>`
+    * is reached, or is one of the `twins` listed for that directory.
+    */
+  private def assertReached(dir: String, minDeclared: Int, twins: Set[String]): Unit = {
+    val declared = scalaFiles(Paths.get(s"src/main/scala/graft/$dir")).flatMap(members)
+    assert(declared.size > minDeclared, s"$dir scan found only ${declared.size} declarations")
     val declKeyword = """(?:def|val|var|class|object|trait|type)\s+$""".r
     def used(name: String): Boolean =
       s"\\b${java.util.regex.Pattern.quote(name)}\\b".r.findAllMatchIn(corpus).exists { m =>
         declKeyword.findFirstIn(corpus.substring(math.max(0, m.start - 16), m.start)).isEmpty
       }
     val unreached = declared.filterNot(d => used(d.split('.').last)).toSet
-    val stale = referenceTwins.keySet -- unreached
+    val stale = twins -- unreached
     assert(stale.isEmpty, s"listed reference twins that are reached or gone: ${stale.mkString(", ")}")
-    val orphans = (unreached -- referenceTwins.keySet).toSeq.sorted
-    assert(orphans.isEmpty, s"ops members no query, ETL stage or main reaches: ${orphans.mkString(", ")}")
+    val orphans = (unreached -- twins).toSeq.sorted
+    assert(orphans.isEmpty, s"$dir definitions no query, ETL stage or main reaches: ${orphans.mkString(", ")}")
+  }
+
+  test("every public ops member is reached from src/main or perfbench, or is a listed reference twin") {
+    assertReached("ops", 100, opsTwins.keySet)
+  }
+
+  test("every public functions definition is reached from src/main or perfbench, " +
+      "or is a listed reference twin") {
+    assertReached("functions", 30, functionsTwins.keySet)
   }
 }
