@@ -1,22 +1,7 @@
 package graft
+import graft.collect.PhenopacketJson.quote
 import org.apache.spark.sql.SparkSession
 object Bench {
-
-  /** JSON string escape for error messages riding the artifact line:
-    * backslash, quote, and ALL control chars (<0x20) — an exception
-    * message with an embedded newline or tab would otherwise corrupt
-    * the one-line JSON the driver parses.
-    * `Verify` escapes its oracle_sql.json with it too.
-    */
-  def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -237,13 +222,13 @@ object Bench {
       "\"" + k + "\":" + v.map(_.toString).getOrElse("null")
     }.mkString("{", ",", "}")
     val errs = results.collect { case (k, None, Some(e)) =>
-      s""""$k":${jstr(e)}"""
+      s""""$k":${quote(e)}"""
     }.mkString("{", ",", "}")
     val vac = vacuousRows
-      .map { case (k, msg) => s""""$k":${jstr(msg)}""" }
+      .map { case (k, msg) => s""""$k":${quote(msg)}""" }
       .mkString("{", ",", "}")
     val died = diedAt
-      .map { case (n, e) => s""","session_died_at":"$n","session_death_cause":${jstr(e)}""" }
+      .map { case (n, e) => s""","session_died_at":"$n","session_death_cause":${quote(e)}""" }
       .getOrElse("")
     val failed = results.collect { case (k, None, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")

@@ -1,4 +1,5 @@
 package graft
+import graft.collect.PhenopacketJson.quote
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,7 +21,7 @@ object Verify {
       }
     }
     val json = SparkEntry.oracleSql.filter(e => selected(e._1))
-      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     // A SPOT-CHECK dump (name filters given) must never clobber a full
     // run's oracle_sql.json in the same outdir: a later full precheck
     // over that outdir would then silently verify only the subset while

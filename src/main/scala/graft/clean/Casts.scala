@@ -18,21 +18,30 @@ import org.apache.spark.sql.types._
 object Casts {
 
   /** P1: trim every string; whitespace-only / empty becomes null.
-    * JAVA trim (all chars <= U+0020), NOT Spark's `trim`, which strips
-    * only ASCII space: a cell containing "\t" must become null, and
-    * "2020-01-01\t" must lose its tab before the date-format cascade
-    * (the reference's Rust `str::trim` strips whitespace generally).
+    * JAVA trim (all chars <= U+0020), NOT Spark's one-argument `trim`,
+    * which strips only ASCII space: a cell containing "\t" must become
+    * null, and "2020-01-01\t" must lose its tab before the date-format
+    * cascade (the reference's Rust `str::trim` strips whitespace
+    * generally).
     */
   def trimEmptyToNull(c: Column): Column = {
     val t = javaTrim(c)
     when(t === lit(""), lit(null).cast(StringType)).otherwise(t)
   }
 
+  private val JavaTrimSet: String = (0 to 0x20).map(_.toChar).mkString
+
   /** Java `String.trim` as a column expression: strips all chars
-    * <= U+0020 at both ends (Spark's `trim` strips only the space). The
-    * one owner of this rule; `JavaTrimSpec` guards against copies.
+    * <= U+0020 at both ends (Spark's one-argument `trim` strips only the
+    * space). The one owner of this rule; `JavaTrimSpec` guards against
+    * copies.
+    *
+    * Spark's `trim` with an explicit trim set, not a `regexp_replace`:
+    * the value strategies reference a cell's trimmed form several times
+    * per rule, and the regex form made one cold `etl_deep` run generate
+    * 3.06 M characters of source where this form generates 2.20 M.
     */
-  def javaTrim(c: Column): Column = regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+  def javaTrim(c: Column): Column = trim(c, JavaTrimSet)
 
   /** Date formats tried in order (reference `constants.rs:3-20`,
     * chrono `%Y-%m-%d` etc. → JDK patterns). Zero-padded variants first.

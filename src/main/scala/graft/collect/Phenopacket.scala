@@ -290,18 +290,23 @@ object PhenopacketJson {
       "iriPrefix" -> str(r.iriPrefix)))),
     "phenopacketSchemaVersion" -> str(m.phenopacketSchemaVersion))
 
+  /** A JSON string literal: quote and backslash escaped, `\n`, `\r`
+    * and `\t` short, every other char below U+0020 as `\u00XX`. The
+    * packets, `graft.Bench`'s result line and `graft.Verify`'s
+    * oracle_sql.json all quote with it.
+    */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case '\n'         => "\\n"
+    case '\r'         => "\\r"
+    case '\t'         => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c            => c.toString
+  } + "\""
+
   // --- rendering ----------------------------------------------------
   private object Render {
-    def escape(s: String): String = s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case '\n'          => "\\n"
-      case '\r'          => "\\r"
-      case '\t'          => "\\t"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }
-
     private def numRepr(n: JNum): String =
       if (n.d.isNaN) "\"NaN\""               // protobuf-JSON convention:
       else if (n.d.isPosInfinity) "\"Infinity\""  // non-finite doubles are
@@ -313,11 +318,11 @@ object PhenopacketJson {
       } else n.d.toString
 
     def compact(j: J): String = j match {
-      case JStr(s)     => "\"" + escape(s) + "\""
+      case JStr(s)     => quote(s)
       case n: JNum     => numRepr(n)
       case JInt(l)     => l.toString
       case JBool(b)    => b.toString
-      case JObj(fs)    => fs.map { case (k, v) => "\"" + escape(k) + "\":" + compact(v) }.mkString("{", ",", "}")
+      case JObj(fs)    => fs.map { case (k, v) => quote(k) + ":" + compact(v) }.mkString("{", ",", "}")
       case JArr(items) => items.map(compact).mkString("[", ",", "]")
       case JOmit       => "null"
     }
@@ -327,7 +332,7 @@ object PhenopacketJson {
       val padIn = "  " * (indent + 1)
       j match {
         case JObj(fs) if fs.nonEmpty =>
-          fs.map { case (k, v) => padIn + "\"" + escape(k) + "\": " + pretty(v, indent + 1).dropWhile(_ == ' ') }
+          fs.map { case (k, v) => padIn + quote(k) + ": " + pretty(v, indent + 1).dropWhile(_ == ' ') }
             .mkString("{\n", ",\n", s"\n$pad}")
         case JArr(items) if items.nonEmpty =>
           items.map(i => padIn + pretty(i, indent + 1).dropWhile(_ == ' '))

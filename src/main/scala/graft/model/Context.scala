@@ -22,13 +22,28 @@ sealed trait Context { def kind: ContextKind }
 object Context {
   import ContextKind._
 
+  /** A time element context: age- or date-typed (reference
+    * `Context::time_element_context_variants`). DateToAge rewrites a
+    * date-typed one to its age-typed twin with `withTime`.
+    */
+  sealed trait Timed extends Context {
+    def t: TimeKind
+    def withTime(t: TimeKind): Timed
+  }
+
   // --- Individual ---------------------------------------------------
   case object SubjectId extends Context { val kind = KSubjectId }
   case object SubjectSex extends Context { val kind = KSubjectSex }
   case object DateOfBirth extends Context { val kind = KDateOfBirth }
   case object VitalStatus extends Context { val kind = KVitalStatus }
-  final case class TimeAtLastEncounter(t: TimeKind) extends Context { val kind = KTimeAtLastEncounter }
-  final case class TimeOfDeath(t: TimeKind) extends Context { val kind = KTimeOfDeath }
+  final case class TimeAtLastEncounter(t: TimeKind) extends Timed {
+    val kind = KTimeAtLastEncounter
+    def withTime(t: TimeKind): Timed = copy(t = t)
+  }
+  final case class TimeOfDeath(t: TimeKind) extends Timed {
+    val kind = KTimeOfDeath
+    def withTime(t: TimeKind): Timed = copy(t = t)
+  }
   case object CauseOfDeath extends Context { val kind = KCauseOfDeath }
   case object SurvivalTimeDays extends Context { val kind = KSurvivalTimeDays }
 
@@ -36,9 +51,15 @@ object Context {
   case object Hpo extends Context { val kind = KHpo }
   case object Disease extends Context { val kind = KDisease }
   case object MultiHpoId extends Context { val kind = KMultiHpoId }
-  final case class Onset(t: TimeKind) extends Context { val kind = KOnset }
+  final case class Onset(t: TimeKind) extends Timed {
+    val kind = KOnset
+    def withTime(t: TimeKind): Timed = copy(t = t)
+  }
   case object HpoOrDisease extends Context { val kind = KHpoOrDisease }
-  final case class TimeOfResolution(t: TimeKind) extends Context { val kind = KTimeOfResolution }
+  final case class TimeOfResolution(t: TimeKind) extends Timed {
+    val kind = KTimeOfResolution
+    def withTime(t: TimeKind): Timed = copy(t = t)
+  }
   case object Severity extends Context { val kind = KSeverity }
   case object ObservationStatus extends Context { val kind = KObservationStatus }
   case object PrimarySite extends Context { val kind = KPrimarySite }
@@ -52,7 +73,10 @@ object Context {
       extends Context { val kind = KQuantitativeMeasurement }
   final case class QualitativeMeasurement(assayId: String)
       extends Context { val kind = KQualitativeMeasurement }
-  final case class TimeOfMeasurement(t: TimeKind) extends Context { val kind = KTimeOfMeasurement }
+  final case class TimeOfMeasurement(t: TimeKind) extends Timed {
+    val kind = KTimeOfMeasurement
+    def withTime(t: TimeKind): Timed = copy(t = t)
+  }
   case object ReferenceRangeStart extends Context { val kind = KReferenceRangeStart }
   case object ReferenceRangeEnd extends Context { val kind = KReferenceRangeEnd }
 
@@ -66,7 +90,10 @@ object Context {
   case object TreatmentTerminationReason extends Context { val kind = KTreatmentTerminationReason }
   case object Procedure extends Context { val kind = KProcedure }
   case object ProcedureBodySite extends Context { val kind = KProcedureBodySite }
-  final case class TimeOfProcedure(t: TimeKind) extends Context { val kind = KTimeOfProcedure }
+  final case class TimeOfProcedure(t: TimeKind) extends Timed {
+    val kind = KTimeOfProcedure
+    def withTime(t: TimeKind): Timed = copy(t = t)
+  }
   case object QuantityValue extends Context { val kind = KQuantityValue }
   case object QuantityUnit extends Context { val kind = KQuantityUnit }
 

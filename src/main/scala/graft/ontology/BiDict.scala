@@ -110,11 +110,6 @@ final case class BiDictLibrary(
   def resolveIn(scope: String, value: String): Option[(OntologyClass, Resource)] =
     resolveVia(scoped(scope), value)
 
-  def resolveInOrThrow(scope: String, value: String): (OntologyClass, Resource) =
-    resolveIn(scope, value).getOrElse(throw new NoSuchElementException(
-      s"term '$value' not found in '$scope' dictionaries " +
-        s"(${scoped(scope).map(_.resource.id).mkString(", ")})"))
-
   private def resolveVia(ds: Seq[BiDict], value: String): Option[(OntologyClass, Resource)] =
     ds.iterator
       .map(d => d.resolve(value).map(_ -> d.resource))

@@ -2,7 +2,6 @@ package graft.strategy
 
 import graft.clean.Casts
 import graft.model._
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** T1 — per-SeriesContext cell-value substitution (reference
@@ -12,9 +11,10 @@ import org.apache.spark.sql.functions._
   * the column is then cast to the map's declared output type via the
   * strict specific cast (P4).
   *
-  * The maps are config-sized: a literal when-chain compiles into
-  * whole-stage codegen (no shuffle, no UDF, no broadcast needed below
-  * thousands of keys — beyond that, swap to a broadcast map join).
+  * The map rides a Spark broadcast and each cell is looked up in a UDF
+  * by its `String.trim`, the rule `AliasMap.normalized` applies to the
+  * keys (the T2/T6 idiom): the generated code does not grow with the
+  * map, which an S8 alias CSV may make any size.
   */
 object AliasMapStrategy extends Strategy {
   val name = "alias_map"
@@ -28,27 +28,19 @@ object AliasMapStrategy extends Strategy {
         sc.aliasMap match {
           case Some(am0) =>
             val am = am0.normalized
-            val casted = {
-              val replaced = replaceExpr(col(colName).cast("string"), am)
-              df.withColumn(colName, replaced)
+            val bc = df.sparkSession.sparkContext.broadcast(am.entries)
+            val alias = udf { (v: String) =>
+              if (v == null) null
+              else bc.value.get(v.trim) match {
+                case Some(a) => a.orNull
+                case None    => v
+              }
             }
-            Casts.specific(casted, colName, OutputDataType.toSpark(am.outputType))
+            Casts.specific(df.withColumn(colName, alias(col(colName).cast("string"))), colName,
+              OutputDataType.toSpark(am.outputType))
           case None => df
         }
     }
     cdf.copy(df = aliased)
-  }
-
-  /** when-chain over the alias entries; None ⇒ null; miss ⇒ passthrough. */
-  private def replaceExpr(c: Column, am: AliasMap): Column = {
-    // Java-trim to match AliasMap.normalized's Java-trimmed keys:
-    // Spark's trim strips only U+0020, so a tab/CR-padded cell would
-    // silently bypass the map (the MappingStrategy idiom)
-    val trimmed = Casts.javaTrim(c)
-    am.entries.foldLeft(Option.empty[Column]) {
-      case (acc, (key, alias)) =>
-        val v = alias.map(lit(_)).getOrElse(lit(null).cast("string"))
-        Some(acc.fold(when(trimmed === key, v))(_.when(trimmed === key, v)))
-    }.map(_.otherwise(c)).getOrElse(c)
   }
 }

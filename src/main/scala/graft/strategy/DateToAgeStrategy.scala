@@ -29,7 +29,10 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
   val name = "date_to_age"
 
   private def dateCols(cdf: Cdf): Seq[(String, SeriesContext)] =
-    cdf.bindings.filter { case (_, sc) => TimeContexts.isDateTyped(sc.dataContext) }
+    cdf.bindings.filter(_._2.dataContext match {
+      case d: Context.Timed => d.t == TimeKind.Date
+      case _                => false
+    })
 
   override def isValid(tables: Seq[Cdf]): Boolean =
     tables.exists(t => dateCols(t).nonEmpty) &&
@@ -95,9 +98,10 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
 
         // Context rewrite *(Date) → *(Age), driver-side.
         val newSeries = cdf.context.seriesContexts.map { sc =>
-          if (TimeContexts.isDateTyped(sc.dataContext))
-            sc.copy(dataContext = TimeContexts.toAgeTyped(sc.dataContext))
-          else sc
+          sc.dataContext match {
+            case d: Context.Timed if d.t == TimeKind.Date => sc.copy(dataContext = d.withTime(TimeKind.Age))
+            case _                                        => sc
+          }
         }
         Cdf(cdf.context.copy(seriesContexts = newSeries), converted)
       }

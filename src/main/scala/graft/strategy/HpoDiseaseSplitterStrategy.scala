@@ -2,11 +2,13 @@ package graft.strategy
 
 import graft.model._
 import graft.ontology.BiDictLibrary
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** T7 — split an `HpoOrDisease` column into `<col>_hpo` and
   * `<col>_disease` by dictionary-library membership, HPO winning ties;
-  * unknown non-null values error; the source column is dropped
+  * a value in neither is a reject ([[CellRuleStrategy]]); the source
+  * column is dropped and the raw cell kept in the column of its class
   * (reference
   * `phenoxtract/src/transform/strategies/hpo_disease_splitter.rs:51-150`).
   *
@@ -16,52 +18,46 @@ import org.apache.spark.sql.functions._
   * padded or upper-case cell classifies exactly as the driver would
   * resolve it, on any host locale.
   */
-final case class HpoDiseaseSplitterStrategy(library: BiDictLibrary) extends Strategy {
+final case class HpoDiseaseSplitterStrategy(library: BiDictLibrary) extends CellRuleStrategy {
   val name = "hpo_disease_splitter"
 
-  override def isValid(tables: Seq[Cdf]): Boolean =
-    tables.exists(_.columnsOfKind(ContextKind.KHpoOrDisease).nonEmpty)
+  protected def targets(cdf: Cdf): Seq[String] = cdf.columnsOfKind(ContextKind.KHpoOrDisease)
 
-  protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
-    val bc = tables.head.df.sparkSession.sparkContext.broadcast(library)
-    // HPO is tested first, as in the reference, so shared terms
-    // classify as "hpo".
+  /** The cell's class, "hpo" or "disease". HPO is tested first, as in
+    * the reference, so shared terms classify as "hpo".
+    */
+  protected def rule(spark: SparkSession): Column => Column = {
+    val bc = spark.sparkContext.broadcast(library)
     val classOf = udf { (v: String) =>
       if (v == null) null
       else if (bc.value.memberOf("hp", v)) "hpo"
       else if (bc.value.memberOf("mondo", v)) "disease"
       else null
     }
-    def cls(c: String) = classOf(col(c).cast("string"))
+    c => classOf(c)
+  }
 
-    MappingException.rejectAny(name,
-      tables.flatMap { cdf =>
-        cdf.columnsOfKind(ContextKind.KHpoOrDisease).map { c =>
-          cdf.df.select(col(c).cast("string").as("v"))
-            .filter(col("v").isNotNull && cls("v").isNull)
-        }
-      },
-      "values in neither the HPO nor the disease ontology")
+  protected def hint: String = "values in neither the HPO nor the disease ontology"
 
-    tables.map { cdf =>
-      val targets = cdf.bindings.filter(_._2.dataContext.kind == ContextKind.KHpoOrDisease)
-      if (targets.isEmpty) cdf
-      else {
-        val df = targets.foldLeft(cdf.df) { case (acc, (c, _)) =>
-          acc.withColumn(s"${c}_hpo", when(cls(c) === "hpo", col(c)))
-            .withColumn(s"${c}_disease", when(cls(c) === "disease", col(c)))
-            .drop(c)
-        }
-        val ctx = targets.foldLeft(cdf.context) { case (acc, (c, sc)) =>
-          acc.copy(seriesContexts =
-            acc.seriesContexts.filterNot(_ == sc) ++ Seq(
-              sc.copy(identifier = Identifier.Single(s"${c}_hpo"),
-                dataContext = Context.Hpo),
-              sc.copy(identifier = Identifier.Single(s"${c}_disease"),
-                dataContext = Context.Disease)))
-        }
-        Cdf(ctx, df)
-      }
+  /** Replaces `c` by `<c>_hpo` and `<c>_disease` and its series by
+    * their two; a series bound to more columns keeps the ones not split
+    * yet.
+    */
+  override protected def write(cdf: Cdf, c: String, cls: Column): Cdf = {
+    val sc = cdf.bindings.collectFirst { case (`c`, s) => s }.get
+    val rest = sc.identifier.resolve(cdf.df.columns.toSeq).filterNot(_ == c)
+    val df = cdf.df
+      .withColumn(s"${c}_hpo", when(cls === "hpo", col(c)))
+      .withColumn(s"${c}_disease", when(cls === "disease", col(c)))
+      .drop(c)
+    val kept = cdf.context.seriesContexts.flatMap { s =>
+      if (s != sc) Seq(s)
+      else if (rest.nonEmpty) Seq(sc.copy(identifier = Identifier.Multi(rest)))
+      else Nil
     }
+    val split = Seq(
+      sc.copy(identifier = Identifier.Single(s"${c}_hpo"), dataContext = Context.Hpo),
+      sc.copy(identifier = Identifier.Single(s"${c}_disease"), dataContext = Context.Disease))
+    Cdf(cdf.context.copy(seriesContexts = kept ++ split), df)
   }
 }

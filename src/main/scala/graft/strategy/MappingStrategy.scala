@@ -2,56 +2,37 @@ package graft.strategy
 
 import graft.model._
 import graft.ontology.BiDict
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.udf
 
 /** T2 — context-targeted synonym normalization (reference
   * `phenoxtract/src/transform/strategies/mapping.rs:62-278`): cells of
   * every column whose data context matches `targetKind` are mapped via
-  * `BiDict.norm` (Java trim + ROOT-locale lowercase) of the value; **all
-  * unmapped non-null values across all tables are collected first and
-  * the strategy fails once** with the complete set (reference
-  * error-accumulation semantics `mapping.rs:202-277`).
+  * `BiDict.norm` (Java trim + ROOT-locale lowercase) of the value; a
+  * value with no key is a reject ([[CellRuleStrategy]]).
   *
   * The map's keys and every cell are normalized by the same JVM rule:
   * the map rides a Spark broadcast and each cell is keyed and looked up
   * in a UDF, so a tab/CR-padded or upper-case cell maps on any host
-  * locale. The unmapped scan is one distinct-collect over all matching
-  * columns ([[MappingException.rejectAny]]) — a second cheap pass, not
-  * a per-row throw.
+  * locale.
   */
 final case class MappingStrategy(
     name: String,
     synonymMap: Map[String, String],
-    targetKind: ContextKind) extends Strategy {
+    targetKind: ContextKind) extends CellRuleStrategy {
 
   private val norm: Map[String, String] =
     synonymMap.map { case (k, v) => BiDict.norm(k) -> v }
 
-  protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
-    val bc = tables.head.df.sparkSession.sparkContext.broadcast(norm)
-    val keyOf = udf((v: String) => if (v == null) null else BiDict.norm(v))
-    val mapped = udf((k: String) => if (k == null) null else bc.value.getOrElse(k, null))
-    def key(c: String) = keyOf(col(c).cast("string"))
+  protected def targets(cdf: Cdf): Seq[String] = cdf.columnsOfKind(targetKind)
 
-    // Pass 1: accumulate every unmapped distinct key across tables.
-    MappingException.rejectAny(name,
-      tables.flatMap { cdf =>
-        cdf.columnsOfKind(targetKind).map { c =>
-          cdf.df
-            .select(key(c).as("v"))
-            .filter(col("v").isNotNull && mapped(col("v")).isNull)
-        }
-      },
-      hint = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}")
-
-    // Pass 2: rewrite each cell to its mapped value.
-    tables.map { cdf =>
-      val df = cdf.columnsOfKind(targetKind).foldLeft(cdf.df) { (acc, c) =>
-        acc.withColumn(c, mapped(key(c)))
-      }
-      cdf.copy(df = df)
-    }
+  protected def rule(spark: SparkSession): Column => Column = {
+    val bc = spark.sparkContext.broadcast(norm)
+    val mapped = udf((v: String) => if (v == null) null else bc.value.getOrElse(BiDict.norm(v), null))
+    c => mapped(c)
   }
+
+  protected def hint: String = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}"
 }
 
 object MappingStrategy {

@@ -2,14 +2,15 @@ package graft.strategy
 
 import graft.model._
 import graft.ontology.BiDictLibrary
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.udf
 
 /** T6 — case-insensitive label/synonym → CURIE normalization through a
   * broadcast ontology dictionary (reference
   * `phenoxtract/src/transform/strategies/ontology_normaliser.rs:61-141`):
   * IDs already in CURIE form pass through (validated), labels resolve
-  * via the bidict; unresolvable non-null values accumulate and fail
-  * once.
+  * via the bidict; a value `BiDictLibrary.resolve` does not know is a
+  * reject ([[CellRuleStrategy]]).
   *
   * The dictionary rides a Spark broadcast: executors map values via a
   * lookup UDF over the broadcast map — the dictionary is
@@ -19,37 +20,17 @@ final case class OntologyNormaliserStrategy(
     library: BiDictLibrary,
     targetKinds: Set[ContextKind] =
       Set(ContextKind.KHpo, ContextKind.KDisease, ContextKind.KSeverity,
-          ContextKind.KPrimarySite)) extends Strategy {
+          ContextKind.KPrimarySite)) extends CellRuleStrategy {
   val name = "ontology_normaliser"
 
-  override def isValid(tables: Seq[Cdf]): Boolean =
-    tables.exists(t => t.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind)).nonEmpty)
+  protected def targets(cdf: Cdf): Seq[String] =
+    cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind))
 
-  protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
-    val spark = tables.head.df.sparkSession
+  protected def rule(spark: SparkSession): Column => Column = {
     val bc = spark.sparkContext.broadcast(library)
-    val resolveId = udf { (v: String) =>
-      if (v == null) null
-      else bc.value.resolve(v).map(_._1.id).orNull
-    }
-
-    // Pass 1: accumulate unresolvable values across all tables.
-    MappingException.rejectAny(name,
-      tables.flatMap { cdf =>
-        cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind)).map { c =>
-          cdf.df.select(col(c).cast("string").as("v"))
-            .filter(col("v").isNotNull && resolveId(col("v")).isNull)
-        }
-      },
-      "terms not found in the ontology library")
-
-    // Pass 2: rewrite to CURIEs.
-    tables.map { cdf =>
-      val df = cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind))
-        .foldLeft(cdf.df) { (acc, c) =>
-          acc.withColumn(c, resolveId(col(c).cast("string")))
-        }
-      cdf.copy(df = df)
-    }
+    val resolveId = udf((v: String) => if (v == null) null else bc.value.resolve(v).map(_._1.id).orNull)
+    c => resolveId(c)
   }
+
+  protected def hint: String = "terms not found in the ontology library"
 }

@@ -1,12 +1,15 @@
 package graft.strategy
 
+import graft.clean.Casts
 import graft.model.Cdf
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Config-ordered whole-table transform (reference
   * `phenoxtract/src/transform/strategies/traits.rs:16-30`): guard, then
   * run over ALL tables at once (cross-table strategies like DateToAge
-  * need the full set).
+  * need the full set). The value strategies that map each cell by one
+  * rule extend [[CellRuleStrategy]].
   */
 trait Strategy {
   def name: String
@@ -34,29 +37,57 @@ trait Strategy {
   }
 }
 
-/** Error-accumulation semantics shared by the mapping-shaped strategies
-  * (reference `mapping.rs:202-277`, `age_to_iso8601.rs:92-157`,
-  * `date_to_age.rs:106-215`): offending DISTINCT values are gathered
-  * across all tables with a cheap second-pass filter+collect, then the
-  * strategy fails once with the complete set — never throw from inside
-  * a row-level expression.
+/** The contract of the value strategies T2, T3, T6 and T7 (reference
+  * `mapping.rs:202-277`, `age_to_iso8601.rs:92-157`): each target cell
+  * is mapped by one rule, every value the rule cannot map is collected
+  * across all tables, and the strategy fails once with the full set
+  * before any table is rewritten — never a throw from inside a row.
+  *
+  * The rule reads the cell's string form, Java-trimmed with blanks as
+  * null (`Casts.trimEmptyToNull`), and a null out of a non-null cell is
+  * a reject. A subclass supplies its targets, its rule and its hint;
+  * the probe and the rewrite both apply that one rule.
+  */
+abstract class CellRuleStrategy extends Strategy {
+
+  /** The columns of one table the rule rewrites. */
+  protected def targets(cdf: Cdf): Seq[String]
+
+  /** The rule over a cell's string form. Built once per call, so it may
+    * capture a broadcast.
+    */
+  protected def rule(spark: SparkSession): Column => Column
+
+  /** Says what the rejected values missed, for the exception. */
+  protected def hint: String
+
+  /** Writes one target's ruled column into its table. */
+  protected def write(cdf: Cdf, column: String, ruled: Column): Cdf =
+    cdf.copy(df = cdf.df.withColumn(column, ruled))
+
+  override def isValid(tables: Seq[Cdf]): Boolean = tables.exists(targets(_).nonEmpty)
+
+  protected final def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
+    val f = rule(tables.head.df.sparkSession)
+    def cell(c: String): Column = Casts.trimEmptyToNull(col(c).cast("string"))
+    val targeted = tables.map(t => t -> targets(t))
+
+    // One job over all tables: the distinct rejected cells, capped at 50.
+    val bad = targeted
+      .flatMap { case (t, cs) =>
+        cs.map(c => t.df.select(cell(c).as("v")).filter(col("v").isNotNull && f(col("v")).isNull))
+      }
+      .reduce(_ union _).distinct().limit(50).collect().map(_.getString(0))
+    if (bad.nonEmpty) throw MappingException(name, bad.toSeq, hint)
+
+    targeted.map { case (t, cs) => cs.foldLeft(t)((acc, c) => write(acc, c, f(cell(c)))) }
+  }
+}
+
+/** A strategy's rejected values, all of them up to a cap, in one error
+  * (thrown by [[CellRuleStrategy]] and `DateToAgeStrategy`).
   */
 final case class MappingException(strategy: String, badValues: Seq[String], hint: String = "")
     extends RuntimeException(
       s"strategy $strategy: unmappable value(s): ${badValues.mkString("'", "', '", "'")}" +
         (if (hint.nonEmpty) s" — $hint" else ""))
-
-object MappingException {
-
-  /** The one reject path of the mapping-shaped strategies. `probes`
-    * holds one frame per target column, each a single string column of
-    * that column's offending values. Their union's distinct values are
-    * collected in ONE job, capped at 50 in total, and the strategy
-    * fails once when any are found.
-    */
-  def rejectAny(strategy: String, probes: Seq[DataFrame], hint: String): Unit =
-    if (probes.nonEmpty) {
-      val bad = probes.reduce(_ union _).distinct().limit(50).collect().map(_.getString(0))
-      if (bad.nonEmpty) throw MappingException(strategy, bad.toSeq, hint)
-    }
-}

@@ -96,6 +96,20 @@ class CastsSpec extends SparkSpec {
     assert(out.toSeq == Seq(None, None, None, Some("2020-01-01"), Some("x\ny")))
   }
 
+  test("javaTrim equals String.trim on every char up to U+0020 and beyond") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // all 33 trimmed chars, then ones Java keeps: NBSP, em space, DEL, é, a surrogate pair
+    val alphabet = (0 to 0x20).map(_.toChar) ++ Seq('\u00a0', '\u2003', '\u007f', '\u00e9', 'x')
+    val cell = Gen.oneOf(
+      Gen.listOf(Gen.oneOf(alphabet)).map(_.mkString),
+      Gen.listOf(Gen.oneOf(alphabet)).map(cs => cs.mkString + "\ud83d\ude00" + cs.reverse.mkString))
+    val cells = (0 until 300).flatMap(i => cell.apply(Gen.Parameters.default, Seed(i.toLong)))
+    val got = cells.toDF("c").select(col("c"), Casts.javaTrim(col("c")).as("t")).collect()
+      .map(r => r.getString(0) -> r.getString(1))
+    got.foreach { case (c, t) => assert(t == c.trim, s"cell ${c.map(_.toInt).mkString(",")}") }
+  }
+
   test("whole-number long-range boundary: 2^63 as a double is OUT of range") {
     // Long.MaxValue.toDouble rounds UP to 2^63, which is not a
     // representable long — a > guard admitted it and the cast clamped

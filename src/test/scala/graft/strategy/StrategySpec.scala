@@ -2,7 +2,13 @@ package graft.strategy
 
 import graft.SparkSpec
 import graft.model._
+import graft.ontology._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+import scala.util.{Failure, Success, Try}
 
 class StrategySpec extends SparkSpec {
   import spark.implicits._
@@ -232,7 +238,6 @@ class StrategySpec extends SparkSpec {
 
   // --- T7 splitter ----------------------------------------------------
   test("T7: HpoOrDisease splits by dictionary membership; unknown errors") {
-    import graft.ontology._
     val hp = BiDict.fromEntries(
       Resource("hp", "HPO", "http://purl.obolibrary.org/obo/hp.owl", "v1", "HP", "http://purl.obolibrary.org/obo/HP_"),
       Seq(("HP:0001945", "Fever", Seq("febrile"))))
@@ -270,7 +275,6 @@ class StrategySpec extends SparkSpec {
   }
 
   test("T7: user columns named like the join's temp/terms columns survive") {
-    import graft.ontology._
     val hp = BiDict.fromEntries(
       Resource("hp", "HPO", "http://purl.obolibrary.org/obo/hp.owl", "v1", "HP", "http://purl.obolibrary.org/obo/HP_"),
       Seq(("HP:0001945", "Fever", Seq())))
@@ -293,7 +297,6 @@ class StrategySpec extends SparkSpec {
   }
 
   test("T7: classification is host-locale-independent (tr_TR lowercasing)") {
-    import graft.ontology._
     // A label with a non-ASCII char AND an uppercase 'I': Spark's
     // builtin `lower` would take its non-ASCII slow path and lowercase
     // with the JVM default locale — under tr that maps 'I' to dotless
@@ -314,5 +317,145 @@ class StrategySpec extends SparkSpec {
         SeriesContext(Identifier.Single("x"), dataContext = Context.HpoOrDisease)))).head
       assert(out.df.select("x_hpo").head().getString(0) == "BEHÇET IRITIS")
     } finally java.util.Locale.setDefault(prev)
+  }
+
+  // --- the cell-rule contract (T2, T3, T6, T7) ------------------------
+  private val fevers = BiDictLibrary(Seq(
+    BiDict.fromEntries(
+      Resource("hp", "HPO", "http://purl.obolibrary.org/obo/hp.owl", "v1", "HP", "http://purl.obolibrary.org/obo/HP_"),
+      Seq(("HP:0001945", "Fever", Seq("febrile")))),
+    BiDict.fromEntries(
+      Resource("mondo", "MONDO", "http://purl.obolibrary.org/obo/mondo.owl", "v1", "MONDO", "http://purl.obolibrary.org/obo/MONDO_"),
+      Seq(("MONDO:0005737", "Ebola", Seq())))))
+
+  test("T7: a series bound to two columns splits both and leaves no HpoOrDisease series") {
+    val df = Seq(("P1", "Fever", "Ebola")).toDF("subject_id", "dx_1", "dx_2")
+    val out = HpoDiseaseSplitterStrategy(fevers).transform(Seq(cdf("t", df,
+      SeriesContext(Identifier.regex("^dx_"), dataContext = Context.HpoOrDisease)))).head
+    assert(out.df.columns.toSeq == Seq("subject_id", "dx_1_hpo", "dx_1_disease", "dx_2_hpo", "dx_2_disease"))
+    assert(out.context.seriesContexts.map(_.dataContext) ==
+      Seq(Context.SubjectId, Context.Hpo, Context.Disease, Context.Hpo, Context.Disease))
+    val r = out.df.head()
+    assert(r.getString(1) == "Fever" && r.isNullAt(2) && r.isNullAt(3) && r.getString(4) == "Ebola")
+  }
+
+  /** Cells and what a strategy makes of each: `Left(reported)` is an
+    * unknown cell and the value the rejection names, `Right(outputs)`
+    * the cell's output columns.
+    */
+  private type Pool = Seq[(String, Either[String, Seq[String]])]
+
+  private def out(v: String*): Either[String, Seq[String]] = Right(v)
+  private def unknown(reported: String): Either[String, Seq[String]] = Left(reported)
+  private val blanks: Seq[String] = Seq(" ", "\t", "\r\n ", "")
+
+  private def samples[A](g: Gen[A], n: Int): Seq[A] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
+
+  /** Ten tables of up to 50 cells drawn from `pool` in one column `v`
+    * with data context `data`, two tables a call: the strategy throws
+    * iff a cell is unknown, naming exactly the distinct unknown cells;
+    * otherwise each output cell is the pool's. Three calls may draw
+    * unknown cells, two draw only known ones.
+    */
+  private def holdsCellRule(s: CellRuleStrategy, data: Context, outCols: Seq[String], pool: Pool): Unit = {
+    def tables(cells: Pool) =
+      Gen.listOfN(2, Gen.choose(1, 50).flatMap(n => Gen.listOfN(n, Gen.oneOf(cells))))
+    val draws = samples(tables(pool), 3) ++ samples(tables(pool.filter(_._2.isRight)), 2)
+    draws.foreach { drawn =>
+      val in = drawn.zipWithIndex.map { case (rows, i) =>
+        cdf(s"t$i", rows.zipWithIndex.map { case ((v, _), j) => (s"P$j", v) }.toDF("subject_id", "v"),
+          SeriesContext(Identifier.Single("v"), dataContext = data))
+      }
+      val rejected = drawn.flatten.collect { case (_, Left(r)) => r }.distinct.sorted
+      Try(s.transform(in)) match {
+        case Failure(e: MappingException) =>
+          assert(rejected.nonEmpty, s"${s.name} rejected ${e.badValues}")
+          assert(e.badValues.sorted == rejected)
+        case Failure(e) => throw e
+        case Success(res) =>
+          assert(rejected.isEmpty, s"${s.name} accepted $rejected")
+          res.zip(drawn).foreach { case (t, rows) =>
+            val got = t.df.select(("subject_id" +: outCols).map(col): _*).collect()
+              .map(r => r.getString(0) -> outCols.indices.map(k => r.getString(k + 1))).toMap
+            rows.zipWithIndex.foreach { case ((v, want), j) =>
+              assert(Right(got(s"P$j")) == want, s"${s.name}: cell '$v'")
+            }
+          }
+      }
+    }
+  }
+
+  test("T2 property: rejects iff a non-blank cell is unknown, naming it trimmed; maps the rest") {
+    holdsCellRule(MappingStrategy.defaultSex, Context.SubjectSex, Seq("v"), Seq(
+      "male" -> out("MALE"), "f" -> out("FEMALE"), "Woman" -> out("FEMALE"),
+      "other" -> out("OTHER_SEX"), "UNKNOWN_SEX" -> out("UNKNOWN_SEX"),
+      "\tMALE" -> out("MALE"), " female\r" -> out("FEMALE"), "M " -> out("MALE"),
+      "WOMAN\n" -> out("FEMALE"),
+      "martian" -> unknown("martian"), "Martian" -> unknown("Martian"),
+      " Blorb\t" -> unknown("Blorb"), "x y" -> unknown("x y"),
+      (null: String) -> out(null)) ++ blanks.map(_ -> out(null)))
+  }
+
+  test("T3 property: rejects iff a non-blank cell is unknown, naming it trimmed; maps the rest") {
+    holdsCellRule(AgeToIso8601Strategy(), Context.Onset(TimeKind.Age), Seq("v"), Seq(
+      "45" -> out("P45Y"), "12.0" -> out("P12Y"), " 5 " -> out("P5Y"), "0" -> out("P0Y"),
+      "150" -> out("P150Y"), "P3Y2M" -> out("P3Y2M"), "P1Y\t" -> out("P1Y"),
+      "151" -> unknown("151"), "-1" -> unknown("-1"), "1.5" -> unknown("1.5"),
+      "banana" -> unknown("banana"), " banana\r" -> unknown("banana"),
+      (null: String) -> out(null)) ++ blanks.map(_ -> out(null)))
+  }
+
+  test("T6 property: rejects iff a non-blank cell is unknown, naming it trimmed; maps the rest") {
+    holdsCellRule(OntologyNormaliserStrategy(fevers), Context.Hpo, Seq("v"), Seq(
+      "Fever" -> out("HP:0001945"), "febrile" -> out("HP:0001945"),
+      "HP:0001945" -> out("HP:0001945"), "Ebola" -> out("MONDO:0005737"),
+      "MONDO:0005737" -> out("MONDO:0005737"), "\tFEVER " -> out("HP:0001945"),
+      "ebola\r\n" -> out("MONDO:0005737"), " HP:0001945 " -> out("HP:0001945"),
+      "Gibberish" -> unknown("Gibberish"), " HP:9999999\t" -> unknown("HP:9999999"),
+      (null: String) -> out(null)) ++ blanks.map(_ -> out(null)))
+  }
+
+  test("T7 property: rejects iff a non-blank cell is unknown, naming it trimmed; splits the rest raw") {
+    holdsCellRule(HpoDiseaseSplitterStrategy(fevers), Context.HpoOrDisease, Seq("v_hpo", "v_disease"), Seq(
+      "Fever" -> out("Fever", null), "febrile" -> out("febrile", null),
+      "HP:0001945" -> out("HP:0001945", null), "Ebola" -> out(null, "Ebola"),
+      "\tFEVER " -> out("\tFEVER ", null), "ebola\r\n" -> out(null, "ebola\r\n"),
+      "Gibberish" -> unknown("Gibberish"), " Nope\t" -> unknown("Nope"),
+      (null: String) -> out(null, null)) ++ blanks.map(_ -> out(null, null)))
+  }
+
+  test("T2/T3/T6/T7: a table with no target keeps its frame; no target anywhere is invalid") {
+    val plain = cdf("plain", Seq(("P1", "x")).toDF("subject_id", "other"),
+      SeriesContext(Identifier.Single("other")))
+    val cases = Seq(
+      MappingStrategy.defaultSex -> Context.SubjectSex,
+      AgeToIso8601Strategy() -> Context.Onset(TimeKind.Age),
+      OntologyNormaliserStrategy(fevers) -> Context.Hpo,
+      HpoDiseaseSplitterStrategy(fevers) -> Context.HpoOrDisease)
+    cases.foreach { case (s, data) =>
+      assert(!s.isValid(Seq(plain)), s.name)
+      val target = cdf("target", Seq(("P1", null: String)).toDF("subject_id", "v"),
+        SeriesContext(Identifier.Single("v"), dataContext = data))
+      val res = s.transform(Seq(target, plain))
+      assert(res(1).df eq plain.df, s.name)
+      assert(!(res(0).df eq target.df), s.name)
+    }
+  }
+
+  test("T2/T6/T7: whitespace-only cells pass as null; a rejected cell is named Java-trimmed") {
+    val cases = Seq(
+      (MappingStrategy.defaultSex, Context.SubjectSex, "v"),
+      (OntologyNormaliserStrategy(fevers), Context.Hpo, "v"),
+      (HpoDiseaseSplitterStrategy(fevers), Context.HpoOrDisease, "v_hpo"))
+    cases.foreach { case (s, data, outCol) =>
+      def run(cells: String*) = s.transform(Seq(cdf("t",
+        cells.zipWithIndex.map { case (v, i) => (s"P$i", v) }.toDF("subject_id", "v"),
+        SeriesContext(Identifier.Single("v"), dataContext = data)))).head
+      val res = run(" ", "\t", "\r\n ")
+      assert(res.df.select(outCol).collect().forall(_.isNullAt(0)), s.name)
+      val e = intercept[MappingException](run(" Martian\t", "\t"))
+      assert(e.badValues == Seq("Martian"), s.name)
+    }
   }
 }
