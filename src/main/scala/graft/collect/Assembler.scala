@@ -64,22 +64,22 @@ object Assembler {
     // (transform_context.rs: hpo/disease/assay/unit/qualitative/gene);
     // `scope` selects the same class here — through the TermResolver
     // seam (offline dictionaries unless config opted into a live stack).
-    def resolve(scope: String, value: String): OntoClass = {
+    def resolve(scope: String, value: String): OntologyClass = {
       val (oc, res) = resolverImpl.resolveInOrThrow(scope, value)
       resources.getOrElseUpdate(res.id, res)
-      OntoClass(oc.id, oc.label)
+      oc
     }
-    def resolveOpt(scope: String, v: Option[String]): Option[OntoClass] =
+    def resolveOpt(scope: String, v: Option[String]): Option[OntologyClass] =
       v.map(resolve(scope, _))
 
     // Assay/unit CURIEs may live outside the loaded dictionaries
     // (e.g. LOINC without a LOINC dump): fall back to id-as-label.
-    def resolveLenient(scope: String, value: String): OntoClass =
+    def resolveLenient(scope: String, value: String): OntologyClass =
       resolverImpl.resolveIn(scope, value) match {
         case Some((oc, res)) =>
           resources.getOrElseUpdate(res.id, res)
-          OntoClass(oc.id, oc.label)
-        case None => OntoClass(value, value)
+          oc
+        case None => OntologyClass(value, value)
       }
 
     def o(s: String): Option[String] = Fact.opt(s)
@@ -263,7 +263,7 @@ object Assembler {
             // unit (parse_quantity) BEFORE the assay — resource
             // registration order follows.
             val unit = o(f.unit).map(resolveLenient("unit", _))
-              .getOrElse(OntoClass("", ""))
+              .getOrElse(OntologyClass("", ""))
             val refRange = (o(f.refLow).flatMap(_.toDoubleOption),
               o(f.refHigh).flatMap(_.toDoubleOption)) match {
               case (Some(lo), Some(hi)) => Some(ReferenceRange(unit, lo, hi))
@@ -339,8 +339,7 @@ object Assembler {
         created = config.created,
         createdBy = config.createdBy,
         submittedBy = Option(config.submittedBy).filter(_.nonEmpty),
-        resources = resources.values.map(r => MetaResource(
-          r.id, r.name, r.url, r.version, r.namespacePrefix, r.iriPrefix)).toSeq))
+        resources = resources.values.toSeq))
   }
 }
 
@@ -369,7 +368,7 @@ object GenomicInterpretations {
     graft.ontology.HgvsResolver.isValidShape(v)
 
   def classify(subject: String, genes: Seq[String], variants: Seq[String],
-      resolve: (String, String) => OntoClass,
+      resolve: (String, String) => OntologyClass,
       hgvs: HgvsResolver): Seq[GenomicInterpretation] = {
     variants.filterNot(isValidHgvs) match {
       case Seq() => ()

@@ -1,15 +1,16 @@
 package graft.collect
 
+import graft.ontology.{OntologyClass, Resource}
+
 /** GA4GH Phenopacket v2 document model — the subset of the schema the
   * reference's builder surface emits (reference
   * `phenoxtract/src/transform/traits.rs:9-129` and the `phenopackets`
   * crate messages). Plain case classes: Spark product encoders handle
   * them inside `Dataset[Phenopacket]`, and the JSON writer below mirrors
   * protobuf-JSON conventions (camelCase names, enum string names,
-  * empty/None fields omitted).
+  * empty/None fields omitted). Terms and resources are the ontology
+  * package's [[OntologyClass]] and [[Resource]].
   */
-final case class OntoClass(id: String, label: String)
-
 final case class Age(iso8601duration: String)
 
 /** protobuf oneof: exactly one of the fields is set. */
@@ -18,7 +19,7 @@ final case class TimeElement(age: Option[Age] = None, timestamp: Option[String] 
 final case class VitalStatus(
     status: String,
     timeOfDeath: Option[TimeElement] = None,
-    causeOfDeath: Option[OntoClass] = None,
+    causeOfDeath: Option[OntologyClass] = None,
     survivalTimeInDays: Option[Long] = None)
 
 final case class Individual(
@@ -29,53 +30,53 @@ final case class Individual(
     vitalStatus: Option[VitalStatus] = None)
 
 final case class PhenotypicFeature(
-    `type`: OntoClass,
+    `type`: OntologyClass,
     excluded: Option[Boolean] = None,
     onset: Option[TimeElement] = None,
     resolution: Option[TimeElement] = None,
-    severity: Option[OntoClass] = None)
+    severity: Option[OntologyClass] = None)
 
 final case class Disease(
-    term: OntoClass,
+    term: OntologyClass,
     onset: Option[TimeElement] = None,
     resolution: Option[TimeElement] = None,
-    primarySite: Option[OntoClass] = None)
+    primarySite: Option[OntologyClass] = None)
 
-final case class ReferenceRange(unit: OntoClass, low: Double, high: Double)
+final case class ReferenceRange(unit: OntologyClass, low: Double, high: Double)
 
 final case class Quantity(
-    unit: OntoClass,
+    unit: OntologyClass,
     value: Double,
     referenceRange: Option[ReferenceRange] = None)
 
 /** protobuf oneof value: quantity | ontology class. */
 final case class MeasurementValue(
     quantity: Option[Quantity] = None,
-    ontologyClass: Option[OntoClass] = None)
+    ontologyClass: Option[OntologyClass] = None)
 
 final case class Measurement(
-    assay: OntoClass,
+    assay: OntologyClass,
     value: MeasurementValue,
     timeObserved: Option[TimeElement] = None)
 
 final case class ProcedureAction(
-    code: OntoClass,
-    bodySite: Option[OntoClass] = None,
+    code: OntologyClass,
+    bodySite: Option[OntologyClass] = None,
     performed: Option[TimeElement] = None)
 
 final case class Treatment(
-    agent: OntoClass,
-    routeOfAdministration: Option[OntoClass] = None,
+    agent: OntologyClass,
+    routeOfAdministration: Option[OntologyClass] = None,
     drugType: Option[String] = None,
     cumulativeDose: Option[Quantity] = None)
 
 final case class MedicalAction(
     procedure: Option[ProcedureAction] = None,
     treatment: Option[Treatment] = None,
-    treatmentTarget: Option[OntoClass] = None,
-    treatmentIntent: Option[OntoClass] = None,
-    responseToTreatment: Option[OntoClass] = None,
-    treatmentTerminationReason: Option[OntoClass] = None)
+    treatmentTarget: Option[OntologyClass] = None,
+    treatmentIntent: Option[OntologyClass] = None,
+    responseToTreatment: Option[OntologyClass] = None,
+    treatmentTerminationReason: Option[OntologyClass] = None)
 
 final case class GeneDescriptor(valueId: String, symbol: String)
 
@@ -92,7 +93,7 @@ final case class VariationDescriptor(
     id: String,
     expressions: Seq[VcfExpression] = Seq.empty,
     vcfRecord: Option[VcfRecord] = None,
-    allelicState: Option[OntoClass] = None,
+    allelicState: Option[OntologyClass] = None,
     geneContext: Option[GeneDescriptor] = None,
     moleculeContext: Option[String] = None)
 
@@ -108,7 +109,7 @@ final case class GenomicInterpretation(
     variantInterpretation: Option[VariantInterpretation] = None)
 
 final case class Diagnosis(
-    disease: OntoClass,
+    disease: OntologyClass,
     genomicInterpretations: Seq[GenomicInterpretation] = Seq.empty)
 
 final case class Interpretation(
@@ -116,15 +117,11 @@ final case class Interpretation(
     progressStatus: String,
     diagnosis: Option[Diagnosis] = None)
 
-final case class MetaResource(
-    id: String, name: String, url: String,
-    version: String, namespacePrefix: String, iriPrefix: String)
-
 final case class MetaData(
     created: String,
     createdBy: String,
     submittedBy: Option[String] = None,
-    resources: Seq[MetaResource] = Seq.empty,
+    resources: Seq[Resource] = Seq.empty,
     phenopacketSchemaVersion: String = "2.0")
 
 final case class Phenopacket(
@@ -187,7 +184,7 @@ object PhenopacketJson {
   private def arr(items: Seq[J]): J = JArr(items)
 
   // --- message renderers --------------------------------------------
-  private def ontoClass(o: OntoClass): J = obj("id" -> str(o.id), "label" -> str(o.label))
+  private def ontoClass(o: OntologyClass): J = obj("id" -> str(o.id), "label" -> str(o.label))
 
   private def timeElement(t: TimeElement): J = obj(
     "age" -> opt(t.age)(a => obj("iso8601duration" -> str(a.iso8601duration))),

@@ -2,6 +2,8 @@ package graft.config
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
+import graft.extract.{CsvSourceConfig, ExcelSheetConfig}
 import graft.model._
 
 import java.nio.file.{Files, Paths}
@@ -18,19 +20,14 @@ import scala.util.Try
   */
 object ConfigLoader {
 
-  /** `ordinal` = the source's position in the config's single ordered
-    * `data_sources` list. The decode splits the list by type, but fact
-    * provenance sorts by data-source REGISTRATION order (Facts.scala) —
-    * the reference iterates the configured list in order, so a mixed
-    * csv/excel config must reassemble that order, not csvs-then-excels.
+  /** `ordinal` (here and on [[CsvSourceConfig]]) = the source's
+    * position in the config's single ordered `data_sources` list. The
+    * decode splits the list by type, but fact provenance sorts by
+    * data-source REGISTRATION order (Facts.scala) — the reference
+    * iterates the configured list in order, so a mixed csv/excel config
+    * must reassemble that order, not csvs-then-excels.
     */
-  final case class CsvDataSource(
-      source: String, separator: String, hasHeaders: Boolean,
-      patientsAreRows: Boolean, tableContext: TableContext, ordinal: Int = 0)
-  final case class ExcelSheet(
-      sheetName: String, hasHeaders: Boolean, patientsAreRows: Boolean,
-      tableContext: TableContext)
-  final case class ExcelDataSource(source: String, sheets: Seq[ExcelSheet],
+  final case class ExcelDataSource(source: String, sheets: Seq[ExcelSheetConfig],
       ordinal: Int = 0)
 
   final case class LoaderConfig(outputDir: String, createDir: Boolean)
@@ -49,7 +46,7 @@ object ConfigLoader {
     */
   final case class StrategySpec(name: String, params: Option[JsonNode])
   final case class GraftConfig(
-      csvSources: Seq[CsvDataSource],
+      csvSources: Seq[CsvSourceConfig],
       excelSources: Seq[ExcelDataSource],
       strategies: Seq[StrategySpec],
       loader: Option[LoaderConfig],
@@ -106,7 +103,7 @@ object ConfigLoader {
     val indexed = sources.zipWithIndex
     val csvs = indexed.filter { case (s, _) => text(s, "type").contains("csv") }
       .map { case (s, i) =>
-        CsvDataSource(
+        CsvSourceConfig(
           source = req(s, "source"),
           separator = text(s, "separator").getOrElse(","),
           hasHeaders = bool(s, "has_headers", default = true),
@@ -121,7 +118,7 @@ object ConfigLoader {
         ExcelDataSource(
           source = req(s, "source"),
           sheets = arr(s, "sheets").map { sh =>
-            ExcelSheet(
+            ExcelSheetConfig(
               sheetName = req(sh, "sheet_name"),
               hasHeaders = bool(sh, "has_headers", default = true),
               patientsAreRows = bool(sh, "patients_are_rows", default = true),
@@ -348,15 +345,14 @@ object ConfigLoader {
     * config-sized.
     */
   def loadAliasCsv(path: String, keyCol: String, aliasCol: String): Map[String, Option[String]] = {
-    val lines = Files.readAllLines(Paths.get(path)).asScala.toSeq.filter(_.nonEmpty)
-    require(lines.nonEmpty, s"alias csv $path is empty")
-    val header = splitCsvLine(lines.head)
+    val rows = readCsv(path)
+    require(rows.nonEmpty, s"alias csv $path is empty")
+    val header = rows.head
     val ki = header.indexOf(keyCol)
     val ai = header.indexOf(aliasCol)
     require(ki >= 0 && ai >= 0,
       s"alias csv $path needs columns '$keyCol' and '$aliasCol', has ${header.mkString(", ")}")
-    lines.tail.zipWithIndex.map { case (l, i) =>
-      val parts = splitCsvLine(l)
+    rows.tail.zipWithIndex.map { case (parts, i) =>
       val key = parts.lift(ki).getOrElse(throw new IllegalArgumentException(
         s"alias csv $path row ${i + 2}: only ${parts.size} field(s), " +
           s"key column '$keyCol' is at index ${ki + 1}"))
@@ -364,32 +360,21 @@ object ConfigLoader {
     }.toMap
   }
 
-  /** RFC-4180-ish field split: double quotes protect commas, doubled
-    * quotes escape a quote. A naive split(",") would shear a quoted
-    * "Smith, John" key into two wrong fields and silently corrupt the
-    * alias map.
+  /** The rows of a side CSV (alias map, terms file), read by the
+    * univocity parser Spark ships: double quotes protect commas, line
+    * breaks and doubled quotes, so a quoted "Smith, John" key stays one
+    * field. Every field is trimmed, an empty one is "", blank rows are
+    * skipped, and `#` is data, not a comment.
     */
-  private[config] def splitCsvLine(line: String): IndexedSeq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < line.length) {
-      val ch = line.charAt(i)
-      if (inQ) {
-        if (ch == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur += '"'; i += 1 }
-          else inQ = false
-        } else cur += ch
-      } else ch match {
-        case '"' => inQ = true
-        case ',' => out += cur.result().trim; cur.clear()
-        case c   => cur += c
-      }
-      i += 1
-    }
-    out += cur.result().trim
-    out.toIndexedSeq
+  private[config] def readCsv(path: String): Seq[IndexedSeq[String]] = {
+    val settings = new CsvParserSettings
+    settings.setMaxCharsPerColumn(-1) // a long synonym list is one field
+    settings.setLineSeparatorDetectionEnabled(true)
+    settings.setNullValue("")
+    settings.setEmptyValue("")
+    settings.getFormat.setComment('\u0000')
+    new CsvParser(settings).parseAll(new java.io.File(path), "UTF-8").asScala.toSeq
+      .map(_.toIndexedSeq.map(_.trim))
   }
 
   private def resolvePath(base: java.nio.file.Path, p: String): String = {

@@ -3,13 +3,12 @@ package graft.config
 import com.fasterxml.jackson.databind.JsonNode
 import graft.Pipeline
 import graft.collect.AssemblerConfig
-import graft.extract.{CsvSource, CsvSourceConfig, ExcelSheetConfig, ExcelSource}
+import graft.extract.{CsvSource, ExcelSource}
 import graft.model.Cdf
 import graft.ontology.{BiDict, BiDictLibrary, HgvsResolver, Resource}
 import graft.strategy._
 import org.apache.spark.sql.SparkSession
 
-import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Entry point 3.1 — config-driven execution: parse → bind → run
@@ -65,14 +64,9 @@ object ConfigRunner {
     * the first configured one is thrown.
     */
   def extractAll(spark: SparkSession, cfg: ConfigLoader.GraftConfig): Seq[Cdf] = {
-    val csvs = cfg.csvSources.map { s =>
-      s.ordinal -> (() => Seq(CsvSource.extract(spark, CsvSourceConfig(
-        s.source, s.tableContext, s.separator, s.hasHeaders, s.patientsAreRows))))
-    }
-    val excels = cfg.excelSources.map { e =>
-      e.ordinal -> (() => ExcelSource.extract(spark, e.source, e.sheets.map(sh =>
-        ExcelSheetConfig(sh.sheetName, sh.tableContext, sh.hasHeaders, sh.patientsAreRows))))
-    }
+    val csvs = cfg.csvSources.map(s => s.ordinal -> (() => Seq(CsvSource.extract(spark, s))))
+    val excels = cfg.excelSources.map(e =>
+      e.ordinal -> (() => ExcelSource.extract(spark, e.source, e.sheets)))
     Cdf.parMap((csvs ++ excels).sortBy(_._1))(_._2()).flatten
   }
 
@@ -108,17 +102,16 @@ object ConfigRunner {
         offline = library, cacheSize = r.cacheSize, ratePerSec = r.ratePerSec)
     }
 
-  /** `id,label,synonyms` CSV; synonyms `|`-separated. RFC-4180 quoting
-    * via [[ConfigLoader.splitCsvLine]] — a naive split(",") would shear
-    * a quoted "Seizure, generalized" label into two fields and build
-    * the dictionary with a corrupt label that every lookup then misses.
+  /** `id,label,synonyms` CSV, an optional `id,…` header row first;
+    * synonyms `|`-separated. Read by [[ConfigLoader.readCsv]], so a
+    * quoted "Seizure, generalized" label stays one field.
     */
   def loadTerms(path: String): Seq[(String, String, Seq[String])] = {
-    val lines = Files.readAllLines(Paths.get(path)).asScala.toSeq.filter(_.trim.nonEmpty)
-    val body = if (lines.headOption.exists(_.toLowerCase.startsWith("id,"))) lines.tail else lines
-    body.map { l =>
-      val parts = ConfigLoader.splitCsvLine(l)
-      require(parts.length >= 2, s"terms file $path: bad line '$l'")
+    val rows = ConfigLoader.readCsv(path)
+    val header = rows.headOption.exists(r => r.size > 1 && r(0).equalsIgnoreCase("id"))
+    val body = if (header) rows.tail else rows
+    body.map { parts =>
+      require(parts.length >= 2, s"terms file $path: bad row '${parts.mkString(",")}'")
       (parts(0), parts(1),
         parts.lift(2).map(_.split("\\|").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty))
     }

@@ -136,8 +136,8 @@ object RonParser {
         i += 1
       }
       val tok = s.substring(start, i)
-      if (isFloat) F.numberNode(tok.toDouble)
-      else F.numberNode(tok.toLong)
+      if (isFloat) F.numberNode(tok.toDoubleOption.getOrElse(fail(s"malformed number '$tok'")))
+      else F.numberNode(tok.toLongOption.getOrElse(fail(s"malformed or non-64-bit integer '$tok'")))
     }
 
     private def list(): JsonNode = {

@@ -1,308 +1,225 @@
 package graft.config
 
+import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 
 /** Minimal TOML → Jackson tree parser, covering the subset a pipeline
   * config uses (reference `config/config_loader.rs:8-44` accepts TOML as
   * a first-class format via the `config` crate; no TOML library exists
-  * on this classpath, so this is a small from-scratch reader):
+  * on this classpath). One pass over the text with a cursor, as
+  * [[RonParser]]. The grammar:
   *
-  *   - `[table]` / `[a.b]` headers, `[[array-of-tables]]` headers;
-  *   - `key = value` with dotted and quoted keys;
-  *   - basic ("…", with escapes) and literal ('…') strings;
-  *   - integers, floats, booleans;
-  *   - arrays (incl. multi-line) and inline tables `{k = v, …}`;
-  *   - `#` comments and blank lines.
+  *   - lines holding `key = value`, a `[a.b]` or `[[a.b]]` header, or
+  *     nothing, each with an optional `#` comment; LF or CRLF ends;
+  *   - dotted keys of bare (`A-Za-z0-9_-`) or quoted segments;
+  *   - one-line basic ("…", escapes `\b \t \n \f \r \" \\ \uXXXX
+  *     \UXXXXXXXX`) and literal ('…') strings; decimal integers of
+  *     64 bits with `_` between digits; floats with a fraction and/or
+  *     an exponent; booleans;
+  *   - arrays and inline tables `{k = v, …}`, which may span lines and
+  *     hold comments, with one optional trailing comma.
   *
-  * Dates, multi-line strings, and exotic escapes are outside the config
-  * surface and rejected loudly rather than mis-parsed.
+  * Anything else fails naming its line rather than parsing as another
+  * tree: dates, multi-line strings, `inf`/`nan`, hex/octal/binary or
+  * zero-led integers, other escapes, duplicate keys, redefined tables,
+  * empty elements, and anything but a comment after a header or value.
   */
 object TomlParser {
 
   private val F = JsonNodeFactory.instance
+  private val IntRe = "[+-]?(?:0|[1-9](?:_?[0-9])*)".r
+  private val FloatRe = s"$IntRe(?:\\.[0-9](?:_?[0-9])*)?(?:[eE][+-]?[0-9](?:_?[0-9])*)?".r
 
-  def parse(text: String): ObjectNode = {
-    val root = F.objectNode()
-    // Current insertion point (set by table headers).
-    var current: ObjectNode = root
+  def parse(text: String): ObjectNode = new P(text).document()
+
+  private final class P(s: String) {
+    private var i = 0
+    private var depth = 0 // open arrays and inline tables
+    private val root = F.objectNode()
     // Explicitly-defined [table] headers: TOML errors on redefining
     // one (a copy-pasted duplicate section would otherwise silently
     // merge). Implicit creation via [a.b] does NOT define [a].
-    val defined = scala.collection.mutable.Set.empty[Seq[String]]
+    private val defined = scala.collection.mutable.Set.empty[Seq[String]]
 
-    val logical = logicalLines(text)
-    logical.foreach { line =>
-      val s = line.trim
-      if (s.isEmpty) ()
-      else if (s.startsWith("[[") && s.endsWith("]]")) {
-        val path = keyPath(s.substring(2, s.length - 2).trim)
+    private def eof: Boolean = i >= s.length
+    private def peek: Char = if (eof) '\u0000' else s.charAt(i)
+    private def found: String =
+      if (eof) "the end of input" else if (peek == '\n' || peek == '\r') "a line end" else s"'$peek'"
+
+    private def fail(msg: String): Nothing = throw new IllegalArgumentException(
+      s"TOML parse error at line ${s.take(i).count(_ == '\n') + 1}: $msg")
+
+    def document(): ObjectNode = {
+      var current = root // insertion point, set by table headers
+      while (!eof) {
+        skip()
+        if (!eof && peek != '\n' && peek != '\r') {
+          current = if (peek == '[') header() else { keyValue(current); current }
+          skip()
+        }
+        if (!eof && !newline()) fail(s"expected a line end, got $found")
+      }
+      root
+    }
+
+    private def newline(): Boolean = {
+      val n = if (peek == '\n') 1 else if (s.startsWith("\r\n", i)) 2 else 0
+      i += n
+      n > 0
+    }
+
+    /** Skip spaces and a comment; line ends too inside brackets. */
+    private def skip(): Unit = {
+      var more = true
+      while (more) {
+        while (peek == ' ' || peek == '\t') i += 1
+        if (peek == '#') while (!eof && peek != '\n') i += 1
+        more = depth > 0 && newline()
+      }
+    }
+
+    private def expect(token: String): Unit =
+      if (s.startsWith(token, i)) i += token.length else fail(s"expected '$token', got $found")
+
+    /** `[a.b]` or `[[a.b]]`; returns the table later keys fill. */
+    private def header(): ObjectNode = {
+      val array = s.startsWith("[[", i)
+      i += (if (array) 2 else 1)
+      val path = key()
+      expect(if (array) "]]" else "]")
+      if (array) {
         val parent = descend(root, path.init)
         val arr = parent.get(path.last) match {
           case a: ArrayNode => a
-          case null => val a = F.arrayNode(); parent.set[ArrayNode](path.last, a); a
+          case null => parent.putArray(path.last)
           case other => fail(s"[[${path.mkString(".")}]] conflicts with $other")
         }
-        val obj = F.objectNode()
-        arr.add(obj)
-        current = obj
         // each [[x]] element may re-define its own [x.sub] tables —
         // they belong to the NEW element, not the previous one
         defined.filterInPlace(p => !p.startsWith(path))
-      } else if (s.startsWith("[") && s.endsWith("]")) {
-        val path = keyPath(s.substring(1, s.length - 1).trim)
+        arr.addObject()
+      } else {
         if (!defined.add(path))
           fail(s"table [${path.mkString(".")}] is defined twice — TOML " +
             "rejects redefinition; a duplicated section would silently merge")
-        current = descend(root, path)
-      } else {
-        val eq = indexOfTopLevel(s, '=')
-        if (eq < 0) fail(s"expected key = value, got: $s")
-        val path = keyPath(s.substring(0, eq).trim)
-        val target = descend(current, path.init)
-        // TOML rejects assigning one key twice — the LAST value would
-        // otherwise silently win over the one the author meant.
-        if (target.has(path.last))
-          fail(s"duplicate key '${path.mkString(".")}' — the earlier " +
-            "value would be silently overwritten")
-        target.set[ObjectNode](path.last, value(s.substring(eq + 1).trim))
-        ()
+        descend(root, path)
       }
     }
-    root
-  }
 
-  /** Join lines so that unterminated arrays continue onto the next line. */
-  private def logicalLines(text: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var pending = ""
-    text.linesIterator.foreach { raw =>
-      val line = stripComment(raw)
-      val cand = if (pending.isEmpty) line else pending + " " + line.trim
-      if (openBrackets(cand) > 0) pending = cand
-      else { out += cand; pending = "" }
+    private def key(): Seq[String] = {
+      skip()
+      val segment =
+        if (peek == '"' || peek == '\'') string()
+        else {
+          val start = i
+          while (peek < 128 && (peek.isLetterOrDigit || peek == '_' || peek == '-')) i += 1
+          if (i == start) fail(s"expected a key, got $found")
+          s.substring(start, i)
+        }
+      if (segment.isEmpty) fail("empty key")
+      skip()
+      if (peek == '.') { i += 1; segment +: key() } else Seq(segment)
     }
-    if (pending.trim.nonEmpty) fail(s"unterminated value: $pending")
-    out.toSeq
-  }
 
-  private def stripComment(line: String): String = {
-    var i = 0; var inB = false; var inL = false
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inB) { if (c == '\\') i += 1 else if (c == '"') inB = false }
-      else if (inL) { if (c == '\'') inL = false }
-      else c match {
-        case '"'  => inB = true
-        case '\'' => inL = true
-        case '#'  => return line.substring(0, i)
-        case _    => ()
+    private def keyValue(table: ObjectNode): Unit = {
+      val path = key()
+      expect("=")
+      val target = descend(table, path.init)
+      // TOML rejects assigning one key twice — the LAST value would
+      // otherwise silently win over the one the author meant.
+      if (target.has(path.last))
+        fail(s"duplicate key '${path.mkString(".")}' — the earlier " +
+          "value would be silently overwritten")
+      target.set[JsonNode](path.last, value())
+    }
+
+    /** Walk/create object nodes along a path; a trailing array-of-tables
+      * segment targets its LAST element (TOML semantics).
+      */
+    private def descend(node: ObjectNode, path: Seq[String]): ObjectNode =
+      path.foldLeft(node) { (acc, k) =>
+        acc.get(k) match {
+          case o: ObjectNode => o
+          case a: ArrayNode if a.size() > 0 && a.get(a.size() - 1).isObject =>
+            a.get(a.size() - 1).asInstanceOf[ObjectNode]
+          case null => acc.putObject(k)
+          case other => fail(s"key '$k' already holds $other")
+        }
       }
+
+    private def value(): JsonNode = {
+      skip()
+      peek match {
+        case '"' | '\'' => F.textNode(string())
+        case '[' =>
+          val arr = F.arrayNode()
+          items(']')(arr.add(value()))
+          arr
+        case '{' =>
+          val obj = F.objectNode()
+          items('}')(keyValue(obj))
+          obj
+        case _ =>
+          val start = i
+          while (!eof && " \t\r\n,]}#".indexOf(peek) < 0) i += 1
+          val token = s.substring(start, i)
+          token match {
+            case "" => fail(s"expected a value, got $found")
+            case "true" => F.booleanNode(true)
+            case "false" => F.booleanNode(false)
+            case IntRe() => F.numberNode(token.replace("_", "").toLongOption
+              .getOrElse(fail(s"integer $token does not fit 64 bits")))
+            case FloatRe() => F.numberNode(token.replace("_", "").toDouble)
+            case _ => fail(s"unsupported TOML value: $token")
+          }
+      }
+    }
+
+    /** `open item, …, item close`, a trailing comma allowed. */
+    private def items(close: Char)(item: => Unit): Unit = {
+      depth += 1
+      i += 1
+      skip()
+      while (peek != close) {
+        item
+        skip()
+        if (peek == ',') { i += 1; skip() }
+        else if (peek != close) fail(s"expected ',' or '$close', got $found")
+      }
+      depth -= 1
       i += 1
     }
-    line
-  }
 
-  private def openBrackets(s: String): Int = {
-    var depth = 0; var i = 0; var inB = false; var inL = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inB) { if (c == '\\') i += 1 else if (c == '"') inB = false }
-      else if (inL) { if (c == '\'') inL = false }
-      else c match {
-        case '"'       => inB = true
-        case '\''      => inL = true
-        case '[' | '{' => depth += 1
-        case ']' | '}' => depth -= 1
-        case _         => ()
+    /** A basic string (escapes decoded) or literal string, on one line. */
+    private def string(): String = {
+      val quote = peek
+      val sb = new StringBuilder
+      i += 1
+      while (peek != quote) {
+        if (eof || peek == '\n') fail("unterminated string")
+        if (quote == '"' && peek == '\\') sb ++= unescape()
+        else { sb += peek; i += 1 }
       }
       i += 1
-    }
-    depth
-  }
-
-  /** First top-level (outside quotes/brackets) occurrence of `ch`. */
-  private def indexOfTopLevel(s: String, ch: Char): Int = {
-    var i = 0; var depth = 0; var inB = false; var inL = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inB) { if (c == '\\') i += 1 else if (c == '"') inB = false }
-      else if (inL) { if (c == '\'') inL = false }
-      else if (c == '"') inB = true
-      else if (c == '\'') inL = true
-      else if (c == '[' || c == '{') depth += 1
-      else if (c == ']' || c == '}') depth -= 1
-      else if (c == ch && depth == 0) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Dotted key path, honoring quoted segments. Basic-string (`"…"`)
-    * segments decode escapes — without that, `"a\"b"` would terminate
-    * at the escaped quote and silently yield the wrong key — and an
-    * unbalanced quote at end-of-key fails instead of being ignored.
-    */
-  private def keyPath(s: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0; val cur = new StringBuilder; var inB = false; var inL = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inB) {
-        if (c == '\\') {
-          val (decoded, next) = decodeEscape(s, i)
-          cur.append(decoded); i = next - 1
-        } else if (c == '"') inB = false
-        else cur.append(c)
-      }
-      else if (inL) { if (c == '\'') inL = false else cur.append(c) }
-      else c match {
-        case '"'  => inB = true
-        case '\'' => inL = true
-        case '.'  => parts += cur.result().trim; cur.clear()
-        case c2   => cur.append(c2)
-      }
-      i += 1
-    }
-    if (inB || inL) fail(s"unbalanced quote in key '$s'")
-    parts += cur.result().trim
-    val path = parts.toSeq
-    require(path.forall(_.nonEmpty), s"bad key '$s'")
-    path
-  }
-
-  /** Walk/create object nodes along a path; a trailing array-of-tables
-    * segment targets its LAST element (TOML semantics).
-    */
-  private def descend(node: ObjectNode, path: Seq[String]): ObjectNode =
-    path.foldLeft(node) { (acc, k) =>
-      acc.get(k) match {
-        case o: ObjectNode => o
-        case a: ArrayNode if a.size() > 0 && a.get(a.size() - 1).isObject =>
-          a.get(a.size() - 1).asInstanceOf[ObjectNode]
-        case null => val o = F.objectNode(); acc.set[ObjectNode](k, o); o
-        case other => fail(s"key '$k' already holds $other")
-      }
+      sb.result()
     }
 
-  private[config] def value(s: String): com.fasterxml.jackson.databind.JsonNode = s match {
-    case "" => fail("empty value")
-    case _ if s.startsWith("\"") =>
-      // The closing quote must END the value — trailing tokens after it
-      // (`name = "a" "b"`) are rejected, not silently dropped.
-      require(s.length >= 2 && closingQuoteIndex(s) == s.length - 1,
-        s"malformed string value: $s")
-      // Genuine TOML basic-string decoding (NOT delegated to a JSON
-      // parser, which rejects valid TOML content: a literal tab inside
-      // the string, and the core \UXXXXXXXX 8-hex-digit escape).
-      F.textNode(unescapeBasic(s.substring(1, s.length - 1)))
-    case _ if s.startsWith("'") =>
-      require(s.endsWith("'") && s.length >= 2 &&
-        s.indexOf('\'', 1) == s.length - 1, s"malformed literal string: $s")
-      F.textNode(s.substring(1, s.length - 1))
-    case "true"  => F.booleanNode(true)
-    case "false" => F.booleanNode(false)
-    case _ if s.startsWith("[") =>
-      require(s.endsWith("]"), s"unterminated array: $s")
-      val arr = F.arrayNode()
-      splitTopLevel(s.substring(1, s.length - 1)).foreach(v => arr.add(value(v.trim)))
-      arr
-    case _ if s.startsWith("{") =>
-      require(s.endsWith("}"), s"unterminated inline table: $s")
-      val obj = F.objectNode()
-      splitTopLevel(s.substring(1, s.length - 1)).foreach { kv =>
-        val eq = indexOfTopLevel(kv, '=')
-        require(eq > 0, s"bad inline table entry: $kv")
-        val path = keyPath(kv.substring(0, eq).trim)
-        val target = descend(obj, path.init)
-        if (target.has(path.last))
-          fail(s"duplicate key '${path.mkString(".")}' in inline table: $s")
-        target.set[ObjectNode](path.last, value(kv.substring(eq + 1).trim))
-      }
-      obj
-    case _ =>
-      val t = s.replace("_", "")
-      t.toLongOption.map(F.numberNode)
-        .orElse(t.toDoubleOption.map(F.numberNode))
-        .getOrElse(fail(s"unsupported TOML value: $s"))
-  }
-
-  /** Split on top-level commas (outside quotes/brackets), dropping
-    * empty trailing entries.
-    */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0; var i = 0; var depth = 0; var inB = false; var inL = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inB) { if (c == '\\') i += 1 else if (c == '"') inB = false }
-      else if (inL) { if (c == '\'') inL = false }
-      else if (c == '"') inB = true
-      else if (c == '\'') inL = true
-      else if (c == '[' || c == '{') depth += 1
-      else if (c == ']' || c == '}') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Decode the escape sequence at `s(i) == '\\'`; returns the decoded
-    * text and the index just past the sequence. The TOML basic-string
-    * escape set: \b \t \n \f \r \" \\ \u (4 hex) \U (8 hex); anything
-    * else fails loudly.
-    */
-  private def decodeEscape(s: String, i: Int): (String, Int) = {
-    if (i + 1 >= s.length) fail(s"dangling escape in: $s")
-    s.charAt(i + 1) match {
-      case 'b'  => ("\b", i + 2)
-      case 't'  => ("\t", i + 2)
-      case 'n'  => ("\n", i + 2)
-      case 'f'  => ("\f", i + 2)
-      case 'r'  => ("\r", i + 2)
-      case '"'  => ("\"", i + 2)
-      case '\\' => ("\\", i + 2)
-      case 'u' =>
-        if (i + 6 > s.length) fail(s"truncated \\u escape in: $s")
-        (String.valueOf(Character.toChars(
-          Integer.parseInt(s.substring(i + 2, i + 6), 16))), i + 6)
-      case 'U' =>
-        if (i + 10 > s.length) fail(s"truncated \\U escape in: $s")
-        (String.valueOf(Character.toChars(
-          Integer.parseInt(s.substring(i + 2, i + 10), 16))), i + 10)
-      case other => fail(s"unsupported escape \\$other in: $s")
+    /** The TOML basic-string escape at the cursor: \b \t \n \f \r \" \\
+      * \u (4 hex) \U (8 hex); anything else fails loudly.
+      */
+    private def unescape(): String = {
+      val c = if (i + 1 < s.length) s.charAt(i + 1) else '\u0000'
+      i += 2
+      val simple = "btnfr\"\\".indexOf(c)
+      if (simple >= 0) "\b\t\n\f\r\"\\".substring(simple, simple + 1)
+      else if (c == 'u' || c == 'U') {
+        val n = if (c == 'u') 4 else 8
+        val digits = s.slice(i, i + n)
+        val cp = if (digits.matches(s"[0-9A-Fa-f]{$n}")) Integer.parseUnsignedInt(digits, 16) else -1
+        if (!Character.isValidCodePoint(cp)) fail(s"bad \\$c escape '$digits'")
+        i += n
+        new String(Character.toChars(cp))
+      } else fail(s"unsupported escape \\$c")
     }
   }
-
-  /** TOML basic-string body → decoded text. */
-  private[config] def unescapeBasic(body: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\\') {
-        val (decoded, next) = decodeEscape(body, i)
-        sb.append(decoded); i = next
-      } else { sb.append(c); i += 1 }
-    }
-    sb.result()
-  }
-
-  /** Index of the unescaped closing quote of a basic string starting
-    * at 0, or -1.
-    */
-  private def closingQuoteIndex(s: String): Int = {
-    var i = 1
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' => i += 2
-        case '"'  => return i
-        case _    => i += 1
-      }
-    }
-    -1
-  }
-
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"TOML parse error: $msg")
 }

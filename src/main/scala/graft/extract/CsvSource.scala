@@ -17,13 +17,17 @@ import org.apache.spark.sql.SparkSession
   * names "0","1",… (reference `extract/utils.rs:1-3`). A
   * patients-as-columns file is collected in file order and transposed
   * on the driver by [[Grid.toDataFrame]], like an XLSX sheet.
+  *
+  * `ordinal` is the source's position in a config's single ordered
+  * `data_sources` list (see [[graft.config.ConfigLoader]]).
   */
 final case class CsvSourceConfig(
-    path: String,
+    source: String,
     tableContext: TableContext,
     separator: String = ",",
     hasHeaders: Boolean = true,
-    patientsAreRows: Boolean = true)
+    patientsAreRows: Boolean = true,
+    ordinal: Int = 0)
 
 object CsvSource {
 
@@ -33,14 +37,14 @@ object CsvSource {
       .option("header", useHeader.toString)
       .option("sep", cfg.separator)
       .option("inferSchema", "false")
-      .csv(cfg.path)
+      .csv(cfg.source)
     val df =
       if (useHeader) raw
       else if (cfg.patientsAreRows) raw.toDF(defaultColumnNames(raw.columns.length): _*)
       else {
         val grid = raw.collect().toVector.map(r => Vector.tabulate(r.length)(r.getString))
         Grid.toDataFrame(spark, grid, cfg.hasHeaders, patientsAreRows = false,
-          s"csv '${cfg.path}'")
+          s"csv '${cfg.source}'")
       }
     Cdf.validated(cfg.tableContext, df)
   }

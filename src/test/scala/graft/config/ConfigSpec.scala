@@ -266,6 +266,10 @@ class ConfigSpec extends SparkSpec {
       "k,v\n\"Smith, John\",alias1\nplain,alias2\n")
     val m = ConfigLoader.loadAliasCsv(p, "k", "v")
     assert(m === Map("Smith, John" -> Some("alias1"), "plain" -> Some("alias2")))
+    // a quoted key may hold a line break and a doubled quote: one row
+    val multi = write(dir, "c.csv", "k,v\n\"Multi\nline \"\"key\"\"\",alias3\nplain,alias2\n")
+    assert(ConfigLoader.loadAliasCsv(multi, "k", "v") ===
+      Map("Multi\nline \"key\"" -> Some("alias3"), "plain" -> Some("alias2")))
 
     val short = write(dir, "b.csv", "a,b,k\nx,y,key1\nx\n")
     val e = intercept[IllegalArgumentException] {

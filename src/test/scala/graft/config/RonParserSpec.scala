@@ -85,5 +85,11 @@ class RonParserSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](parse("""(a: )"""))
     assertThrows[IllegalArgumentException](parse("""(a: "unterminated)"""))
     assertThrows[IllegalArgumentException](parse("""{1: "non-string key"}"""))
+    // a number token that does not convert fails naming its offset, not
+    // as a bare NumberFormatException
+    Seq("(a: 1.2.3)", "(a: 1e)", "(a: -)", "(a: 99999999999999999999)").foreach { junk =>
+      val e = intercept[IllegalArgumentException](parse(junk))
+      assert(e.getMessage.startsWith("RON parse error at offset"), e.getMessage)
+    }
   }
 }

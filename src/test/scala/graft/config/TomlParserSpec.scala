@@ -1,11 +1,17 @@
 package graft.config
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Edge cases of the vendored TOML reader (beyond the ConfigSpec
   * YAML↔TOML round-trip): quoting, comments, multi-line arrays, dotted
   * and quoted keys, arrays of tables, loud rejection of unsupported
-  * syntax.
+  * syntax, and a round trip of generated config-shaped trees.
   */
 class TomlParserSpec extends AnyFunSuite {
 
@@ -134,5 +140,113 @@ class TomlParserSpec extends AnyFunSuite {
     // trailing tokens after a closed string are rejected, not dropped
     intercept[IllegalArgumentException](parse("""a = "x" "y""""))
     intercept[IllegalArgumentException](parse("""a = 'x' trailing"""))
+  }
+
+  test("malformed headers, bare keys, elements and numbers fail naming their line") {
+    Seq("""[pipeline] strategies = ["alias_map"]""", "[t]]", "a b = 1",
+      "x = [1,,2]", "x = {a = 1,, b = 2}",
+      "x = 1f", "x = 1d", "x = .5", "x = 5.", "x = 07", "x = _1_", "x = 1__0",
+      "x = Infinity", "x = NaN", "x = 99999999999999999999").foreach { bad =>
+      val e = intercept[IllegalArgumentException](parse(bad))
+      assert(e.getMessage.startsWith("TOML parse error at line 1:"), s"$bad: ${e.getMessage}")
+    }
+    // lines are counted through comments and multi-line arrays
+    val e = intercept[IllegalArgumentException](parse("a = [\n  1, # one\n  2,\n]\nb = 1f\n"))
+    assert(e.getMessage.startsWith("TOML parse error at line 5:"), e.getMessage)
+  }
+
+  // --- round trip of generated config-shaped trees -------------------
+  // (raw ScalaCheck generators with fixed seeds, as PropertySpec)
+  private val F = JsonNodeFactory.instance
+  private val key: Gen[String] = Gen.frequency(
+    3 -> Gen.oneOf(Gen.identifier.map(_.take(10)), Gen.oneOf("a-b", "x_1", "42", "-", "_")),
+    1 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, Gen.oneOf(".", "\"", "#", "=", " ", "a", "\\", "'")))
+      .map(_.mkString))
+  private val text: Gen[String] = Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.oneOf(
+    "a", "Z", " ", "\t", "#", "\"", "'", "\\", "\n", "\u0001", "=", ",", "[", "]", "{", "}", "é",
+    new String(Character.toChars(0x1F600)))).map(_.mkString))
+  private val scalar: Gen[JsonNode] = Gen.oneOf(
+    text.map(F.textNode),
+    Gen.long.map(l => F.numberNode(l)),
+    Gen.long.map { bits =>
+      val d = java.lang.Double.longBitsToDouble(bits)
+      F.numberNode(if (d.isNaN || d.isInfinite) bits / 7.0 else d)
+    },
+    Gen.oneOf(true, false).map(b => F.booleanNode(b)))
+  private def obj(depth: Int): Gen[ObjectNode] =
+    Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.zip(key, value(depth - 1)))).map { kvs =>
+      val o = F.objectNode()
+      kvs.distinctBy(_._1).foreach { case (k, v) => o.set[JsonNode](k, v) }
+      o
+    }
+  private def value(depth: Int): Gen[JsonNode] =
+    if (depth <= 0) scalar
+    else Gen.frequency(3 -> scalar, 1 -> obj(depth),
+      1 -> Gen.choose(0, 3).flatMap(n => Gen.oneOf(Gen.listOfN(n, value(depth - 1)),
+        Gen.listOfN(n, obj(depth - 1)))).map { vs =>
+        val a = F.arrayNode(); vs.foreach(a.add); a
+      })
+
+  /** `v` as a TOML value; `tables` picks the header form's spellings
+    * (literal strings where possible, \U escapes, multi-line arrays).
+    */
+  private def render(v: JsonNode, tables: Boolean): String = v match {
+    case o: ObjectNode =>
+      o.properties.asScala.map(e => s"${renderKey(e.getKey)} = ${render(e.getValue, tables)}")
+        .mkString("{", ", ", "}")
+    case _ if v.isArray =>
+      val vs = v.elements.asScala.map(render(_, tables)).toSeq
+      if (tables) vs.map(x => s"\n  $x, # item").mkString("[", "", "\n]")
+      else vs.mkString("[", ", ", "]")
+    case _ if v.isTextual => quote(v.textValue, tables)
+    case _ => v.toString // longs, doubles (Java's 1.0E10 is TOML) and booleans
+  }
+  private def renderKey(k: String): String =
+    if (k.matches("[A-Za-z0-9_-]+")) k else quote(k, literal = false)
+  private def quote(s: String, literal: Boolean): String =
+    if (literal && s.forall(c => c == '\t' || c >= ' ' && c != '\'' && c != 0x7f)) s"'$s'"
+    else s.codePoints.toArray.map {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\t' => "\t"
+      case c if c < ' ' => f"\\u$c%04X"
+      case c if c > 0xFFFF && literal => f"\\U$c%08X"
+      case c => new String(Character.toChars(c))
+    }.mkString("\"", "", "\"")
+
+  /** Header form: a table's plain keys, then `[path]` per object and
+    * `[[path]]` per element of a non-empty array of objects.
+    */
+  private def tablesForm(root: ObjectNode): String = {
+    val sb = new StringBuilder
+    def isTableArray(v: JsonNode) = v.isArray && !v.isEmpty && v.elements.asScala.forall(_.isObject)
+    def table(o: ObjectNode, path: Seq[String]): Unit = {
+      val entries = o.properties.asScala.map(e => e.getKey -> e.getValue).toSeq
+      def header(k: String) = (path :+ k).map(renderKey).mkString(" . ")
+      entries.foreach { case (k, v) =>
+        if (!v.isObject && !isTableArray(v))
+          sb ++= s"${renderKey(k)} = ${render(v, tables = true)} # c\n"
+      }
+      entries.foreach {
+        case (k, v: ObjectNode) => sb ++= s"\n[ ${header(k)} ] # table\n"; table(v, path :+ k)
+        case (k, v) if isTableArray(v) => v.elements.asScala.foreach { e =>
+          sb ++= s"[[${header(k)}]]\n"; table(e.asInstanceOf[ObjectNode], path :+ k)
+        }
+        case _ => ()
+      }
+    }
+    table(root, Seq.empty)
+    sb.result()
+  }
+
+  test("property: config-shaped trees round-trip through both TOML forms") {
+    val trees = (0 until 400).flatMap(i => obj(4).apply(Gen.Parameters.default, Seed(i.toLong)))
+    assert(trees.size >= 300)
+    trees.foreach { tree =>
+      val inline = tree.properties.asScala
+        .map(e => s"${renderKey(e.getKey)} = ${render(e.getValue, tables = false)}").mkString("\r\n")
+      Seq(tablesForm(tree), inline).foreach(toml => assert(parse(toml) == tree, toml))
+    }
   }
 }

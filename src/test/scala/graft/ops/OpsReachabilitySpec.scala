@@ -5,15 +5,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Drift guard: `ops/` and `functions/` keep only what a catalog query,
+/** Drift guard: `src/main/scala/graft` keeps only what a catalog query,
   * an ETL stage or a main reaches. Every non-private top-level
   * `case class` or `object`, and every non-private `def`, `val` or
-  * `case class` declared at member level of a top-level object, in
-  * `src/main/scala/graft/ops` or `src/main/scala/graft/functions` must
+  * `case class` declared at member level of a top-level object, must
   * be named (word-bounded, comments stripped) somewhere in `src/main` or
   * `perfbench/src` besides a declaration. The only exceptions are the
-  * reference twins that tests compare a reached path against, each
-  * listed with the test that uses it.
+  * reference twins in `ops/` and `functions/` that tests compare a
+  * reached path against, each listed with the test that uses it, and
+  * the mains that `runMain` starts.
   */
 class OpsReachabilitySpec extends AnyFunSuite {
 
@@ -31,6 +31,11 @@ class OpsReachabilitySpec extends AnyFunSuite {
       "PropertySpec: calendar diff round-trips; native calendar_age_iso equals the algebra",
     "DateTimeFns.toIso8601" ->
       "IsoDurationSecondsSpec: toIso8601 renders a negative calendar diff as null")
+
+  /** The entry points `sbt runMain` starts, which nothing in src/main
+    * names.
+    */
+  private val mains = Set("Bench", "Verify", "FallbackSweep", "ScaleUp")
 
   /** `src` with comments removed, and with string literal contents
     * removed too when `keepStrings` is false (so braces inside strings
@@ -123,30 +128,39 @@ class OpsReachabilitySpec extends AnyFunSuite {
   private lazy val corpus = (scalaFiles(Paths.get("src/main")) ++ scalaFiles(Paths.get("perfbench/src")))
     .map(p => strip(Files.readString(p), keepStrings = true)).mkString("\n")
 
-  /** Fails unless every definition scanned in `src/main/scala/graft/<dir>`
-    * is reached, or is one of the `twins` listed for that directory.
+  /** Fails unless every definition scanned in `files` is reached, or
+    * is one of the `listed` exceptions for them.
     */
-  private def assertReached(dir: String, minDeclared: Int, twins: Set[String]): Unit = {
-    val declared = scalaFiles(Paths.get(s"src/main/scala/graft/$dir")).flatMap(members)
-    assert(declared.size > minDeclared, s"$dir scan found only ${declared.size} declarations")
+  private def assertReached(label: String, files: Seq[Path], minDeclared: Int,
+      listed: Set[String]): Unit = {
+    val declared = files.flatMap(members)
+    assert(declared.size > minDeclared, s"$label scan found only ${declared.size} declarations")
     val declKeyword = """(?:def|val|var|class|object|trait|type)\s+$""".r
     def used(name: String): Boolean =
       s"\\b${java.util.regex.Pattern.quote(name)}\\b".r.findAllMatchIn(corpus).exists { m =>
         declKeyword.findFirstIn(corpus.substring(math.max(0, m.start - 16), m.start)).isEmpty
       }
     val unreached = declared.filterNot(d => used(d.split('.').last)).toSet
-    val stale = twins -- unreached
-    assert(stale.isEmpty, s"listed reference twins that are reached or gone: ${stale.mkString(", ")}")
-    val orphans = (unreached -- twins).toSeq.sorted
-    assert(orphans.isEmpty, s"$dir definitions no query, ETL stage or main reaches: ${orphans.mkString(", ")}")
+    val stale = listed -- unreached
+    assert(stale.isEmpty, s"listed exceptions that are reached or gone: ${stale.mkString(", ")}")
+    val orphans = (unreached -- listed).toSeq.sorted
+    assert(orphans.isEmpty, s"$label definitions no query, ETL stage or main reaches: ${orphans.mkString(", ")}")
   }
 
+  private def dir(name: String): Seq[Path] = scalaFiles(Paths.get(s"src/main/scala/graft/$name"))
+
   test("every public ops member is reached from src/main or perfbench, or is a listed reference twin") {
-    assertReached("ops", 100, opsTwins.keySet)
+    assertReached("ops", dir("ops"), 100, opsTwins.keySet)
   }
 
   test("every public functions definition is reached from src/main or perfbench, " +
       "or is a listed reference twin") {
-    assertReached("functions", 30, functionsTwins.keySet)
+    assertReached("functions", dir("functions"), 30, functionsTwins.keySet)
+  }
+
+  test("every public definition of the other packages is reached from src/main or perfbench, " +
+      "or is a main run by runMain") {
+    val scanned = dir("ops") ++ dir("functions")
+    assertReached("graft", dir("").filterNot(scanned.contains), 200, mains)
   }
 }
