@@ -159,7 +159,7 @@ object PhenopacketJson {
   // --- JSON tree ----------------------------------------------------
   sealed trait J
   final case class JStr(s: String) extends J
-  final case class JNum(d: Double, isInt: Boolean) extends J
+  final case class JNum(d: Double) extends J
   /** Exact integer node: longs must NOT round-trip through JNum's
     * Double (values above 2^53 — a VCF pos, a day count — would render
     * rounded, and the `l.toDouble == n.d` integrality check would
@@ -172,7 +172,7 @@ object PhenopacketJson {
   case object JOmit extends J
 
   private def str(s: String): J = JStr(s)
-  private def num(d: Double): J = JNum(d, isInt = false)
+  private def num(d: Double): J = JNum(d)
   private def int(l: Long): J = JInt(l)
   private def bool(b: Boolean): J = JBool(b)
   private def opt[A](o: Option[A])(f: A => J): J = o.fold[J](JOmit)(f)
@@ -308,7 +308,7 @@ object PhenopacketJson {
       if (n.d.isNaN) "\"NaN\""               // protobuf-JSON convention:
       else if (n.d.isPosInfinity) "\"Infinity\""  // non-finite doubles are
       else if (n.d.isNegInfinity) "\"-Infinity\"" // quoted strings
-      else if (n.isInt || n.d == math.floor(n.d)) {
+      else if (n.d == math.floor(n.d)) {
         // protobuf-JSON renders integral doubles without a fraction
         val l = n.d.toLong
         if (l.toDouble == n.d) l.toString else n.d.toString

@@ -1,22 +1,30 @@
 package graft.config
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.core.JsonFactory
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
 import graft.extract.{CsvSourceConfig, ExcelSheetConfig}
 import graft.model._
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** S7 — declarative pipeline configuration (reference
   * `phenoxtract/src/config/config_loader.rs:8-44`,
   * `CONFIG_YAML_README.md`): YAML/YML/JSON/TOML configs with
-  * `${ENV_VAR}` shell expansion, decoded strictly (unknown strategy /
-  * context names fail fast). TOML rides the vendored [[TomlParser]],
+  * `${ENV_VAR}` shell expansion. TOML rides the vendored [[TomlParser]],
   * RON the vendored [[RonParser]] — every format the reference's
   * config crate accepts.
+  *
+  * Every format reaches the decoder as one Jackson tree, and every
+  * object in it is decoded through [[read]], as the reference decodes
+  * with serde's `deny_unknown_fields`: an unknown, misspelled or
+  * repeated key, a missing required key, a list or object where
+  * another shape belongs, and an unknown strategy or context name all
+  * fail naming the key and its path (`data_sources[2].series_contexts[1]`).
   */
 object ConfigLoader {
 
@@ -73,14 +81,16 @@ object ConfigLoader {
       password: Option[String] = None)
 
   def load(path: String): GraftConfig = {
-    val raw = Files.readString(Paths.get(path))
-    val expanded = expandEnv(raw)
+    val expanded = expandEnv(Files.readString(Paths.get(path)))
+    // a repeated key fails, as in TOML and RON, where Jackson would
+    // keep the last one
+    def jackson(factory: JsonFactory) = new ObjectMapper(factory)
+      .enable(DeserializationFeature.FAIL_ON_READING_DUP_TREE_KEY).readTree(expanded)
     val tree =
-      if (path.endsWith(".yaml") || path.endsWith(".yml"))
-        new ObjectMapper(new YAMLFactory()).readTree(expanded)
+      if (path.endsWith(".yaml") || path.endsWith(".yml")) jackson(new YAMLFactory())
       else if (path.endsWith(".toml")) TomlParser.parse(expanded)
       else if (path.endsWith(".ron")) RonParser.parse(expanded)
-      else new ObjectMapper().readTree(expanded)
+      else jackson(new JsonFactory())
     decode(tree, Paths.get(path).getParent)
   }
 
@@ -95,248 +105,166 @@ object ConfigLoader {
 
   // ------------------------------------------------------------------
 
-  private def decode(root: JsonNode, baseDir: java.nio.file.Path): GraftConfig = {
-    val sources = arr(root, "data_sources")
-    // Every source must declare its type — a missing/typo'd 'type'
-    // would otherwise silently drop the whole table from the pipeline.
-    sources.foreach(s => req(s, "type"))
-    val indexed = sources.zipWithIndex
-    val csvs = indexed.filter { case (s, _) => text(s, "type").contains("csv") }
-      .map { case (s, i) =>
-        CsvSourceConfig(
-          source = req(s, "source"),
-          separator = text(s, "separator").getOrElse(","),
-          hasHeaders = bool(s, "has_headers", default = true),
-          patientsAreRows = bool(s, "patients_are_rows", default = true),
+  private def decode(root: JsonNode, baseDir: Path): GraftConfig = read(root, "") { f =>
+    val sources = f.arr("data_sources").zipWithIndex.map { case ((n, path), i) =>
+      read(n, path)(source(_, i, baseDir))
+    }
+    f.obj("pipeline") { p =>
+      GraftConfig(
+        csvSources = sources.collect { case Left(csv) => csv },
+        excelSources = sources.collect { case Right(excel) => excel },
+        strategies = p.arr("strategies").map { case (n, path) =>
+          val (name, param) = single(n, path)
+          StrategySpec(name, param.map(_._1))
+        },
+        loader = p.obj("loader")(_.obj("file_system")(fs =>
+          LoaderConfig(fs.req("output_dir"), fs.bool("create_dir", default = false)))).flatten,
+        metaData = p.obj("meta_data")(metaData).getOrElse(read(null, "")(metaData)),
+        hgvsCache = p.text("hgvs_cache").map(resolvePath(baseDir, _)),
+        resolver = p.obj("resolver") { r =>
+          ResolverConfig(
+            className = r.req("class"),
+            cacheSize = r.positive("cache_size", integral = true).fold(100000)(_.toInt),
+            ratePerSec = r.positive("rate_limit_per_sec", integral = false).map(_.toDouble),
+            url = r.text("url"),
+            user = r.text("user"),
+            password = r.text("password"))
+        })
+    }.getOrElse(f.missing("pipeline"))
+  }
+
+  /** One `data_sources` entry; `ordinal` is its place in that list. */
+  private def source(s: Fields, ordinal: Int,
+      baseDir: Path): Either[CsvSourceConfig, ExcelDataSource] =
+    s.req("type") match {
+      case "csv" =>
+        Left(CsvSourceConfig(
+          source = s.req("source"),
+          separator = s.text("separator").getOrElse(","),
+          hasHeaders = s.bool("has_headers", default = true),
+          patientsAreRows = s.bool("patients_are_rows", default = true),
           tableContext = TableContext(
-            name = text(s, "name").getOrElse(req(s, "source")),
-            seriesContexts = arr(s, "series_contexts").map(seriesContext(_, baseDir))),
-          ordinal = i)
-      }
-    val excels = indexed.filter { case (s, _) => text(s, "type").contains("excel") }
-      .map { case (s, i) =>
-        ExcelDataSource(
-          source = req(s, "source"),
-          sheets = arr(s, "sheets").map { sh =>
+            name = s.text("name").getOrElse(s.req("source")),
+            seriesContexts = s.objs("series_contexts")(seriesContext(_, baseDir))),
+          ordinal = ordinal))
+      case "excel" =>
+        Right(ExcelDataSource(
+          source = s.req("source"),
+          sheets = s.objs("sheets") { sh =>
             ExcelSheetConfig(
-              sheetName = req(sh, "sheet_name"),
-              hasHeaders = bool(sh, "has_headers", default = true),
-              patientsAreRows = bool(sh, "patients_are_rows", default = true),
+              sheetName = sh.req("sheet_name"),
+              hasHeaders = sh.bool("has_headers", default = true),
+              patientsAreRows = sh.bool("patients_are_rows", default = true),
               tableContext = TableContext(
-                name = req(sh, "sheet_name"),
-                seriesContexts = arr(sh, "series_contexts").map(seriesContext(_, baseDir))))
+                name = sh.req("sheet_name"),
+                seriesContexts = sh.objs("series_contexts")(seriesContext(_, baseDir))))
           },
-          ordinal = i)
-      }
-    val unknownTypes = sources.flatMap(s => text(s, "type")).filterNot(Set("csv", "excel"))
-    require(unknownTypes.isEmpty, s"unknown data source type(s): ${unknownTypes.mkString(", ")}")
+          ordinal = ordinal))
+      case other => s.invalid("type", s"must be csv or excel, got '$other'")
+    }
 
-    val pipeline = Option(root.get("pipeline")).getOrElse(
-      throw new IllegalArgumentException("config missing 'pipeline'"))
-    val md = Option(pipeline.get("meta_data"))
+  /** `meta_data`'s resource fields (an object or a list of them) by the
+    * resolution class each feeds (reference transform_context wiring).
+    */
+  private val scopeFields = Seq(
+    "hpo_resource" -> "hpo",
+    "disease_resources" -> "disease",
+    "assay_resources" -> "assay",
+    "unit_resources" -> "unit",
+    "qualitative_measurement_resources" -> "qual",
+    "gene_resources" -> "gene",
+    "allelic_resources" -> "allelic",
+    "anatomy_resources" -> "anatomy",
+    "drug_resources" -> "drug",
+    "treatment_resources" -> "treatment",
+    "procedure_resources" -> "procedure")
 
-    // Resource lists are grouped by resolution class (reference
-    // transform_context wiring); field name → scope tag.
-    val scopeFields = Seq(
-      "hpo_resource" -> "hpo",
-      "disease_resources" -> "disease",
-      "assay_resources" -> "assay",
-      "unit_resources" -> "unit",
-      "qualitative_measurement_resources" -> "qual",
-      "gene_resources" -> "gene",
-      "allelic_resources" -> "allelic",
-      "anatomy_resources" -> "anatomy",
-      "drug_resources" -> "drug",
-      "treatment_resources" -> "treatment",
-      "procedure_resources" -> "procedure")
-    val byScope: Seq[(String, Seq[ResourceConfig])] =
-      md.toSeq.flatMap { m =>
-        scopeFields.map { case (field, scope) =>
-          scope -> Option(m.get(field)).toSeq.flatMap {
-            case n if n.isArray => n.elements().asScala.toSeq.map(resource)
-            case n              => Seq(resource(n))
-          }
-        }
-      }
-    val resources = byScope.flatMap(_._2).distinctBy(_.id)
-    val scopes = byScope.collect {
-      case (scope, rs) if rs.nonEmpty => scope -> rs.map(_.id)
-    }.toMap
-
-    val strategies = Option(pipeline.get("strategies")).toSeq
-      .flatMap(_.elements().asScala).map { n =>
-        if (n.isTextual) StrategySpec(n.asText(), None)
-        else {
-          val fields = n.properties().asScala.toSeq
-          require(fields.size == 1, s"parameterized strategy must have one key, got $n")
-          StrategySpec(fields.head.getKey, Some(fields.head.getValue))
-        }
-      }
-
-    GraftConfig(
-      csvSources = csvs,
-      excelSources = excels,
-      strategies = strategies,
-      loader = Option(pipeline.get("loader")).flatMap(l => Option(l.get("file_system"))).map(fs =>
-        LoaderConfig(req(fs, "output_dir"), bool(fs, "create_dir", default = false))),
-      metaData = MetaDataConfig(
-        createdBy = md.flatMap(m => text(m, "created_by")).getOrElse("graft"),
-        submittedBy = md.flatMap(m => text(m, "submitted_by")),
-        cohortName = md.flatMap(m => text(m, "cohort_name")).getOrElse("cohort"),
-        resources = resources,
-        scopes = scopes),
-      hgvsCache = text(pipeline, "hgvs_cache").map(resolvePath(baseDir, _)),
-      resolver = Option(pipeline.get("resolver")).map { r =>
-        ResolverConfig(
-          className = req(r, "class"),
-          cacheSize = positive(r, "cache_size", integral = true).fold(100000)(_.toInt),
-          ratePerSec = positive(r, "rate_limit_per_sec", integral = false).map(_.toDouble),
-          // text(), not raw asText(): an explicit null would otherwise
-          // become the literal string "null" and reach the HTTP layer
-          // as a URL/credential instead of failing the required-field
-          // validation.
-          url = text(r, "url"),
-          user = text(r, "user"),
-          password = text(r, "password"))
-      })
+  private def metaData(m: Fields): MetaDataConfig = {
+    val byScope = scopeFields.map { case (field, scope) =>
+      scope -> m.value(field) { (n, path) =>
+        if (n.isArray) elements(n, path).map { case (e, p) => read(e, p)(resource) }
+        else Seq(read(n, path)(resource))
+      }.getOrElse(Seq.empty)
+    }
+    MetaDataConfig(
+      createdBy = m.text("created_by").getOrElse("graft"),
+      submittedBy = m.text("submitted_by"),
+      cohortName = m.text("cohort_name").getOrElse("cohort"),
+      resources = byScope.flatMap(_._2).distinctBy(_.id),
+      scopes = byScope.collect { case (scope, rs) if rs.nonEmpty => scope -> rs.map(_.id) }.toMap)
   }
 
-  private def resource(n: JsonNode): ResourceConfig = ResourceConfig(
-    id = req(n, "id"),
-    name = text(n, "name").getOrElse(req(n, "id")),
-    url = text(n, "url").getOrElse(""),
-    version = text(n, "version").getOrElse("unknown"),
-    namespacePrefix = text(n, "namespace_prefix").getOrElse(req(n, "id").toUpperCase),
-    iriPrefix = text(n, "iri_prefix").getOrElse(""),
-    termsFile = text(n, "terms_file"))
+  private def resource(r: Fields): ResourceConfig = {
+    val id = r.req("id")
+    ResourceConfig(
+      id = id,
+      name = r.text("name").getOrElse(id),
+      url = r.text("url").getOrElse(""),
+      version = r.text("version").getOrElse("unknown"),
+      namespacePrefix = r.text("namespace_prefix").getOrElse(id.toUpperCase),
+      iriPrefix = r.text("iri_prefix").getOrElse(""),
+      termsFile = r.text("terms_file"))
+  }
 
-  private def seriesContext(n: JsonNode, baseDir: java.nio.file.Path): SeriesContext =
+  private def seriesContext(f: Fields, baseDir: Path): SeriesContext =
     SeriesContext(
-      identifier = identifier(n.get("identifier")),
-      headerContext = Option(n.get("header_context")).map(context).getOrElse(Context.NoContext),
-      dataContext = Option(n.get("data_context")).map(context).getOrElse(Context.NoContext),
-      fillMissing = text(n, "fill_missing"),
-      aliasMap = Option(n.get("alias_map")).map(aliasMap(_, baseDir)),
-      buildingBlockId = text(n, "building_block_id"))
+      identifier = f.value("identifier")(identifier).getOrElse(f.missing("identifier")),
+      headerContext = f.value("header_context")(context).getOrElse(Context.NoContext),
+      dataContext = f.value("data_context")(context).getOrElse(Context.NoContext),
+      fillMissing = f.text("fill_missing"),
+      aliasMap = f.obj("alias_map")(aliasMap(_, baseDir)),
+      buildingBlockId = f.text("building_block_id"))
 
-  private def identifier(n: JsonNode): Identifier = {
-    require(n != null, "series context missing 'identifier'")
-    if (n.isArray) Identifier.Multi(n.elements().asScala.map(_.asText()).toSeq)
-    else if (n.isObject) {
-      val rx = text(n, "regex").getOrElse(
-        throw new IllegalArgumentException(s"object identifier must be {regex: …}, got $n"))
-      Identifier.regex(rx)
-    } else Identifier.Single(n.asText())
-  }
+  /** A column name, a list of names, or `{regex: …}`. */
+  private def identifier(n: JsonNode, path: String): Identifier =
+    if (n.isArray) Identifier.Multi(elements(n, path).map { case (e, p) => scalar(e, p) })
+    else if (n.isObject) read(n, path)(f => Identifier.regex(f.req("regex")))
+    else Identifier.Single(scalar(n, path))
 
-  /** Context decode: bare snake_case name, or single-key object for
-    * parameterized contexts (`onset: age`,
+  /** Context decode: a bare snake_case name, or a one-key object for
+    * the eight parameterized contexts (`onset: age`,
     * `quantitative_measurement: {assay_id:…, unit_ontology_id:…}`).
     */
-  def context(n: JsonNode): Context = {
-    if (n.isTextual) contextByName(n.asText(), None)
-    else {
-      val fields = n.fields().asScala.toSeq
-      require(fields.size == 1, s"parameterized context must have one key, got $n")
-      val (name, v) = (fields.head.getKey, fields.head.getValue)
-      contextByName(name, Some(v))
-    }
-  }
-
-  private def contextByName(name: String, param: Option[JsonNode]): Context = {
+  private[config] def context(n: JsonNode, path: String): Context = {
     import Context._
-    def timeKind: TimeKind = TimeKind.parse(param.map(_.asText()).getOrElse("age"))
-    name.trim.toLowerCase match {
-      case "subject_id"             => SubjectId
-      case "subject_sex"            => SubjectSex
-      case "date_of_birth"          => DateOfBirth
-      case "vital_status"           => VitalStatus
-      case "time_at_last_encounter" => TimeAtLastEncounter(timeKind)
-      case "time_of_death"          => TimeOfDeath(timeKind)
-      case "cause_of_death"         => CauseOfDeath
-      case "survival_time_days"     => SurvivalTimeDays
-      case "hpo"                    => Hpo
-      case "disease"                => Disease
-      case "multi_hpo_id"           => MultiHpoId
-      case "onset"                  => Onset(timeKind)
-      case "hpo_or_disease"         => HpoOrDisease
-      case "time_of_resolution"     => TimeOfResolution(timeKind)
-      case "severity"               => Severity
-      case "observation_status"     => ObservationStatus
-      case "primary_site"           => PrimarySite
-      case "hgvs"                   => Hgvs
-      case "hgnc"                   => Hgnc
-      case "quantitative_measurement" =>
-        val p = param.getOrElse(throw new IllegalArgumentException(
-          "quantitative_measurement needs {assay_id, unit_ontology_id}"))
-        QuantitativeMeasurement(req(p, "assay_id"), req(p, "unit_ontology_id"))
-      case "qualitative_measurement" =>
-        val p = param.getOrElse(throw new IllegalArgumentException(
-          "qualitative_measurement needs {assay_id}"))
-        QualitativeMeasurement(req(p, "assay_id"))
-      case "time_of_measurement"    => TimeOfMeasurement(timeKind)
-      case "reference_range_start"  => ReferenceRangeStart
-      case "reference_range_end"    => ReferenceRangeEnd
-      case "treatment_agent"        => TreatmentAgent
-      case "route_of_administration" => RouteOfAdministration
-      case "drug_type"              => DrugType
-      case "treatment_target"       => TreatmentTarget
-      case "treatment_intent"       => TreatmentIntent
-      case "response_to_treatment"  => ResponseToTreatment
-      case "treatment_termination_reason" => TreatmentTerminationReason
-      case "procedure"              => Procedure
-      case "procedure_body_site"    => ProcedureBodySite
-      case "time_of_procedure"      => TimeOfProcedure(timeKind)
-      case "quantity_value"         => QuantityValue
-      case "quantity_unit"          => QuantityUnit
-      case "none"                   => NoContext
-      case other => throw new IllegalArgumentException(s"unknown context '$other'")
-    }
-  }
-
-  /** Context KIND by config name (reference strum `ContextKind` —
-    * discriminant-only contexts for strategy targeting).
-    */
-  def contextKind(name: String): ContextKind = {
     import ContextKind._
-    name.trim.toLowerCase match {
-      case "hpo"                     => KHpo
-      case "disease"                 => KDisease
-      case "severity"                => KSeverity
-      case "primary_site"            => KPrimarySite
-      case "qualitative_measurement" => KQualitativeMeasurement
-      case "subject_sex"             => KSubjectSex
-      case "vital_status"            => KVitalStatus
-      case "cause_of_death"          => KCauseOfDeath
-      case "hpo_or_disease"          => KHpoOrDisease
-      case "treatment_agent"         => KTreatmentAgent
-      case "procedure"               => KProcedure
-      case other => throw new IllegalArgumentException(s"unknown context kind '$other'")
+    val (name, param) = single(n, path)
+    def time: TimeKind = TimeKind.parse(param.fold("age") { case (v, p) => scalar(v, p) })
+    def params[A](decode: Fields => A): A = read(param.map(_._1).orNull, param.fold(path)(_._2))(decode)
+    ContextKind.byName.get(name.trim.toLowerCase) match {
+      case Some(KTimeAtLastEncounter) => TimeAtLastEncounter(time)
+      case Some(KTimeOfDeath)         => TimeOfDeath(time)
+      case Some(KOnset)               => Onset(time)
+      case Some(KTimeOfResolution)    => TimeOfResolution(time)
+      case Some(KTimeOfMeasurement)   => TimeOfMeasurement(time)
+      case Some(KTimeOfProcedure)     => TimeOfProcedure(time)
+      case Some(KQuantitativeMeasurement) =>
+        params(p => QuantitativeMeasurement(p.req("assay_id"), p.req("unit_ontology_id")))
+      case Some(KQualitativeMeasurement) => params(p => QualitativeMeasurement(p.req("assay_id")))
+      case Some(kind) if param.isEmpty => plain(kind)
+      case Some(_) => fail(s"context '$name' in ${where(path)} takes no parameter")
+      case None => fail(s"unknown context '${name.trim.toLowerCase}' in ${where(path)}")
     }
   }
 
-  /** Alias map: inline mappings or S8 CSV form
-    * ({path, key_column_name, alias_column_name}).
+  /** Alias map: inline `mappings` (any keys, each value a string or
+    * null) or the S8 CSV form ({path, key_column_name, alias_column_name}).
     */
-  private def aliasMap(n: JsonNode, baseDir: java.nio.file.Path): AliasMap = {
-    val outputType = text(n, "output_data_type").map(_.toLowerCase) match {
+  private def aliasMap(f: Fields, baseDir: Path): AliasMap = {
+    val outputType = f.text("output_data_type").map(_.toLowerCase) match {
       case Some("boolean")  => OutputDataType.Bool
       case Some("string") | None => OutputDataType.Str
       case Some("float64")  => OutputDataType.F64
       case Some("int64")    => OutputDataType.I64
       case Some("date")     => OutputDataType.Date
       case Some("datetime") => OutputDataType.Datetime
-      case Some(other) => throw new IllegalArgumentException(s"unknown output_data_type '$other'")
+      case Some(other) => f.invalid("output_data_type", s"names no known type: '$other'")
     }
-    val m = n.get("mappings")
-    require(m != null, "alias_map missing 'mappings'")
-    val entries: Map[String, Option[String]] =
-      if (m.has("path")) loadAliasCsv(
-        resolvePath(baseDir, req(m, "path")),
-        req(m, "key_column_name"), req(m, "alias_column_name"))
-      else m.fields().asScala.map { e =>
-        e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-      }.toMap
+    val entries = f.obj("mappings") { m =>
+      if (m.keys.contains("path")) loadAliasCsv(resolvePath(baseDir, m.req("path")),
+        m.req("key_column_name"), m.req("alias_column_name"))
+      else m.keys.map(k => k -> m.text(k)).toMap
+    }.getOrElse(f.missing("mappings"))
     AliasMap(entries, outputType).normalized
   }
 
@@ -352,12 +280,15 @@ object ConfigLoader {
     val ai = header.indexOf(aliasCol)
     require(ki >= 0 && ai >= 0,
       s"alias csv $path needs columns '$keyCol' and '$aliasCol', has ${header.mkString(", ")}")
-    rows.tail.zipWithIndex.map { case (parts, i) =>
-      val key = parts.lift(ki).getOrElse(throw new IllegalArgumentException(
-        s"alias csv $path row ${i + 2}: only ${parts.size} field(s), " +
-          s"key column '$keyCol' is at index ${ki + 1}"))
-      key -> parts.lift(ai).filter(_.nonEmpty)
-    }.toMap
+    rows.tail.zipWithIndex.foldLeft(Map.empty[String, Option[String]]) { case (m, (parts, i)) =>
+      val key = parts.lift(ki).getOrElse(fail(s"alias csv $path row ${i + 2}: only " +
+        s"${parts.size} field(s), key column '$keyCol' is at index ${ki + 1}"))
+      val alias = parts.lift(ai).filter(_.nonEmpty)
+      // an exact repeat is harmless; a second alias would silently win
+      if (m.get(key).exists(_ != alias))
+        fail(s"alias csv $path row ${i + 2}: key '$key' is aliased twice, to different values")
+      m + (key -> alias)
+    }
   }
 
   /** The rows of a side CSV (alias map, terms file), read by the
@@ -377,48 +308,102 @@ object ConfigLoader {
       .map(_.toIndexedSeq.map(_.trim))
   }
 
-  private def resolvePath(base: java.nio.file.Path, p: String): String = {
+  private def resolvePath(base: Path, p: String): String = {
     val path = Paths.get(p)
     if (path.isAbsolute || base == null) p else base.resolve(p).toString
   }
 
-  // --- tiny node helpers ---------------------------------------------
-  private def arr(n: JsonNode, field: String): Seq[JsonNode] =
-    Option(n.get(field)).toSeq.flatMap(_.elements().asScala)
-  private def text(n: JsonNode, field: String): Option[String] =
-    Option(n.get(field)).filterNot(_.isNull).map(_.asText())
-  private def req(n: JsonNode, field: String): String =
-    text(n, field).getOrElse(
-      throw new IllegalArgumentException(s"config missing required field '$field'"))
-  /** A boolean config field: a boolean, "true"/"false" in any case, or
-    * 0/1. An EXPLICITLY null value ("has_headers:" with nothing after
-    * it) keeps the declared default, like text(). Anything else fails
-    * naming the field: Jackson's asBoolean() reads every other value —
-    * a `ture` typo included — as false, which would silently ingest a
-    * header row as data or transpose a table.
+  // --- the reader ---------------------------------------------------
+
+  private def fail(message: String): Nothing = throw new IllegalArgumentException(message)
+  private def where(path: String): String = if (path.isEmpty) "the config" else s"'$path'"
+
+  /** Decodes the object `n` at `path` (`data_sources[2].series_contexts[1]`,
+    * "" for the root), then fails naming the first key `decode` did not
+    * read: an unknown or misspelled key is an error, as under the
+    * reference's serde `deny_unknown_fields`. A null `n` reads as an
+    * empty object; any other non-object fails.
     */
-  private[config] def bool(n: JsonNode, field: String, default: Boolean): Boolean =
-    Option(n.get(field)).filterNot(_.isNull).fold(default) { v =>
+  private[config] def read[A](n: JsonNode, path: String)(decode: Fields => A): A = {
+    val node = if (n == null || n.isNull) JsonNodeFactory.instance.objectNode() else n
+    if (!node.isObject) fail(s"${where(path)} must be an object, got $n")
+    val fields = new Fields(node, path)
+    val decoded = decode(fields)
+    fields.keys.find(!fields.seen(_)).foreach(k => fail(s"unknown key '$k' in ${where(path)}"))
+    decoded
+  }
+
+  /** One config object's keys. Each accessor reads one key and records
+    * it for [[read]]; an absent key and an explicitly null one
+    * (`has_headers:` with nothing after it) both read as absent, so
+    * they keep the declared default.
+    */
+  private[config] final class Fields(node: JsonNode, path: String) {
+    private[ConfigLoader] val seen = scala.collection.mutable.Set.empty[String]
+    def keys: Seq[String] = node.fieldNames.asScala.toSeq
+
+    /** The key's value decoded with its path, unless absent or null. */
+    def value[A](key: String)(decode: (JsonNode, String) => A): Option[A] = {
+      seen += key
+      Option(node.get(key)).filterNot(_.isNull)
+        .map(decode(_, if (path.isEmpty) key else s"$path.$key"))
+    }
+    def text(key: String): Option[String] = value(key)(scalar)
+    def req(key: String): String = text(key).getOrElse(missing(key))
+    def obj[A](key: String)(decode: Fields => A): Option[A] = value(key)(read(_, _)(decode))
+    /** A list's elements, each with its path; absent is empty. */
+    def arr(key: String): Seq[(JsonNode, String)] = value(key)(elements).getOrElse(Seq.empty)
+    def objs[A](key: String)(decode: Fields => A): Seq[A] =
+      arr(key).map { case (n, p) => read(n, p)(decode) }
+
+    def missing(key: String): Nothing = fail(s"missing key '$key' in ${where(path)}")
+    def invalid(key: String, problem: String): Nothing =
+      fail(s"key '$key' in ${where(path)} $problem")
+
+    /** A boolean: a boolean, "true"/"false" in any case, or 0/1.
+      * Anything else fails naming the key: Jackson's asBoolean() reads
+      * every other value — a `ture` typo included — as false, which
+      * would silently ingest a header row as data or transpose a table.
+      */
+    def bool(key: String, default: Boolean): Boolean = value(key) { (v, _) =>
       if (v.isBoolean) v.booleanValue()
       else if (v.isTextual && v.textValue.equalsIgnoreCase("true")) true
       else if (v.isTextual && v.textValue.equalsIgnoreCase("false")) false
       else if (v.isIntegralNumber && v.canConvertToInt && (v.intValue == 0 || v.intValue == 1))
         v.intValue == 1
-      else throw new IllegalArgumentException(
-        s"config field '$field' must be true or false, got '${v.asText}'")
-    }
+      else invalid(key, s"must be true or false, got '${v.asText}'")
+    }.getOrElse(default)
 
-  /** A positive number config field (an integer when `integral`): a
-    * number or numeric text. An explicitly null value keeps the
-    * declared default, like text(). Anything else fails naming the
-    * field: Jackson's asInt(default) reads `big` as the default and
-    * truncates 1.5, and asDouble() reads `fast` as 0.0.
-    */
-  private[config] def positive(n: JsonNode, field: String, integral: Boolean): Option[BigDecimal] =
-    Option(n.get(field)).filterNot(_.isNull).map { v =>
+    /** A positive number (an integer when `integral`): a number or
+      * numeric text. Anything else fails naming the key: Jackson's
+      * asInt(default) reads `big` as the default and truncates 1.5, and
+      * asDouble() reads `fast` as 0.0.
+      */
+    def positive(key: String, integral: Boolean): Option[BigDecimal] = value(key) { (v, _) =>
       val number = if (v.isNumber || v.isTextual) Try(BigDecimal(v.asText.trim)).toOption else None
-      number.filter(x => x > 0 && (!integral || x.isValidInt)).getOrElse(
-        throw new IllegalArgumentException(s"config field '$field' must be a positive " +
-          s"${if (integral) "integer" else "number"}, got '${v.asText}'"))
+      number.filter(x => x > 0 && (!integral || x.isValidInt)).getOrElse(invalid(key,
+        s"must be a positive ${if (integral) "integer" else "number"}, got '${v.asText}'"))
     }
+  }
+
+  /** A scalar's text; a list or object fails where Jackson's asText()
+    * would read it as "".
+    */
+  private[config] def scalar(n: JsonNode, path: String): String =
+    if (n.isContainerNode) fail(s"${where(path)} must be a string, got $n") else n.asText
+
+  private def elements(n: JsonNode, path: String): Seq[(JsonNode, String)] =
+    if (n.isArray) n.elements.asScala.zipWithIndex.map { case (e, i) => e -> s"$path[$i]" }.toSeq
+    else fail(s"${where(path)} must be a list, got $n")
+
+  /** A bare name, or an object with one key naming and parameterizing
+    * it (`onset: age`, `date_to_age: {strict: false}`): the name, and
+    * the parameter with its path unless absent or null.
+    */
+  private def single(n: JsonNode, path: String): (String, Option[(JsonNode, String)]) =
+    if (n.isTextual) (n.textValue, None)
+    else if (n.isObject && n.size == 1) {
+      val e = n.properties.iterator.next()
+      (e.getKey, Option(e.getValue).filterNot(_.isNull).map(_ -> s"$path.${e.getKey}"))
+    } else fail(s"${where(path)} must be a name or an object with one key, got $n")
 }

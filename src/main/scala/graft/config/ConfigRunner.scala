@@ -1,15 +1,13 @@
 package graft.config
 
-import com.fasterxml.jackson.databind.JsonNode
 import graft.Pipeline
 import graft.collect.AssemblerConfig
 import graft.extract.{CsvSource, ExcelSource}
-import graft.model.Cdf
+import graft.model.ContextKind._
+import graft.model.{Cdf, ContextKind}
 import graft.ontology.{BiDict, BiDictLibrary, HgvsResolver, Resource}
 import graft.strategy._
 import org.apache.spark.sql.SparkSession
-
-import scala.jdk.CollectionConverters._
 
 /** Entry point 3.1 — config-driven execution: parse → bind → run
   * (reference `Phenoxtract::try_from(config).run()`,
@@ -74,9 +72,12 @@ object ConfigRunner {
     BiDictLibrary(
       cfg.metaData.resources.map { r =>
         val resource = Resource(r.id, r.name, r.url, r.version, r.namespacePrefix, r.iriPrefix)
-        r.termsFile match {
-          case Some(path) => BiDict.fromEntries(resource, loadTerms(path))
-          case None       => BiDict.fromEntries(resource, Seq.empty)
+        r.termsFile.fold(BiDict.fromEntries(resource, Seq.empty)) { path =>
+          val terms = loadTerms(path)
+          try BiDict.fromEntries(resource, terms) catch {
+            case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(s"terms file $path: ${e.getMessage}", e)
+          }
         }
       },
       cfg.metaData.scopes)
@@ -119,47 +120,35 @@ object ConfigRunner {
 
   /** Build one strategy from its config entry (reference
     * `config/strategy_config.rs` + `strategies/strategy_factory.rs`).
-    * Parameter blocks are decoded strictly, as the reference's
-    * `deny_unknown_fields`: a strategy accepts only the keys it reads,
-    * and one that reads none rejects any non-null block.
+    * Parameter blocks are read as [[ConfigLoader.read]] reads every
+    * config object: a strategy accepts only the keys it reads, and one
+    * that reads none rejects any key.
     */
   def strategyFor(spec: ConfigLoader.StrategySpec, library: BiDictLibrary): Strategy = {
-    def params(keys: String*): Option[JsonNode] = spec.params.filterNot(_.isNull).map { p =>
-      // the first key it does not take, else the block when it takes none
-      val bad = if (p.isObject) p.fieldNames.asScala.find(!keys.contains(_)) else Some(p.toString)
-      bad.orElse(Option.when(keys.isEmpty)(p.toString)).foreach { key =>
-        throw new IllegalArgumentException(s"strategy '${spec.name.trim}' " +
-          (if (keys.isEmpty) "takes no parameters" else s"takes only ${keys.mkString(", ")}") +
-          s", got '$key'")
-      }
-      p
-    }
-    spec.name.trim.toLowerCase match {
+    val name = spec.name.trim
+    def params[A](decode: ConfigLoader.Fields => A): A =
+      ConfigLoader.read(spec.params.orNull, name)(decode)
+    name.toLowerCase match {
       case "default_mapping" =>
-        spec.params.map(_.asText("")).getOrElse("sex") match {
+        spec.params.fold("sex")(ConfigLoader.scalar(_, name)) match {
           case "sex"          => MappingStrategy.defaultSex
           case "vital_status" => MappingStrategy.defaultVitalStatus
           case other => throw new IllegalArgumentException(
             s"unknown default_mapping '$other' (expected sex | vital_status)")
         }
-      case "date_to_age" =>
-        DateToAgeStrategy(params("strict").forall(ConfigLoader.bool(_, "strict", default = true)))
-      case "ontology_normaliser" =>
-        params("ontology", "data_context_kind") match {
-          case None => OntologyNormaliserStrategy(library)
-          case Some(p) =>
-            val onto = Option(p.get("ontology")).map(_.asText()).getOrElse(
-              throw new IllegalArgumentException("ontology_normaliser needs 'ontology'"))
-            val kind = Option(p.get("data_context_kind")).map(_.asText()).getOrElse(
-              throw new IllegalArgumentException("ontology_normaliser needs 'data_context_kind'"))
-            val scopedDicts = {
-              val byScope = library.scopes.get(onto).map(_ => library.scoped(onto))
-              byScope.getOrElse(library.dicts.filter(_.resource.id == onto))
-            }
-            require(scopedDicts.nonEmpty, s"ontology_normaliser: no dictionaries for '$onto'")
-            OntologyNormaliserStrategy(BiDictLibrary(scopedDicts),
-              Set(ConfigLoader.contextKind(kind)))
-        }
+      case "date_to_age" => DateToAgeStrategy(params(_.bool("strict", default = true)))
+      case "ontology_normaliser" if spec.params.isEmpty => OntologyNormaliserStrategy(library)
+      case "ontology_normaliser" => params { p =>
+        val onto = p.req("ontology")
+        val kind = p.req("data_context_kind").trim.toLowerCase
+        val scopedDicts =
+          if (library.scopes.contains(onto)) library.scoped(onto)
+          else library.dicts.filter(_.resource.id == onto)
+        require(scopedDicts.nonEmpty, s"ontology_normaliser: no dictionaries for '$onto'")
+        OntologyNormaliserStrategy(BiDictLibrary(scopedDicts),
+          Set(ContextKind.byName.get(kind).filter(normalisable).getOrElse(
+            throw new IllegalArgumentException(s"unknown context kind '$kind'"))))
+      }
       case other =>
         val strategy = other match {
           case "alias_map"                    => AliasMapStrategy
@@ -172,8 +161,15 @@ object ConfigRunner {
           case "hpo_disease_splitter"         => HpoDiseaseSplitterStrategy(library)
           case _ => throw new IllegalArgumentException(s"unknown strategy '$other'")
         }
-        params() // none of these reads a parameter
+        params(_ => ()) // none of these reads a parameter
         strategy
     }
   }
+
+  /** The context kinds `ontology_normaliser` may target (reference
+    * strum `ContextKind`).
+    */
+  private val normalisable: Set[ContextKind] = Set(KHpo, KDisease, KSeverity, KPrimarySite,
+    KQualitativeMeasurement, KSubjectSex, KVitalStatus, KCauseOfDeath, KHpoOrDisease,
+    KTreatmentAgent, KProcedure)
 }

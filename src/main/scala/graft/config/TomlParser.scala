@@ -22,7 +22,9 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNo
   * Anything else fails naming its line rather than parsing as another
   * tree: dates, multi-line strings, `inf`/`nan`, hex/octal/binary or
   * zero-led integers, other escapes, duplicate keys, redefined tables,
-  * empty elements, and anything but a comment after a header or value.
+  * a `[table]` header naming an array, a header or dotted key adding
+  * to an array or inline table written as a value, empty elements, and
+  * anything but a comment after a header or value.
   */
 object TomlParser {
 
@@ -40,6 +42,10 @@ object TomlParser {
     // one (a copy-pasted duplicate section would otherwise silently
     // merge). Implicit creation via [a.b] does NOT define [a].
     private val defined = scala.collection.mutable.Set.empty[Seq[String]]
+    // Arrays and inline tables written as values are complete: TOML
+    // lets no later header or dotted key add to them.
+    private val closed = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[JsonNode, java.lang.Boolean])
 
     private def eof: Boolean = i >= s.length
     private def peek: Char = if (eof) '\u0000' else s.charAt(i)
@@ -90,7 +96,7 @@ object TomlParser {
       if (array) {
         val parent = descend(root, path.init)
         val arr = parent.get(path.last) match {
-          case a: ArrayNode => a
+          case a: ArrayNode if !closed.contains(a) => a
           case null => parent.putArray(path.last)
           case other => fail(s"[[${path.mkString(".")}]] conflicts with $other")
         }
@@ -102,6 +108,8 @@ object TomlParser {
         if (!defined.add(path))
           fail(s"table [${path.mkString(".")}] is defined twice — TOML " +
             "rejects redefinition; a duplicated section would silently merge")
+        if (descend(root, path.init).get(path.last).isInstanceOf[ArrayNode])
+          fail(s"table [${path.mkString(".")}] names an array")
         descend(root, path)
       }
     }
@@ -139,6 +147,7 @@ object TomlParser {
     private def descend(node: ObjectNode, path: Seq[String]): ObjectNode =
       path.foldLeft(node) { (acc, k) =>
         acc.get(k) match {
+          case n if closed.contains(n) => fail(s"key '$k' holds a complete inline $n")
           case o: ObjectNode => o
           case a: ArrayNode if a.size() > 0 && a.get(a.size() - 1).isObject =>
             a.get(a.size() - 1).asInstanceOf[ObjectNode]
@@ -154,10 +163,12 @@ object TomlParser {
         case '[' =>
           val arr = F.arrayNode()
           items(']')(arr.add(value()))
+          closed.add(arr)
           arr
         case '{' =>
           val obj = F.objectNode()
           items('}')(keyValue(obj))
+          closed.add(obj)
           obj
         case _ =>
           val start = i

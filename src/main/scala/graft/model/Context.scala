@@ -98,49 +98,67 @@ object Context {
   case object QuantityUnit extends Context { val kind = KQuantityUnit }
 
   case object NoContext extends Context { val kind = KNone }
+
+  /** The contexts a config names without a parameter, by kind; the
+    * six [[Timed]] ones and the two measurements take one.
+    */
+  val plain: Map[ContextKind, Context] = Seq(SubjectId, SubjectSex, DateOfBirth, VitalStatus,
+    CauseOfDeath, SurvivalTimeDays, Hpo, Disease, MultiHpoId, HpoOrDisease, Severity,
+    ObservationStatus, PrimarySite, Hgvs, Hgnc, ReferenceRangeStart, ReferenceRangeEnd,
+    TreatmentAgent, RouteOfAdministration, DrugType, TreatmentTarget, TreatmentIntent,
+    ResponseToTreatment, TreatmentTerminationReason, Procedure, ProcedureBodySite,
+    QuantityValue, QuantityUnit, NoContext).map(c => c.kind -> c).toMap
 }
 
 /** Field-stripped discriminant mirror of Context (reference
   * `context.rs:38-46`, strum `ContextKind`): used for "any
   * QuantitativeMeasurement regardless of assay" style filtering.
+  * `name` is the snake_case name a config spells it with.
   */
-sealed trait ContextKind
+sealed abstract class ContextKind(val name: String) extends Serializable
 object ContextKind {
-  case object KSubjectId extends ContextKind
-  case object KSubjectSex extends ContextKind
-  case object KDateOfBirth extends ContextKind
-  case object KVitalStatus extends ContextKind
-  case object KTimeAtLastEncounter extends ContextKind
-  case object KTimeOfDeath extends ContextKind
-  case object KCauseOfDeath extends ContextKind
-  case object KSurvivalTimeDays extends ContextKind
-  case object KHpo extends ContextKind
-  case object KDisease extends ContextKind
-  case object KMultiHpoId extends ContextKind
-  case object KOnset extends ContextKind
-  case object KHpoOrDisease extends ContextKind
-  case object KTimeOfResolution extends ContextKind
-  case object KSeverity extends ContextKind
-  case object KObservationStatus extends ContextKind
-  case object KPrimarySite extends ContextKind
-  case object KHgvs extends ContextKind
-  case object KHgnc extends ContextKind
-  case object KQuantitativeMeasurement extends ContextKind
-  case object KQualitativeMeasurement extends ContextKind
-  case object KTimeOfMeasurement extends ContextKind
-  case object KReferenceRangeStart extends ContextKind
-  case object KReferenceRangeEnd extends ContextKind
-  case object KTreatmentAgent extends ContextKind
-  case object KRouteOfAdministration extends ContextKind
-  case object KDrugType extends ContextKind
-  case object KTreatmentTarget extends ContextKind
-  case object KTreatmentIntent extends ContextKind
-  case object KResponseToTreatment extends ContextKind
-  case object KTreatmentTerminationReason extends ContextKind
-  case object KProcedure extends ContextKind
-  case object KProcedureBodySite extends ContextKind
-  case object KTimeOfProcedure extends ContextKind
-  case object KQuantityValue extends ContextKind
-  case object KQuantityUnit extends ContextKind
-  case object KNone extends ContextKind
+  case object KSubjectId extends ContextKind("subject_id")
+  case object KSubjectSex extends ContextKind("subject_sex")
+  case object KDateOfBirth extends ContextKind("date_of_birth")
+  case object KVitalStatus extends ContextKind("vital_status")
+  case object KTimeAtLastEncounter extends ContextKind("time_at_last_encounter")
+  case object KTimeOfDeath extends ContextKind("time_of_death")
+  case object KCauseOfDeath extends ContextKind("cause_of_death")
+  case object KSurvivalTimeDays extends ContextKind("survival_time_days")
+  case object KHpo extends ContextKind("hpo")
+  case object KDisease extends ContextKind("disease")
+  case object KMultiHpoId extends ContextKind("multi_hpo_id")
+  case object KOnset extends ContextKind("onset")
+  case object KHpoOrDisease extends ContextKind("hpo_or_disease")
+  case object KTimeOfResolution extends ContextKind("time_of_resolution")
+  case object KSeverity extends ContextKind("severity")
+  case object KObservationStatus extends ContextKind("observation_status")
+  case object KPrimarySite extends ContextKind("primary_site")
+  case object KHgvs extends ContextKind("hgvs")
+  case object KHgnc extends ContextKind("hgnc")
+  case object KQuantitativeMeasurement extends ContextKind("quantitative_measurement")
+  case object KQualitativeMeasurement extends ContextKind("qualitative_measurement")
+  case object KTimeOfMeasurement extends ContextKind("time_of_measurement")
+  case object KReferenceRangeStart extends ContextKind("reference_range_start")
+  case object KReferenceRangeEnd extends ContextKind("reference_range_end")
+  case object KTreatmentAgent extends ContextKind("treatment_agent")
+  case object KRouteOfAdministration extends ContextKind("route_of_administration")
+  case object KDrugType extends ContextKind("drug_type")
+  case object KTreatmentTarget extends ContextKind("treatment_target")
+  case object KTreatmentIntent extends ContextKind("treatment_intent")
+  case object KResponseToTreatment extends ContextKind("response_to_treatment")
+  case object KTreatmentTerminationReason extends ContextKind("treatment_termination_reason")
+  case object KProcedure extends ContextKind("procedure")
+  case object KProcedureBodySite extends ContextKind("procedure_body_site")
+  case object KTimeOfProcedure extends ContextKind("time_of_procedure")
+  case object KQuantityValue extends ContextKind("quantity_value")
+  case object KQuantityUnit extends ContextKind("quantity_unit")
+  case object KNone extends ContextKind("none")
+
+  /** Every kind by its config name: the plain contexts' and the eight
+    * parameterized ones'.
+    */
+  val byName: Map[String, ContextKind] = (Context.plain.keys ++ Seq(KTimeAtLastEncounter,
+    KTimeOfDeath, KOnset, KTimeOfResolution, KQuantitativeMeasurement, KQualitativeMeasurement,
+    KTimeOfMeasurement, KTimeOfProcedure)).map(k => k.name -> k).toMap
 }

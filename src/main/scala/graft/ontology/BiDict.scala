@@ -56,28 +56,28 @@ object BiDict {
     * A normalized label/synonym that maps to MORE THAN ONE term id is
     * a loud error: `.toMap` would silently keep the last entry and
     * resolve("Fever") could return whichever term happened to load
-    * later — wrong CURIEs with no signal. The same key repeated for
-    * ONE id (a synonym equal to its own label, duplicated rows) is
-    * harmless and kept.
+    * later — wrong CURIEs with no signal. So is an id given two labels,
+    * where the last would silently win. The same key repeated for ONE
+    * id (a synonym equal to its own label, duplicated rows) is harmless
+    * and kept.
     */
   def fromEntries(resource: Resource,
       entries: Seq[(String, String, Seq[String])]): BiDict = {
-    val idToLabel = entries.map { case (id, label, _) => id -> label }.toMap
     def strict(pairs: Seq[(String, String)], what: String): Map[String, String] = {
       val conflicts = pairs.groupBy(_._1).collect {
         case (k, vs) if vs.map(_._2).distinct.size > 1 =>
           s"'$k' -> ${vs.map(_._2).distinct.mkString("/")}"
       }
       require(conflicts.isEmpty,
-        s"${resource.id}: conflicting $what entries after normalization: " +
-          conflicts.mkString("; "))
+        s"${resource.id}: conflicting $what entries: " + conflicts.mkString("; "))
       pairs.toMap
     }
+    val idToLabel = strict(entries.map { case (id, label, _) => id -> label }, "id")
     val labelToId = strict(
-      entries.map { case (id, label, _) => norm(label) -> id }, "label")
+      entries.map { case (id, label, _) => norm(label) -> id }, "normalized label")
     val synonymToId = strict(
       entries.flatMap { case (id, _, syns) => syns.map(s => norm(s) -> id) },
-      "synonym")
+      "normalized synonym")
     BiDict(resource, labelToId, synonymToId, idToLabel)
   }
 }

@@ -256,7 +256,7 @@ class ConfigSpec extends SparkSpec {
         |  assay_id: "LOINC:8302-2"
         |  unit_ontology_id: "UO:0000015"
         |""".stripMargin)
-    assert(ConfigLoader.context(node) ==
+    assert(ConfigLoader.context(node, "data_context") ==
       Context.QuantitativeMeasurement("LOINC:8302-2", "UO:0000015"))
   }
 
@@ -276,6 +276,99 @@ class ConfigSpec extends SparkSpec {
       ConfigLoader.loadAliasCsv(short, "k", "b")
     }
     assert(e.getMessage.contains("row 3"), e.getMessage)
+  }
+
+  test("side csvs: a key or id given two values fails naming it and the file; exact repeats stay") {
+    val dir = Files.createTempDirectory("graftcfg")
+    // keeping the last row would silently map M to FEMALE
+    val aliases = write(dir, "aliases.csv", "k,v\nM,MALE\nM,MALE\nM,FEMALE\n")
+    val e1 = intercept[IllegalArgumentException](ConfigLoader.loadAliasCsv(aliases, "k", "v"))
+    assert(e1.getMessage.contains("'M'") && e1.getMessage.contains(aliases) &&
+      e1.getMessage.contains("row 4"), e1.getMessage)
+    val repeated = write(dir, "repeated.csv", "k,v\nM,MALE\nM,MALE\n")
+    assert(ConfigLoader.loadAliasCsv(repeated, "k", "v") == Map("M" -> Some("MALE")))
+    // keeping the last label would make resolve("Seizure") return HP:1 labelled Fever
+    def library(terms: String) = {
+      val file = write(dir, "terms.csv", terms)
+      val cfg = ConfigLoader.load(write(dir, "terms.yaml",
+        s"""pipeline:
+           |  meta_data:
+           |    hpo_resource: {id: hp, terms_file: "$file"}
+           |""".stripMargin))
+      ConfigRunner.buildLibrary(cfg)
+    }
+    val e2 = intercept[IllegalArgumentException](
+      library("id,label,synonyms\nHP:1,Seizure,\nHP:1,Fever,\n"))
+    assert(e2.getMessage.contains("'HP:1'") && e2.getMessage.contains(dir.resolve("terms.csv").toString),
+      e2.getMessage)
+    assert(library("id,label,synonyms\nHP:1,Seizure,\nHP:1,Seizure,\n").resolve("Seizure")
+      .map(_._1.label).contains("Seizure"))
+  }
+
+  test("unknown, misspelled, repeated or misshapen keys fail naming the key and its path") {
+    val dir = Files.createTempDirectory("graftcfg")
+    val valid =
+      """data_sources:
+        |  - type: csv
+        |    source: data.csv
+        |    patients_are_rows: true
+        |    separator: ","
+        |    series_contexts:
+        |      - identifier: Patient ID
+        |        data_context: subject_id
+        |      - identifier: Sex
+        |        data_context: subject_sex
+        |        building_block_id: P
+        |        fill_missing: unknown
+        |        alias_map:
+        |          mappings: {M: MALE}
+        |  - type: csv
+        |    source: other.csv
+        |    series_contexts: []
+        |  - type: excel
+        |    source: book.xlsx
+        |    sheets: []
+        |pipeline:
+        |  meta_data:
+        |    cohort_name: c1
+        |""".stripMargin
+    assert(ConfigLoader.load(write(dir, "valid.yaml", valid)).metaData.cohortName == "c1")
+    def load(from: String, to: String) = {
+      assert(valid.contains(from), from)
+      ConfigLoader.load(write(dir, "bad.yaml", valid.replace(from, to)))
+    }
+    // read leniently, each of these would load as patients-as-rows, a
+    // "," separator, no block, no fill, no alias map, cohort "cohort"
+    Seq(
+      ("patients_are_rows: true", "patient_are_rows: false",
+        "unknown key 'patient_are_rows' in 'data_sources[0]'"),
+      ("separator:", "seperator:", "unknown key 'seperator' in 'data_sources[0]'"),
+      ("building_block_id:", "building_blok_id:",
+        "unknown key 'building_blok_id' in 'data_sources[0].series_contexts[1]'"),
+      ("fill_missing:", "fill_mising:",
+        "unknown key 'fill_mising' in 'data_sources[0].series_contexts[1]'"),
+      ("alias_map:", "alias_mapp:", "unknown key 'alias_mapp' in 'data_sources[0].series_contexts[1]'"),
+      ("cohort_name:", "cohort_nam:", "unknown key 'cohort_nam' in 'pipeline.meta_data'"),
+      ("source: book.xlsx", "source: book.xlsx\n    name: book",
+        "unknown key 'name' in 'data_sources[2]'"),
+      ("series_contexts: []", "series_contexts: \"x\"",
+        "'data_sources[1].series_contexts' must be a list, got \"x\""),
+      ("{M: MALE}", "{M: [MALE]}",
+        "'data_sources[0].series_contexts[1].alias_map.mappings.M' must be a string"),
+      ("data_context: subject_sex", "data_context: {subject_sex: x}",
+        "context 'subject_sex' in 'data_sources[0].series_contexts[1].data_context' takes no parameter"),
+      ("source: other.csv", "sourc: other.csv", "missing key 'source' in 'data_sources[1]'")
+    ).foreach { case (from, to, message) =>
+      val e = intercept[IllegalArgumentException](load(from, to))
+      assert(e.getMessage.contains(message), e.getMessage)
+    }
+    // a repeated key: Jackson would keep the last one (`disease`)
+    val e = intercept[com.fasterxml.jackson.core.JsonProcessingException](
+      load("data_context: subject_sex", "data_context: hpo\n        data_context: disease"))
+    assert(e.getMessage.contains("Duplicate field 'data_context'"), e.getMessage)
+    val json = write(dir, "dup.json", """{"pipeline": {"strategies": []}, "pipeline": {}}""")
+    val e2 = intercept[com.fasterxml.jackson.core.JsonProcessingException](ConfigLoader.load(json))
+    assert(e2.getMessage.contains("Duplicate field 'pipeline'"), e2.getMessage)
   }
 
   test("terms csv: quoted comma-containing labels survive; mixed sources keep config order") {
@@ -298,7 +391,7 @@ class ConfigSpec extends SparkSpec {
          |    source: "${dir.resolve("d.csv")}"
          |    series_contexts:
          |      - identifier: "Patient ID"
-         |        context: "SubjectId"
+         |        data_context: subject_id
          |pipeline:
          |  strategies: []
          |  loader:

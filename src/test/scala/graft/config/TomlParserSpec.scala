@@ -153,6 +153,14 @@ class TomlParserSpec extends AnyFunSuite {
     // lines are counted through comments and multi-line arrays
     val e = intercept[IllegalArgumentException](parse("a = [\n  1, # one\n  2,\n]\nb = 1f\n"))
     assert(e.getMessage.startsWith("TOML parse error at line 5:"), e.getMessage)
+    // a [table] may not reopen an array of tables, and no header or
+    // dotted key may add to an inline table or array written as a value
+    Seq("[[a]]\nx = 1\n[a]\ny = 2" -> 3, "m = {a = 1}\n[m.sub]\nb = 2" -> 2,
+      "m = {a = 1}\n[m]\nb = 2" -> 2, "m = {a = 1}\nm.b = 2" -> 2, "a = [{x = 1}]\n[[a]]" -> 2)
+      .foreach { case (bad, line) =>
+        val e = intercept[IllegalArgumentException](parse(bad))
+        assert(e.getMessage.startsWith(s"TOML parse error at line $line:"), s"$bad: ${e.getMessage}")
+      }
   }
 
   // --- round trip of generated config-shaped trees -------------------
